@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import model as M
+from ..sources.local import local_frame
 
 
 def lineage_checkpoint(df: DataFrame) -> DataFrame:
@@ -182,7 +183,7 @@ def _local_components(spark, rows) -> DataFrame:
         if root not in comp_min or n < comp_min[root]:
             comp_min[root] = n
     data = [(n, comp_min[find(n)]) for n in sorted(parent)]
-    return spark.createDataFrame(data, schema="node string, component string")
+    return local_frame(spark, data, "node string, component string")
 
 
 def connected_components(

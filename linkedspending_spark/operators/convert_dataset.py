@@ -31,6 +31,7 @@ from .. import model as M
 from .. import uris as U
 from ..functions import clean_string, parse_string_date
 from ..plans.components import ComponentPlan, ComponentType, DatasetRejectedError
+from ..sources.local import local_frame
 
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
@@ -394,7 +395,7 @@ def convert_dataset(
         )
     driver_rows = schema_triple_rows(plan, currency_uri, country_uris)
     driver_rows += completeness_triple_rows(plan, metrics)
-    small = spark.createDataFrame(driver_rows, M.TRIPLE_SCHEMA)
+    small = local_frame(spark, driver_rows, M.TRIPLE_SCHEMA)
     obs = observation_triples(entries, plan, currency_uri)
     triples = (
         obs.unionByName(small)

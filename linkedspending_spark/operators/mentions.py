@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from .. import model as M
 from .. import uris as U
+from ..sources.local import local_frame
 
 
 @lru_cache(maxsize=32)
@@ -141,9 +142,7 @@ def mention_triples_join(
                 (len([t for t in re.split(r"[^A-Za-z0-9]+", k) if t]) for k in vocabulary),
                 default=1,
             )
-        vocab_df = spark.createDataFrame(
-            list(vocabulary.items()), "surface string, __uri string"
-        )
+        vocab_df = local_frame(spark, vocabulary.items(), "surface string, __uri string")
         if broadcast_vocab is None:
             broadcast_vocab = len(vocabulary) <= 5_000_000
     # normalize vocab surfaces through the SAME tokenizer as the text;

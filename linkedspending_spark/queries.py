@@ -32,6 +32,7 @@ from .functions import (
 )
 from .operators.convert_transcripts import mention_triples, observation_triples
 from .sources.dictionaries import country_df, country_pairs, currency_df, currency_pairs
+from .sources.local import local_frame
 from .transcripts import TRANSCRIPTS_FROM_EVENTS_SQL, transcripts_from_events
 
 INST = M.PREFIX_INSTANCE
@@ -2552,7 +2553,7 @@ def q_property_override(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_events(spark, sf_dir)
     pairs = (
         t.select("conv_id").distinct()
-        .crossJoin(spark.createDataFrame([("role",), ("text",), ("tool",)], "name string"))
+        .crossJoin(local_frame(spark, [("role",), ("text",), ("tool",)], "name string"))
     )
     overrides = (
         t.select("conv_id").distinct()
@@ -2951,6 +2952,7 @@ def q_job_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclude — so the aggregation, sentinel filter, and column contract
     are all under the value hash."""
     from .jobs import BUCKETS_SENTINEL, list_runs_df
+    from .sources.manifest import MANIFEST_SCHEMA
 
     o = _read(spark, sf_dir, "orders").where(F.col("o_orderkey") < 5000)
     manifest = o.select(
@@ -2965,10 +2967,8 @@ def q_job_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "run_id"
         ),
     )
-    sentinels = spark.sql(
-        f"SELECT * FROM VALUES ('{BUCKETS_SENTINEL}', 3, CAST(16 AS BIGINT), "
-        f"CAST(NULL AS BIGINT), CAST(1.7e9 AS DOUBLE), 'run-0') "
-        f"AS t(dataset, version, n_rows, n_triples, finished_at, run_id)"
+    sentinels = local_frame(
+        spark, [(BUCKETS_SENTINEL, 3, 16, None, 1.7e9, "run-0")], MANIFEST_SCHEMA
     )
     return list_runs_df(manifest.unionByName(sentinels))
 

@@ -941,13 +941,14 @@ def _datasets_as_html(rows: list) -> str:
             if version == TRANSFORMATION_VERSION
             else "lightblue"
         )
+        cells = (
+            r.get(k)
+            for k in ("dataset", "version", "n_triples", "n_commits", "finished_at")
+        )
         out.append(
             f"<tr style='background-color:{color}'>"
-            f"<td>{_h.escape(str(r.get('dataset')))}</td>"
-            f"<td>{version}</td>"
-            f"<td>{r.get('n_triples')}</td>"
-            f"<td>{r.get('n_commits')}</td>"
-            f"<td>{_h.escape(str(r.get('finished_at')))}</td></tr>"
+            + "".join(f"<td>{_h.escape(str(c))}</td>" for c in cells)
+            + "</tr>"
         )
     out.append("</table></body></html>")
     return "\n".join(out)

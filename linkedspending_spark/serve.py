@@ -30,6 +30,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .sources.local import local_frame
 
 
 def read_triple_table(spark: SparkSession, path: str) -> DataFrame:
@@ -584,7 +587,7 @@ def select_sparql(
       are kept NULL-extended, unlike a solution-level filter.
       When omitted, all ``optionals`` evaluate before all ``unions``
       (back-compat; the text parser always passes ``groups``). A
-      VALUES block becomes a VALUES-literal LocalTableScan inner-joined
+      VALUES block becomes a LocalRelation inner-joined
       on its shared variables — inline data never launches a Spark job
       to build, and a small VALUES side broadcast-prunes the join.
 
@@ -1062,21 +1065,10 @@ def select_sparql(
 
 
 def _values_df(spark: SparkSession, names: Sequence[str], rows) -> DataFrame:
-    """Inline VALUES data as a VALUES-literal LocalTableScan (one
-    ``spark.sql`` — no parallelize job per block, the same idiom as the
-    broadcast dictionaries; see sources/dictionaries.py). UNDEF → NULL
-    (SPARQL unbound)."""
-
-    def lit(v) -> str:
-        if v is None:
-            return "CAST(NULL AS STRING)"
-        return "'" + str(v).replace("'", "''") + "'"
-
-    body = ", ".join(
-        "(" + ", ".join(lit(v) for v in row) + ")" for row in rows
-    )
-    cols = ", ".join(f"`{n}`" for n in names)
-    return spark.sql(f"SELECT * FROM (VALUES {body}) AS t({cols})")
+    """Inline VALUES data as a string-typed LocalRelation
+    (sources/local.py). UNDEF → NULL (SPARQL unbound)."""
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    return local_frame(spark, rows, schema)
 
 
 def _eval_graph(
@@ -1401,11 +1393,7 @@ def path_closure(
     if const is not None:
         reach = _bfs(const).select(F.col("__n").alias(var))
         if quant in ("*", "?"):
-            zero = triples.sparkSession.sql(
-                "SELECT '"
-                + str(const).replace("'", "''")
-                + f"' AS `{var}`"
-            )
+            zero = _values_df(triples.sparkSession, [var], [(const,)])
             reach = reach.unionAll(zero).distinct()
         out = reach
         if with_kinds:

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .local import local_frame
+
 _DBPEDIA = "http://dbpedia.org/resource/"
 _LGD = "http://linkedgeodata.org/triplify/"
 
@@ -101,34 +103,14 @@ def country_pairs() -> list[tuple[str, str]]:
     return [(code, _LGD + name) for code, name in sorted(_COUNTRY_NAMES.items())]
 
 
-def _local_pairs_df(
-    spark: SparkSession, pairs: list[tuple[str, str]], c0: str = "code", c1: str = "uri"
-) -> DataFrame:
-    """Dimension table as a VALUES literal → LocalTableScan.
-
-    PySpark's ``createDataFrame`` routes even a 50-row dict through a
-    parallelized RDD, so every broadcast-join build runs a full Spark
-    job over ~32 micro-tasks (measured 0.4–0.9 s PER QUERY — a constant
-    driver-side tax that caps strong scaling of every dictionary join).
-    A VALUES literal plans as ``LocalTableScan``: materialization is
-    ~10 ms and the broadcast build needs no job at all.
-    """
-
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
-    rows = ", ".join(f"('{q(a)}', '{q(b)}')" for a, b in pairs)
-    return spark.sql(f"SELECT col1 AS {c0}, col2 AS {c1} FROM (VALUES {rows})")
-
-
 def currency_df(spark: SparkSession) -> DataFrame:
     """code → URI dimension table (broadcast side of J1)."""
-    return _local_pairs_df(spark, currency_pairs())
+    return local_frame(spark, currency_pairs(), "code string, uri string")
 
 
 def country_df(spark: SparkSession) -> DataFrame:
     """ISO code → URI dimension table (broadcast side of J2)."""
-    return _local_pairs_df(spark, country_pairs())
+    return local_frame(spark, country_pairs(), "code string, uri string")
 
 
 def fuzzy_vocabularies() -> tuple[dict[str, str], dict[str, str]]:
@@ -150,7 +132,7 @@ def property_mapping_df(
     spark: SparkSession, rows: list[tuple[str, str, str]] | None = None
 ) -> DataFrame:
     """(dataset, name) → override property URI (J3; empty upstream)."""
-    return spark.createDataFrame(rows or [], "dataset string, name string, uri string")
+    return local_frame(spark, rows or [], "dataset string, name string, uri string")
 
 
 def read_tsv_dictionary(spark: SparkSession, path: str, schema: str) -> DataFrame:

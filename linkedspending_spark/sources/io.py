@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from ..functions import nt_statement
 from ..model import KIND_LITERAL, KIND_URI, TRIPLE_SCHEMA_PARTITIONED
+from .local import local_frame
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -256,11 +257,10 @@ def delete_datasets_bucketed(
                 os.rename(os.path.join(path, d), live)
             else:
                 shutil.rmtree(os.path.join(path, d))
-    # VALUES-literal victim table (LocalTableScan — no parallelize job)
-    vals = ", ".join("('" + n.replace("'", "''") + "')" for n in names)
-    victims = spark.sql(
-        f"SELECT dataset, cast(pmod(xxhash64(dataset), {int(n_buckets)}) "
-        f"as int) AS bucket FROM (VALUES {vals}) AS t(dataset)"
+    from ..jobs import bucket_of
+
+    victims = local_frame(spark, [(n,) for n in names], "dataset string").select(
+        "dataset", bucket_of(F.col("dataset"), int(n_buckets)).alias("bucket")
     )
     buckets = sorted({r["bucket"] for r in victims.collect()})
     table = spark.read.parquet(path)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import TRANSFORMATION_VERSION
+from .local import local_frame
 
 #: version stamp of a deletion tombstone row — sorts below every real
 #: transformation version, so a tombstoned dataset is never "completed"
@@ -56,7 +57,7 @@ class ManifestStore:
 
     def read(self) -> DataFrame:
         if not os.listdir(self.path):
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(self.spark, [], MANIFEST_SCHEMA)
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def record(
@@ -85,7 +86,8 @@ class ManifestStore:
         the atomic all-or-nothing completion mark a resume wants.
         """
         now = time.time()
-        df = self.spark.createDataFrame(
+        df = local_frame(
+            self.spark,
             [(d, version, nr, nt, now, run_id) for d, nr, nt in entries],
             MANIFEST_SCHEMA,
         )

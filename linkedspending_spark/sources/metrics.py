@@ -15,6 +15,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .local import local_frame
+
 METRICS_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -34,32 +36,14 @@ class MetricsStore:
         os.makedirs(path, exist_ok=True)
 
     def record(self, run_id: str, stage: str, metrics: dict[str, float], dataset: str | None = None) -> None:
-        # VALUES-literal LocalTableScan, not createDataFrame: the
-        # parallelize path costs a ~0.7 s Spark job per append (the
-        # documented tiny-dict anti-pattern, see
-        # sources/dictionaries.py::_local_pairs_df) — job-control
-        # latency rides on this for every lifecycle event.
         now = time.time()
-
-        def s(v) -> str:
-            if v is None:
-                return "CAST(NULL AS STRING)"
-            return "'" + str(v).replace("'", "''") + "'"
-
-        def d(v) -> str:
-            if v is None:
-                return "CAST(NULL AS DOUBLE)"
-            return f"CAST({float(v)!r} AS DOUBLE)"
-
-        rows = ", ".join(
-            f"({s(run_id)}, {s(stage)}, {s(dataset)}, {s(k)}, "
-            f"{d(v)}, {d(now)})"
+        rows = [
+            (run_id, stage, dataset, k, None if v is None else float(v), now)
             for k, v in metrics.items()
+        ]
+        local_frame(self.spark, rows, METRICS_SCHEMA).write.mode("append").parquet(
+            self.path
         )
-        self.spark.sql(
-            f"SELECT * FROM (VALUES {rows}) "
-            "AS t(run_id, stage, dataset, key, value, ts)"
-        ).write.mode("append").parquet(self.path)
 
     def event(
         self, run_id: str, seq: int, event: str, detail: str | None = None
@@ -72,7 +56,7 @@ class MetricsStore:
 
     def read(self) -> DataFrame:
         if not os.listdir(self.path):
-            return self.spark.createDataFrame([], METRICS_SCHEMA)
+            return local_frame(self.spark, [], METRICS_SCHEMA)
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
 
 

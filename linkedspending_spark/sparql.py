@@ -87,8 +87,7 @@ evaluates):
   SEMI / LEFT ANTI joins on the shared variables, applied at group
   level (SPARQL scopes every FILTER to its whole group).
 * ``VALUES ?x { ... }`` / ``VALUES (?x ?y) { (..) (..) }`` inline data
-  (UNDEF → unbound), joined in source order as a VALUES-literal
-  LocalTableScan.
+  (UNDEF → unbound), joined in source order as a LocalRelation.
 * Aggregates: ``SELECT (COUNT(?x) AS ?n) ?g ... GROUP BY ?g
   HAVING(...)`` with COUNT / COUNT(*) / SUM / AVG / MIN / MAX / SAMPLE
   / GROUP_CONCAT([DISTINCT] ?x [; SEPARATOR=".."]) — DISTINCT works in

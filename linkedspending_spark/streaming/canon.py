@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canon import merge_components
+from ..sources.local import local_frame
 from ..sources.manifest import ManifestStore, new_run_id
 
 EDGE_SCHEMA = "src string, dst string"
@@ -72,7 +73,7 @@ def read_assignments(
     """
     version, _ = _committed_state(ManifestStore(spark, manifest_path))
     if version is None:
-        return spark.createDataFrame([], ASSIGNMENT_SCHEMA)
+        return local_frame(spark, [], ASSIGNMENT_SCHEMA)
     return spark.read.schema(ASSIGNMENT_SCHEMA).parquet(
         f"{store_path}/v={version}"
     )
@@ -160,7 +161,7 @@ def stream_sameas_merge(
             stats["skipped"] += 1
             return
         if state["version"] is None:
-            current = spark.createDataFrame([], ASSIGNMENT_SCHEMA)
+            current = local_frame(spark, [], ASSIGNMENT_SCHEMA)
         else:
             current = spark.read.schema(ASSIGNMENT_SCHEMA).parquet(
                 f"{store_path}/v={state['version']}"

@@ -928,6 +928,33 @@ def test_datasets_html_negotiation(rest_server):
     assert status == 200 and isinstance(ds, list)
 
 
+def test_datasets_html_escapes_every_cell():
+    """Every interpolated /datasets cell is HTML-escaped, not only the
+    dataset name: a markup-bearing version or count renders as text."""
+    from linkedspending_spark.rest import _datasets_as_html
+
+    body = _datasets_as_html(
+        [
+            {
+                "dataset": "<b>ds</b>",
+                "version": "<script>v</script>",
+                "n_triples": "<img src=x>",
+                "n_commits": "a&b",
+                "finished_at": "'q'",
+            }
+        ]
+    )
+    assert "<script>" not in body and "<img" not in body and "<b>" not in body
+    for cell in (
+        "&lt;b&gt;ds&lt;/b&gt;",
+        "&lt;script&gt;v&lt;/script&gt;",
+        "&lt;img src=x&gt;",
+        "a&amp;b",
+        "&#x27;q&#x27;",
+    ):
+        assert f"<td>{cell}</td>" in body
+
+
 def test_sparql_result_format_negotiation(rest_server):
     """GET /sparql content-negotiates the W3C result serializations:
     CSV/TSV (sparql11-results-csv-tsv) and XML (rdf-sparql-XMLres);
