@@ -53,7 +53,12 @@ def bucket_of(conv_id_col, n_buckets: int):
 
 class JobCancelled(RuntimeError):
     """Raised inside a job runner when its ``should_stop`` hook fires
-    at a phase boundary; the report's state is already CANCELLED."""
+    at a phase boundary. ``report`` is the run's report, state already
+    CANCELLED, with whatever the run committed before the stop."""
+
+    def __init__(self, message: str, report: JobReport):
+        super().__init__(message)
+        self.report = report
 
 
 def run_transcripts_job(
@@ -94,7 +99,11 @@ def run_transcripts_job(
     otherwise be a no-op). When it returns true BEFORE the write phase
     the run raises :class:`JobCancelled` with state CANCELLED; once the
     write has committed, the manifest record still completes — the
-    committed data must be resumable, never orphaned silently.
+    committed data must be resumable, never orphaned silently — and
+    the run is polled once more before it returns, so a stop that
+    landed after the write started still ends it CANCELLED; that
+    :class:`JobCancelled` carries the report of the committed buckets.
+    A run that returns saw no stop.
 
     ``run_id`` — caller-minted id (e.g. the REST binding, so the
     history is addressable before the report exists); default a fresh
@@ -140,7 +149,7 @@ def run_transcripts_job(
     def _check_cancel() -> None:
         if should_stop is not None and should_stop():
             report.state = "CANCELLED"
-            raise JobCancelled(f"run {report.run_id} cancelled")
+            raise JobCancelled(f"run {report.run_id} cancelled", report)
 
     _event(0, "submitted", f"n_buckets={n_buckets}")
     try:
@@ -249,6 +258,7 @@ def run_transcripts_job(
                         **jvm_memory_metrics(spark),  # A7 high-water analog
                     },
                 )
+        _check_cancel()  # final boundary (see docstring)
         report.state = "FINISHED"
     except JobCancelled:
         raise  # state already CANCELLED

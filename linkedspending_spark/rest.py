@@ -613,6 +613,16 @@ class RestService:
             watchdog = threading.Timer(timeout_sec, _timed_out)
             watchdog.daemon = True
 
+        def _keep_report(report) -> None:
+            entry["report"] = {
+                "run_id": report.run_id,
+                "state": report.state,
+                "pending": report.pending,
+                "skipped": report.skipped,
+                "converted_triples": report.converted_triples,
+                "seconds": report.seconds,
+            }
+
         def _run() -> None:
             from .jobs import JobCancelled, run_transcripts_job
 
@@ -621,8 +631,11 @@ class RestService:
             # worker thread launches is cancellable as one unit. A cancel
             # can also land BETWEEN Spark jobs (cancelJobGroup only
             # interrupts jobs running at that instant), so the runner
-            # additionally polls should_stop at phase boundaries, and
-            # the success path below never overwrites a CANCELLED state.
+            # additionally polls should_stop at phase boundaries, the
+            # last one just before it returns. A runner that returns
+            # saw no stop, so its outcome stands over a later watchdog;
+            # only a client's CANCELLED is kept. A stopped runner's
+            # report (what it committed) is kept beside the stop state.
             sc.setJobGroup(group, f"rest convert {jid}", interruptOnCancel=True)
             if watchdog is not None:
                 watchdog.start()
@@ -643,18 +656,14 @@ class RestService:
                     force=bool(body.get("force", False)),
                 )
                 with self._jobs_lock:
-                    entry["report"] = {
-                        "run_id": report.run_id,
-                        "state": report.state,
-                        "pending": report.pending,
-                        "skipped": report.skipped,
-                        "converted_triples": report.converted_triples,
-                        "seconds": report.seconds,
-                    }
-                    if entry["state"] == "RUNNING":
+                    _keep_report(report)
+                    if entry["state"] != "CANCELLED":
                         entry["state"] = report.state
-            except JobCancelled:
-                pass  # terminal state already set by cancel/watchdog
+                        entry.pop("error", None)
+            except JobCancelled as stop:
+                # terminal state already set by cancel/watchdog
+                with self._jobs_lock:
+                    _keep_report(stop.report)
             except Exception as e:  # noqa: BLE001 — surfaced via /jobs/active
                 with self._jobs_lock:
                     if entry["state"] == "RUNNING":

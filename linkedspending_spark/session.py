@@ -4,7 +4,8 @@ Local-mode testing stands in for a multi-executor cluster; the configs
 below are the ones that transfer to a 1000-executor deployment:
 AQE (runtime re-plan + skew-join splitting), Arrow for pandas UDFs,
 UTC session time zone (oracle comparability), shuffle partitions sized
-to the parallelism level instead of the 200 default.
+to the parallelism level instead of the 200 default, and a generated-code
+class cache sized to the engine's working set.
 """
 
 from __future__ import annotations
@@ -12,6 +13,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Spark's default of 100 cached codegen classes is below the ~143 that one
+# build and its first count read generate, so a repeat build would compile
+# (Janino) and JIT-compile all of them again. Repeat builds, 260 SPARQL
+# requests and two landings fit in ~430 entries; the cap sits just above
+# that working set, and past it the cache evicts least-recently-used
+# classes as before. Static conf: only the first session in a JVM sets it.
+CODEGEN_CACHE_MAX_ENTRIES = 512
 
 
 def get_spark(
@@ -43,6 +52,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

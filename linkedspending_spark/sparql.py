@@ -1893,12 +1893,25 @@ class _Parser:
 
     #: aggregate call inside a direct-form HAVING; the operand group
     #: admits one paren-nesting level so EXPRESSION operands with
-    #: built-in calls (SUM(strlen(?x))) match — deeper nesting falls
-    #: through to the loud aggregates-belong-in-SELECT refusal
+    #: built-in calls (SUM(strlen(?x))) match — deeper nesting is left
+    #: unrewritten and refused by _rewrite_agg_calls
     _HAVING_AGG = re.compile(
         r"(?i)\b(count|sum|min|max|avg|sample)\s*"
         r"\(\s*(distinct\s+)?((?:[^()]|\([^()]*\))*)\)"
     )
+
+    #: the start of any aggregate call (not a ?var or prefixed name)
+    _AGG_CALL = re.compile(
+        r"(?i)(?<![\w:?$])(count|sum|min|max|avg|sample)\s*\("
+    )
+
+    def _mask_literals(self, text: str) -> str:
+        """``text`` with every quoted literal's content blanked, same
+        length, so call patterns never match inside a string."""
+        return self._QUOTE_SPLIT.sub(
+            lambda m: m.group()[0] + " " * (len(m.group()) - 2) + m.group()[0],
+            text,
+        )
 
     def _dataset_clauses(self, allowed: bool = True) -> None:
         """``(FROM [NAMED] <uri>)*`` — the dataset description between
@@ -1956,7 +1969,7 @@ class _Parser:
             func, dist, arg = (
                 m.group(1).lower(),
                 bool(m.group(2)),
-                m.group(3).strip(),
+                raw[m.start(3) : m.end(3)].strip(),
             )
             if arg == "*" and func != "count":
                 raise SparqlSyntaxError(f"{func.upper()} needs a ?var")
@@ -1977,7 +1990,22 @@ class _Parser:
             self.q.aggregates.append((func, var, dist, alias))
             return "?" + alias
 
-        return self._HAVING_AGG.sub(sub, raw)
+        # match on the masked text, splice into the original: offsets
+        # agree, and a literal's content is neither a call nor rewritten
+        parts, at = [], 0
+        for m in self._HAVING_AGG.finditer(self._mask_literals(raw)):
+            parts += [raw[at : m.start()], sub(m)]
+            at = m.end()
+        out = "".join(parts) + raw[at:]
+        left = self._AGG_CALL.search(self._mask_literals(out))
+        if left is not None:
+            raise SparqlSyntaxError(
+                f"unsupported aggregate call {left.group(1).upper()}(...) in "
+                f"({raw.strip()}): an aggregate operand may nest at most "
+                "one level of parentheses; bind the inner expression "
+                "first (BIND or a SELECT expression)"
+            )
+        return out
 
     _GC_SPEC = re.compile(
         r"(?is)^\s*group_concat\s*\(\s*(distinct\s+)?(\?\w+)\s*"
@@ -2058,7 +2086,7 @@ class _Parser:
                 "SELECT (...) needs an aggregate or 'expression AS ?alias'"
             )
         expr = raw[: m.start()]
-        if self._HAVING_AGG.search(expr):
+        if self._AGG_CALL.search(self._mask_literals(expr)):
             # aggregate calls INSIDE a larger projection expression —
             # (COUNT(?x)/SUM(?y) AS ?r): each call becomes a hidden
             # aggregate alias (the HAVING direct-form machinery); the

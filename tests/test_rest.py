@@ -366,6 +366,89 @@ def test_job_timeout_watchdog(rest_server, spark, tmp_path):
     assert _post(base + "/jobs/convert", body)[0] == 400
 
 
+def test_job_watchdog_after_runner_returned_keeps_success(
+    rest_server, spark, tmp_path, monkeypatch
+):
+    """A watchdog that fires once the runner has returned (before the
+    worker records the outcome) must not report the finished convert
+    as FAILED; one that fires before the runner's last phase boundary
+    still fails the job, and if the data write had already committed,
+    the job keeps the report of what it committed. The timer is a
+    fake, fired by hand at each point, so the race is deterministic."""
+    import os
+
+    from linkedspending_spark import jobs, rest
+
+    _, service = rest_server
+    inp = str(tmp_path / "transcripts")
+    synth_transcripts_df(spark, n_convs=4, base_turns=3).write.parquet(inp)
+
+    timers = []
+
+    class FakeTimer:
+        def __init__(self, interval, fn):
+            self.fn = fn
+            timers.append(self)
+
+        def start(self):
+            pass
+
+        def cancel(self):
+            pass
+
+    real_runner = jobs.run_transcripts_job
+    fire_at = "after"
+
+    def runner(*args, **kwargs):
+        should_stop = kwargs["should_stop"]
+
+        def poll():
+            # the first poll after the run recorded its committed
+            # buckets in the (fresh) manifest store
+            if fire_at == "committed" and os.path.exists(
+                os.path.join(kwargs["manifest_path"], "_SUCCESS")
+            ):
+                timers[-1].fn()
+            return should_stop()
+
+        if fire_at == "before":
+            timers[-1].fn()
+        report = real_runner(*args, **{**kwargs, "should_stop": poll})
+        if fire_at == "after":
+            timers[-1].fn()
+        return report
+
+    monkeypatch.setattr(rest.threading, "Timer", FakeTimer)
+    monkeypatch.setattr(jobs, "run_transcripts_job", runner)
+
+    def submit(run: str) -> dict:
+        sub = service.job_convert(
+            {
+                "input": inp,
+                "output": str(tmp_path / run / "out"),
+                "manifests": str(tmp_path / run / "man"),
+                "n_buckets": 4,
+                "timeout_sec": 3600,
+            }
+        )
+        service._jobs[sub["job"]]["thread"].join(timeout=300)
+        return next(a for a in service.jobs_active() if a["job"] == sub["job"])
+
+    e = submit("after")
+    assert e["state"] == "FINISHED" and e["error"] is None, e
+    assert e["report"]["converted_triples"] > 0
+
+    fire_at = "before"
+    e = submit("before")
+    assert e["state"] == "FAILED" and "timeout" in e["error"], e
+
+    fire_at = "committed"
+    e = submit("committed")
+    assert e["state"] == "FAILED" and "timeout" in e["error"], e
+    assert e["report"]["state"] == "CANCELLED", e
+    assert e["report"]["converted_triples"] > 0, e
+
+
 def test_job_progress_counters(rest_server, spark, tmp_path):
     """/jobs/active reports task-level progress for RUNNING
     submissions (the Job.java:43-45 percent-counter analog) from
@@ -464,6 +547,37 @@ def test_malformed_numeric_params_are_400(rest_server):
     assert _post(base + "/jobs/convert", {"input": "x", "output": "y",
                                           "manifests": "z",
                                           "n_buckets": "many"})[0] == 400
+
+
+def test_nested_aggregate_call_is_400(rest_server):
+    """An aggregate operand nested deeper than one paren level is not
+    rewritten; it is refused as a syntax error (HTTP 400) that names
+    the nesting limit. Aggregate-like text inside a string literal is
+    neither refused nor rewritten."""
+    base, _ = rest_server
+    for q in (
+        "SELECT ?s (COUNT(?o) AS ?n) { ?s ?p ?o } GROUP BY ?s "
+        "ORDER BY DESC(SUM(round(abs(?o),2)))",
+        "SELECT ?s { ?s ?p ?o } GROUP BY ?s "
+        "HAVING(SUM(round(abs(?o),2)) > 1)",
+        "SELECT ?s (SUM(round(abs(?o),2)) * 2 AS ?t) { ?s ?p ?o } GROUP BY ?s",
+    ):
+        status, body = _post(base + "/sparql", {"query": q})
+        assert status == 400 and "nest" in body["error"], (q, status, body)
+    # one nesting level still works, next to a literal naming a call
+    status, _ = _post(
+        base + "/sparql",
+        {
+            "query": "SELECT ?s { ?s ?p ?o } GROUP BY ?s "
+            'HAVING(SUM(strlen(?o)) > 0 && "sum(" != "x") ORDER BY ?s'
+        },
+    )
+    assert status == 200
+    status, body = _post(
+        base + "/sparql",
+        {"query": 'SELECT (CONCAT("count(", ?s) AS ?t) { ?s ?p ?o } LIMIT 1'},
+    )
+    assert status == 200 and body[0]["t"].startswith("count(http"), body
 
 
 # --- round 5: data-driven W3C typing, single bounding choke point ---------
