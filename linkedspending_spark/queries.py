@@ -2814,14 +2814,15 @@ def q_triple_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset with its label and each of its refYears (3-pattern join,
     1:N on years — the exact shape of the reference's query).
 
-    Third branch (round 4): the OPTIONAL/FILTER algebra
-    (serve.select_sparql) under the same value hash — every dataset
+    Third branch (round 4): the OPTIONAL/FILTER algebra as SPARQL text
+    (sparql.select_text) under the same value hash — every dataset
     except conv-0 (FILTER on a required var), OPTIONALLY its refYears
     but only where the dataset is fully complete (the group's
     completeness="1.000000" pattern gates the left join, so incomplete
     datasets come back NULL-extended → 'unbound')."""
     from .operators.convert_transcripts import dataset_triples
-    from .serve import match, select_bgp, select_sparql
+    from .serve import match, select_bgp
+    from .sparql import select_text
 
     t = transcripts_from_events(spark, sf_dir)
     pattern = (
@@ -2841,16 +2842,13 @@ def q_triple_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("year").alias("o"),
     )
     dst = dataset_triples(t)
-    alg = select_sparql(
+    alg = select_text(
         dst,
-        [("?d", M.RDF_TYPE, M.QB_DATASET), ("?d", M.RDFS_LABEL, "?label")],
-        optionals=[
-            [
-                ("?d", M.LSO_COMPLETENESS, "1.000000"),
-                ("?d", M.LSO_REF_YEAR, "?year"),
-            ]
-        ],
-        filters=["?label != 'conv-0'"],
+        f"SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> . "
+        f"?d <{M.RDFS_LABEL}> ?label "
+        f'OPTIONAL {{ ?d <{M.LSO_COMPLETENESS}> "1.000000" . '
+        f"?d <{M.LSO_REF_YEAR}> ?year }} "
+        'FILTER(?label != "conv-0") }',
     ).select(
         F.col("d").alias("s"),
         F.col("label").alias("p"),
@@ -2873,7 +2871,7 @@ SELECT '{INST}' || conv_id AS s,
 FROM (SELECT DISTINCT conv_id, CAST(year(ts) AS INT) AS y
       FROM transcripts WHERE ts IS NOT NULL) dsyears
 UNION ALL
--- select_sparql branch: FILTER on the required label, OPTIONAL refYears
+-- SPARQL-text branch: FILTER on the required label, OPTIONAL refYears
 -- gated on completeness = 1.000000 (missing-count 0 ⇔ the %.6f literal)
 SELECT '{INST}' || g.conv_id AS s,
        g.conv_id AS p,

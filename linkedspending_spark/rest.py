@@ -4,7 +4,7 @@ The reference exposes its catalog, jobs, and graph reads over REST
 (Rest.java:30-240 — ``/datasets`` with a 5 s TTL cache, ``/jobs``,
 job-state links; GrizzlyHttpUtil.java:17-36 hosts it on Grizzly). The
 engine's equivalents are library DataFrames (``serve.match`` /
-``select_sparql``, ``jobs.list_runs``, the manifest store); this module
+``sparql.select_text``, ``jobs.list_runs``, the manifest store); this module
 binds them to HTTP with nothing but ``http.server`` so a switching user
 gets the same operational surface without any web framework.
 
@@ -63,15 +63,8 @@ Endpoints::
                            (sparql11-results-csv-tsv); graphs answer
                            application/n-triples
     POST /sparql           {"query": "select ?d ?m {?d a qb:DataSet. ...}"}
-                           textual SPARQL (sparql.select_text dialect), OR
-                           the JSON algebra form:
-                           {"patterns": [[s,p,o],...], "optionals":
-                           [[[s,p,o],...]], "filters": [...],
-                           "unions": [[[[s,p,o],...], ...], ...],
-                           "distinct": bool, "order_by": ["?v", "-?v"],
-                           "limit": N}
-                           → serve.select_sparql solutions; pass
-                           "format": "w3c" for sparql-results+json,
+                           textual SPARQL (sparql.select_text dialect);
+                           pass "format": "w3c" for sparql-results+json,
                            "xml"/"csv"/"tsv" for the other W3C
                            serializations
 """
@@ -88,7 +81,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .serve import bgp_stats, match, select_sparql
+from .serve import bgp_stats, match
 
 
 class RestService:
@@ -236,85 +229,85 @@ class RestService:
         # spec'd serializations (content-negotiated on the GET binding)
         fmt = body.get("format")
         w3c = fmt in ("w3c", "xml", "csv", "tsv")
-        if body.get("query"):  # textual SPARQL (Sparql.java:26-29 analog)
-            from .sparql import SparqlSyntaxError, parse_select, select_text
+        if not body.get("query"):
+            raise _HttpError(400, "body needs 'query' (SPARQL text)")
+        # textual SPARQL (Sparql.java:26-29 analog)
+        from .sparql import SparqlSyntaxError, parse_select, select_text
 
-            try:
-                p = parse_select(body["query"])
-                # W3C protocol dataset parameters OVERRIDE the query's
-                # own FROM/FROM NAMED (sparql11-protocol 2.1.4)
-                dgu = body.get("default_graph_uri")
-                ngu = body.get("named_graph_uri")
-                if dgu is not None or ngu is not None:
-                    p.from_graphs = list(dgu or [])
-                    p.from_named = list(ngu or [])
-                df = select_text(
-                    self.triples,
-                    body["query"],
-                    stats=self.stats,
-                    limit_cap=self.max_rows,
-                    parsed=p,
-                    with_kinds=w3c,
+        try:
+            p = parse_select(body["query"])
+            # W3C protocol dataset parameters OVERRIDE the query's
+            # own FROM/FROM NAMED (sparql11-protocol 2.1.4)
+            dgu = body.get("default_graph_uri")
+            ngu = body.get("named_graph_uri")
+            if dgu is not None or ngu is not None:
+                p.from_graphs = list(dgu or [])
+                p.from_named = list(ngu or [])
+            df = select_text(
+                self.triples,
+                body["query"],
+                stats=self.stats,
+                limit_cap=self.max_rows,
+                parsed=p,
+                with_kinds=w3c,
+            )
+        except (SparqlSyntaxError, ValueError) as e:
+            raise _HttpError(400, str(e)) from e
+        if p.ask:
+            answer = bool(df.take(1))
+            if fmt == "xml":
+                return _Raw(
+                    '<?xml version="1.0"?>\n<sparql xmlns="http://'
+                    'www.w3.org/2005/sparql-results#"><head/>'
+                    f"<boolean>{str(answer).lower()}</boolean>"
+                    "</sparql>\n",
+                    RESULT_CTYPES["xml"],
                 )
-            except (SparqlSyntaxError, ValueError) as e:
-                raise _HttpError(400, str(e)) from e
-            if p.ask:
-                answer = bool(df.take(1))
-                if fmt == "xml":
-                    return _Raw(
-                        '<?xml version="1.0"?>\n<sparql xmlns="http://'
-                        'www.w3.org/2005/sparql-results#"><head/>'
-                        f"<boolean>{str(answer).lower()}</boolean>"
-                        "</sparql>\n",
-                        RESULT_CTYPES["xml"],
-                    )
-                if fmt in ("csv", "tsv"):
-                    raise _HttpError(
-                        400,
-                        "ASK has no CSV/TSV serialization — use JSON "
-                        "or XML",
-                    )
-                if w3c:
-                    return _Raw(
-                        json.dumps({"head": {}, "boolean": answer}),
-                        RESULT_CTYPES["w3c"],
-                    )
-                return {"ask": answer}
-            if p.construct is not None or p.describe is not None:
-                # CONSTRUCT/DESCRIBE answer a GRAPH: W3C clients get
-                # N-Triples (the protocol's RDF response; format "nt"
-                # works too), JSON clients get the triple-table rows
-                if w3c or fmt in ("nt", "ttl") or body.get("format") == "nt":
-                    from .functions.nt import nt_statement
+            if fmt in ("csv", "tsv"):
+                raise _HttpError(
+                    400,
+                    "ASK has no CSV/TSV serialization — use JSON "
+                    "or XML",
+                )
+            if w3c:
+                return _Raw(
+                    json.dumps({"head": {}, "boolean": answer}),
+                    RESULT_CTYPES["w3c"],
+                )
+            return {"ask": answer}
+        if p.construct is not None or p.describe is not None:
+            # CONSTRUCT/DESCRIBE answer a GRAPH: W3C clients get
+            # N-Triples (the protocol's RDF response; format "nt"
+            # works too), JSON clients get the triple-table rows
+            if w3c or fmt in ("nt", "ttl") or body.get("format") == "nt":
+                from .functions.nt import nt_statement
 
-                    d = df
-                    if "o_kind" not in d.columns:  # kinds-less table
-                        d = (
-                            d.withColumn(
-                                "o_kind",
-                                F.when(
-                                    F.col("o").startswith("http://")
-                                    | F.col("o").startswith("https://"),
-                                    F.lit("uri"),
-                                ).otherwise(F.lit("literal")),
-                            )
-                            .withColumn(
-                                "o_datatype", F.lit(None).cast("string")
-                            )
-                            .withColumn("o_lang", F.lit(None).cast("string"))
+                d = df
+                if "o_kind" not in d.columns:  # kinds-less table
+                    d = (
+                        d.withColumn(
+                            "o_kind",
+                            F.when(
+                                F.col("o").startswith("http://")
+                                | F.col("o").startswith("https://"),
+                                F.lit("uri"),
+                            ).otherwise(F.lit("literal")),
                         )
-                    lines = self._bounded_rows(
-                        d.select(nt_statement().alias("nt"))
+                        .withColumn(
+                            "o_datatype", F.lit(None).cast("string")
+                        )
+                        .withColumn("o_lang", F.lit(None).cast("string"))
                     )
-                    return _Raw(
-                        "".join(r["nt"] + "\n" for r in lines),
-                        "text/turtle; charset=utf-8"
-                        if fmt == "ttl"
-                        else "application/n-triples; charset=utf-8",
-                    )
-                return self._bounded_rows(df)
-        else:
-            df = self._sparql_algebra(body, with_kinds=w3c)
+                lines = self._bounded_rows(
+                    d.select(nt_statement().alias("nt"))
+                )
+                return _Raw(
+                    "".join(r["nt"] + "\n" for r in lines),
+                    "text/turtle; charset=utf-8"
+                    if fmt == "ttl"
+                    else "application/n-triples; charset=utf-8",
+                )
+            return self._bounded_rows(df)
         rows = self._bounded_rows(df)
         if fmt in ("xml", "csv", "tsv"):
             return _serialize_results(fmt, df.columns, rows)
@@ -326,42 +319,6 @@ class RestService:
                 RESULT_CTYPES["w3c"],
             )
         return rows
-
-    def _sparql_algebra(self, body: dict, with_kinds: bool = False) -> DataFrame:
-        patterns = body.get("patterns")
-        if not patterns and not body.get("unions"):
-            raise _HttpError(
-                400, "body needs 'query', 'patterns' or 'unions'"
-            )
-        limit = _client_int(
-            body.get("limit", self.max_rows), "limit", self.max_rows
-        )
-        try:
-            df = select_sparql(
-                self.triples,
-                [tuple(p) for p in (patterns or [])],
-                optionals=[
-                    [tuple(p) for p in group]
-                    for group in body.get("optionals", [])
-                ],
-                filters=body.get("filters", []),
-                unions=[
-                    [[tuple(p) for p in branch] for branch in expr]
-                    for expr in body.get("unions", [])
-                ],
-                minuses=[
-                    [tuple(p) for p in group]
-                    for group in body.get("minus", [])
-                ],
-                distinct=bool(body.get("distinct", False)),
-                order_by=body.get("order_by", []),
-                limit=limit,
-                stats=self.stats,
-                with_kinds=with_kinds,
-            )
-        except ValueError as e:
-            raise _HttpError(400, str(e)) from e
-        return df
 
     # -- job control (Rest.java /control/* analog) --------------------------
 

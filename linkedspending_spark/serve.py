@@ -8,13 +8,16 @@ partitioned parquet/Iceberg triple table. The reference's own catalog
 queries are conjunctive multi-pattern selects (Sparql.java:44:
 ``?d a qb:DataSet . ?d dcterms:modified ?m . ?d dcterms:created ?c``)
 — ``select_bgp`` evaluates exactly that shape: a basic graph pattern
-as a join tree of pushed-down pattern scans, and ``select_sparql``
-layers OPTIONAL (left-joined pattern groups), FILTER (earliest-bound
-expression predicates), UNION (by-name branch union, NULL = unbound),
-DISTINCT, ORDER BY and LIMIT on top — covering the forms
+as a join tree of pushed-down pattern scans, and ``eval_group``
+evaluates a whole SPARQL group graph pattern over it: one recursive
+evaluator for OPTIONAL (left joins), FILTER (earliest-bound expression
+predicates), UNION (by-name branch union, NULL = unbound), MINUS,
+FILTER [NOT] EXISTS, GRAPH, BIND, VALUES, property paths and
+subqueries, each operator's body itself a group — covering the forms
 Sparql.java's free-form queries actually use and then some. Textual
 queries (the reference's ``Sparql.select(query)`` strings) parse onto
-this algebra via :mod:`linkedspending_spark.sparql`.
+this algebra via :mod:`linkedspending_spark.sparql`, which also applies
+the solution modifiers (DISTINCT, ORDER BY, LIMIT).
 
 Scale shape: every bound term becomes a pushed-down parquet filter
 (min/max + dictionary pruning on the sorted columns), and a bound
@@ -281,7 +284,7 @@ def select_bgp(
     manifest_path: str | None = None,
     stats: dict | None = None,
     with_kinds: bool = False,
-    graph_var: str | None = None,
+    in_graph: bool = False,
 ) -> DataFrame:
     """Basic-graph-pattern (conjunctive) select — Sparql.java:40-53 analog.
 
@@ -321,6 +324,11 @@ def select_bgp(
     results serializer types bindings from these instead of guessing
     from the lexical form. Variable names may not end in ``__kind``/
     ``__datatype``/``__lang`` under this flag (reserved; raises).
+
+    ``in_graph=True`` (a ``GRAPH ?var`` body) additionally binds the
+    active graph, the ``dataset`` partition column, as the reserved
+    ``_GRAPH_COL`` column of every pattern: the patterns then join on
+    it, which keeps the whole group inside ONE graph.
     """
     if not patterns:
         raise ValueError("select_bgp needs at least one pattern")
@@ -350,38 +358,12 @@ def select_bgp(
                     first_col[v] = c
                     if v not in out_order:
                         out_order.append(v)
-        gv: str | None = None
-        gexpr = None
-        if graph_var is not None:
-            # GRAPH ?g { ... }: every pattern binds ?g from the dataset
-            # partition column as the reference's sub-graph URI
-            # (Virtuoso.java:30 <base><datasetName>); the shared join
-            # variable then keeps the whole group within ONE graph,
-            # per SPARQL's GRAPH semantics
-            if "dataset" not in triples.columns:
-                raise ValueError(
-                    "GRAPH ?var needs a triple table carrying the "
-                    "'dataset' partition column"
-                )
-            gv = graph_var[1:]
-            from . import model as _M
-
-            gexpr = F.concat(F.lit(_M.PREFIX_GRAPH), F.col("dataset"))
-            if gv in first_col:  # GRAPH ?g { ?g ... }: positions agree
-                df = df.where(gexpr == F.col(first_col[gv]))
-                gv = None
-            elif gv not in out_order:
-                out_order.append(gv)
-        if first_col or gv:
+        if first_col or in_graph:
             cols = [F.col(c).alias(v) for v, c in first_col.items()]
-            if gv:
-                cols.append(gexpr.alias(gv))
-                if with_kinds:
-                    cols += [
-                        F.lit("uri").alias(f"{gv}__kind"),
-                        F.lit(None).cast("string").alias(f"{gv}__datatype"),
-                        F.lit(None).cast("string").alias(f"{gv}__lang"),
-                    ]
+            if in_graph:
+                cols.append(F.col("dataset").alias(_GRAPH_COL))
+                if _GRAPH_COL not in out_order:
+                    out_order.append(_GRAPH_COL)
             if with_kinds:
                 for v, c in first_col.items():
                     if _is_companion(v):
@@ -411,7 +393,9 @@ def select_bgp(
             if stats is not None
             else -len(consts)
         )
-        varset = frozenset(first_col) | ({gv} if gv else frozenset())
+        varset = frozenset(first_col) | (
+            {_GRAPH_COL} if in_graph else frozenset()
+        )
         plans.append((varset, proj, cost))
 
     order = _join_order([(vs, cost) for vs, _, cost in plans])
@@ -496,288 +480,230 @@ def _translate_filter_mapped(expr: str, mapping: dict[str, str]) -> str:
     )
 
 
-def _optional_payload(payload) -> tuple[list[tuple], list[str]]:
-    """An ``("optional", ...)`` group payload is either a plain pattern
-    group (back-compat) or ``(patterns, filters)`` with group-scoped
-    FILTER expressions. Distinguished structurally: a pattern group's
-    first element is an ``(s, p, o)`` term tuple (strings), the new
-    form's first element is the pattern LIST."""
-    if (
-        isinstance(payload, tuple)
-        and len(payload) == 2
-        and isinstance(payload[0], (list, tuple))
-        and (not payload[0] or not isinstance(payload[0][0], str))
-    ):
-        return list(payload[0]), list(payload[1])
-    return list(payload), []
+#: the active graph inside a ``GRAPH ?var`` body, as one reserved
+#: column: every scan in the body binds it from the ``dataset``
+#: partition column, every join in the body keys on it, and the GRAPH
+#: boundary turns it into the variable (as a sub-graph URI). The
+#: ``?__pp`` prefix is refused as a user variable, so it never
+#: captures a query variable.
+_GRAPH_COL = "__pp_graph"
 
 
-def select_sparql(
+def eval_group(
     triples: DataFrame,
-    patterns: Sequence[tuple],
-    optionals: Sequence[Sequence[tuple]] = (),
-    filters: Sequence[str] = (),
-    unions: Sequence[Sequence[Sequence[tuple]]] = (),
-    minuses: Sequence[Sequence[tuple]] = (),
-    distinct: bool = False,
-    order_by: Sequence[str] = (),
-    limit: int | None = None,
+    group,
     dataset: str | list[str] | None = None,
     n_buckets: int | None = None,
     manifest_path: str | None = None,
     stats: dict | None = None,
-    groups: Sequence[tuple] | None = None,
     with_kinds: bool = False,
     named_datasets: list[str] | None = None,
-) -> DataFrame:
-    """SPARQL SELECT beyond the conjunctive BGP: OPTIONAL + FILTER +
-    UNION + DISTINCT/ORDER BY/LIMIT over :func:`select_bgp` groups
-    (Sparql.java:26-53's free-form surface — e.g. the reference's
-    dataset listings with optionally-present dcterms fields).
+) -> tuple[DataFrame, frozenset[str]]:
+    """Evaluate a SPARQL group graph pattern (SPARQL 1.1 §18.5-18.6) to
+    ``(solutions, nullable variables)`` — the variables some solution
+    may leave unbound (NULL).
 
-    * ``optionals`` — each entry is a pattern group evaluated as its own
-      BGP and LEFT-joined on the variables shared with the solution so
-      far (SPARQL OPTIONAL). Variables introduced only in an optional
-      group come back NULL where the group found no match. BGP solution
-      columns are never NULL (triple terms are non-null), so the SQL
-      left equi-join is exactly SPARQL's compatibility join here.
-    * ``filters`` — Spark SQL boolean expressions over ``?var``
-      references (e.g. ``"?year >= '2021'"``). Each filter is applied at
-      the EARLIEST group at which all its variables are bound: filters
-      over required variables land right after the main BGP (Catalyst
-      then pushes them through the inner joins into the scans); filters
-      over optional variables land after that optional's left join,
-      where a NULL (unbound) variable makes the comparison false — the
-      SQL NULL rule coincides with SPARQL's "type error → false".
-    * ``unions`` — each entry is ONE union expression: a list of ≥2
-      alternative pattern groups (``{A} UNION {B}``). Each branch is
-      evaluated as its own BGP; branch solutions are unioned by name
-      (variables a branch does not bind come back NULL = unbound), and
-      the union's solutions join the solution so far on the shared
-      variables. A shared variable must be bound by EVERY branch —
-      SPARQL's compatibility join would accept an unbound shared
-      variable where the SQL equi-join drops it, so that case raises
-      instead of silently diverging.
-    * ``minuses`` — each entry is a pattern group evaluated as its own
-      BGP; solutions that agree with some group row on >= 1 shared
-      variable are REMOVED (SPARQL MINUS → LEFT ANTI equi-join; no
-      shared variable removes nothing, the spec's disjoint-domain
-      rule). The text parser also passes group entries ``("minus",
-      patterns)`` (positional) and ``("exists", (patterns, positive))``
-      (FILTER [NOT] EXISTS → LEFT SEMI / LEFT ANTI on the shared
-      variables, applied after all positional groups — SPARQL scopes a
-      FILTER to its whole group).
-    * ``distinct`` / ``order_by`` / ``limit`` — SELECT DISTINCT,
-      ORDER BY (``"?var"`` ascending, ``"-?var"`` descending), LIMIT.
-      ORDER BY + LIMIT together plan as TakeOrderedAndProject (per-
-      partition top-k, no global sort) — the serving-path shape.
+    ``group`` is a parsed group (:class:`~linkedspending_spark.sparql.
+    ParsedQuery`): its triple ``patterns`` (one :func:`select_bgp` join
+    tree), its ``filters`` and its ``groups`` — one entry per group
+    operator, in source order:
 
-    * ``groups`` — explicit evaluation order: a sequence of
-      ``("optional", pattern_group | (pattern_group, filters))`` /
-      ``("optional_solutions", (df, nullable_vars, filters))`` (a
-      pre-evaluated OPTIONAL body with nested algebra — the sparql
-      text layer's bottom-up bridge; LEFT-joined like "optional",
-      joins on its conditionally-bound vars refused) /
-      ``("union", branches)`` / ``("values", (var_names, rows))`` /
-      ``("bind", (sql_expr, var))`` entries evaluated in SOURCE
-      order (SPARQL group-graph-pattern semantics — an OPTIONAL whose
-      shared variable is bound by an earlier UNION must join after it).
-      An optional group's own ``filters`` join the LEFT JOIN's ON
-      condition (SPARQL LeftJoin(Ω1, Ω2, expr)): unmatched solutions
-      are kept NULL-extended, unlike a solution-level filter.
-      When omitted, all ``optionals`` evaluate before all ``unions``
-      (back-compat; the text parser always passes ``groups``). A
-      VALUES block becomes a LocalRelation inner-joined
-      on its shared variables — inline data never launches a Spark job
-      to build, and a small VALUES side broadcast-prunes the join.
+    * ``("optional", body)`` — LeftJoin on the shared variables. The
+      body's FILTERs over its own variables evaluate inside it; those
+      that read the outer solution join the LEFT JOIN's ON condition
+      (SPARQL ``LeftJoin(Ω1, Ω2, expr)``: an optional match failing
+      them is dropped, the solution is kept NULL-extended).
+    * ``("minus", body)`` — LEFT ANTI join on the shared variables; no
+      shared variable removes nothing (the disjoint-domain rule,
+      §8.3.3).
+    * ``("exists", (body, positive))`` — FILTER [NOT] EXISTS: LEFT
+      SEMI / LEFT ANTI on the shared variables, applied after the
+      positional operators (a FILTER scopes to its whole group); no
+      shared variable tests whether the body is non-empty at all.
+    * ``("union", [body, ...])`` — branches unioned by name (a variable
+      a branch does not bind comes back NULL = unbound), then joined.
+    * ``("graph", (term, body))`` — a constant graph evaluates the body
+      with ``dataset`` bound (every scan partition-prunes); a variable
+      evaluates it with the active graph carried as one reserved
+      column (see ``_GRAPH_COL``). Named graphs are the ``dataset``
+      partitions, addressed as ``<PREFIX_GRAPH><name>``
+      (Virtuoso.java:30); an absent graph is an empty graph.
+    * ``("bind", (sql_expr, var, meta))`` — an expression column in
+      source order; ``meta`` carries an RDF term constructor's constant
+      kind/datatype/lang (``sparql._bind_expression``).
+    * ``("values", (var_names, rows))`` — inline data as a
+      LocalRelation (no Spark job builds it), UNDEF = NULL.
+    * ``("path", (s, p, o, quant))`` — a quantified property path
+      (:func:`path_closure`); both ends constant = an existence gate.
+    * ``("subquery", query)`` — a nested SELECT, evaluated through
+      ``sparql.select_text``'s pipeline (projection, aggregates and
+      modifiers; no ``limit_cap``).
 
-    A join on a variable that may be NULL (unbound) on either side —
-    introduced by an earlier OPTIONAL, or by a union branch that does
-    not bind it — is REFUSED: SPARQL's compatibility semantics treat
-    unbound as joinable-with-anything where the SQL equi-join drops the
-    row, so that case raises instead of silently diverging.
+    Every body is itself a group and evaluates through this same
+    function; a body of triple patterns and filters is one
+    :func:`select_bgp` join tree, exactly as at top level.
 
-    Scale shape: each group is an independently-ordered BGP join tree
-    (pass ``stats`` for selectivity ordering); OPTIONAL groups join on
-    their shared variables, so a selective main group broadcasts into
-    every optional instead of re-scanning the corpus. UNION branches
-    are independent pushed-down scans — Spark unions are plan-level
-    (no shuffle, no materialization).
+    FILTERs apply at the EARLIEST point all their variables are bound:
+    over required variables right after the BGP (Catalyst then pushes
+    them through the joins into the scans), over optional ones after
+    that join, where NULL makes the comparison false — SQL's NULL rule
+    coincides with SPARQL's "type error → false".
+
+    A join on a variable that may be unbound on either side is REFUSED:
+    SPARQL's compatibility join treats unbound as joinable-with-anything
+    where the SQL equi-join drops the row, so that case raises instead
+    of silently diverging. Each operator joins on its shared VARIABLE
+    columns only, never on companions.
 
     ``with_kinds=True`` threads each variable's RDF term typing through
     as ``<v>__kind``/``<v>__datatype``/``<v>__lang`` companion columns
-    (see :func:`select_bgp`); joins still key on the variable columns
-    only. Variables bound only by VALUES or BIND carry no companions
-    (consumers fall back per-binding). Note DISTINCT then dedups by
-    TERM identity (lexical form + kind + datatype + lang) — the more
-    SPARQL-faithful reading.
+    (see :func:`select_bgp`). Variables bound only by VALUES carry no
+    companions (consumers fall back per binding); BIND carries constant
+    or NULL ones.
 
     ``dataset`` takes a single partition name or a SET (the FROM
     default-graph merge; ``[]`` = the empty default graph).
     ``named_datasets`` lists the graphs GRAPH clauses may address
     (SPARQL 13.2 FROM NAMED — ``None`` = no dataset description, GRAPH
     ranges over every partition).
+
+    Scale shape: each group is an independently-ordered BGP join tree
+    (pass ``stats`` for selectivity ordering), so a selective main
+    group broadcasts into every OPTIONAL instead of re-scanning the
+    corpus; UNION branches are independent pushed-down scans unioned
+    at plan level (no shuffle, no materialization).
     """
-    kw = dict(
+    if not group.patterns and not group.groups:
+        raise ValueError(
+            "a group needs patterns, a union, values, a bind or a path"
+        )
+    scope = dict(
         dataset=dataset,
         n_buckets=n_buckets,
         manifest_path=manifest_path,
         stats=stats,
         with_kinds=with_kinds,
+        named=named_datasets,
+        graph=False,
     )
+    df, nullable, _ = _eval_group(triples, group, scope)
+    return df, frozenset(nullable)
 
-    def _join_vars(cols) -> list[str]:
-        """Join keys: shared VARIABLE columns (never companions)."""
-        return [
-            c
-            for c in out_order
-            if c in cols and not (with_kinds and _is_companion(c))
-        ]
-    if groups is None:
-        groups = (
-            [("optional", g) for g in optionals]
-            + [("union", u) for u in unions]
-            + [("minus", m) for m in minuses]
-        )
-    groups = list(groups)
-    # FILTER (NOT) EXISTS is group-level (SPARQL scopes every FILTER to
-    # the whole group it appears in), so those entries evaluate AFTER
-    # the positional groups regardless of source position
-    exists_entries = [
-        g for g in groups if g[0] in ("exists", "exists_solutions")
-    ]
-    groups = [
-        g for g in groups if g[0] not in ("exists", "exists_solutions")
-    ]
-    nullable: set[str] = set()  # vars that may be NULL (unbound)
-    if patterns:
-        df = select_bgp(triples, patterns, **kw)
-    elif groups and groups[0][0] == "union":
-        # SPARQL allows a query that is just a UNION: the first union
-        # expression is the base solution, the rest join onto it below
-        df, branch_cols = _eval_union(triples, groups.pop(0)[1], kw)
-        nullable |= {
-            c
-            for c in df.columns
-            if any(c not in bc for bc in branch_cols)
-        }
-    elif groups and groups[0][0] == "values":
-        names, rows = groups.pop(0)[1]
-        df = _values_df(triples.sparkSession, names, rows)
-        nullable |= {
-            n for i, n in enumerate(names) if any(r[i] is None for r in rows)
-        }
-    elif groups and groups[0][0] == "bind":
-        # a query that starts with BIND: base = the single empty
-        # solution (SPARQL's Join(BGP(), ...) identity) — one row, no
-        # columns; the bind branch below adds the variable
-        df = triples.sparkSession.range(1).drop("id")
-    elif groups and groups[0][0] == "solutions":
-        # a query that IS a subquery: its solutions are the base
-        df, sub_nullable = groups.pop(0)[1]
-        nullable |= set(sub_nullable)
-    elif groups and groups[0][0] == "graph":
-        # a query that IS a GRAPH group: its scoped BGP is the base
-        df = _eval_graph(triples, groups.pop(0)[1], kw, named_datasets)
-    elif groups and groups[0][0] == "path":
-        # a query that IS a quantified property path: the closure's
-        # solutions are the base
-        s_t, p_uri, o_t, quant = groups.pop(0)[1]
-        df = path_closure(
-            triples,
-            s_t,
-            p_uri,
-            o_t,
-            quant,
-            dataset=dataset,
-            n_buckets=n_buckets,
-            manifest_path=manifest_path,
-            with_kinds=with_kinds,
-        )
-    else:
+
+def _refuse_nullable(shared, nullable, body_nullable, what: str) -> None:
+    bad = [c for c in shared if c in body_nullable]
+    if bad:
         raise ValueError(
-            "select_sparql needs patterns, a union, values, a bind or "
-            "a path"
+            f"join on possibly-unbound {what} variable(s) {bad} — "
+            "SPARQL's compatibility join on unbound (UNDEF) variables "
+            f"is not supported; bind them unconditionally in the {what}"
         )
-    out_order = list(df.columns)
-    bound = set(out_order)
-    remaining = list(filters)
+    bad = [c for c in shared if c in nullable]
+    if bad:
+        raise ValueError(
+            f"join on possibly-unbound variable(s) {bad} (solution side "
+            f"of {what}) — SPARQL's compatibility join on unbound "
+            "variables is not supported; bind them unconditionally first"
+        )
 
-    def apply_ready(d: DataFrame) -> DataFrame:
+
+def _eval_group(
+    triples: DataFrame, group, scope: dict, leftjoin: bool = False
+) -> tuple[DataFrame, set[str], list[str]]:
+    """One group → ``(solutions, nullable vars, unplaced filters)``.
+    Under ``leftjoin`` (an OPTIONAL body) the filters the body's own
+    solutions do not bind are returned for the LeftJoin condition;
+    otherwise they raise."""
+    kinds = scope["with_kinds"]
+    scan_kw = dict(
+        dataset=scope["dataset"],
+        n_buckets=scope["n_buckets"],
+        manifest_path=scope["manifest_path"],
+    )
+    df = None  # None = the single empty solution, Join's identity
+    order: list[str] = []  # solution columns, first appearance first
+    nullable: set[str] = set()
+    remaining = list(group.filters)
+    if group.patterns:
+        df = select_bgp(
+            triples,
+            group.patterns,
+            stats=scope["stats"],
+            with_kinds=kinds,
+            in_graph=scope["graph"],
+            **scan_kw,
+        )
+        order = list(df.columns)
+
+    def base() -> DataFrame:
+        if df is not None:
+            return df
+        return triples.sparkSession.range(1).drop("id")
+
+    def keys(right: DataFrame, what: str, body_nullable):
+        """The join keys — shared VARIABLE columns, never companions —
+        after refusing a possibly-unbound one; and ``right`` without
+        its copies of the keys' companions (the solution has them)."""
+        cols = right.columns
+        shared = [
+            c for c in order
+            if c in cols and not (kinds and _is_companion(c))
+        ]
+        _refuse_nullable(shared, nullable, body_nullable, what)
+        if kinds and shared:
+            right = right.drop(
+                *[c for v in shared for c in _companions_of(v, cols)]
+            )
+        return shared, right
+
+    def join(right: DataFrame, body_nullable, what: str) -> None:
+        nonlocal df
+        shared, right = keys(right, what, body_nullable)
+        new = [c for c in right.columns if c not in order]
+        if df is None:
+            df = right
+        else:
+            df = df.join(right, on=shared) if shared else df.crossJoin(right)
+        nullable.update(c for c in new if c in body_nullable)
+        order.extend(new)
+
+    def apply_ready() -> None:
+        nonlocal df
         for f in list(remaining):
             vs = _filter_vars(f)
-            if not vs:
-                raise ValueError(f"filter {f!r} references no ?variable")
-            if vs <= bound:
-                d = d.where(F.expr(_translate_filter(f)))
+            if vs and vs <= set(order):
+                df = df.where(F.expr(_translate_filter(f)))
                 remaining.remove(f)
-        return d
 
-    def _refuse_nullable_join(shared: list, side: str) -> None:
-        null_shared = [c for c in shared if c in nullable]
-        if null_shared:
-            raise ValueError(
-                f"join on possibly-unbound variable(s) {null_shared} "
-                f"({side}) — SPARQL's compatibility join on unbound "
-                "variables is not supported; bind them unconditionally "
-                "first"
-            )
-
-    df = apply_ready(df)
-    for kind, payload in groups:
-        if kind in ("optional", "optional_solutions"):
-            if kind == "optional":
-                opt_patterns, opt_filters = _optional_payload(payload)
-                opt = select_bgp(triples, opt_patterns, **kw)
-                opt_nullable: frozenset = frozenset()
-            else:
-                # pre-evaluated OPTIONAL body with nested algebra (the
-                # sparql text layer's bottom-up bridge): solutions df +
-                # the vars it binds only conditionally + the body's
-                # outer-referencing filters (LeftJoin ON condition)
-                opt, opt_nullable, opt_filters = payload
-            shared = _join_vars(opt.columns)
-            if with_kinds and shared and kind == "optional":
-                # prefix already carries the shared vars' companions
-                # (pre-evaluated bodies carry none)
-                opt = opt.drop(
-                    *[
-                        c
-                        for v in shared
-                        for c in _companions_of(v, opt.columns)
-                    ]
-                )
-            bad = [c for c in shared if c in opt_nullable]
-            if bad:
-                raise ValueError(
-                    f"join on possibly-unbound variable(s) {bad} "
-                    "(optional-group side of OPTIONAL) — SPARQL's "
-                    "compatibility join on unbound variables is not "
-                    "supported; bind them unconditionally in the "
-                    "OPTIONAL body"
-                )
-            _refuse_nullable_join(shared, "solution side of OPTIONAL")
-            new = [c for c in opt.columns if c not in bound]
-            if opt_filters:
-                # SPARQL LeftJoin(Ω1, Ω2, expr): the group-scoped filter
-                # is part of the join CONDITION — a solution whose
-                # optional match fails it is KEPT and NULL-extended,
-                # where a solution-level (post-join) filter would drop
-                # it. Rename the optional side so the condition can name
+    apply_ready()
+    # FILTER (NOT) EXISTS is group-level (SPARQL scopes every FILTER to
+    # the whole group it appears in): those entries evaluate AFTER the
+    # positional operators regardless of source position
+    entries = [g for g in group.groups if g[0] != "exists"]
+    entries += [g for g in group.groups if g[0] == "exists"]
+    for kind, payload in entries:
+        if kind == "optional":
+            body, b_null, conds = _eval_group(triples, payload, scope, True)
+            df = base()
+            shared, body = keys(body, "OPTIONAL body", b_null)
+            new = [c for c in body.columns if c not in order]
+            if conds:
+                # SPARQL LeftJoin(Ω1, Ω2, expr): the filters that read
+                # the outer solution are part of the join CONDITION. The
+                # optional side is renamed so the condition can name
                 # both sides unambiguously; NULL/type-error → false is
                 # SQL's join-condition rule too, matching SPARQL.
-                ren = {c: f"__opt__{c}" for c in opt.columns}
-                opt_r = opt.select(
-                    *[F.col(c).alias(ren[c]) for c in opt.columns]
+                ren = {c: f"__opt__{c}" for c in body.columns}
+                opt_r = body.select(
+                    *[F.col(c).alias(r) for c, r in ren.items()]
                 )
                 cond = F.lit(True)
                 for c in shared:
                     cond = cond & (F.col(c) == F.col(ren[c]))
-                for raw in opt_filters:
+                for raw in conds:
                     vs = _filter_vars(raw)
                     unknown = sorted(
-                        v for v in vs
-                        if v not in bound and v not in opt.columns
+                        v for v in vs if v not in order and v not in ren
                     )
                     if unknown:
                         raise ValueError(
@@ -785,283 +711,140 @@ def select_sparql(
                             f"variable(s) {unknown} bound by neither the "
                             "solution nor the optional group"
                         )
-                    # vars the optional binds read from the renamed right
-                    # side; outer-only vars read from the solution (for
-                    # shared vars both sides are equal under the join)
+                    # vars the body binds read from the renamed right
+                    # side; outer-only vars read from the solution
                     cond = cond & F.expr(
                         _translate_filter_mapped(
-                            raw,
-                            {v: ren[v] for v in vs if v in ren},
+                            raw, {v: ren[v] for v in vs if v in ren}
                         )
                     )
                 df = df.join(opt_r, cond, "left").select(
-                    *out_order, *[F.col(ren[c]).alias(c) for c in new]
+                    *order, *[F.col(ren[c]).alias(c) for c in new]
                 )
             else:
+                # no shared variable: every solution extends with every
+                # optional row, NULL-extended when the body is empty
                 df = (
-                    df.join(opt, on=shared, how="left")
+                    df.join(body, on=shared, how="left")
                     if shared
-                    # no shared variable: every solution extends with
-                    # every optional row, NULL-extended when empty
-                    else df.join(opt, F.lit(True), "left")
+                    else df.join(body, F.lit(True), "left")
                 )
-            nullable |= set(new)  # unmatched solutions leave them NULL
-            out_order += new
-            bound |= set(opt.columns)
+            nullable.update(new)  # unmatched solutions leave them NULL
+            order.extend(new)
+        elif kind in ("minus", "exists"):
+            body, positive = (payload, False) if kind == "minus" else payload
+            body, b_null, _ = _eval_group(triples, body, scope)
+            df = base()
+            what = "MINUS body" if kind == "minus" else "FILTER EXISTS body"
+            shared, body = keys(body, what, b_null)
+            how = "left_semi" if positive else "left_anti"
+            if any(c != _GRAPH_COL for c in shared) or (
+                kind == "exists" and shared
+            ):
+                # the active graph is a key, never a shared VARIABLE: a
+                # MINUS body sharing only it removes nothing (§8.3.3),
+                # an EXISTS body is tested inside the active graph
+                df = df.join(body.select(*shared), on=shared, how=how)
+            elif kind == "exists":
+                df = df.join(body.limit(1), F.lit(True), how)
         elif kind == "union":
-            u, branch_cols = _eval_union(triples, payload, kw)
-            shared = _join_vars(u.columns)
-            if with_kinds and shared:
-                u = u.drop(
-                    *[c for v in shared for c in _companions_of(v, u.columns)]
+            parts = [_eval_group(triples, b, scope)[:2] for b in payload]
+            cols: list[str] = []
+            for b, _ in parts:
+                cols += [c for c in b.columns if c not in cols]
+            u, u_null = None, set()
+            for b, b_null in parts:
+                b_cols = b.columns
+                u_null |= {c for c in cols if c in b_null or c not in b_cols}
+                u = b if u is None else u.unionByName(
+                    b, allowMissingColumns=True
                 )
-            partial = [
-                c for c in shared if any(c not in bc for bc in branch_cols)
-            ]
-            if partial:
-                raise ValueError(
-                    f"union branch leaves shared variable(s) {partial} "
-                    "unbound — SPARQL's compatibility join on unbound "
-                    "variables is not supported; bind them in every branch"
-                )
-            _refuse_nullable_join(shared, "solution side of UNION")
-            df = df.join(u, on=shared) if shared else df.crossJoin(u)
-            new = [c for c in u.columns if c not in bound]
-            nullable |= {
-                c for c in new if any(c not in bc for bc in branch_cols)
-            }
-            out_order += new
-            bound |= set(u.columns)
-        elif kind == "values":
-            names, rows = payload
-            v = _values_df(triples.sparkSession, names, rows)
-            shared = _join_vars(v.columns)
-            undef_shared = [
-                c
-                for c in shared
-                if any(r[names.index(c)] is None for r in rows)
-            ]
-            if undef_shared:
-                raise ValueError(
-                    f"VALUES leaves shared variable(s) {undef_shared} "
-                    "UNDEF in some row — SPARQL's compatibility join on "
-                    "unbound variables is not supported"
-                )
-            _refuse_nullable_join(shared, "solution side of VALUES")
-            df = df.join(v, on=shared) if shared else df.crossJoin(v)
-            new = [c for c in v.columns if c not in bound]
-            nullable |= {
-                c
-                for c in new
-                if any(r[names.index(c)] is None for r in rows)
-            }
-            out_order += new
-            bound |= set(v.columns)
+            join(u.select(*cols), u_null, "UNION")
+        elif kind == "graph":
+            join(*_eval_graph(triples, *payload, scope), "GRAPH body")
         elif kind == "bind":
-            # BIND(expr AS ?v): evaluate in source order over the
-            # solution so far — a narrow projection, no shuffle.
-            # Payload is (sql_expr, var) or (sql_expr, var, meta) where
-            # meta carries an RDF term constructor's constant
-            # kind/datatype/lang (sparql._bind_expression).
-            sql_expr, name = payload[0], payload[1]
-            meta = payload[2] if len(payload) > 2 else None
-            if name in bound:
+            # BIND(expr AS ?v): evaluated in source order over the
+            # solution so far — a narrow projection, no shuffle
+            sql_expr, name, meta = payload
+            if name in order:
                 raise ValueError(
                     f"BIND would rebind already-bound variable ?{name} "
                     "(SPARQL forbids it)"
                 )
             missing = sorted(
-                v for v in _filter_vars(sql_expr) if v not in bound
+                v for v in _filter_vars(sql_expr) if v not in order
             )
             if missing:
                 raise ValueError(
                     f"BIND expression references unbound variable(s) "
                     f"{missing}"
                 )
-            df = df.withColumn(name, F.expr(_translate_filter(sql_expr)))
+            df = base().withColumn(name, F.expr(_translate_filter(sql_expr)))
             nullable.add(name)  # the expression may evaluate to NULL
-            out_order.append(name)
-            bound.add(name)
-            if with_kinds:
+            order.append(name)
+            if kinds:
                 # constructor meta → constant companions; plain BIND →
-                # NULL companions (the documented "NULL kind = plain
-                # literal" convention), so LANG()/DATATYPE()/isURI()
-                # over a BIND-born variable evaluate instead of failing
-                # name resolution
+                # NULL companions (the "NULL kind = plain literal"
+                # convention), NULL too where the value itself is NULL
                 m = meta or {}
-                for suf, key in (("__kind", "kind"),
-                                 ("__datatype", "datatype"),
-                                 ("__lang", "lang")):
-                    # NULL when the value itself is NULL: an unbound
-                    # variable has no term, so no kind either
+                for suf in _KIND_SUFFIXES:
                     df = df.withColumn(
                         name + suf,
                         F.when(
-                            F.col(name).isNotNull(), F.lit(m.get(key))
+                            F.col(name).isNotNull(), F.lit(m.get(suf[2:]))
                         ).cast("string"),
                     )
-                    out_order.append(name + suf)
-                bound.add(name + "__kind")
-                bound.add(name + "__datatype")
-                bound.add(name + "__lang")
-        elif kind == "graph":
-            g = _eval_graph(triples, payload, kw, named_datasets)
-            shared = _join_vars(g.columns)
-            if with_kinds and shared:
-                g = g.drop(
-                    *[c for v in shared for c in _companions_of(v, g.columns)]
-                )
-            _refuse_nullable_join(shared, "solution side of GRAPH")
-            df = df.join(g, on=shared) if shared else df.crossJoin(g)
-            new = [c for c in g.columns if c not in bound]
-            out_order += new
-            bound |= set(g.columns)
-        elif kind == "solutions":
-            # pre-evaluated solution set (SPARQL 1.1 subquery — the
-            # text layer evaluates the inner SELECT bottom-up): joined
-            # on the shared variables like a UNION group. The payload
-            # names which subquery columns may be NULL (vars projected
-            # from optionals/aggregates) — a join on one of those is
-            # refused, same compatibility-semantics rule as everywhere.
-            sub, sub_nullable = payload
-            shared = _join_vars(sub.columns)
-            bad = [c for c in shared if c in sub_nullable]
-            if bad:
-                raise ValueError(
-                    f"join on possibly-unbound subquery variable(s) "
-                    f"{bad} — SPARQL's compatibility join on unbound "
-                    "variables is not supported; project only "
-                    "always-bound variables from the subquery"
-                )
-            _refuse_nullable_join(shared, "solution side of a subquery")
-            df = df.join(sub, on=shared) if shared else df.crossJoin(sub)
-            new = [c for c in sub.columns if c not in bound]
-            nullable |= {c for c in new if c in sub_nullable}
-            out_order += new
-            bound |= set(sub.columns)
+                    order.append(name + suf)
+        elif kind == "values":
+            names, rows = payload
+            undef = {
+                n for i, n in enumerate(names)
+                if any(r[i] is None for r in rows)
+            }
+            v = _values_df(triples.sparkSession, names, rows)
+            join(v, undef, "VALUES")
         elif kind == "path":
-            # quantified property path (p+ / p* / p?): the closure's
-            # solution pairs join the solution so far on the shared
-            # variables, exactly like a UNION group. Path variables are
-            # never NULL. A both-ends-constant path is an existence
-            # gate: LEFT SEMI against its ≤1-row result (the EXISTS
-            # degenerate shape — broadcast, never duplicates solutions).
             s_t, p_uri, o_t, quant = payload
             pc = path_closure(
-                triples,
-                s_t,
-                p_uri,
-                o_t,
-                quant,
-                dataset=dataset,
-                n_buckets=n_buckets,
-                manifest_path=manifest_path,
-                with_kinds=with_kinds,
+                triples, s_t, p_uri, o_t, quant, with_kinds=kinds, **scan_kw
             )
             if pc.columns == ["__pp_exists"]:
-                df = df.join(pc.limit(1), F.lit(True), "left_semi")
+                # both ends constant: an existence gate — LEFT SEMI
+                # against its ≤1-row result, never duplicating solutions
+                df = base().join(pc.limit(1), F.lit(True), "left_semi")
             else:
-                shared = _join_vars(pc.columns)
-                if with_kinds and shared:
-                    pc = pc.drop(
-                        *[
-                            c
-                            for v in shared
-                            for c in _companions_of(v, pc.columns)
-                        ]
-                    )
-                _refuse_nullable_join(
-                    shared, "solution side of a property path"
-                )
-                df = df.join(pc, on=shared) if shared else df.crossJoin(pc)
-                new = [c for c in pc.columns if c not in bound]
-                out_order += new
-                bound |= set(pc.columns)
-        elif kind == "minus":
-            # SPARQL Minus(Ω1, Ω2): drop solutions some right-side
-            # solution agrees with on >= 1 shared variable. BGP right
-            # sides bind every variable, so a LEFT ANTI equi-join on the
-            # shared variables is exact; Catalyst broadcasts a small
-            # right side. No shared variable → disjoint domains → MINUS
-            # removes nothing (kept verbatim, per the spec).
-            m = select_bgp(triples, payload, **kw)
-            shared = _join_vars(m.columns)
-            _refuse_nullable_join(shared, "solution side of MINUS")
-            if shared:
-                df = df.join(m.select(*shared), on=shared, how="left_anti")
-        elif kind == "minus_solutions":
-            # pre-evaluated MINUS body with nested algebra (the sparql
-            # text layer's bottom-up bridge): same LEFT ANTI on the
-            # shared variables; a shared variable the body binds only
-            # conditionally is refused — SPARQL's compatibility test
-            # would treat its unbound rows as matching-anything where
-            # the SQL anti join would not remove them
-            m, m_nullable = payload
-            shared = _join_vars(m.columns)
-            bad = [c for c in shared if c in m_nullable]
-            if bad:
-                raise ValueError(
-                    f"join on possibly-unbound variable(s) {bad} "
-                    "(MINUS body side) — SPARQL's compatibility join "
-                    "on unbound variables is not supported; bind them "
-                    "unconditionally in the MINUS body"
-                )
-            _refuse_nullable_join(shared, "solution side of MINUS")
-            if shared:
-                df = df.join(m.select(*shared), on=shared, how="left_anti")
+                join(pc, (), "property path")
+        elif kind == "subquery":
+            from .sparql import _solve
+
+            join(
+                *_solve(
+                    triples,
+                    payload,
+                    named_datasets=scope["named"],
+                    stats=scope["stats"],
+                    **scan_kw,
+                ),
+                "subquery",
+            )
         else:
             raise ValueError(f"unknown group kind {kind!r}")
-        df = apply_ready(df)
-    for ex_kind, ex_payload in exists_entries:
-        # FILTER EXISTS → LEFT SEMI join on the shared variables;
-        # FILTER NOT EXISTS → LEFT ANTI. Semi/anti joins return only
-        # left columns, never duplicate solutions, and broadcast a
-        # small probe side — the Catalyst shape for SPARQL's
-        # binding-substituted existence test over BGP groups. With no
-        # shared variable the test degenerates to "is the group
-        # non-empty at all": join on TRUE against limit(1).
-        if ex_kind == "exists":
-            ex_patterns, positive = ex_payload
-            e = select_bgp(triples, ex_patterns, **kw)
-            e_nullable: frozenset = frozenset()
-        else:
-            # pre-evaluated body with nested algebra (bottom-up bridge)
-            e, e_nullable, positive = ex_payload
-        shared = _join_vars(e.columns)
-        bad = [c for c in shared if c in e_nullable]
-        if bad:
-            raise ValueError(
-                f"join on possibly-unbound variable(s) {bad} (FILTER "
-                "EXISTS body side) — SPARQL's compatibility join on "
-                "unbound variables is not supported; bind them "
-                "unconditionally in the EXISTS body"
-            )
-        _refuse_nullable_join(shared, "solution side of FILTER EXISTS")
-        how = "left_semi" if positive else "left_anti"
-        if shared:
-            df = df.join(e.select(*shared), on=shared, how=how)
-        else:
-            df = df.join(e.limit(1), F.lit(True), how)
-    if remaining:
+        apply_ready()
+    if remaining and not leftjoin:
         raise ValueError(
             "filter(s) reference variables bound by no group: "
             f"{sorted(remaining)}"
         )
-    df = df.select(*out_order)
-    if distinct:
-        df = df.dropDuplicates()
-    if order_by:
-        keys = []
-        for tok in order_by:
-            desc = tok.startswith("-")
-            var = tok.lstrip("-").lstrip("?")
-            if var not in bound:
-                raise ValueError(f"order_by variable ?{var} is unbound")
-            keys.append(F.col(var).desc() if desc else F.col(var).asc())
-        df = df.orderBy(*keys)
-    if limit is not None:
-        df = df.limit(limit)
-    return df
+    df = base()
+    if scope["graph"] and _GRAPH_COL not in order:
+        # a body that reads no graph holds in every graph in scope
+        df = df.crossJoin(
+            match(triples, **scan_kw)
+            .select(F.col("dataset").alias(_GRAPH_COL))
+            .distinct()
+        )
+        order.append(_GRAPH_COL)
+    return df.select(*order), nullable, remaining
 
 
 def _values_df(spark: SparkSession, names: Sequence[str], rows) -> DataFrame:
@@ -1072,77 +855,62 @@ def _values_df(spark: SparkSession, names: Sequence[str], rows) -> DataFrame:
 
 
 def _eval_graph(
-    triples: DataFrame, payload: tuple, kw: dict, named: list | None = None
-) -> DataFrame:
-    """One ``GRAPH term { patterns }`` group. Named graphs are the
-    triple table's ``dataset`` partitions, addressed as the reference's
-    sub-graph URIs ``<PREFIX_GRAPH><datasetName>`` (Virtuoso.java:30).
+    triples: DataFrame, g_term: str, body, scope: dict
+) -> tuple[DataFrame, set[str]]:
+    """``GRAPH term { body }`` → ``(solutions, nullable vars)``.
 
-    * Constant graph URI → the group is a plain BGP with ``dataset``
-      bound: every scan in it partition-prunes (the whole point of
-      per-dataset graphs at 10¹² triples). A URI outside the graph-base
-      namespace, or disagreeing with an outer ``dataset=`` scope, names
-      no graph → the group contributes zero solutions (SPARQL: an
-      absent graph is an empty graph).
-    * Variable → every pattern additionally binds it from the dataset
-      column (see :func:`select_bgp` ``graph_var``); the shared join
-      variable keeps the whole group inside ONE graph.
+    * Constant graph URI → the body evaluates with ``dataset`` bound:
+      every scan in it partition-prunes (the point of per-dataset
+      graphs at 10¹² triples). A URI outside the graph-base namespace,
+      one disagreeing with an outer ``dataset=`` scope, or one outside
+      FROM NAMED names no graph → zero solutions.
+    * Variable → the body evaluates with the active graph as the
+      reserved ``_GRAPH_COL`` column, which becomes the variable here.
+      FROM NAMED sets the graphs it ranges over; a FROM default-graph
+      scope does not constrain it (the clause switches the active
+      graph); a single-dataset serving scope still does.
     """
     from . import model as _M
 
-    g_term, pats = payload
-    if _is_var(g_term):
-        kw2 = dict(kw)
-        if named is not None:
-            # FROM NAMED: the graph variable ranges over exactly the
-            # listed graphs ([] = no named graphs = zero solutions)
-            kw2["dataset"] = named
-        elif isinstance(kw2.get("dataset"), (list, tuple)):
-            # a FROM default-graph scope does NOT constrain GRAPH —
-            # the clause switches the active graph
-            kw2["dataset"] = None
-        return select_bgp(triples, pats, graph_var=g_term, **kw2)
     if "dataset" not in triples.columns:
         raise ValueError(
             "GRAPH needs a triple table carrying the 'dataset' "
             "partition column"
         )
-    if not g_term.startswith(_M.PREFIX_GRAPH):
-        name = g_term  # no dataset is named this → empty group
-    else:
-        name = g_term[len(_M.PREFIX_GRAPH):]
-    caller_ds = kw.get("dataset")
-    if isinstance(caller_ds, str) and caller_ds != name:
-        # outer serving scope and the GRAPH clause name different graphs
-        return select_bgp(triples, pats, **kw).where(F.lit(False))
-    if named is not None and name not in named:
-        # dataset description present: GRAPH sees only FROM NAMED graphs
-        return select_bgp(triples, pats, **kw).where(F.lit(False))
-    kw2 = dict(kw)
-    kw2["dataset"] = name
-    return select_bgp(triples, pats, **kw2)
-
-
-def _eval_union(
-    triples: DataFrame, groups: Sequence[Sequence[tuple]], kw: dict
-) -> tuple[DataFrame, list[set]]:
-    """One SPARQL UNION expression: branch BGPs unioned by variable name.
-
-    Returns the unioned solutions plus each branch's bound-variable set
-    (the caller refuses equi-joins on variables some branch leaves
-    unbound). unionByName(allowMissingColumns=True) NULL-extends the
-    variables a branch does not bind — exactly SPARQL's unbound.
-    """
-    if len(groups) < 2:
-        raise ValueError("a union expression needs >= 2 branches")
-    branches = [select_bgp(triples, g, **kw) for g in groups]
-    cols: list[str] = []
-    for b in branches:
-        cols += [c for c in b.columns if c not in cols]
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b, allowMissingColumns=True)
-    return out.select(*cols), [set(b.columns) for b in branches]
+    if not _is_var(g_term):
+        name = (
+            g_term[len(_M.PREFIX_GRAPH):]
+            if g_term.startswith(_M.PREFIX_GRAPH)
+            else g_term  # no dataset is named this → an empty graph
+        )
+        df, nullable, _ = _eval_group(
+            triples, body, dict(scope, dataset=name, graph=False)
+        )
+        outer, named = scope["dataset"], scope["named"]
+        if (isinstance(outer, str) and outer != name) or (
+            named is not None and name not in named
+        ):
+            df = df.where(F.lit(False))
+        return df, nullable
+    sub = dict(scope, graph=True)
+    if scope["named"] is not None:
+        sub["dataset"] = scope["named"]
+    elif isinstance(scope["dataset"], (list, tuple)):
+        sub["dataset"] = None
+    df, nullable, _ = _eval_group(triples, body, sub)
+    gv = g_term[1:]
+    uri = F.concat(F.lit(_M.PREFIX_GRAPH), F.col(_GRAPH_COL))
+    if gv in df.columns:  # GRAPH ?g { ?g ... }: the two must agree
+        _refuse_nullable([gv], (), nullable, "GRAPH body")
+        return df.where(F.col(gv) == uri).drop(_GRAPH_COL), nullable
+    cols = [uri.alias(gv) if c == _GRAPH_COL else F.col(c) for c in df.columns]
+    if scope["with_kinds"]:
+        cols += [
+            F.lit("uri").alias(f"{gv}__kind"),
+            F.lit(None).cast("string").alias(f"{gv}__datatype"),
+            F.lit(None).cast("string").alias(f"{gv}__lang"),
+        ]
+    return df.select(*cols), nullable
 
 
 # -- property paths -----------------------------------------------------------

@@ -13,8 +13,8 @@ strings run verbatim::
                          '?d dcterms:modified ?m. ?d dcterms:created ?c.}')
 
 Supported grammar (a deliberate subset — exactly the forms the
-reference's own queries use, plus the algebra ``select_sparql``
-evaluates):
+reference's own queries use, plus the group algebra
+:func:`~linkedspending_spark.serve.eval_group` evaluates):
 
 * ``PREFIX name: <uri>`` declarations — including the EMPTY prefix
   (``PREFIX : <uri>`` … ``:alice``); the reference's four standing
@@ -32,17 +32,17 @@ evaluates):
   OPTIONAL — those become part of the left join's ON condition
   (SPARQL ``LeftJoin(Ω1, Ω2, expr)``): solutions whose optional match
   fails the filter are KEPT and NULL-extended, where a solution-level
-  filter would drop them. OPTIONAL and UNION bodies take the FULL
-  group grammar (nested OPTIONAL/UNION/FILTER/BIND/VALUES/MINUS,
-  property paths, subqueries): a body with nested algebra evaluates
-  bottom-up like a subquery and LEFT-joins (OPTIONAL) or unions by
-  name then inner-joins (UNION) the outer solution; pattern-only
-  bodies keep the original flat plan shape. Joining on a variable a
-  body binds only conditionally stays a loud refusal (compatibility
-  semantics).
+  filter would drop them. OPTIONAL, UNION, MINUS, EXISTS and GRAPH
+  bodies take the FULL group grammar (nested OPTIONAL/UNION/FILTER/
+  BIND/VALUES/MINUS, property paths, subqueries): every body is itself
+  a group, evaluated bottom-up by the same evaluator, then LEFT-joined
+  (OPTIONAL) or unioned by name and inner-joined (UNION) with the
+  outer solution; a pattern-only body is one BGP join tree, as at top
+  level. Joining on a variable a body binds only conditionally stays
+  a loud refusal (compatibility semantics).
 * ``FILTER( expr )`` — translated to a Spark SQL predicate: ``&&``/
   ``||``/``!`` become AND/OR/NOT, URIs and (typed) literals become
-  string literals, ``?var`` references stay for ``select_sparql`` to
+  string literals, ``?var`` references stay for the evaluator to
   bind. Comparison semantics follow the operand's FORM, not always the
   lexical string: a quoted literal compares lexically against the
   string column, but an unquoted numeric literal (``FILTER(?n > 5)``)
@@ -79,7 +79,7 @@ evaluates):
 * ``SELECT (expr AS ?v)`` — projection expressions, applied after
   grouping (expressions may reference aggregate aliases, grouped
   variables, and aggregate CALLS — see the aggregates bullet).
-* ``{ A } UNION { B }`` (each branch a triple-pattern group).
+* ``{ A } UNION { B }`` (each branch a group).
 * ``MINUS { ... }`` — SPARQL Minus as a LEFT ANTI equi-join on the
   shared variables (positional, like OPTIONAL); no shared variable →
   removes nothing (the spec's disjoint-domain rule).
@@ -179,23 +179,21 @@ evaluates):
   (the join-on-subquery-MAX idiom), with the zero-solution divergence
   pinned in tests.
 
-* ``GRAPH <uri>|?var { patterns }`` — named graphs ARE the triple
+* ``GRAPH <uri>|?var { body }`` — named graphs ARE the triple
   table's ``dataset`` partitions, addressed as the reference's
   sub-graph URIs ``<PREFIX_GRAPH><datasetName>`` (Virtuoso.java:25-49).
-  A constant graph partition-prunes every scan in its group; a
-  variable binds from the dataset column (typed ``uri``) and keeps the
-  whole group inside one graph. An absent graph is an empty graph
-  (zero solutions), and a GRAPH clause never widens an outer
-  ``dataset=`` scope. A CONSTANT graph's body takes the full group
-  grammar (the whole nested evaluation scopes to that partition). A
-  graph VARIABLE takes it too: the scope DISTRIBUTES over the body
-  (``_scope_graph_var`` — every pattern context wraps in its own
-  ``GRAPH ?var`` entry; the shared join variable keeps the whole
-  group inside one graph, the algebra identity ``Graph(g, Join(A,B))
-  = Join(Graph(g,A), Graph(g,B))`` under the ``?g`` equi-join).
-  Refused under ``GRAPH ?var``, by name: quantified property paths
-  (the closure would run per graph) and subqueries (the active graph
-  substitutes past the projection).
+  GRAPH is an operator over its body, which takes the full group
+  grammar. A constant graph evaluates the body with the dataset bound
+  (every scan in it partition-prunes); a variable evaluates it with
+  the active graph carried as one reserved column — every scan binds
+  it from the dataset column, every join in the body keys on it, and
+  it becomes the variable (typed ``uri``) at the GRAPH boundary, so
+  the whole body stays inside one graph and MINUS applies the
+  disjoint-domain rule to the body's own variables. An absent graph
+  is an empty graph (zero solutions), and a GRAPH clause never widens
+  an outer ``dataset=`` scope. Refused under ``GRAPH ?var``, by name:
+  quantified property paths (the closure would run per graph) and
+  subqueries (the active graph substitutes past the projection).
   MINUS and FILTER [NOT] EXISTS bodies likewise take the full grammar
   (evaluated bottom-up; anti/semi joined on always-bound shared
   variables).
@@ -221,23 +219,28 @@ evaluates):
 Out of scope (raise, never misparse): SERVICE (no federation —
 single-engine by design), inverse/quantified negated property sets.
 
-Scale shape: the parser only *front-ends* ``select_sparql`` — every
-pattern is still a pushed-down scan under the stats-ordered join tree,
-and ORDER BY + LIMIT still plan as TakeOrderedAndProject.
+Scale shape: the parser only *front-ends* ``serve.eval_group`` —
+every pattern is still a pushed-down scan under the stats-ordered join
+tree, and ORDER BY + LIMIT still plan as TakeOrderedAndProject.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from dataclasses import replace as dc_replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import model as M
-from .serve import _filter_vars as _sv_filter_vars
-from .serve import select_sparql
+from .serve import (
+    _companions_of,
+    _filter_vars,
+    _is_companion,
+    _values_df,
+    eval_group,
+)
+from .serve import _translate_filter as _vars_to_cols
 
 #: Standing prefixes: the reference's four (Sparql.java:17-20) + core RDF.
 DEFAULT_PREFIXES: dict[str, str] = {
@@ -405,22 +408,26 @@ def _call_spans_spec(raw: str) -> bool:
 
 @dataclass
 class ParsedQuery:
-    """``select_sparql`` inputs plus the SELECT clause's projection."""
+    """A parsed query: its WHERE group (``patterns``, ``filters``,
+    ``groups`` — what :func:`~linkedspending_spark.serve.eval_group`
+    evaluates) plus the query form, projection and modifiers. Every
+    nested group body (OPTIONAL, MINUS, EXISTS, UNION branch, GRAPH) is
+    itself a ``ParsedQuery`` holding only a group."""
 
     patterns: list[tuple] = field(default_factory=list)
-    optionals: list[list[tuple]] = field(default_factory=list)
     filters: list[str] = field(default_factory=list)
-    unions: list[list[list[tuple]]] = field(default_factory=list)
     distinct: bool = False
     order_by: list[str] = field(default_factory=list)
     limit: int | None = None
     offset: int | None = None
     project: list[str] | None = None  # None = SELECT *
     ask: bool = False  # ASK query: solutions limited to 1; non-empty = true
-    #: OPTIONAL/UNION/BIND entries in source order — ("optional",
-    #: (patterns, filters)) / ("union", branches) / ("bind",
-    #: (sql_expr, var)) — passed to select_sparql so evaluation
-    #: follows SPARQL's group-graph-pattern order
+    #: group operators in source order (SPARQL's group-graph-pattern
+    #: order), one encoding each: ("optional", body) / ("minus", body)
+    #: / ("exists", (body, positive)) / ("union", [body, ...]) /
+    #: ("graph", (term, body)) / ("bind", (sql_expr, var, meta)) /
+    #: ("values", (var_names, rows)) / ("path", (s, p, o, quant)) /
+    #: ("subquery", ParsedQuery) — see serve.eval_group
     groups: list[tuple] = field(default_factory=list)
     #: (func, var-or-None-for-*, distinct, alias) per SELECT aggregate
     aggregates: list[tuple[str, str | None, bool, str]] = field(
@@ -448,10 +455,6 @@ class ParsedQuery:
     #: query uses LANG()/DATATYPE()/langMatches(): evaluation must
     #: thread the <v>__kind/__datatype/__lang companions internally
     needs_kinds: bool = False
-    #: synthesized nested specs (quantified-path UNION branches) keep
-    #: their reserved ?__ppN columns — an enclosing sequence rewrite's
-    #: chain may join on them; top-level queries always drop them
-    keep_internals: bool = False
     #: CONSTRUCT template: (s, p, o) of terms, each term a 4-tuple
     #: (value, kind 'var'|'uri'|'lit', datatype, lang) keeping the
     #: WRITTEN form so the output graph carries correct o_kind metadata
@@ -736,22 +739,17 @@ class _Parser:
                     "path alternation with both ends constant is not "
                     "supported"
                 )
-            rewritten = [self._rewrite_path(s, b, o) for b in node[1]]
-            if all(not g2 for _, g2 in rewritten):
-                return [], [("union", [p2 for p2, _ in rewritten])]
-            # a branch carries a quantified path: branches become
-            # nested group specs evaluated bottom-up (union-by-name
-            # downstream). Reserved chain variables (?__ppN) must
-            # survive the branch projection — they may join an
-            # enclosing sequence rewrite's chain.
+            # each branch is a group; reserved chain variables (?__ppN)
+            # stay in its solutions — they may join an enclosing
+            # sequence rewrite's chain
             return [], [
                 (
-                    "union_sub",
+                    "union",
                     [
-                        ParsedQuery(
-                            patterns=p2, groups=g2, keep_internals=True
+                        ParsedQuery(patterns=p2, groups=g2)
+                        for p2, g2 in (
+                            self._rewrite_path(s, b, o) for b in node[1]
                         )
-                        for p2, g2 in rewritten
                     ],
                 )
             ]
@@ -819,15 +817,15 @@ class _Parser:
 
     # -- groups ----------------------------------------------------------
 
-    def _child_body(self) -> ParsedQuery:
+    def _child_body(self, what: str | None = None) -> ParsedQuery:
         """Parse a full nested group-graph-pattern body ``{ ... }`` with
         a child parser on the SHARED lexer (the subquery trick) — so
-        OPTIONAL / UNION bodies support everything the main group body
-        does (nested OPTIONAL/UNION, FILTER, BIND, VALUES, MINUS,
-        GRAPH, property paths, subqueries). The fresh-variable counter
+        OPTIONAL / MINUS / EXISTS / UNION / GRAPH bodies support
+        everything the main group body does. The fresh-variable counter
         is shared so parent/child path-rewrite variables (``?__ppN``)
         never collide in a joint scope, and the child's ``needs_kinds``
-        propagates up (the outer evaluation threads the companions)."""
+        propagates up (the outer evaluation threads the companions).
+        ``what`` names the operator for the empty-body refusal."""
         sub = _Parser.__new__(_Parser)
         sub.lx = self.lx
         sub.prefixes = dict(self.prefixes)
@@ -836,17 +834,19 @@ class _Parser:
         sub._group_body()
         self._fresh = sub._fresh
         self.q.needs_kinds = self.q.needs_kinds or sub.q.needs_kinds
+        if what is not None and not sub.q.patterns and not sub.q.groups:
+            raise SparqlSyntaxError(
+                f"{what} needs at least one triple pattern"
+            )
         return sub.q
 
-    def _triple_lists(self, ctx: str | None = None) -> tuple[list, list]:
+    def _triple_lists(self) -> tuple[list, list]:
         """One subject's predicate-object lists: ``s p o, o2; p2 o3 .``
 
         Returns ``(patterns, groups)``: the predicate position accepts a
         property path; sequence/inverse paths rewrite into extra plain
         patterns, while alternation/quantified paths rewrite into group
-        entries — allowed only in the main group body (``ctx is None``);
-        inside OPTIONAL / UNION / MINUS / EXISTS (*ctx* names the
-        context) they raise instead of silently mis-scoping."""
+        entries."""
         out: list[tuple] = []
         grps: list[tuple] = []
         if self.lx.peek()[1] == "[":
@@ -884,11 +884,6 @@ class _Parser:
             break
         if self.lx.peek()[1] == ".":
             self.lx.next()
-        if grps and ctx is not None:
-            raise SparqlSyntaxError(
-                f"alternation/quantified property paths inside {ctx} "
-                "are not supported (sequence and inverse paths are)"
-            )
         return out, grps
 
     # -- CONSTRUCT template -------------------------------------------------
@@ -1610,13 +1605,13 @@ class _Parser:
         # query aggregates — grouping would drop the pre-aggregation
         # column — or (b) the key reads a SELECT-expression alias,
         # which only exists after select_exprs apply; in both cases
-        # ``select_text._order`` recomputes the key over the grouped /
-        # expression-extended solutions
+        # ``_solve``'s ORDER BY key hook recomputes the key over the
+        # grouped / expression-extended solutions
         agg_query = bool(self.q.aggregates or self.q.group_by)
         sel_aliases = {a for _, a in self.q.select_exprs}
         for sql, name in self.q.agg_expr_binds:
             if name.startswith("__ordx") and (
-                agg_query or (sel_aliases & _sv_filter_vars(sql))
+                agg_query or (sel_aliases & _filter_vars(sql))
             ):
                 continue
             self.q.groups.append(("bind", (sql, name, None)))
@@ -1669,35 +1664,11 @@ class _Parser:
             word = self.lx.next_word()
             if word in _UNSUPPORTED:
                 raise SparqlSyntaxError(f"{word.upper()} is not supported")
-            if word == "optional":
+            if word in ("optional", "minus"):
+                # positional algebra ops (group order matters): a LEFT
+                # join / LEFT ANTI join downstream
                 self.lx.next()
-                cq = self._child_body()
-                if not cq.patterns and not cq.groups:
-                    raise SparqlSyntaxError(
-                        "OPTIONAL needs at least one triple pattern"
-                    )
-                if cq.groups:
-                    # nested algebra inside the OPTIONAL body: evaluated
-                    # bottom-up like a subquery, LEFT-joined downstream
-                    self.q.groups.append(("optional_sub", cq))
-                else:
-                    self.q.optionals.append(cq.patterns)
-                    self.q.groups.append(
-                        ("optional", (cq.patterns, cq.filters))
-                    )
-            elif word == "minus":
-                # MINUS { ... }: positional algebra op (group order
-                # matters, like OPTIONAL) — a LEFT ANTI join downstream
-                self.lx.next()
-                cq = self._child_body()
-                if not cq.patterns and not cq.groups:
-                    raise SparqlSyntaxError(
-                        "MINUS needs at least one triple pattern"
-                    )
-                if cq.groups or cq.filters:
-                    self.q.groups.append(("minus_sub", cq))
-                else:
-                    self.q.groups.append(("minus", cq.patterns))
+                self.q.groups.append((word, self._child_body(word.upper())))
             elif word == "filter":
                 self.lx.next()
                 nxt = self.lx.next_word()
@@ -1711,20 +1682,10 @@ class _Parser:
                                 "EXISTS { ... }"
                             )
                         self.lx.next()
-                    cq = self._child_body()
-                    if not cq.patterns and not cq.groups:
-                        raise SparqlSyntaxError(
-                            "FILTER EXISTS needs at least one triple "
-                            "pattern"
-                        )
-                    if cq.groups or cq.filters:
-                        self.q.groups.append(
-                            ("exists_sub", (cq, positive))
-                        )
-                    else:
-                        self.q.groups.append(
-                            ("exists", (cq.patterns, positive))
-                        )
+                    self.q.groups.append((
+                        "exists",
+                        (self._child_body("FILTER EXISTS"), positive),
+                    ))
                 else:
                     self.q.filters.append(
                         self._translate_filter(self.lx.raw_parens())
@@ -1745,7 +1706,7 @@ class _Parser:
                 self.lx.next()
                 self.q.groups.append(("values", self._values_clause()))
             elif word == "graph":
-                # GRAPH <uri>|?var { patterns } — named graphs are the
+                # GRAPH <uri>|?var { body } — named graphs are the
                 # dataset partitions (serve._eval_graph)
                 self.lx.next()
                 gkind, gtext = self.lx.peek()
@@ -1762,29 +1723,10 @@ class _Parser:
                         "GRAPH needs a <uri> or ?var, got "
                         f"{gtext!r}"
                     )
-                cq = self._child_body()
-                if not cq.patterns and not cq.groups:
-                    raise SparqlSyntaxError(
-                        "GRAPH needs at least one triple pattern"
-                    )
-                if cq.groups or cq.filters:
-                    if _is_pat_var(g):
-                        # GRAPH ?var + nested algebra: distribute the
-                        # graph scope over the body — every pattern
-                        # context binds ?var from its scan's dataset
-                        # column and the shared join variable keeps
-                        # the whole group inside ONE graph
-                        # (see _scope_graph_var)
-                        self.q.groups.append(
-                            ("graph_var_sub", _scope_graph_var(cq, g))
-                        )
-                    else:
-                        # constant graph + nested body: the body
-                        # evaluates bottom-up with its dataset scope
-                        # bound (every scan in it partition-prunes)
-                        self.q.groups.append(("graph_sub", (g, cq)))
-                else:
-                    self.q.groups.append(("graph", (g, cq.patterns)))
+                cq = self._child_body("GRAPH")
+                if _is_pat_var(g):
+                    _refuse_in_graph_var(cq)
+                self.q.groups.append(("graph", (g, cq)))
             elif text == "{" and self._braces_open_subquery():
                 # { SELECT ... } — a SPARQL 1.1 subquery: parsed with a
                 # child parser on the SAME lexer (stops at the closing
@@ -1821,15 +1763,7 @@ class _Parser:
                         f"UNION branch {empty[0] + 1} has no triple "
                         "patterns"
                     )
-                if all(not b.groups and not b.filters for b in branches):
-                    pats = [b.patterns for b in branches]
-                    self.q.unions.append(pats)
-                    self.q.groups.append(("union", pats))
-                else:
-                    # a branch carries nested algebra (OPTIONAL/FILTER/
-                    # BIND/...): branches evaluate bottom-up, solutions
-                    # union by name downstream
-                    self.q.groups.append(("union_sub", branches))
+                self.q.groups.append(("union", branches))
             else:
                 pats, grps = self._triple_lists()
                 self.q.patterns.extend(pats)
@@ -2227,88 +2161,20 @@ class _Parser:
                 break
 
 
-def _scope_graph_var(q: ParsedQuery, gvar: str) -> ParsedQuery:
-    """Distribute a ``GRAPH ?var`` scope over a nested-algebra body.
-
-    SPARQL's ``Graph(?g, P)`` is the union over named graphs G of
-    ``Join(eval(P, activeGraph=G), {?g → G})``. Because every algebra
-    operator distributes over that union once the graph is carried as
-    a JOIN VARIABLE — ``Graph(g, Join(A,B)) = Join(Graph(g,A),
-    Graph(g,B))`` under the equi-join on ``?g``, and likewise for
-    LeftJoin/Minus/Exists (a match in a DIFFERENT graph fails the
-    ``?g`` key) — the body rewrites into an equivalent group where
-    every triple-pattern context is wrapped in its own
-    ``("graph", (?g, patterns))`` entry and the shared ``?g`` column
-    keeps the whole group inside ONE graph per solution. BIND/VALUES/
-    FILTER entries do not read the active graph and pass through;
-    nested GRAPH clauses override the active graph and pass through
-    untouched.
-
-    Quantified property paths (their closure would have to run
-    per-graph) and subqueries (the spec substitutes the active graph
-    INTO the subquery, past its projection) stay loud refusals."""
-    groups: list[tuple] = []
-    if q.patterns:
-        groups.append(("graph", (gvar, list(q.patterns))))
+def _refuse_in_graph_var(q: ParsedQuery) -> None:
+    """The two group operators a ``GRAPH ?var`` body cannot hold, at
+    any depth: a quantified property path (its closure would have to
+    run per named graph) and a subquery (the active graph would have
+    to substitute past its projection). A nested GRAPH switches the
+    active graph, so its own body is not searched."""
     for kind, payload in q.groups:
-        if kind in ("graph", "graph_sub", "graph_var_sub"):
-            # an inner GRAPH clause switches the active graph — the
-            # outer ?var scope does not reach inside it
-            groups.append((kind, payload))
-        elif kind == "optional":
-            pats, filts = payload
-            groups.append((
-                "optional_sub",
-                ParsedQuery(
-                    groups=[("graph", (gvar, list(pats)))],
-                    filters=list(filts),
-                ),
-            ))
-        elif kind == "optional_sub":
-            groups.append(("optional_sub", _scope_graph_var(payload, gvar)))
-        elif kind == "union":
-            groups.append((
-                "union_sub",
-                [
-                    ParsedQuery(groups=[("graph", (gvar, list(b)))])
-                    for b in payload
-                ],
-            ))
-        elif kind == "union_sub":
-            groups.append((
-                "union_sub",
-                [_scope_graph_var(b, gvar) for b in payload],
-            ))
-        elif kind == "minus":
-            groups.append((
-                "minus_sub",
-                ParsedQuery(groups=[("graph", (gvar, list(payload)))]),
-            ))
-        elif kind == "minus_sub":
-            groups.append(("minus_sub", _scope_graph_var(payload, gvar)))
-        elif kind == "exists":
-            pats, positive = payload
-            groups.append((
-                "exists_sub",
-                (
-                    ParsedQuery(groups=[("graph", (gvar, list(pats)))]),
-                    positive,
-                ),
-            ))
-        elif kind == "exists_sub":
-            body, positive = payload
-            groups.append(
-                ("exists_sub", (_scope_graph_var(body, gvar), positive))
-            )
-        elif kind in ("bind", "values"):
-            groups.append((kind, payload))
-        elif kind == "path":
+        if kind == "path":
             raise SparqlSyntaxError(
                 "a quantified property path inside GRAPH ?var is not "
                 "supported (the closure would have to run per named "
                 "graph) — bind the graph with a constant"
             )
-        elif kind == "subquery":
+        if kind == "subquery":
             raise SparqlSyntaxError(
                 "a subquery inside GRAPH ?var is not supported (the "
                 "active graph would have to substitute past the "
@@ -2316,349 +2182,19 @@ def _scope_graph_var(q: ParsedQuery, gvar: str) -> ParsedQuery:
                 "constant, or move the subquery outside the GRAPH "
                 "clause"
             )
-        else:  # pragma: no cover — future group kinds fail loudly
-            raise SparqlSyntaxError(
-                f"{kind} inside GRAPH ?var is not supported"
-            )
-    return dc_replace(
-        q, patterns=[], optionals=[], unions=[], groups=groups
-    )
-
-
-def _subquery_nonnull_vars(q: ParsedQuery) -> set[str]:
-    """Variables a (sub)query binds UNCONDITIONALLY — everything else it
-    projects may come back NULL (unbound) and refuses as an outer join
-    key. Conservative: aggregate/SELECT-expression aliases and
-    BIND/OPTIONAL-born variables count as possibly-unbound."""
-    nn: set[str] = set()
-    for s, p, o in q.patterns:
-        for t in (s, p, o):
-            if _is_pat_var(t):
-                nn.add(t[1:])
-    for kind, payload in q.groups:
-        if kind == "path":
-            s_t, _, o_t, _ = payload
-            for t in (s_t, o_t):
-                if _is_pat_var(t):
-                    nn.add(t[1:])
+        if kind in ("optional", "minus"):
+            _refuse_in_graph_var(payload)
+        elif kind == "exists":
+            _refuse_in_graph_var(payload[0])
         elif kind == "union":
-            per = []
-            for b in payload:
-                bv = set()
-                for s, p, o in b:
-                    for t in (s, p, o):
-                        if _is_pat_var(t):
-                            bv.add(t[1:])
-                per.append(bv)
-            if per:
-                nn |= set.intersection(*per)
-        elif kind == "values":
-            names, rows = payload
-            for i, name in enumerate(names):
-                if all(r[i] is not None for r in rows):
-                    nn.add(name)
-        elif kind == "union_sub":
-            per = [_subquery_nonnull_vars(b) for b in payload]
-            if per:
-                nn |= set.intersection(*per)
-        elif kind == "graph":
-            g, pats = payload
-            if _is_pat_var(g):
-                nn.add(g[1:])
-            for s, p, o in pats:
-                for t in (s, p, o):
-                    if _is_pat_var(t):
-                        nn.add(t[1:])
-        elif kind == "graph_sub":
-            nn |= _subquery_nonnull_vars(payload[1])
-        elif kind == "graph_var_sub":
-            nn |= _subquery_nonnull_vars(payload)
-        elif kind == "subquery":
-            inner_nn = _subquery_nonnull_vars(payload)
-            if payload.project is not None:
-                inner_nn &= set(payload.project)
-            nn |= inner_nn
-    if q.aggregates or q.group_by:
-        # aggregation rebinds the output: grouped vars keep their
-        # (non-)nullability; an aggregate alias counts as BOUND when
-        # its operand is (COUNT always; MIN/MAX/SUM/AVG/SAMPLE over an
-        # always-bound var). Documented divergence: with no GROUP BY
-        # and ZERO inner solutions, SPARQL leaves such an alias unbound
-        # (its compatibility join would then keep outer rows) where the
-        # SQL equi-join drops them — the classic join-on-subquery-MAX
-        # stays usable and the empty-input edge is pinned in tests.
-        agg_nn = set()
-        for func, var, _, alias in q.aggregates:
-            if func == "count" or (var is not None and var in nn):
-                agg_nn.add(alias)
-        nn = (nn & set(q.group_by)) | agg_nn
-    return nn
-
-
-def _spec_vars(q: ParsedQuery) -> set[str]:
-    """Every variable a group spec could BIND (conditionally or not) —
-    used to split an OPTIONAL body's top-level FILTERs into inner
-    filters (all vars bindable inside the body — equivalent placement,
-    see ``_eval_subqueries``) vs LeftJoin-condition filters (reference
-    the outer solution)."""
-    vs: set[str] = set()
-
-    def pats_vars(pats) -> None:
-        for s, p, o in pats:
-            for t in (s, p, o):
-                if _is_pat_var(t):
-                    vs.add(t[1:])
-
-    pats_vars(q.patterns)
-    for kind, payload in q.groups:
-        if kind == "optional":
-            pats, _ = payload
-            pats_vars(pats)
-        elif kind == "optional_sub":
-            vs |= _spec_vars(payload)
-        elif kind == "union":
-            for b in payload:
-                pats_vars(b)
-        elif kind == "union_sub":
-            for b in payload:
-                vs |= _spec_vars(b)
-        elif kind == "values":
-            vs |= set(payload[0])
-        elif kind == "bind":
-            vs.add(payload[1])
-        elif kind == "path":
-            s_t, _, o_t, _ = payload
-            for t in (s_t, o_t):
-                if _is_pat_var(t):
-                    vs.add(t[1:])
-        elif kind == "graph":
-            g, pats = payload
-            if _is_pat_var(g):
-                vs.add(g[1:])
-            pats_vars(pats)
-        elif kind == "graph_sub":
-            vs |= _spec_vars(payload[1])
-        elif kind == "graph_var_sub":
-            vs |= _spec_vars(payload)
-        elif kind == "subquery":
-            if payload.project is not None:
-                vs |= set(payload.project)
-            else:
-                vs |= _spec_vars(payload)
-    return vs
-
-
-def _eval_subqueries(
-    triples: DataFrame,
-    q: ParsedQuery,
-    dataset,
-    n_buckets: int | None,
-    manifest_path: str | None,
-    stats: dict | None,
-    named_datasets: list | None = None,
-) -> list[tuple]:
-    """Replace parse-level nested-algebra group entries with evaluated
-    ones, bottom-up per spec (each inner body runs the FULL pipeline —
-    its own nested groups bridge recursively via its own
-    ``select_text`` call):
-
-    * ``("subquery", ParsedQuery)`` → ``("solutions", (df, nullable))``
-    * ``("union_sub", [ParsedQuery, ...])`` — a UNION with nested
-      algebra in some branch: each branch evaluates independently,
-      solutions union BY NAME (a variable missing from a branch comes
-      back NULL = unbound) → ``("solutions", (df, nullable))`` where
-      nullable = vars not bound unconditionally by every branch.
-    * ``("optional_sub", ParsedQuery)`` — an OPTIONAL body with nested
-      algebra → ``("optional_solutions", (df, nullable, filters))``.
-      The body's top-level FILTERs whose variables are all bindable
-      INSIDE the body evaluate within it — equivalent to the LeftJoin
-      condition, since ``LeftJoin(A, B, e) = LeftJoin(A, Filter(e, B),
-      true)`` when e reads only B's domain (unbound/NULL → error →
-      false either way). Filters that reference the OUTER solution (or
-      bind no variable at all) stay in the returned ``filters`` and
-      join the LEFT JOIN's ON condition downstream.
-
-    The inner evaluations get NO ``limit_cap`` — an inner LIMIT is
-    query semantics, not a serving bound — and no companions (nested-
-    group-born vars type per-binding downstream, like VALUES/BIND-born
-    vars)."""
-    nested_kinds = (
-        "subquery",
-        "optional_sub",
-        "union_sub",
-        "minus_sub",
-        "exists_sub",
-        "graph_sub",
-        "graph_var_sub",
-    )
-    if not any(g[0] in nested_kinds for g in q.groups):
-        return q.groups
-    ev_kw = dict(
-        dataset=dataset,
-        n_buckets=n_buckets,
-        manifest_path=manifest_path,
-        stats=stats,
-        named_datasets=named_datasets,
-    )
-    out: list[tuple] = []
-    for kind, payload in q.groups:
-        if kind == "subquery":
-            sub_df = select_text(triples, "", parsed=payload, **ev_kw)
-            nn = _subquery_nonnull_vars(payload)
-            out.append(
-                (
-                    "solutions",
-                    (
-                        sub_df,
-                        frozenset(
-                            c for c in sub_df.columns if c not in nn
-                        ),
-                    ),
-                )
-            )
-        elif kind == "union_sub":
-            dfs, nns = [], []
-            for b in payload:
-                bdf = select_text(triples, "", parsed=b, **ev_kw)
-                dfs.append(bdf)
-                nns.append(_subquery_nonnull_vars(b) & set(bdf.columns))
-            merged = dfs[0]
-            for d in dfs[1:]:
-                merged = merged.unionByName(d, allowMissingColumns=True)
-            out.append(
-                (
-                    "solutions",
-                    (
-                        merged,
-                        frozenset(
-                            c
-                            for c in merged.columns
-                            if any(c not in nn for nn in nns)
-                        ),
-                    ),
-                )
-            )
-        elif kind == "optional_sub":
-            inner_vars = _spec_vars(payload)
-            inner: list[str] = []
-            join_f: list[str] = []
-            for f in payload.filters:
-                fv = _sv_filter_vars(f)
-                ok = bool(fv) and all(
-                    v in inner_vars or v.rsplit("__", 1)[0] in inner_vars
-                    for v in fv
-                )
-                (inner if ok else join_f).append(f)
-            ev = dc_replace(payload, filters=inner)
-            df = select_text(triples, "", parsed=ev, **ev_kw)
-            nn = _subquery_nonnull_vars(payload)
-            out.append(
-                (
-                    "optional_solutions",
-                    (
-                        df,
-                        frozenset(c for c in df.columns if c not in nn),
-                        join_f,
-                    ),
-                )
-            )
-        elif kind == "minus_sub":
-            mdf = select_text(triples, "", parsed=payload, **ev_kw)
-            nn = _subquery_nonnull_vars(payload)
-            out.append(
-                (
-                    "minus_solutions",
-                    (
-                        mdf,
-                        frozenset(
-                            c for c in mdf.columns if c not in nn
-                        ),
-                    ),
-                )
-            )
-        elif kind == "exists_sub":
-            body, positive = payload
-            edf = select_text(triples, "", parsed=body, **ev_kw)
-            nn = _subquery_nonnull_vars(body)
-            out.append(
-                (
-                    "exists_solutions",
-                    (
-                        edf,
-                        frozenset(
-                            c for c in edf.columns if c not in nn
-                        ),
-                        positive,
-                    ),
-                )
-            )
-        elif kind == "graph_var_sub":
-            # GRAPH ?var + nested algebra: the parse-time rewrite
-            # (_scope_graph_var) already wrapped every pattern context
-            # in a ("graph", (?var, pats)) entry, so the body evaluates
-            # through the ordinary bottom-up pipeline — each inner
-            # GRAPH entry goes through serve._eval_graph's variable
-            # case, which applies the FROM NAMED range / list-dataset
-            # de-scoping / single-dataset serving-scope rules per scan
-            gdf = select_text(triples, "", parsed=payload, **ev_kw)
-            nn = _subquery_nonnull_vars(payload)
-            out.append(
-                (
-                    "solutions",
-                    (
-                        gdf,
-                        frozenset(
-                            c for c in gdf.columns if c not in nn
-                        ),
-                    ),
-                )
-            )
-        elif kind == "graph_sub":
-            # constant graph + nested body: mirror serve._eval_graph's
-            # name mapping, then scope the WHOLE inner evaluation to
-            # that dataset partition (every scan in it prunes)
-            g, body = payload
-            if "dataset" not in triples.columns:
-                raise ValueError(
-                    "GRAPH needs a triple table carrying the 'dataset' "
-                    "partition column"
-                )
-            name = (
-                g[len(M.PREFIX_GRAPH):]
-                if g.startswith(M.PREFIX_GRAPH)
-                else g  # no dataset is named this → empty group
-            )
-            kw2 = dict(ev_kw)
-            kw2["dataset"] = name
-            gdf = select_text(triples, "", parsed=body, **kw2)
-            if isinstance(dataset, str) and dataset != name:
-                # outer serving scope and the GRAPH clause name
-                # different graphs: an absent graph is an empty graph
-                gdf = gdf.where(F.lit(False))
-            if named_datasets is not None and name not in named_datasets:
-                # dataset description present: GRAPH addresses only
-                # the FROM NAMED graphs
-                gdf = gdf.where(F.lit(False))
-            nn = _subquery_nonnull_vars(body)
-            out.append(
-                (
-                    "solutions",
-                    (
-                        gdf,
-                        frozenset(
-                            c for c in gdf.columns if c not in nn
-                        ),
-                    ),
-                )
-            )
-        else:
-            out.append((kind, payload))
-    return out
+            for branch in payload:
+                _refuse_in_graph_var(branch)
 
 
 def parse_select(query: str) -> ParsedQuery:
-    """Parse a SPARQL SELECT string into :class:`ParsedQuery` (the
-    ``select_sparql`` inputs + projection). Raises
+    """Parse a SPARQL query string into :class:`ParsedQuery` (the
+    group :func:`~linkedspending_spark.serve.eval_group` evaluates +
+    form, projection and modifiers). Raises
     :class:`SparqlSyntaxError` on anything outside the dialect."""
     return _Parser(query).parse()
 
@@ -2797,16 +2333,12 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     else:
         df = df.agg(*aggs)
     for h in q.having:
-        from .serve import _translate_filter as _vars_to_cols
-
         df = df.where(F.expr(_vars_to_cols(h)))
     # hidden aliases exist only for a direct-form HAVING, an ORDER BY
     # aggregate key, or an aggregate embedded in a SELECT expression —
     # keep the ones a pending ?__ordx key or SELECT expression still
     # reads (select_text applies those over THIS output; the projection
     # drops the hidden columns afterwards), drop the rest here
-    from .serve import _filter_vars
-
     later_reads: set[str] = set()
     for sql, name in q.agg_expr_binds:
         if name.startswith("__ordx"):
@@ -2934,15 +2466,14 @@ def select_text(
     with_kinds: bool = False,
     named_datasets: list | None = None,
 ) -> DataFrame:
-    """Run a textual SPARQL SELECT (the reference's ``Sparql.select``
+    """Run a textual SPARQL query (the reference's ``Sparql.select``
     analog, Sparql.java:26-29) over the triple table.
 
-    Compiles through :func:`parse_select` onto
-    :func:`~linkedspending_spark.serve.select_sparql`, then applies the
-    SELECT clause with SPARQL's modifier order: projection, then
-    DISTINCT (over the *projected* variables — ``select_sparql``'s own
-    flag dedups pre-projection, which is a different query), then ORDER
-    BY, then LIMIT. Consequently ORDER BY keys must be projected when
+    Compiles through :func:`parse_select`, evaluates the WHERE group
+    with :func:`~linkedspending_spark.serve.eval_group`, then applies
+    the SELECT clause with SPARQL's modifier order: projection, then
+    DISTINCT (over the *projected* variables), then ORDER BY, then
+    OFFSET / LIMIT. Consequently ORDER BY keys must be projected when
     DISTINCT is used — SPARQL imposes the same restriction.
 
     ``limit_cap`` bounds the effective LIMIT (serving-path guard;
@@ -2952,13 +2483,67 @@ def select_text(
 
     ``with_kinds=True`` threads RDF term typing through as
     ``<v>__kind``/``<v>__datatype``/``<v>__lang`` companion columns
-    (see :func:`~linkedspending_spark.serve.select_sparql`); the
+    (see :func:`~linkedspending_spark.serve.eval_group`); the
     projection keeps each projected variable's companions. Aggregation
     drops them (aggregate values are typed by their OWN result type —
     counts/sums are numeric, MIN/MAX return lexical forms), and
     variables born in BIND/SELECT expressions or VALUES carry none.
     """
     q = parsed if parsed is not None else parse_select(query)
+    return _solve(
+        triples, q, dataset, n_buckets, manifest_path, stats, limit_cap,
+        with_kinds, named_datasets,
+    )[0]
+
+
+def _order_slice(
+    df: DataFrame, q: ParsedQuery, limit_cap, key=None, finish=None
+) -> DataFrame:
+    """The solution-modifier tail of every query form: ORDER BY, then
+    ``finish`` (SELECT's projection), then OFFSET and LIMIT. A key that
+    is no column goes to ``key(df, var)`` (SELECT recomputes expression
+    keys) or is refused. ``limit_cap`` bounds the ROWS RETURNED, so it
+    caps the limit, never the skip; stable paging requires ORDER BY."""
+    if q.order_by:
+        keys = []
+        for tok in q.order_by:
+            var = tok.lstrip("-").lstrip("?")
+            if var not in df.columns:
+                if key is None:
+                    raise SparqlSyntaxError(f"ORDER BY ?{var} is unbound")
+                df = key(df, var)
+            keys.append(
+                F.col(var).desc() if tok.startswith("-") else F.col(var).asc()
+            )
+        df = df.orderBy(*keys)
+    if finish is not None:
+        df = finish(df)
+    limit = q.limit
+    if limit_cap is not None:
+        limit = limit_cap if limit is None else min(limit, limit_cap)
+    if q.offset:
+        df = df.offset(q.offset)
+    if limit is not None:
+        df = df.limit(limit)
+    return df
+
+
+def _solve(
+    triples: DataFrame,
+    q: ParsedQuery,
+    dataset=None,
+    n_buckets: int | None = None,
+    manifest_path: str | None = None,
+    stats: dict | None = None,
+    limit_cap: int | None = None,
+    with_kinds: bool = False,
+    named_datasets: list | None = None,
+) -> tuple[DataFrame, frozenset[str]]:
+    """:func:`select_text`'s body: the query's result plus, for SELECT,
+    the columns that may come back unbound — a subquery joining its
+    outer group refuses those as keys (aggregate aliases over
+    always-bound operands count as bound, the join-on-subquery-MAX
+    idiom; the zero-solution divergence is pinned in tests)."""
     if q.from_graphs or q.from_named:
         # SPARQL 13.2 dataset description: FROM graphs merge into the
         # default graph (= a SET of dataset partitions; none listed =
@@ -2978,8 +2563,11 @@ def select_text(
             )
         dataset = _from_dataset_names(q.from_graphs)
         named_datasets = _from_dataset_names(q.from_named)
-    eval_groups = _eval_subqueries(
-        triples, q, dataset, n_buckets, manifest_path, stats,
+    scope = dict(
+        dataset=dataset,
+        n_buckets=n_buckets,
+        manifest_path=manifest_path,
+        stats=stats,
         named_datasets=named_datasets,
     )
     if q.describe is not None:
@@ -3010,44 +2598,14 @@ def select_text(
                 desc_src.where(F.col("s").isin(consts)).select(*base)
             )
         if vars_:
-            sols = select_sparql(
-                triples,
-                q.patterns,
-                filters=q.filters,
-                groups=eval_groups,
-                dataset=dataset,
-                n_buckets=n_buckets,
-                manifest_path=manifest_path,
-                stats=stats,
-                named_datasets=named_datasets,
-            )
+            sols, _ = eval_group(triples, q, **scope)
             missing = [v for v in vars_ if v not in sols.columns]
             if missing:
                 raise SparqlSyntaxError(
                     f"DESCRIBE variable(s) {missing} are bound by no "
                     "pattern"
                 )
-            if q.order_by:
-                keys = []
-                for tok in q.order_by:
-                    var = tok.lstrip("-").lstrip("?")
-                    if var not in sols.columns:
-                        raise SparqlSyntaxError(
-                            f"ORDER BY ?{var} is unbound"
-                        )
-                    keys.append(
-                        F.col(var).desc()
-                        if tok.startswith("-")
-                        else F.col(var).asc()
-                    )
-                sols = sols.orderBy(*keys)
-            limit = q.limit
-            if limit_cap is not None:
-                limit = limit_cap if limit is None else min(limit, limit_cap)
-            if q.offset:
-                sols = sols.offset(q.offset)
-            if limit is not None:
-                sols = sols.limit(limit)
+            sols = _order_slice(sols, q, limit_cap)
             ids = sols.select(F.col(vars_[0]).alias("s"))
             for v in vars_[1:]:
                 ids = ids.unionAll(sols.select(F.col(v).alias("s")))
@@ -3058,7 +2616,7 @@ def select_text(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)
-        return out.dropDuplicates() if len(parts) > 1 else out
+        return (out.dropDuplicates() if len(parts) > 1 else out), frozenset()
     if q.construct is not None and "o_kind" in triples.columns:
         # the template needs term metadata to type the output graph
         # and to skip literal-subject instantiations
@@ -3070,102 +2628,72 @@ def select_text(
             "STRDT constructors need a triple table carrying term "
             "metadata (o_kind/o_datatype/o_lang columns)"
         )
-    df = select_sparql(
-        triples,
-        q.patterns,
-        filters=q.filters,
-        groups=eval_groups,
-        dataset=dataset,
-        n_buckets=n_buckets,
-        manifest_path=manifest_path,
-        stats=stats,
-        with_kinds=eval_kinds,
-        named_datasets=named_datasets,
-    )
-    if eval_kinds and not with_kinds:
-        # companions were threaded only for the kind built-ins'
-        # evaluation (already applied inside select_sparql) — the
-        # caller did not ask for them in the OUTPUT
-        from .serve import _is_companion
-
-        df = df.drop(*[c for c in df.columns if _is_companion(c)])
-    internals = (
-        []
-        if q.keep_internals
-        else [c for c in df.columns if c.startswith("__pp")]
-    )
-    if internals:
-        # property-path rewrite variables (?__ppN chains, __pp_exists
-        # gates): per spec they are NOT in scope for SELECT * / DISTINCT
-        # / aggregation, but the solution MULTISET keeps the
-        # multiplicity they induced — project them away, no dedup here
-        df = df.drop(*internals)
+    df, nullable = eval_group(triples, q, with_kinds=eval_kinds, **scope)
+    nullable = set(nullable)
+    # property-path rewrite variables (?__ppN chains) are NOT in scope
+    # for SELECT * / DISTINCT / aggregation, but the solution MULTISET
+    # keeps the multiplicity they induced — project them away, no dedup
+    # here; companions threaded only for the kind built-ins' evaluation
+    # leave too (the caller did not ask for them in the OUTPUT)
+    hidden = [
+        c
+        for c in df.columns
+        if c.startswith("__pp")
+        or (eval_kinds and not with_kinds and _is_companion(c))
+    ]
+    if hidden:
+        df = df.drop(*hidden)
     if q.construct is not None:
         # solution modifiers apply to the SOLUTION sequence (spec order);
         # the instantiated graph is then set-deduped
-        if q.order_by:
-            keys = []
-            for tok in q.order_by:
-                desc = tok.startswith("-")
-                var = tok.lstrip("-").lstrip("?")
-                if var not in df.columns:
-                    raise SparqlSyntaxError(f"ORDER BY ?{var} is unbound")
-                keys.append(F.col(var).desc() if desc else F.col(var).asc())
-            df = df.orderBy(*keys)
-        limit = q.limit
-        if limit_cap is not None:
-            limit = limit_cap if limit is None else min(limit, limit_cap)
-        if q.offset:
-            df = df.offset(q.offset)
-        if limit is not None:
-            df = df.limit(limit)
-        return _instantiate_construct(df, q.construct)
+        sols = _order_slice(df, q, limit_cap)
+        return _instantiate_construct(sols, q.construct), frozenset()
     if q.ask:
         # ASK: Spark-lazy boolean — a ≤1-row DataFrame; non-empty = true.
         # limit(1) means the scan stops at the first matching solution.
-        return df.limit(1)
+        return df.limit(1), frozenset()
     if q.aggregates or q.group_by:
+        # grouped vars keep their (non-)nullability; an aggregate alias
+        # is bound when its operand is (COUNT always)
+        nullable = {v for v in q.group_by if v in nullable} | {
+            alias
+            for func, var, _, alias in q.aggregates
+            if func != "count" and var in nullable
+        }
         df = _aggregate(df, q)
     if q.post_values is not None:
         # trailing VALUES: inner join on shared vars, after grouping
         # (§18.2.4), before SELECT expressions / projection
-        from .serve import _values_df
-
         names, vrows = q.post_values
         v = _values_df(df.sparkSession, names, vrows)
         shared = [c for c in names if c in df.columns]
-        undef_shared = [
-            c
-            for c in shared
-            if any(r[names.index(c)] is None for r in vrows)
-        ]
-        if undef_shared:
+        undef = {
+            c for i, c in enumerate(names) if any(r[i] is None for r in vrows)
+        }
+        if undef & set(shared):
             raise SparqlSyntaxError(
                 f"trailing VALUES leaves shared variable(s) "
-                f"{undef_shared} UNDEF in some row — the compatibility "
-                "join on unbound variables is not supported"
+                f"{sorted(undef & set(shared))} UNDEF in some row — the "
+                "compatibility join on unbound variables is not supported"
             )
         df = df.join(v, on=shared) if shared else df.crossJoin(v)
-    if q.select_exprs:
-        from .serve import _filter_vars, _translate_filter as _vars_to_cols
-
-        for sql, alias in q.select_exprs:
-            missing = sorted(
-                v for v in _filter_vars(sql) if v not in df.columns
+        nullable |= undef
+    for sql, alias in q.select_exprs:
+        missing = sorted(v for v in _filter_vars(sql) if v not in df.columns)
+        if missing:
+            raise SparqlSyntaxError(
+                f"SELECT expression for ?{alias} references "
+                f"variable(s) {missing} that are "
+                + ("neither grouped nor aggregated"
+                   if (q.aggregates or q.group_by)
+                   else "bound by no pattern")
             )
-            if missing:
-                raise SparqlSyntaxError(
-                    f"SELECT expression for ?{alias} references "
-                    f"variable(s) {missing} that are "
-                    + ("neither grouped nor aggregated"
-                       if (q.aggregates or q.group_by)
-                       else "bound by no pattern")
-                )
-            if alias in df.columns:
-                raise SparqlSyntaxError(
-                    f"SELECT expression alias ?{alias} is already bound"
-                )
-            df = df.withColumn(alias, F.expr(_vars_to_cols(sql)))
+        if alias in df.columns:
+            raise SparqlSyntaxError(
+                f"SELECT expression alias ?{alias} is already bound"
+            )
+        df = df.withColumn(alias, F.expr(_vars_to_cols(sql)))
+        nullable.add(alias)
     if q.project is not None:
         missing = [v for v in q.project if v not in df.columns]
         if missing:
@@ -3173,75 +2701,66 @@ def select_text(
                 f"projected variable(s) {missing} are bound by no pattern"
             )
 
-    def _order(d: DataFrame) -> DataFrame:
-        from .serve import _filter_vars, _translate_filter as _vars_to_cols
-
-        keys = []
-        for tok in q.order_by:
-            desc = tok.startswith("-")
-            var = tok.lstrip("-").lstrip("?")
-            if var not in d.columns:
-                if var.startswith("__ordx"):
-                    # expression key whose hidden pre-aggregation BIND
-                    # was skipped (aggregation) or dropped (explicit
-                    # DISTINCT projection): recompute it HERE, over the
-                    # grouped/projected solutions — so it may reference
-                    # grouped variables and aggregate aliases, and under
-                    # DISTINCT only projected variables (the spec's own
-                    # ORDER-BY-must-be-projected restriction, applied
-                    # to the expression's inputs)
-                    sql = next(
-                        (s for s, n in q.agg_expr_binds if n == var), None
-                    )
-                    if sql is None:  # pragma: no cover — parser invariant
-                        raise SparqlSyntaxError(
-                            f"internal: no expression for ORDER BY {var}"
-                        )
-                    missing = sorted(
-                        v for v in _filter_vars(sql) if v not in d.columns
-                    )
-                    if any(v.startswith("__agg") for v in missing):
-                        # a hidden ORDER BY aggregate key, but DISTINCT
-                        # already projected it away — the spec's
-                        # projected-keys restriction, stated usefully
-                        raise SparqlSyntaxError(
-                            "ORDER BY aggregate keys combine with "
-                            "DISTINCT only through a projected alias — "
-                            "SELECT (AGG(...) AS ?alias) and ORDER BY "
-                            "?alias"
-                        )
-                    if missing:
-                        raise SparqlSyntaxError(
-                            f"ORDER BY expression references variable(s) "
-                            f"{missing} that are "
-                            + (
-                                "neither grouped nor aggregated"
-                                if (q.aggregates or q.group_by)
-                                else "not projected — DISTINCT restricts "
-                                "ORDER BY to the projected variables"
-                            )
-                        )
-                    d = d.withColumn(var, F.expr(_vars_to_cols(sql)))
-                else:
-                    raise SparqlSyntaxError(
-                        f"ORDER BY ?{var} must be projected when DISTINCT "
-                        "is used"
-                        if q.distinct
-                        else f"ORDER BY ?{var} is unbound"
-                    )
-            keys.append(F.col(var).desc() if desc else F.col(var).asc())
-        return d.orderBy(*keys)
+    def _ordx_key(d: DataFrame, var: str) -> DataFrame:
+        if not var.startswith("__ordx"):
+            raise SparqlSyntaxError(
+                f"ORDER BY ?{var} must be projected when DISTINCT is used"
+                if q.distinct
+                else f"ORDER BY ?{var} is unbound"
+            )
+        # expression key whose hidden pre-aggregation BIND was skipped
+        # (aggregation) or dropped (explicit DISTINCT projection):
+        # recompute it HERE, over the grouped/projected solutions — so
+        # it may reference grouped variables and aggregate aliases, and
+        # under DISTINCT only projected variables (the spec's own
+        # ORDER-BY-must-be-projected restriction, applied to the
+        # expression's inputs)
+        sql = next((s for s, n in q.agg_expr_binds if n == var), None)
+        if sql is None:  # pragma: no cover — parser invariant
+            raise SparqlSyntaxError(
+                f"internal: no expression for ORDER BY {var}"
+            )
+        missing = sorted(v for v in _filter_vars(sql) if v not in d.columns)
+        if any(v.startswith("__agg") for v in missing):
+            # a hidden ORDER BY aggregate key, but DISTINCT already
+            # projected it away — the spec's projected-keys
+            # restriction, stated usefully
+            raise SparqlSyntaxError(
+                "ORDER BY aggregate keys combine with DISTINCT only "
+                "through a projected alias — SELECT (AGG(...) AS "
+                "?alias) and ORDER BY ?alias"
+            )
+        if missing:
+            raise SparqlSyntaxError(
+                f"ORDER BY expression references variable(s) {missing} "
+                "that are "
+                + (
+                    "neither grouped nor aggregated"
+                    if (q.aggregates or q.group_by)
+                    else "not projected — DISTINCT restricts ORDER BY "
+                    "to the projected variables"
+                )
+            )
+        return d.withColumn(var, F.expr(_vars_to_cols(sql)))
 
     def _project(d: DataFrame) -> DataFrame:
         # keep each projected variable's typing companions (with_kinds)
-        from .serve import _companions_of
-
         cols: list[str] = []
         for v in q.project:
             cols.append(v)
             if with_kinds:
                 cols += _companions_of(v, d.columns)
         return d.select(*cols)
+
+    def _finish(d: DataFrame) -> DataFrame:
+        # ORDER BY evaluates over full solutions (keys need not be
+        # projected); projection afterwards preserves the row order.
+        # Expression ORDER BY keys are internal — SELECT * must not leak
+        # them (an explicit projection already excludes them).
+        if q.project is not None and not q.distinct:
+            d = _project(d)
+        ordx = [c for c in d.columns if c.startswith("__ordx")]
+        return d.drop(*ordx) if ordx else d
 
     if q.distinct:
         # SPARQL: DISTINCT dedups the projection; ORDER BY keys must
@@ -3251,29 +2770,5 @@ def select_text(
         if q.project is not None:
             df = _project(df)
         df = df.dropDuplicates()
-        if q.order_by:
-            df = _order(df)
-    else:
-        # ORDER BY evaluates over full solutions (keys need not be
-        # projected); projection afterwards preserves the row order
-        if q.order_by:
-            df = _order(df)
-        if q.project is not None:
-            df = _project(df)
-    ordx = [c for c in df.columns if c.startswith("__ordx")]
-    if ordx:
-        # expression ORDER BY keys are internal — SELECT * must not
-        # leak them (projection already excludes them when explicit)
-        df = df.drop(*ordx)
-    limit = q.limit
-    if limit_cap is not None:
-        limit = limit_cap if limit is None else min(limit, limit_cap)
-    if q.offset:
-        # OFFSET before LIMIT: skip q.offset solutions, then take limit
-        # (LIMIT/OFFSET slice semantics; limit_cap bounds the ROWS
-        # RETURNED, so it caps the limit, never the skip). Stable paging
-        # requires ORDER BY — documented above.
-        df = df.offset(q.offset)
-    if limit is not None:
-        df = df.limit(limit)
-    return df
+    df = _order_slice(df, q, limit_cap, key=_ordx_key, finish=_finish)
+    return df, frozenset(nullable)

@@ -9,7 +9,7 @@ exact at fixture scale.
 from __future__ import annotations
 
 from linkedspending_spark.operators.convert_transcripts import convert_transcripts
-from linkedspending_spark.operators.convert_transcripts_golden import golden_triples
+from .convert_transcripts_golden import golden_triples
 from linkedspending_spark.sources.dictionaries import country_pairs, currency_pairs
 from linkedspending_spark.transcripts import synth_transcripts, synth_transcripts_df
 

@@ -118,13 +118,10 @@ def test_sparql_endpoint(rest_server):
     status, sols = _post(
         base + "/sparql",
         {
-            "patterns": [
-                ["?d", M.RDF_TYPE, M.QB_DATASET],
-                ["?d", M.RDFS_LABEL, "?label"],
-            ],
-            "optionals": [[["?d", M.LSO_REF_YEAR, "?year"]]],
-            "filters": ["?label != 'conv-0'"],
-            "distinct": True,
+            "query": f"SELECT DISTINCT * {{ ?d <{M.RDF_TYPE}> "
+            f"<{M.QB_DATASET}> . ?d <{M.RDFS_LABEL}> ?label "
+            f"OPTIONAL {{ ?d <{M.LSO_REF_YEAR}> ?year }} "
+            "FILTER(?label != 'conv-0') }"
         },
     )
     assert status == 200 and len(sols) > 0
@@ -133,26 +130,26 @@ def test_sparql_endpoint(rest_server):
     # bad request: filter over a variable no group binds
     status, err = _post(
         base + "/sparql",
-        {"patterns": [["?d", M.RDF_TYPE, M.QB_DATASET]], "filters": ["?x > 1"]},
+        {
+            "query": f"SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> "
+            "FILTER(?x > 1) }"
+        },
     )
     assert status == 400 and "error" in err
-    # bad request: missing patterns
+    # bad request: missing query
     assert _post(base + "/sparql", {})[0] == 400
 
 
 def test_sparql_endpoint_union_order_by(rest_server):
-    """UNION + ORDER BY plumb through the HTTP body to select_sparql."""
+    """UNION + ORDER BY plumb through the HTTP body to the evaluator."""
     base, _ = rest_server
     status, sols = _post(
         base + "/sparql",
         {
-            "patterns": [["?d", M.RDF_TYPE, M.QB_DATASET]],
-            "unions": [[
-                [["?d", M.RDFS_LABEL, "?v"]],
-                [["?d", M.LSO_REF_YEAR, "?v"]],
-            ]],
-            "order_by": ["-?v"],
-            "limit": 5,
+            "query": f"SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> "
+            f"{{ ?d <{M.RDFS_LABEL}> ?v }} "
+            f"UNION {{ ?d <{M.LSO_REF_YEAR}> ?v }} }} "
+            "ORDER BY DESC(?v) LIMIT 5"
         },
     )
     assert status == 200 and 0 < len(sols) <= 5
@@ -162,11 +159,9 @@ def test_sparql_endpoint_union_order_by(rest_server):
     status, err = _post(
         base + "/sparql",
         {
-            "patterns": [["?d", M.RDF_TYPE, M.QB_DATASET]],
-            "unions": [[
-                [["?d", M.RDFS_LABEL, "?v"]],
-                [["conv-x", M.LSO_REF_YEAR, "?v"]],
-            ]],
+            "query": f"SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> "
+            f"{{ ?d <{M.RDFS_LABEL}> ?v }} "
+            f"UNION {{ <conv-x> <{M.LSO_REF_YEAR}> ?v }} }}"
         },
     )
     assert status == 400 and "error" in err
@@ -318,47 +313,85 @@ def test_job_cancel_running(rest_server, spark, tmp_path):
     assert e["state"] in ("CANCELLED", "FINISHED"), e
 
 
-def test_job_timeout_watchdog(rest_server, spark, tmp_path):
+def test_job_timeout_watchdog(rest_server, spark, tmp_path, monkeypatch):
     """timeout_sec bounds a convert like the reference's 1-hour worker
     timeout (Boss.java:87-88, future.get(1, HOURS) → FAILED): the
     watchdog cancels the job group, the state lands FAILED with a
     timeout error naming the resume path, and committed buckets stay
-    in the manifest so a resubmit WITHOUT the timeout resumes."""
+    in the manifest so a resubmit WITHOUT the timeout resumes. The
+    timer is a fake, fired by hand at the runner's first phase-boundary
+    poll after its buckets committed, so the outcome does not depend
+    on where a real timer lands among the Spark jobs."""
+    import os
     import time as _time
 
+    from linkedspending_spark import jobs, rest
     from linkedspending_spark.transcripts import synth_transcripts_df
 
     base, service = rest_server
-    inp = str(tmp_path / "transcripts_big")
+    inp = str(tmp_path / "transcripts")
     synth_transcripts_df(
-        service.spark, n_convs=400, base_turns=12
+        service.spark, n_convs=12, base_turns=4
     ).write.parquet(inp)
     body = {
         "input": inp,
         "output": str(tmp_path / "out"),
         "manifests": str(tmp_path / "manifests"),
-        "n_buckets": 64,
-        "timeout_sec": 1,  # far below this input's convert time
+        "n_buckets": 8,
+        "timeout_sec": 1,
     }
+
+    timers, fired = [], []
+
+    class FakeTimer:
+        def __init__(self, interval, fn):
+            self.fn = fn
+            self.daemon = False
+            timers.append(self)
+
+        def start(self):
+            pass
+
+        def cancel(self):
+            pass
+
+    real_runner = jobs.run_transcripts_job
+
+    def runner(*args, **kwargs):
+        should_stop = kwargs["should_stop"]
+
+        def poll():
+            if timers and not fired and os.path.exists(
+                os.path.join(body["manifests"], "_SUCCESS")
+            ):
+                fired.append(True)
+                timers[-1].fn()
+            return should_stop()
+
+        return real_runner(*args, **{**kwargs, "should_stop": poll})
+
+    monkeypatch.setattr(rest.threading, "Timer", FakeTimer)
+    monkeypatch.setattr(jobs, "run_transcripts_job", runner)
+
+    def wait_done(jid, polls):
+        for _ in range(polls):
+            _, active = _get(base + "/jobs/active")
+            e = next(a for a in active if a["job"] == jid)
+            if e["state"] != "RUNNING" and not e.get("thread_alive"):
+                return e
+            _time.sleep(0.25)
+        return e
+
     _, sub = _post(base + "/jobs/convert", body)
-    for _ in range(240):
-        _, active = _get(base + "/jobs/active")
-        e = next(a for a in active if a["job"] == sub["job"])
-        if e["state"] != "RUNNING" and not e.get("thread_alive"):
-            break
-        _time.sleep(0.25)
+    e = wait_done(sub["job"], 240)
+    assert fired, "the watchdog never fired"
     assert e["state"] == "FAILED", e
     assert "timeout" in e.get("error", ""), e
     # a resubmit without the bound resumes from the committed buckets
     # and finishes — the timed-out run lost only in-flight work
     body.pop("timeout_sec")
     _, sub2 = _post(base + "/jobs/convert", body)
-    for _ in range(480):
-        _, active = _get(base + "/jobs/active")
-        e2 = next(a for a in active if a["job"] == sub2["job"])
-        if e2["state"] != "RUNNING" and not e2.get("thread_alive"):
-            break
-        _time.sleep(0.25)
+    e2 = wait_done(sub2["job"], 480)
     assert e2["state"] == "FINISHED", e2
     assert e2["report"]["skipped"] > 0  # committed buckets resumed
     # a zero/invalid bound is a 400, not a job that dies instantly
@@ -542,8 +575,8 @@ def test_malformed_numeric_params_are_400(rest_server):
         except urllib.error.HTTPError as e:
             status, body = e.code, json.loads(e.read())
         assert status == 400 and "error" in body, (url, status, body)
-    assert _post(base + "/sparql", {"patterns": [["?s", "?p", "?o"]],
-                                    "limit": None})[0] == 400
+    assert _post(base + "/sparql", {"query": "select ?s { ?s ?p ?o } "
+                                             "limit -5"})[0] == 400
     assert _post(base + "/jobs/convert", {"input": "x", "output": "y",
                                           "manifests": "z",
                                           "n_buckets": "many"})[0] == 400
@@ -680,10 +713,9 @@ def test_no_endpoint_exceeds_max_rows(typed_server, rest_server):
     # GET /triples with a crafted limit
     status, rows = _get(base + "/triples?limit=999999")
     assert status == 200 and len(rows) == 3
-    # POST /sparql algebra with a crafted limit
+    # POST /sparql SELECT * with a crafted limit
     status, sols = _post(
-        base + "/sparql",
-        {"patterns": [["?s", "?p", "?o"]], "limit": 999999},
+        base + "/sparql", {"query": "select * { ?s ?p ?o } limit 999999"}
     )
     assert status == 200 and len(sols) == 3
     # POST /sparql textual with its own huge LIMIT and an OFFSET
@@ -869,22 +901,22 @@ def test_feed_rss_of_job_events(rest_server, spark, tmp_path):
 
 
 def test_sparql_algebra_minus(rest_server):
-    """The JSON algebra body accepts "minus" groups (left-anti)."""
+    """A MINUS group over HTTP (left-anti)."""
     base, _ = rest_server
     _, labelled = _post(
         base + "/sparql",
-        {"patterns": [["?d", M.RDFS_LABEL, "?label"]], "limit": 1},
+        {"query": f"SELECT * {{ ?d <{M.RDFS_LABEL}> ?label }} LIMIT 1"},
     )
     label = labelled[0]["label"]
     status, all_ds = _post(
         base + "/sparql",
-        {"patterns": [["?d", M.RDF_TYPE, M.QB_DATASET]]},
+        {"query": f"SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> }}"},
     )
     status2, rest = _post(
         base + "/sparql",
         {
-            "patterns": [["?d", M.RDF_TYPE, M.QB_DATASET]],
-            "minus": [[["?d", M.RDFS_LABEL, label]]],
+            "query": f"SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> "
+            f'MINUS {{ ?d <{M.RDFS_LABEL}> "{label}" }} }}'
         },
     )
     assert status == status2 == 200

@@ -3,7 +3,7 @@
 The reference's own query strings (Sparql.java:44,
 LinkedSpendingDatasetInfo.java:62-83) must run verbatim through
 ``select_text``; the parse must compile onto exactly the algebra
-``select_sparql`` evaluates."""
+``serve.eval_group`` evaluates."""
 
 from __future__ import annotations
 
@@ -85,10 +85,8 @@ def test_dataset_info_query_verbatim(spark, catalog):
 
 
 def test_text_matches_programmatic_algebra(spark, catalog):
-    """OPTIONAL + FILTER + UNION + DISTINCT text compiles to the same
-    solutions as the programmatic select_sparql call."""
-    from linkedspending_spark.serve import select_sparql
-
+    """OPTIONAL + FILTER + UNION + DISTINCT/ORDER BY/LIMIT text equals
+    the same group's raw solutions with the modifiers applied by hand."""
     text = """
     SELECT DISTINCT ?d ?when WHERE {
       ?d a qb:DataSet .
@@ -98,17 +96,15 @@ def test_text_matches_programmatic_algebra(spark, catalog):
     } ORDER BY DESC(?when) LIMIT 3
     """
     got = [tuple(r) for r in select_text(catalog, text).collect()]
-    prog = select_sparql(
+    prog = select_text(
         catalog,
-        [("?d", M.RDF_TYPE, M.QB_DATASET)],
-        optionals=[[("?d", M.RDFS_LABEL, "?l")]],
-        unions=[[
-            [("?d", M.NS_DCT + "created", "?when")],
-            [("?d", M.NS_DCT + "modified", "?when")],
-        ]],
-        filters=[
-            f"?when >= '2023-06' AND ?d != '{M.PREFIX_INSTANCE}gamma'"
-        ],
+        f"""SELECT * {{
+          ?d <{M.RDF_TYPE}> <{M.QB_DATASET}>
+          OPTIONAL {{ ?d <{M.RDFS_LABEL}> ?l }}
+          {{ ?d <{M.NS_DCT}created> ?when }}
+          UNION {{ ?d <{M.NS_DCT}modified> ?when }}
+          FILTER(?when >= '2023-06' && ?d != <{M.PREFIX_INSTANCE}gamma>)
+        }}""",
     ).select("d", "when").dropDuplicates()
     expected = sorted(
         map(tuple, prog.collect()), key=lambda t: t[1], reverse=True
@@ -119,7 +115,7 @@ def test_text_matches_programmatic_algebra(spark, catalog):
 def test_distinct_applies_after_projection(spark, catalog):
     """SELECT DISTINCT dedups the *projected* variables: projecting ?d
     away from its per-date solutions collapses to one row per dataset
-    (select_sparql's own distinct flag dedups pre-projection — a
+    (a dedup over the whole solution before projection would be a
     different query)."""
     text = (
         "select distinct ?d { { ?d dcterms:created ?x } "
@@ -174,7 +170,8 @@ def test_parse_errors():
     pq = parse_select(
         "select ?x { ?x ?p ?y optional { ?x ?p ?o optional { ?x ?q ?z } } }"
     )
-    assert [k for k, _ in pq.groups] == ["optional_sub"]
+    assert [k for k, _ in pq.groups] == ["optional"]
+    assert [k for k, _ in pq.groups[0][1].groups] == ["optional"]
     with pytest.raises(SparqlSyntaxError, match="UNION"):
         parse_select("select ?x { { ?x ?p ?o } }")  # lone braced group
     with pytest.raises(SparqlSyntaxError, match="trailing"):
@@ -281,8 +278,17 @@ def test_parse_roundtrips_rendered_algebra(
     q = parse_select(text)
     # rdf:type rendered as 'a' in predicate position parses back to the URI
     assert q.patterns == patterns
-    assert q.optionals == [list(g) for g in optionals]
-    assert q.unions == [[list(b) for b in e] for e in unions]
+    assert [k for k, _ in q.groups] == (
+        ["optional"] * len(optionals) + ["union"] * len(unions)
+    )
+    assert [b.patterns for k, b in q.groups if k == "optional"] == [
+        list(g) for g in optionals
+    ]
+    assert [
+        [b.patterns for b in branches]
+        for k, branches in q.groups
+        if k == "union"
+    ] == [[list(b) for b in e] for e in unions]
     assert q.distinct is distinct and q.limit == limit
     assert q.project is None
     if order_var is not None:
@@ -462,33 +468,22 @@ def test_optional_after_union_source_order(spark, catalog):
 def test_nullable_join_refused(spark, catalog):
     """A join keyed on a possibly-unbound variable raises (SPARQL's
     unbound-compatible join is not silently approximated)."""
-    from linkedspending_spark.serve import select_sparql
-
     # optional introduces ?l; a later union shares it -> refuse
     with pytest.raises(ValueError, match="possibly-unbound"):
-        select_sparql(
+        select_text(
             catalog,
-            [("?d", M.RDF_TYPE, M.QB_DATASET)],
-            groups=[
-                ("optional", [("?d", M.RDFS_LABEL, "?l")]),
-                ("union", [
-                    [("?d", M.NS_DCT + "created", "?l")],
-                    [("?d", M.NS_DCT + "modified", "?l")],
-                ]),
-            ],
+            f"""SELECT * {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}>
+              OPTIONAL {{ ?d <{M.RDFS_LABEL}> ?l }}
+              {{ ?d <{M.NS_DCT}created> ?l }}
+              UNION {{ ?d <{M.NS_DCT}modified> ?l }} }}""",
         ).collect()
     # base union leaves ?c partially bound; a later optional on ?c -> refuse
     with pytest.raises(ValueError, match="possibly-unbound"):
-        select_sparql(
+        select_text(
             catalog,
-            [],
-            groups=[
-                ("union", [
-                    [("?d", M.NS_DCT + "created", "?c")],
-                    [("?d", M.RDF_TYPE, M.QB_DATASET)],  # binds only ?d
-                ]),
-                ("optional", [("?x", M.RDFS_LABEL, "?c")]),
-            ],
+            f"""SELECT * {{ {{ ?d <{M.NS_DCT}created> ?c }}
+              UNION {{ ?d <{M.RDF_TYPE}> <{M.QB_DATASET}> }}
+              OPTIONAL {{ ?x <{M.RDFS_LABEL}> ?c }} }}""",
         ).collect()
 
 

@@ -298,3 +298,44 @@ def test_graph_var_nested_from_named_range(graph):
         "{ GRAPH ?g { ?s p:name ?n OPTIONAL { ?s p:age ?a } } }",
     )
     assert got == [(B + "ds2", "Bob")]
+
+
+def test_graph_var_minus_disjoint_domain(graph):
+    """A MINUS body sharing no variable with its base removes nothing
+    (§8.3.3), inside GRAPH ?g too: the active graph is not a variable
+    of the body, so it never makes the domains intersect. The FILTER
+    NOT EXISTS twin is the contrast — its body is tested inside the
+    active graph, so the graph is its only key."""
+    minus = (
+        "SELECT ?g ?s ?age { GRAPH ?g { ?s p:age ?age "
+        "MINUS { ?x p:name ?n } } }"
+    )
+    not_exists = (
+        "SELECT ?g ?s ?age { GRAPH ?g { ?s p:age ?age "
+        "FILTER NOT EXISTS { ?x p:name ?n } } }"
+    )
+    assert _run(graph, minus) == [
+        (B + "ds1", "u:a", "30"),
+        (B + "ds2", "u:a", "31"),
+    ]
+    assert _run(graph, not_exists) == []  # every graph has a name
+    # a third graph holding an age and no name
+    more = graph.unionByName(
+        graph.sparkSession.createDataFrame(
+            [("u:c", "p:age", "40", "literal", None, None, "ds3")],
+            graph.schema,
+        )
+    )
+    assert _run(more, minus) == [
+        (B + "ds1", "u:a", "30"),
+        (B + "ds2", "u:a", "31"),
+        (B + "ds3", "u:c", "40"),
+    ]
+    assert _run(more, not_exists) == [(B + "ds3", "u:c", "40")]
+
+
+def test_graph_var_body_without_scan(graph):
+    """A GRAPH ?g body that reads no graph (here only VALUES) holds in
+    every named graph: Graph(?g, P) = ⋃_G Join(eval(P, G), {?g → G})."""
+    got = _run(graph, 'SELECT ?g ?x { GRAPH ?g { VALUES ?x { "k" } } }')
+    assert got == [(B + "ds1", "k"), (B + "ds2", "k")]

@@ -3,11 +3,11 @@ bodies carrying their own algebra — nested OPTIONAL, UNION, FILTER,
 BIND, VALUES, MINUS, property paths, subqueries.
 
 The parser re-enters the full group-body grammar through a child
-parser on the shared lexer (``_child_body``); bodies with nested
-algebra evaluate bottom-up like subqueries (``_eval_subqueries``) and
-join the outer solution as pre-evaluated solution sets — a LEFT join
-for OPTIONAL (``optional_solutions``), union-by-name + inner join for
-UNION branches. Pattern-only bodies keep the original flat plan shape.
+parser on the shared lexer (``_child_body``); every body is itself a
+group, evaluated bottom-up by the one recursive evaluator
+(``serve.eval_group``) and joined to the outer solution — a LEFT join
+for OPTIONAL, union-by-name + inner join for UNION branches.
+Pattern-only bodies are one BGP join tree, the flat plan shape.
 
 The reference's Jena endpoint accepts all of these verbatim
 (Sparql.java:21-29 passes query text through to ARQ)."""
@@ -238,16 +238,19 @@ def test_refusals(people):
 
 
 def test_flat_bodies_keep_flat_plans(people):
-    """A pattern-only OPTIONAL body still compiles to the original flat
-    payload (no bottom-up pre-evaluation) — the plan-shape contract."""
+    """A pattern-only OPTIONAL or UNION body parses to a group holding
+    only patterns, which evaluates as one BGP join tree — the
+    plan-shape contract."""
     pq = parse_select(
         f"select ?n ?a {{ {NAME} OPTIONAL {{ ?p <http://x/addr> ?a }} }}"
     )
     assert [k for k, _ in pq.groups] == ["optional"]
+    assert pq.groups[0][1].patterns and not pq.groups[0][1].groups
     pq = parse_select(
         f"select ?n {{ {{ {NAME} }} UNION {{ ?p <http://x/fax> ?n }} }}"
     )
     assert [k for k, _ in pq.groups] == ["union"]
+    assert all(b.patterns and not b.groups for b in pq.groups[0][1])
 
 
 @pytest.fixture(scope="module")

@@ -11,13 +11,16 @@ twelve rows and three patterns leave nowhere to hide.
 Complements the example-based suites: hypothesis explores the corner
 shapes nobody writes by hand (repeated variables inside one pattern,
 all-constant patterns as existence gates, shared vars across
-disconnected components, var-in-predicate-position joins).
+disconnected components, var-in-predicate-position joins). The same
+first-principles evaluation, run per named graph of a quad table,
+checks GRAPH ?g over BGP / OPTIONAL / MINUS / FILTER [NOT] EXISTS /
+UNION bodies.
 """
 
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from linkedspending_spark.sparql import select_text
@@ -281,3 +284,139 @@ def test_random_union_matches_naive_semantics(table, left, right):
         (tuple(r[c] for c in cols) for r in df.collect()), key=str
     )
     assert got == expected, q
+
+
+#: the quad table for GRAPH ?g: ROWS spread over three named graphs
+#: (dataset partitions), the first four rows also in g2 — so a body's
+#: patterns can match in one graph and not in another
+QUADS = sorted(
+    {(s, p, o, f"g{i % 3 + 1}") for i, (s, p, o) in enumerate(ROWS)}
+    | {(s, p, o, "g2") for s, p, o in ROWS[:4]}
+)
+GRAPHS = sorted({q[3] for q in QUADS})
+
+
+@pytest.fixture(scope="module")
+def quads(spark):
+    return spark.createDataFrame(
+        QUADS, "s string, p string, o string, dataset string"
+    )
+
+
+def _sols_in(patterns, rows) -> list[dict]:
+    """BGP solutions over one graph's triples (the naive fold)."""
+    sols: list[dict] = [{}]
+    for pat in patterns:
+        new: list[dict] = []
+        for mu in sols:
+            for triple in rows:
+                ext, ok = dict(mu), True
+                for term, val in zip(pat, triple):
+                    if term.startswith("?"):
+                        if ext.setdefault(term[1:], val) != val:
+                            ok = False
+                    elif term != val:
+                        ok = False
+                if ok:
+                    new.append(ext)
+        sols = new
+    return sols
+
+
+def _compatible(mu: dict, m2: dict) -> bool:
+    return all(mu[k] == m2[k] for k in set(mu) & set(m2))
+
+
+def _naive_body(op: str, base, other, rows) -> list[dict]:
+    """eval(P, G) from first principles for P = base <op> other."""
+    b = _sols_in(base, rows)
+    o = _sols_in([other], rows)
+    if op == "bgp":
+        return b
+    if op == "optional":
+        out = []
+        for mu in b:
+            exts = [{**mu, **m2} for m2 in o if _compatible(mu, m2)]
+            out += exts or [mu]
+        return out
+    if op == "minus":
+        return [
+            mu for mu in b
+            if not any(set(mu) & set(m2) and _compatible(mu, m2) for m2 in o)
+        ]
+    if op in ("exists", "not_exists"):
+        want = op == "exists"
+        return [
+            mu for mu in b
+            if any(_compatible(mu, m2) for m2 in o) == want
+        ]
+    return b + o  # union
+
+
+def _term_text(t: str) -> str:
+    if t.startswith("?"):
+        return t
+    return f'"{t}"' if t.startswith("lit") else f"<{t}>"
+
+
+def _body_text(op: str, base, other) -> str:
+    b = " . ".join(" ".join(map(_term_text, pat)) for pat in base)
+    o = " ".join(map(_term_text, other))
+    return {
+        "bgp": b,
+        "optional": f"{b} OPTIONAL {{ {o} }}",
+        "minus": f"{b} MINUS {{ {o} }}",
+        "exists": f"{b} FILTER EXISTS {{ {o} }}",
+        "not_exists": f"{b} FILTER NOT EXISTS {{ {o} }}",
+        "union": f"{{ {b} }} UNION {{ {o} }}",
+    }[op]
+
+
+@pytest.mark.parametrize(
+    "op", ["bgp", "optional", "minus", "exists", "not_exists", "union"]
+)
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    base=st.lists(pattern_st, min_size=1, max_size=2).filter(
+        lambda ps: any(t.startswith("?") for pat in ps for t in pat)
+    ),
+    other=pattern_st.filter(lambda p: any(t.startswith("?") for t in p)),
+)
+# a MINUS side sharing no variable with its base removes nothing —
+# inside GRAPH ?g too, where the active graph is not a shared variable
+@example(base=[("?x", "p:a", "?y")], other=("?z", "p:b", "lit1"))
+def test_random_graph_var_matches_naive_semantics(quads, op, base, other):
+    """SPARQL Graph from first principles (§18.6): GRAPH ?g { P } is
+    ⋃_G Join(eval(P, G), {?g → G}) over the named graphs G, for P a
+    BGP, BGP OPTIONAL BGP, BGP MINUS BGP, BGP FILTER [NOT] EXISTS BGP
+    and BGP UNION BGP — every operator of the body evaluates inside
+    one graph, and ?g is not a variable of the body."""
+    from linkedspending_spark import model as M
+
+    expected = []
+    for g in GRAPHS:
+        rows = [q[:3] for q in QUADS if q[3] == g]
+        expected += [
+            {**mu, "g": M.PREFIX_GRAPH + g}
+            for mu in _naive_body(op, base, other, rows)
+        ]
+    q = "SELECT * { GRAPH ?g { " + _body_text(op, base, other) + " } }"
+    df = select_text(quads, q)
+    cols = sorted(df.columns)
+    want_cols = {"g"} | {
+        t[1:] for pat in base for t in pat if t.startswith("?")
+    }
+    if op in ("optional", "union"):
+        want_cols |= {t[1:] for t in other if t.startswith("?")}
+    assert cols == sorted(want_cols), q
+    got = sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()), key=str
+    )
+    want = sorted(
+        (tuple(mu.get(c) for c in cols) for mu in expected), key=str
+    )
+    assert got == want, q
