@@ -403,9 +403,11 @@ def run_canonicalize_job(
     anti-join it away and become no-ops.
     """
     from .operators.canon import (
+        bounded_rows,
         canonicalize_triples_minimal_dedup,
         connected_components,
         lineage_checkpoint,
+        local_components,
         prefer_representatives,
         property_alias_edges,
     )
@@ -441,11 +443,22 @@ def run_canonicalize_job(
         report.pending = [0]
         # plain read (not read_triples): keeps the bucket partition column
         triples = spark.read.parquet(triples_path)
-        edges = lineage_checkpoint(property_alias_edges(triples))
-        comp = connected_components(edges, "src", "dst")
-        anchors = edges.select(F.col("dst").alias("uri"))
-        comp = prefer_representatives(comp, anchors)
-        merged = comp.where(F.col("node") != F.col("component"))
+        # the alias map is O(datasets × fields) rows: collected once, its
+        # representatives (the anchors) are elected on the driver and the
+        # rewrite reads it as a LocalRelation — no further Spark job
+        # until the rewrite's own write. Past the bound: the star rounds.
+        edges = property_alias_edges(triples)
+        rows = bounded_rows(edges)
+        if rows is not None:
+            comp = local_components(
+                spark, rows, preferred={r["dst"] for r in rows}
+            )
+        else:
+            edges = lineage_checkpoint(edges)
+            comp = prefer_representatives(
+                connected_components(edges, "src", "dst", local_threshold=0),
+                edges.select(F.col("dst").alias("uri")),
+            )
         # statement-set semantics at O(merge-affected) dedup cost — only
         # changed / representative-touching triples re-shuffle
         canon = canonicalize_triples_minimal_dedup(
@@ -467,13 +480,20 @@ def run_canonicalize_job(
         if metrics:
             from .sources.metrics import jvm_memory_metrics
 
+            # from the driver rows when the map was resolved there (a
+            # filtered LocalRelation collects without a job)
+            merged = comp.where(F.col("node") != F.col("component"))
+            if rows is not None:
+                n_edges, n_merged = len(rows), len(merged.collect())
+            else:
+                n_edges, n_merged = edges.count(), merged.count()
             metrics.record(
                 report.run_id,
                 "canonicalize",
                 {
                     "triples": n,
-                    "alias_edges": edges.count(),
-                    "merged_nodes": merged.count(),
+                    "alias_edges": n_edges,
+                    "merged_nodes": n_merged,
                     "seconds": time.time() - t0,
                     **jvm_memory_metrics(spark),  # A7 high-water analog
                 },

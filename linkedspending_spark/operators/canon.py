@@ -24,6 +24,23 @@ from pyspark.sql import functions as F
 from .. import model as M
 from ..sources.local import local_frame
 
+# rows a driver-side map may hold (edge lists, merge maps): tens of MB.
+# Under it a map is collected once and used as a LocalRelation, which
+# Spark scans and broadcasts without a job; over it the distributed
+# formulation runs.
+LOCAL_THRESHOLD = 100_000
+
+
+def bounded_rows(df: DataFrame, limit: int | None = None) -> list | None:
+    """``df``'s rows when there are at most ``limit`` (default
+    :data:`LOCAL_THRESHOLD`), else ``None``. One Spark job (CollectLimit
+    reads partitions incrementally); none when ``df`` is a LocalRelation
+    under filters and projections, which the optimizer folds away."""
+    if limit is None:
+        limit = LOCAL_THRESHOLD
+    rows = df.limit(limit + 1).collect()
+    return rows if len(rows) <= limit else None
+
 
 def lineage_checkpoint(df: DataFrame) -> DataFrame:
     """Truncate lineage for an iterative loop, executor-loss-safely.
@@ -152,13 +169,17 @@ def prefer_representatives(
     )
 
 
-def _local_components(spark, rows) -> DataFrame:
+def local_components(spark, pairs, preferred=frozenset()) -> DataFrame:
     """Driver-side union-find over a collected edge list.
 
+    ``pairs``: ``(u, v)`` node-id tuples (nulls and self-loops skipped).
     Same contract as :func:`connected_components`: component = the
     lexicographic min node id (Python codepoint order == Spark's UTF-8
     binary order for valid strings, so representatives agree with the
-    distributed path bit-for-bit).
+    distributed path bit-for-bit). With ``preferred``, a component
+    holding a preferred node is keyed to its min preferred member — the
+    :func:`prefer_representatives` contract, resolved here without a
+    Spark job. Returned as a LocalRelation.
     """
     parent: dict[str, str] = {}
 
@@ -168,8 +189,9 @@ def _local_components(spark, rows) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        u, v = r["u"], r["v"]
+    for u, v in pairs:
+        if u is None or v is None or u == v:
+            continue
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -177,12 +199,13 @@ def _local_components(spark, rows) -> DataFrame:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[ru] = rv
-    comp_min: dict[str, str] = {}
+    rep: dict[str, tuple[bool, str]] = {}
     for n in parent:
         root = find(n)
-        if root not in comp_min or n < comp_min[root]:
-            comp_min[root] = n
-    data = [(n, comp_min[find(n)]) for n in sorted(parent)]
+        key = (n not in preferred, n)  # preferred members sort first
+        if root not in rep or key < rep[root]:
+            rep[root] = key
+    data = [(n, rep[find(n)][1]) for n in sorted(parent)]
     return local_frame(spark, data, "node string, component string")
 
 
@@ -191,7 +214,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Min-label propagation via alternating large-star / small-star.
 
@@ -203,10 +226,11 @@ def connected_components(
 
     Adaptive small-graph path (the same class of adaptivity as a
     broadcast-join size threshold): when the deduplicated symmetrized
-    edge list fits on the driver (≤ ``local_threshold`` rows — tens of
-    MB), the O(log n) rounds of shuffle/driver latency cost orders of
-    magnitude more than the problem itself, so the component map is
-    computed with driver-side union-find in ONE Spark job and returned
+    edge list fits on the driver (≤ ``local_threshold`` rows, default
+    :data:`LOCAL_THRESHOLD` — tens of MB), the O(log n) rounds of
+    shuffle/driver latency cost orders of magnitude more than the
+    problem itself, so the component map is computed with driver-side
+    union-find (:func:`local_components`) in ONE Spark job and returned
     as a local relation. Identical results (same min-label contract);
     the distributed star loop is unchanged and remains the scale path.
     ``local_threshold=0`` forces the distributed path.
@@ -219,14 +243,14 @@ def connected_components(
     # symmetrize once; all later rounds keep orientation invariants
     e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
 
+    if local_threshold is None:
+        local_threshold = LOCAL_THRESHOLD
     if local_threshold:
-        # one job: if ≤ threshold rows come back, that IS the edge set.
-        # CollectLimit reads reduce partitions incrementally, so a big
-        # graph pays one distinct map pass + a bounded fetch, negligible
-        # next to the star rounds it proceeds to run.
-        head = e.limit(local_threshold + 1).collect()
-        if len(head) <= local_threshold:
-            return _local_components(edges.sparkSession, head)
+        # one job: a big graph pays one distinct map pass + a bounded
+        # fetch, negligible next to the star rounds it proceeds to run
+        rows = bounded_rows(e, local_threshold)
+        if rows is not None:
+            return local_components(edges.sparkSession, rows)
 
     # Both stars are formulated WITHOUT collect_set: a hub node's full
     # adjacency never materializes in one aggregation row. min() is
@@ -311,7 +335,7 @@ def merge_components(
     src: str = "src",
     dst: str = "dst",
     changed_only: bool = False,
-    local_threshold: int = 100_000,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Incremental connected components: fold a new edge wave into an
     existing ``(node, component)`` map without recomputing the graph.
@@ -429,53 +453,34 @@ def canonicalize_triples_minimal_dedup(
     materializes — convert and import both dedup); pre-existing input
     duplicates among safe rows would pass through, where the full
     ``dropDuplicates`` variant would also scrub them.
-    """
-    merged = components.where(F.col("node") != F.col("component"))
-    # the merge map is usually tiny vs the corpus (incremental waves),
-    # but a FIRST full canonicalization can merge millions of nodes — an
-    # unconditional broadcast would OOM the driver. One count() of the
-    # (already small-side) map decides: under the threshold force the
-    # broadcast-hash join, above it drop the hint and let AQE pick the
-    # strategy. The safe/risky split is join-strategy-independent.
-    n_merged = merged.count()
-    hint = F.broadcast if n_merged <= broadcast_threshold else (lambda d: d)
-    reps = merged.select(F.col("component").alias("__rep")).distinct()
 
-    s_map = merged.select(F.col("node").alias("s"), F.col("component").alias("__s_canon"))
-    o_map = merged.select(F.col("node").alias("o"), F.col("component").alias("__o_canon"))
-    out = triples.join(hint(s_map), "s", "left").join(
-        hint(o_map), "o", "left"
-    )
+    Every fact the split needs about a term comes from ONE lookup
+    relation (:func:`canon_lookup`), joined once per position (s, o, p).
+    """
+    lookup, hint = canon_lookup(components, broadcast_threshold)
+    out = triples
+    for pos in ("s", "o", "p"):
+        out = out.join(
+            hint(
+                lookup.select(
+                    F.col("node").alias(pos),
+                    F.col("canon").alias(f"__{pos}_canon"),
+                    F.col("is_rep").alias(f"__{pos}_rep"),
+                )
+            ),
+            pos,
+            "left",
+        )
     p_col = F.col("p")
     changed = F.col("__s_canon").isNotNull() | (
         (F.col("o_kind") == M.KIND_URI) & F.col("__o_canon").isNotNull()
     )
     if rewrite_predicates:
-        p_map = merged.select(
-            F.col("node").alias("p"), F.col("component").alias("__p_canon")
-        )
-        out = out.join(hint(p_map), "p", "left")
         p_col = F.coalesce("__p_canon", "p")
         changed = changed | F.col("__p_canon").isNotNull()
-    # representative-term membership (broadcast left joins, no shuffle)
-    out = (
-        out.join(hint(reps), out["s"] == reps["__rep"], "left")
-        .withColumn("__s_is_rep", F.col("__rep").isNotNull())
-        .drop("__rep")
-    )
-    out = (
-        out.join(hint(reps), out["o"] == reps["__rep"], "left")
-        .withColumn("__o_is_rep", F.col("__rep").isNotNull())
-        .drop("__rep")
-    )
-    out = (
-        out.join(hint(reps), out["p"] == reps["__rep"], "left")
-        .withColumn("__p_is_rep", F.col("__rep").isNotNull())
-        .drop("__rep")
-    )
-    risky_flag = (
-        changed | F.col("__s_is_rep") | F.col("__o_is_rep") | F.col("__p_is_rep")
-    )
+    risky_flag = changed
+    for pos in ("s", "o", "p"):  # a representative term, in any position
+        risky_flag = risky_flag | F.coalesce(f"__{pos}_rep", F.lit(False))
     cols = [c for c in triples.columns if c not in ("s", "o", "p")]
     rewritten = out.select(
         F.coalesce("__s_canon", "s").alias("s"),
@@ -493,6 +498,54 @@ def canonicalize_triples_minimal_dedup(
         .dropDuplicates(["s", "p", "o"])
     )
     return safe.unionByName(risky).select(*triples.columns)
+
+
+def canon_lookup(
+    components: DataFrame, broadcast_threshold: int = 8_000_000
+) -> tuple[DataFrame, object]:
+    """The rewrite's lookup relation ``(node, canon, is_rep)`` and the
+    join hint to use it with.
+
+    One row per term the rewrite must know about: a merged node carries
+    its representative in ``canon``; a representative has ``is_rep``
+    true (``canon`` NULL unless it is merged too, as in a non-idempotent
+    :func:`merge_components` delta ``{x→y, y→z}``, where ``y`` keeps both
+    facts in one row).
+
+    The merge map is usually tiny (O(datasets × fields) property
+    aliases, or an incremental wave): when it holds at most
+    :data:`LOCAL_THRESHOLD` rows it is collected once — no job when
+    ``components`` is itself a LocalRelation — and the lookup is built
+    on the driver as a LocalRelation, which Spark broadcasts without a
+    job. A FIRST full canonicalization can merge millions of nodes, so
+    above the bound the same relation is built distributed, and one
+    count() decides: under ``broadcast_threshold`` force the
+    broadcast-hash join, above it drop the hint and let AQE pick the
+    strategy (an unconditional broadcast would OOM the driver). The
+    safe/risky split is join-strategy-independent.
+    """
+    merged = components.where(F.col("node") != F.col("component"))
+    rows = bounded_rows(merged)
+    if rows is not None:
+        canon = {r["node"]: r["component"] for r in rows}
+        reps = set(canon.values())
+        data = [(n, canon.get(n), n in reps) for n in sorted(canon.keys() | reps)]
+        lookup = local_frame(
+            components.sparkSession, data, "node string, canon string, is_rep boolean"
+        )
+        return lookup, F.broadcast
+    reps = (
+        merged.select(F.col("component").alias("node"))
+        .distinct()
+        .withColumn("is_rep", F.lit(True))
+    )
+    lookup = (
+        merged.select("node", F.col("component").alias("canon"))
+        .join(reps, "node", "full")
+        .select("node", "canon", F.coalesce("is_rep", F.lit(False)).alias("is_rep"))
+    )
+    hint = F.broadcast if merged.count() <= broadcast_threshold else (lambda d: d)
+    return lookup, hint
 
 
 def canonicalize_triples(

@@ -192,30 +192,28 @@ def bgp_stats(triples: DataFrame) -> dict:
     """One-time cardinality statistics for :func:`select_bgp` ordering.
 
     The classic triple-store selectivity table (RDF-3X/Jena style): one
-    ``groupBy('p')`` pass collecting, per predicate, the triple count
-    and the approximate distinct subject/object counts, plus one tiny
-    global aggregate. Predicates are vocabulary-sized (dozens–hundreds
+    ``rollup('p')`` pass collecting, per predicate, the triple count and
+    the approximate distinct subject/object counts, plus the same three
+    over the whole table (the grand-total row, told apart by
+    ``grouping('p')``; an empty table yields no row at all, hence the
+    zero default). Predicates are vocabulary-sized (dozens–hundreds
     at any corpus scale), so the collected dict is O(vocabulary) driver
     traffic regardless of table size — compute once per table version
     and reuse across queries.
     """
-    per_p = {
-        r["p"]: {"count": r["n"], "n_s": r["ns"], "n_o": r["no"]}
-        for r in triples.groupBy("p")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("s").alias("ns"),
-            F.approx_count_distinct("o").alias("no"),
-        )
-        .collect()
-    }
-    g = triples.agg(
-        F.count(F.lit(1)).alias("total"),
+    per_p, g = {}, {"n": 0, "ns": 0, "no": 0}
+    for r in triples.rollup("p").agg(
+        F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct("s").alias("ns"),
         F.approx_count_distinct("o").alias("no"),
-    ).collect()[0]
+        F.grouping("p").alias("total"),
+    ).collect():
+        if r["total"]:
+            g = r
+        else:
+            per_p[r["p"]] = {"count": r["n"], "n_s": r["ns"], "n_o": r["no"]}
     return {
-        "total": g["total"],
+        "total": g["n"],
         "n_s": g["ns"],
         "n_o": g["no"],
         "p_counts": per_p,
@@ -668,10 +666,12 @@ def _eval_group(
         order.extend(new)
 
     def apply_ready() -> None:
+        # a filter naming no variable (FILTER(true), FILTER(1 = 1))
+        # holds or fails for every solution alike: it applies as soon
+        # as there are solutions
         nonlocal df
         for f in list(remaining):
-            vs = _filter_vars(f)
-            if vs and vs <= set(order):
+            if df is not None and _filter_vars(f) <= set(order):
                 df = df.where(F.expr(_translate_filter(f)))
                 remaining.remove(f)
 

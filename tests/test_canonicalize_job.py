@@ -149,3 +149,154 @@ def test_minimal_dedup_equals_full_dedup(spark):
     assert (
         out.groupBy("s", "p", "o").count().where(F.col("count") > 1).count() == 0
     )
+
+
+def _canon_table(spark, tmp_path, name: str) -> tuple[set, dict]:
+    """(canonical table rows, the run's alias-edge / merged-node counts)."""
+    from linkedspending_spark.sources.metrics import MetricsStore
+
+    t = synth_transcripts_df(spark, n_convs=8, base_turns=4, seed=7)
+    out, man = str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_man")
+    met = str(tmp_path / f"{name}_metrics")
+    run_transcripts_job(spark, t, out, man, n_buckets=4)
+    canon_out = str(tmp_path / f"{name}_canonical")
+    r = run_canonicalize_job(spark, out, canon_out, man, metrics_path=met)
+    assert r.state == "FINISHED" and r.converted_triples > 0
+    counts = {
+        m["key"]: m["value"]
+        for m in MetricsStore(spark, met).read()
+        .where(F.col("key").isin("alias_edges", "merged_nodes"))
+        .collect()
+    }
+    return {tuple(r) for r in spark.read.parquet(canon_out).collect()}, counts
+
+
+def test_driver_and_star_paths_agree(spark, tmp_path, monkeypatch):
+    """The alias map resolved on the driver (union-find + anchor
+    preference, a local lookup) and past the bound (star rounds +
+    prefer_representatives, a distributed lookup) write the same
+    canonical table, and every representative is an anchor."""
+    from linkedspending_spark.operators import canon
+
+    local, local_counts = _canon_table(spark, tmp_path, "local")
+    monkeypatch.setattr(canon, "LOCAL_THRESHOLD", 0)
+    star, star_counts = _canon_table(spark, tmp_path, "star")
+    assert local == star
+    # 8 conversations x (role, text, tool): each per-conversation
+    # property URI is one alias edge and one merged node
+    assert local_counts == star_counts == {"alias_edges": 24, "merged_nodes": 24}
+    anchor = M.PREFIX_ONTOLOGY + "transcripts-"
+    props = {p for _, p, *_ in local if p.startswith(M.PREFIX_ONTOLOGY)}
+    aliased = [p for p in props if p.endswith(("-role", "-text", "-tool"))]
+    assert aliased and all(p.startswith(anchor) for p in aliased)
+
+
+def test_local_components_prefers_anchors(spark):
+    """Representative = the min preferred member when the component has
+    one, else the min node — prefer_representatives' contract."""
+    from linkedspending_spark.operators.canon import (
+        connected_components,
+        local_components,
+        prefer_representatives,
+    )
+
+    edges = [("a", "z"), ("b", "z"), ("b", "y"), ("c", "d"), ("e", "e")]
+    preferred = {"z", "y"}
+    got = dict(map(tuple, local_components(spark, edges, preferred).collect()))
+    assert got == {"a": "y", "b": "y", "y": "y", "z": "y", "c": "c", "d": "c"}
+    df = spark.createDataFrame(edges, "src string, dst string")
+    star = prefer_representatives(
+        connected_components(df, local_threshold=0),
+        spark.createDataFrame([(u,) for u in preferred], "uri string"),
+    )
+    assert dict(map(tuple, star.collect())) == got
+
+
+def _six_join_rewrite(triples, components, rewrite_predicates):
+    """The rewrite as formulated before the one-lookup relation: merged
+    map joined per position, then three representative-membership joins."""
+    merged = components.where(F.col("node") != F.col("component"))
+    reps = merged.select(F.col("component").alias("__rep")).distinct()
+    out = triples.join(
+        merged.select(F.col("node").alias("s"), F.col("component").alias("__s_canon")),
+        "s", "left",
+    ).join(
+        merged.select(F.col("node").alias("o"), F.col("component").alias("__o_canon")),
+        "o", "left",
+    )
+    p_col = F.col("p")
+    changed = F.col("__s_canon").isNotNull() | (
+        (F.col("o_kind") == M.KIND_URI) & F.col("__o_canon").isNotNull()
+    )
+    if rewrite_predicates:
+        p_map = merged.select(
+            F.col("node").alias("p"), F.col("component").alias("__p_canon")
+        )
+        out = out.join(p_map, "p", "left")
+        p_col = F.coalesce("__p_canon", "p")
+        changed = changed | F.col("__p_canon").isNotNull()
+    for pos in ("s", "o", "p"):
+        out = (
+            out.join(reps, out[pos] == reps["__rep"], "left")
+            .withColumn(f"__{pos}_is_rep", F.col("__rep").isNotNull())
+            .drop("__rep")
+        )
+    risky = changed | F.col("__s_is_rep") | F.col("__o_is_rep") | F.col("__p_is_rep")
+    cols = [c for c in triples.columns if c not in ("s", "o", "p")]
+    rewritten = out.select(
+        F.coalesce("__s_canon", "s").alias("s"),
+        p_col.alias("p"),
+        F.when(F.col("o_kind") == M.KIND_URI, F.coalesce("__o_canon", "o"))
+        .otherwise(F.col("o")).alias("o"),
+        *cols,
+        risky.alias("__risky"),
+    )
+    safe = rewritten.where(~F.col("__risky")).drop("__risky")
+    dirty = (
+        rewritten.where(F.col("__risky"))
+        .drop("__risky")
+        .dropDuplicates(["s", "p", "o"])
+    )
+    return safe.unionByName(dirty).select(*triples.columns)
+
+
+def test_lookup_paths_match_six_join_rewrite(spark, monkeypatch):
+    """A non-idempotent map {x→y, y→z} (y is merged AND a
+    representative): the local lookup, the distributed lookup and the
+    six-join formulation give the same rows, in both predicate modes."""
+    from linkedspending_spark.operators import canon
+
+    x, y, z, w = (f"http://x/{n}" for n in "xyzw")
+    rows = [
+        (x, "http://x/p", y, "uri"), (y, "http://x/p", y, "uri"),
+        (y, "http://x/p", z, "uri"), (z, "http://x/p", z, "uri"),
+        (w, x, y, "uri"), (w, y, "lit", "literal"), (w, "http://x/p", x, "literal"),
+        (z, y, w, "uri"), (x, z, x, "uri"),
+    ]
+    triples = spark.createDataFrame(rows, "s string, p string, o string, o_kind string")
+    comp = spark.createDataFrame(
+        [(x, y), (y, z), (w, w)], "node string, component string"
+    )
+
+    def rows_of(df):
+        out = [tuple(r) for r in df.collect()]
+        assert len(out) == len(set(out))
+        return sorted(out)
+
+    for rewrite_predicates in (False, True):
+        want = rows_of(_six_join_rewrite(triples, comp, rewrite_predicates))
+        local = rows_of(canon.canonicalize_triples_minimal_dedup(
+            triples, comp, rewrite_predicates=rewrite_predicates))
+        with monkeypatch.context() as m:
+            m.setattr(canon, "LOCAL_THRESHOLD", 0)
+            lookup, _ = canon.canon_lookup(comp)
+            plan = lookup._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+            assert "LocalRelation" not in plan.toString()
+            distributed = rows_of(canon.canonicalize_triples_minimal_dedup(
+                triples, comp, rewrite_predicates=rewrite_predicates))
+        assert local == distributed == want
+    lookup = {
+        r["node"]: (r["canon"], r["is_rep"])
+        for r in canon.canon_lookup(comp)[0].collect()
+    }
+    assert lookup == {x: (y, False), y: (z, True), z: (None, True)}

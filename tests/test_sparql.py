@@ -587,6 +587,23 @@ def test_optional_filter_references_outer_variable(spark, catalog):
     assert got == {"alpha": "3", "beta": None, "gamma": "5"}
 
 
+def test_constant_filters_evaluate(spark, catalog):
+    """A FILTER naming no variable holds or fails for every solution
+    alike: true and 1 = 1 keep every row, false keeps none — in a group
+    and inside an OPTIONAL body (which then never matches)."""
+    everything = catalog.count()
+    for cond, want in (("true", everything), ("false", 0), ("1 = 1", everything)):
+        q = select_text(catalog, f"SELECT * {{ ?s ?p ?o FILTER({cond}) }}")
+        assert q.count() == want, cond
+    q = select_text(
+        catalog,
+        "select ?n ?tv { ?d dcterms:identifier ?n "
+        "optional { ?d lso:transformationVersion ?tv filter(false) } }",
+    )
+    got = {r["n"]: r["tv"] for r in q.collect()}
+    assert got == {"alpha": None, "beta": None, "gamma": None}
+
+
 def test_optional_filter_unknown_variable_refused(spark, catalog):
     with pytest.raises(ValueError, match="neither the solution"):
         select_text(
