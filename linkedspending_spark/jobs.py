@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from .model import TRANSFORMATION_VERSION
 from .operators.convert_transcripts import convert_transcripts
 from .sources.io import write_triples
-from .sources.manifest import ManifestStore, new_run_id
+from .sources.manifest import TOMBSTONE_VERSION, ManifestStore, new_run_id
 
 
 @dataclass
@@ -420,13 +420,17 @@ def run_canonicalize_job(
     report.state = "RUNNING"
     try:
         # freshness-aware skip (P7 upToDate semantics): a prior
-        # canonicalize only counts if no convert manifest row landed
-        # since it ran. Ordering key is the CONVERT-ROW COUNT the
-        # sentinel recorded (manifests are append-only, so the count is
-        # monotonic) — not wall-clock timestamps, which tie when convert
-        # and canonicalize land in the same clock tick or drift across
-        # drivers sharing the manifest path.
-        rows = store.read().where(F.col("version") >= version).collect()
+        # canonicalize only counts if no convert manifest row and no
+        # deletion tombstone landed since it ran. Ordering key is the
+        # count of those rows the sentinel recorded (manifests are
+        # append-only, so the count is monotonic) — not wall-clock
+        # timestamps, which tie when convert and canonicalize land in
+        # the same clock tick or drift across drivers sharing the
+        # manifest path.
+        rows = store.read().where(
+            (F.col("version") >= version)
+            | (F.col("version") == TOMBSTONE_VERSION)
+        ).collect()
         n_convert = sum(1 for r in rows if not r["dataset"].startswith("__"))
         covered = max(
             (
@@ -467,11 +471,15 @@ def run_canonicalize_job(
         # output count rides the write pass (no post-write recount scan)
         obs = Observation()
         observed = canon.observe(obs, F.count(F.lit(1)).alias("n"))
-        write_triples(observed, out_path, partition_col="bucket")
+        # the whole table is replaced: a bucket a delete emptied has no
+        # row here, and must not keep its old partition
+        write_triples(
+            observed, out_path, partition_col="bucket", whole_table=True
+        )
         n = int(obs.get["n"])
         store.record(
             dataset=CANON_SENTINEL,
-            n_rows=n_convert,  # convert-row watermark this canon covers
+            n_rows=n_convert,  # convert/tombstone watermark this covers
             n_triples=n,
             run_id=report.run_id,
             version=version,

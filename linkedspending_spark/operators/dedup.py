@@ -44,11 +44,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "doc_id") 
     return packed.select(*[F.col(f"__r.{c}").alias(c) for c in df.columns])
 
 
-def _shingle_hashes(text_col, k: int = 3):
-    """array<long> of xxhash64 of distinct k-token shingles."""
-    return F.transform(token_shingles(text_col, k), lambda s: F.xxhash64(s))
-
-
 def _portable_hash(col):
     """Engine-portable 60-bit hash: first 15 hex chars of md5.
 

@@ -28,13 +28,15 @@ the scan touches only ``1/n_buckets`` of the table, shown under
 
 from __future__ import annotations
 
-import re
+import operator
 from collections.abc import Sequence
+from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import model as M
 from .sources.local import local_frame
 
 
@@ -417,65 +419,249 @@ def select_bgp(
     return joined.select(*out_order)
 
 
-# quote-aware: a ?word inside a quoted SQL string literal (e.g. a URI
-# containing '?query=') is NOT a variable reference and must survive
-# untouched — group 1 captures literals verbatim, group 2 real variables
-_FILTER_VAR = re.compile(
-    r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")|\?(\w+)"
+# -- expressions -------------------------------------------------------------
+#
+# ``sparql.py`` parses every FILTER, BIND, SELECT, GROUP BY, HAVING and
+# ORDER BY expression once into a small tuple AST:
+#
+#     ("var", name) | ("lit", value) | ("iri", uri) | ("call", name, args)
+#     | ("cast", expr, type) | ("in", expr, items, negated)
+#
+# where a literal's value is already a Python str / int / Decimal /
+# float / bool, operators are calls named by their symbol, and every
+# aggregate has been hoisted to a hidden variable. ``compile_expr``
+# turns a node into a Column with one recursive walk: literal values
+# reach Spark as ``F.lit`` values, never as SQL text, so no escaping
+# layer exists to get wrong, and every built-in composes at any depth.
+
+#: named built-ins → (min, max) argument counts (None = unbounded); the
+#: parser refuses any other name and any other count
+BUILTIN_ARITY: dict[str, tuple[int, int | None]] = {
+    **dict.fromkeys(
+        (
+            "str", "ucase", "lcase", "strlen", "abs", "ceil", "floor",
+            "round", "md5", "sha1", "sha256", "sha384", "sha512",
+            "encode_for_uri", "tz", "year", "month", "day", "hours",
+            "minutes", "seconds", "bound", "lang", "datatype", "isuri",
+            "isiri", "isliteral", "isblank", "isnumeric", "iri", "uri",
+        ),
+        (1, 1),
+    ),
+    **dict.fromkeys(
+        (
+            "contains", "strstarts", "strends", "strbefore", "strafter",
+            "langmatches", "sameterm", "strlang", "strdt",
+        ),
+        (2, 2),
+    ),
+    "regex": (2, 3),
+    "replace": (3, 4),
+    "substr": (2, 3),
+    "if": (3, 3),
+    "concat": (0, None),
+    "coalesce": (1, None),
+}
+
+#: built-ins that read a variable's term-metadata companions
+KIND_BUILTINS = frozenset(
+    {"lang", "datatype", "isuri", "isiri", "isliteral", "isblank", "sameterm"}
 )
 
+#: built-ins that are one Spark SQL function with the same semantics
+#: over the lexical-form columns, called by name (``F.call_function``
+#: builds the same unresolved function Spark's SQL parser would)
+_PLAIN = {
+    "ucase": "upper",
+    "lcase": "lower",
+    "strlen": "length",
+    "contains": "contains",
+    "strstarts": "startswith",
+    "strends": "endswith",
+    "substr": "substr",
+    "concat": "concat",
+    "abs": "abs",
+    "coalesce": "coalesce",
+    "md5": "md5",
+    "sha1": "sha1",
+}
 
-def _filter_vars(expr: str) -> frozenset[str]:
-    return frozenset(
-        m.group(2) for m in _FILTER_VAR.finditer(expr) if m.group(2)
+_BINARY = {
+    "||": operator.or_,
+    "&&": operator.and_,
+    "=": operator.eq,
+    "!=": operator.ne,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "+": operator.add,
+    "-": operator.sub,
+    "*": operator.mul,
+    "/": operator.truediv,
+}
+
+_DATE_PARTS = {
+    "year": "year", "month": "month", "day": "day",
+    "hours": "hour", "minutes": "minute", "seconds": "second",
+}
+
+_XSD_STRING = M.NS_XSD + "string"
+
+
+def _is_number(node) -> bool:
+    return (
+        node[0] == "lit"
+        and isinstance(node[1], (int, float, Decimal))
+        and not isinstance(node[1], bool)
     )
 
 
-# ?var <cmp> number / number <cmp> ?var (quote-aware): the variable is
-# compared NUMERICALLY via try_cast, so a row whose lexical form is not
-# a number DROPS from the solution (SPARQL's expression-error semantics)
-# instead of throwing CAST_INVALID_INPUT out of ANSI codegen — one
-# malformed triple must not 500 the whole query.
-_NUM_LIT = r"-?\d+(?:\.\d+)?"
-_CMP_OP = r"(?:<=|>=|!=|<|>|=)"
-_VAR_CMP_NUM = re.compile(
-    rf"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")"
-    rf"|\?(\w+)(\s*{_CMP_OP}\s*)({_NUM_LIT})(?![\w.])"
-    rf"|(?<![\w.?])({_NUM_LIT})(\s*{_CMP_OP}\s*)\?(\w+)"
-)
+def expr_vars(node) -> frozenset[str]:
+    """The solution columns an expression reads: its variables, plus
+    the term-metadata companions of those a metadata built-in reads."""
+    kind = node[0]
+    if kind == "var":
+        return frozenset((node[1],))
+    if kind in ("lit", "iri"):
+        return frozenset()
+    if kind == "cast":
+        return expr_vars(node[1])
+    kids = [node[1], *node[2]] if kind == "in" else node[2]
+    out = frozenset().union(*map(expr_vars, kids))
+    if kind == "call" and node[1] in KIND_BUILTINS:
+        out |= {v + s for v in out for s in _KIND_SUFFIXES}
+    return out
 
 
-def _numeric_compare_pass(expr: str) -> str:
-    def sub(m: re.Match) -> str:
-        if m.group(1) is not None:
-            return m.group(1)
-        if m.group(2) is not None:
-            return f"try_cast(?{m.group(2)} as double){m.group(3)}{m.group(4)}"
-        return f"{m.group(5)}{m.group(6)}try_cast(?{m.group(7)} as double)"
-
-    return _VAR_CMP_NUM.sub(sub, expr)
-
-
-def _translate_filter(expr: str) -> str:
-    """``?var`` references → backtick-quoted column references
-    (skipping quoted string literals); numeric comparisons go through
-    :func:`_numeric_compare_pass` (malformed values drop, not throw)."""
-    return _FILTER_VAR.sub(
-        lambda m: m.group(1) if m.group(1) else f"`{m.group(2)}`",
-        _numeric_compare_pass(expr),
-    )
-
-
-def _translate_filter_mapped(expr: str, mapping: dict[str, str]) -> str:
-    """Like :func:`_translate_filter` but renaming variables through
-    *mapping* first (used to point OPTIONAL-scoped filters at the
-    renamed right side of the left join)."""
-    return _FILTER_VAR.sub(
-        lambda m: m.group(1)
-        if m.group(1)
-        else f"`{mapping.get(m.group(2), m.group(2))}`",
-        _numeric_compare_pass(expr),
-    )
+def compile_expr(node, col=F.col) -> Column:
+    """One expression node → a Column. ``col`` resolves a variable or
+    companion column name (``x``, ``x__lang``); the OPTIONAL left-join
+    condition passes one that reads the renamed right side."""
+    kind = node[0]
+    if kind == "var":
+        return col(node[1])
+    if kind in ("lit", "iri"):
+        return F.lit(node[1])
+    if kind == "cast":
+        return compile_expr(node[1], col).try_cast(node[2])
+    if kind == "in":
+        c = compile_expr(node[1], col).isin(
+            *(compile_expr(x, col) for x in node[2])
+        )
+        return ~c if node[3] else c
+    name, args = node[1], node[2]
+    x = [compile_expr(a, col) for a in args]
+    if name in _BINARY:
+        if name in ("=", "!=", "<", "<=", ">", ">="):
+            # ?v <op> 5 compares the variable NUMERICALLY: a lexical
+            # form that is not a number drops its row (try_cast → NULL,
+            # SPARQL's expression error) instead of throwing under ANSI
+            for i in (0, 1):
+                if args[i][0] == "var" and _is_number(args[1 - i]):
+                    x[i] = x[i].try_cast("double")
+        return _BINARY[name](*x)
+    if name in _PLAIN:
+        return F.call_function(_PLAIN[name], *x)
+    if name == "!":
+        return ~x[0]
+    if name == "neg":
+        return -x[0]
+    if name == "str":  # the column already holds the lexical form
+        return x[0]
+    if name == "bound":
+        return x[0].isNotNull()
+    if name == "if":
+        # an erroring condition is an error (17.4.1.2), where SQL's
+        # if() would take the else branch
+        return F.when(x[0], x[1]).when(~x[0], x[2])
+    if name in ("regex", "replace"):
+        # FLAGS (a literal the parser checked: i/s/m/x) fold into a
+        # Java-regex embedded-flag prefix of the pattern
+        flags = args[-1][1] if len(args) == BUILTIN_ARITY[name][1] else ""
+        pat = F.concat(F.lit(f"(?{flags})"), x[1]) if flags else x[1]
+        if name == "regex":
+            return F.call_function("regexp_like", x[0], pat)
+        return F.call_function("regexp_replace", x[0], pat, x[2])
+    if name == "round":
+        # XPath fn:round: halves round toward +inf (round(-2.5) = -2);
+        # Spark's round() rounds them away from zero
+        return F.floor(x[0].try_cast("double") + F.lit(0.5))
+    if name in ("ceil", "floor"):
+        return F.call_function(name, x[0].try_cast("double"))
+    if name in _DATE_PARTS:
+        return F.call_function(_DATE_PARTS[name], x[0].try_cast("timestamp"))
+    if name in ("sha256", "sha384", "sha512"):
+        return F.sha2(x[0], int(name[3:]))
+    if name in ("strbefore", "strafter"):
+        pos = F.call_function("instr", x[0], x[1])
+        part = (
+            F.call_function("substr", x[0], F.lit(1), pos - 1)
+            if name == "strbefore"
+            else F.call_function("substr", x[0], pos + F.length(x[1]))
+        )
+        # an absent needle gives "" (17.4.3.4); an empty one matches at 1
+        return F.when(pos > 0, part).when(pos == 0, F.lit(""))
+    if name == "encode_for_uri":
+        # url_encode is form encoding (Java URLEncoder); ENCODE_FOR_URI
+        # differs on space (+ vs %20), '*' (kept vs %2A), '~' (%7E vs kept)
+        out = F.call_function("url_encode", x[0])
+        for pat, rep in (("[+]", "%20"), ("[*]", "%2A"), ("%7E", "~")):
+            out = F.regexp_replace(out, pat, rep)
+        return out
+    if name == "tz":
+        # the lexical timezone: "Z", "+05:00", or "" when absent
+        return F.regexp_extract(x[0], r"(Z|[+-]\d\d:\d\d)$", 1)
+    if name == "isnumeric":
+        return x[0].try_cast("double").isNotNull()
+    if name == "langmatches":
+        if args[1] == ("lit", "*"):
+            return x[0] != ""  # any tag; LANG of a URI is NULL → false
+        tag, rng = F.lower(x[0]), F.lower(x[1])
+        return (tag == rng) | tag.startswith(F.concat(rng, F.lit("-")))
+    # term metadata: the operand is a variable (the parser checks), read
+    # through its companions; a NULL kind (VALUES/BIND-born) is a literal
+    v = args[0][1]
+    kind_col = col(v + "__kind")
+    term_kind = F.coalesce(kind_col, F.lit("literal"))
+    lang, dt = col(v + "__lang"), col(v + "__datatype")
+    if name in ("isuri", "isiri"):
+        return term_kind == "uri"
+    if name == "isblank":
+        # engine-built tables mint URIs for every node, so this is
+        # constantly false over them, but it reads the model's kind
+        return term_kind == "bnode"
+    if name == "isliteral":
+        return term_kind == "literal"
+    if name == "lang":  # "" for an untagged literal, error for a URI
+        return F.when(kind_col == "uri", F.lit(None)).otherwise(
+            F.coalesce(lang, F.lit(""))
+        )
+    if name == "datatype":
+        return (
+            F.when(kind_col == "uri", F.lit(None))
+            .when(lang.isNotNull(), F.lit(M.NS_RDF + "langString"))
+            .when(dt.isNotNull(), dt)
+            .otherwise(F.lit(_XSD_STRING))
+        )
+    if name == "sameterm":
+        # term identity: lexical form + kind + datatype + lang; a simple
+        # literal and an xsd:string literal are the same RDF 1.1 term
+        xs = F.lit(_XSD_STRING)
+        if args[1][0] == "var":
+            w = args[1][1]
+            return (
+                (x[0] == x[1])
+                & (term_kind == F.coalesce(col(w + "__kind"), F.lit("literal")))
+                & (F.coalesce(dt, xs) == F.coalesce(col(w + "__datatype"), xs))
+                & lang.eqNullSafe(col(w + "__lang"))
+            )
+        return (
+            (x[0] == x[1])
+            & (term_kind == "literal")
+            & lang.isNull()
+            & (F.coalesce(dt, xs) == xs)
+        )
+    raise ValueError(f"unknown expression function {name!r}")
 
 
 #: the active graph inside a ``GRAPH ?var`` body, as one reserved
@@ -526,9 +712,9 @@ def eval_group(
       column (see ``_GRAPH_COL``). Named graphs are the ``dataset``
       partitions, addressed as ``<PREFIX_GRAPH><name>``
       (Virtuoso.java:30); an absent graph is an empty graph.
-    * ``("bind", (sql_expr, var, meta))`` — an expression column in
-      source order; ``meta`` carries an RDF term constructor's constant
-      kind/datatype/lang (``sparql._bind_expression``).
+    * ``("bind", (expr, var, meta))`` — an expression column in source
+      order (:func:`compile_expr`); ``meta`` carries an RDF term
+      constructor's constant kind/datatype/lang.
     * ``("values", (var_names, rows))`` — inline data as a
       LocalRelation (no Spark job builds it), UNDEF = NULL.
     * ``("path", (s, p, o, quant))`` — a quantified property path
@@ -671,8 +857,8 @@ def _eval_group(
         # as there are solutions
         nonlocal df
         for f in list(remaining):
-            if df is not None and _filter_vars(f) <= set(order):
-                df = df.where(F.expr(_translate_filter(f)))
+            if df is not None and expr_vars(f) <= set(order):
+                df = df.where(compile_expr(f))
                 remaining.remove(f)
 
     apply_ready()
@@ -700,10 +886,10 @@ def _eval_group(
                 cond = F.lit(True)
                 for c in shared:
                     cond = cond & (F.col(c) == F.col(ren[c]))
-                for raw in conds:
-                    vs = _filter_vars(raw)
+                for f in conds:
                     unknown = sorted(
-                        v for v in vs if v not in order and v not in ren
+                        v for v in expr_vars(f)
+                        if v not in order and v not in ren
                     )
                     if unknown:
                         raise ValueError(
@@ -713,10 +899,8 @@ def _eval_group(
                         )
                     # vars the body binds read from the renamed right
                     # side; outer-only vars read from the solution
-                    cond = cond & F.expr(
-                        _translate_filter_mapped(
-                            raw, {v: ren[v] for v in vs if v in ren}
-                        )
+                    cond = cond & compile_expr(
+                        f, lambda c: F.col(ren.get(c, c))
                     )
                 df = df.join(opt_r, cond, "left").select(
                     *order, *[F.col(ren[c]).alias(c) for c in new]
@@ -765,21 +949,19 @@ def _eval_group(
         elif kind == "bind":
             # BIND(expr AS ?v): evaluated in source order over the
             # solution so far — a narrow projection, no shuffle
-            sql_expr, name, meta = payload
+            expr, name, meta = payload
             if name in order:
                 raise ValueError(
                     f"BIND would rebind already-bound variable ?{name} "
                     "(SPARQL forbids it)"
                 )
-            missing = sorted(
-                v for v in _filter_vars(sql_expr) if v not in order
-            )
+            missing = sorted(v for v in expr_vars(expr) if v not in order)
             if missing:
                 raise ValueError(
                     f"BIND expression references unbound variable(s) "
                     f"{missing}"
                 )
-            df = base().withColumn(name, F.expr(_translate_filter(sql_expr)))
+            df = base().withColumn(name, compile_expr(expr))
             nullable.add(name)  # the expression may evaluate to NULL
             order.append(name)
             if kinds:
@@ -831,9 +1013,10 @@ def _eval_group(
             raise ValueError(f"unknown group kind {kind!r}")
         apply_ready()
     if remaining and not leftjoin:
+        unbound = frozenset().union(*map(expr_vars, remaining)) - set(order)
         raise ValueError(
             "filter(s) reference variables bound by no group: "
-            f"{sorted(remaining)}"
+            f"{sorted(unbound)}"
         )
     df = base()
     if scope["graph"] and _GRAPH_COL not in order:
@@ -870,8 +1053,6 @@ def _eval_graph(
       scope does not constrain it (the clause switches the active
       graph); a single-dataset serving scope still does.
     """
-    from . import model as _M
-
     if "dataset" not in triples.columns:
         raise ValueError(
             "GRAPH needs a triple table carrying the 'dataset' "
@@ -879,8 +1060,8 @@ def _eval_graph(
         )
     if not _is_var(g_term):
         name = (
-            g_term[len(_M.PREFIX_GRAPH):]
-            if g_term.startswith(_M.PREFIX_GRAPH)
+            g_term[len(M.PREFIX_GRAPH):]
+            if g_term.startswith(M.PREFIX_GRAPH)
             else g_term  # no dataset is named this → an empty graph
         )
         df, nullable, _ = _eval_group(
@@ -899,7 +1080,7 @@ def _eval_graph(
         sub["dataset"] = None
     df, nullable, _ = _eval_group(triples, body, sub)
     gv = g_term[1:]
-    uri = F.concat(F.lit(_M.PREFIX_GRAPH), F.col(_GRAPH_COL))
+    uri = F.concat(F.lit(M.PREFIX_GRAPH), F.col(_GRAPH_COL))
     if gv in df.columns:  # GRAPH ?g { ?g ... }: the two must agree
         _refuse_nullable([gv], (), nullable, "GRAPH body")
         return df.where(F.col(gv) == uri).drop(_GRAPH_COL), nullable

@@ -23,27 +23,22 @@ from ..model import KIND_LITERAL, KIND_URI, TRIPLE_SCHEMA_PARTITIONED
 from .local import local_frame
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is on the classpath (not in sandbox)."""
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
 def write_triples(
     triples: DataFrame,
     path: str,
     mode: str = "overwrite",
     partition_col: str = "dataset",
     files_per_partition: int = 1,
+    whole_table: bool = False,
 ) -> None:
     """Materialize the triple table partitioned by dataset.
 
     Dynamic partition overwrite: only the datasets present in ``triples``
     are replaced — the semantics of the reference's per-dataset graph
     drop+recreate, and the idempotence required for resume.
+    ``whole_table=True`` replaces every partition instead (a rewrite of
+    the whole table, such as canonicalize's, where a partition absent
+    from ``triples`` must disappear).
 
     Rows are clustered on ``partition_col`` before the write: without
     it, every upstream task writes a file into every partition
@@ -67,7 +62,9 @@ def write_triples(
         clustered = triples.repartition(F.col(partition_col))
     (
         clustered.write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
+        .option(
+            "partitionOverwriteMode", "static" if whole_table else "dynamic"
+        )
         .partitionBy(partition_col)
         .parquet(path)
     )

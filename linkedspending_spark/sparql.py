@@ -40,42 +40,47 @@ reference's own queries use, plus the group algebra
   outer solution; a pattern-only body is one BGP join tree, as at top
   level. Joining on a variable a body binds only conditionally stays
   a loud refusal (compatibility semantics).
-* ``FILTER( expr )`` — translated to a Spark SQL predicate: ``&&``/
-  ``||``/``!`` become AND/OR/NOT, URIs and (typed) literals become
-  string literals, ``?var`` references stay for the evaluator to
-  bind. Comparison semantics follow the operand's FORM, not always the
-  lexical string: a quoted literal compares lexically against the
-  string column, but an unquoted numeric literal (``FILTER(?n > 5)``)
-  compares numerically via ``try_cast`` — which is CLOSER to SPARQL's
-  typed comparison than a lexical compare would be, and a row whose
+* ``FILTER( expr )`` — SPARQL's expression grammar (``|| && !``,
+  ``= != < <= > >=``, ``+ - * /``, ``IN`` / ``NOT IN``, 40-odd
+  built-ins, and ``try_cast(expr AS type)`` for explicit coercion)
+  parses once, from the query's own tokens, into a small AST that
+  :func:`~linkedspending_spark.serve.compile_expr` compiles straight
+  to a Spark Column. Literal values reach Spark as ``F.lit`` values,
+  never as SQL text, so quotes and backslashes need no escaping layer,
+  and every built-in composes with any operand at any depth
+  (``ROUND(STRLEN(?o))``, ``STRBEFORE(UCASE(?o), " ")``). An unknown
+  function, a wrong argument count, ``xsd:type(?x)`` cast syntax and
+  SQL that is not SPARQL (``LIKE``, ``IS NULL``, ``CASE``) are
+  rejected at parse time (a clean 400 over REST). Comparison semantics
+  follow the operand's FORM: a quoted literal compares lexically
+  against the string column, but a variable compared with an unquoted
+  numeric literal (``FILTER(?n > 5)``) compares numerically via
+  ``try_cast`` — closer to SPARQL's typed comparison, and a row whose
   lexical form is not a number DROPS from the solution (SPARQL's
   expression-error semantics) instead of throwing from ANSI codegen
-  (pinned in tests; do not "fix" either away). ``LANG(?x)`` /
-  ``DATATYPE(?x)`` / ``langMatches(LANG(?x), "en")`` /
-  ``isURI/isIRI/isLiteral(?x)`` rewrite into expressions over the
+  (pinned in tests; do not "fix" either away). Unquoted numbers keep
+  Spark SQL's literal types (``5`` int, ``1.5`` decimal), so arithmetic
+  and SUM typing follow Spark. ``LANG`` / ``DATATYPE`` /
+  ``isURI/isIRI/isLiteral/isBlank`` / ``sameTerm`` read a variable's
   term-metadata companions — they need a triple table carrying
-  ``o_kind``/``o_datatype``/``o_lang`` (raise otherwise), as does
-  ``sameTerm`` (term identity, not lexical equality); LANG of a
-  URI / DATATYPE of a URI is NULL = SPARQL's expression error (row
-  drops in FILTER). ``isNumeric(?x)`` tests the lexical form via
-  try_cast (works on kinds-less tables); ``isBlank(?x)`` evaluates
-  the kind column — constantly false over engine-built tables (the
-  converter mints URIs). ``REGEX``/``REPLACE`` take the optional
-  FLAGS argument (i/s/m/x fold into a Java embedded-flag prefix;
-  XPath 'q' has no Java form — loud 400); ``TZ(?x)`` extracts the
-  lexical timezone string ("Z", "+05:00", or ""). Other unknown
-  function names and ``xsd:type(?x)`` cast syntax are rejected at
-  translate time (a clean 400 on the REST path, not an analyzer 500).
-* ``BIND(expr AS ?v)`` — the expression (same translator as FILTER)
-  is evaluated in source order and bound to a new variable. The RDF
-  term CONSTRUCTORS ``IRI/URI(expr)``, ``STRLANG(expr, "tag")`` and
-  ``STRDT(expr, <dt>)`` are recognized at the BIND top level: the
-  value is the inner expression's lexical form and the constructed
-  kind/datatype/lang ride along as constant companions (visible to
-  LANG()/DATATYPE()/isURI() downstream and to the REST layer's W3C
-  term typing). Nondeterministic built-ins (RAND/NOW/UUID/STRUUID/
-  BNODE) refuse by name — solutions must be reproducible across
-  retried Spark tasks; TIMEZONE() points at TZ().
+  ``o_kind``/``o_datatype``/``o_lang`` (raise otherwise); LANG or
+  DATATYPE of a URI is NULL = SPARQL's expression error (row drops in
+  FILTER). ``isNumeric`` tests the lexical form via try_cast;
+  ``isBlank`` is constantly false over engine-built tables (the
+  converter mints URIs). ``REGEX``/``REPLACE`` take the optional FLAGS
+  literal (i/s/m/x fold into a Java embedded-flag prefix; XPath 'q'
+  has no Java form — loud 400); ``TZ(?x)`` extracts the lexical
+  timezone ("Z", "+05:00", or ""); ``IF`` with an erroring condition
+  is an error.
+* ``BIND(expr AS ?v)`` — the expression is evaluated in source order
+  and bound to a new variable. The RDF term CONSTRUCTORS ``IRI/URI(expr)``,
+  ``STRLANG(expr, "tag")`` and ``STRDT(expr, <dt>)`` are recognized
+  at the BIND top level: the value is the inner expression's lexical
+  form and the constructed kind/datatype/lang ride along as constant
+  companions (visible to LANG()/DATATYPE()/isURI() downstream and to
+  the REST layer's W3C term typing). Nondeterministic built-ins
+  (RAND/NOW/UUID/STRUUID/BNODE) refuse by name — solutions must be
+  reproducible across retried Spark tasks; TIMEZONE() points at TZ().
 * ``SELECT (expr AS ?v)`` — projection expressions, applied after
   grouping (expressions may reference aggregate aliases, grouped
   variables, and aggregate CALLS — see the aggregates bullet).
@@ -96,17 +101,18 @@ reference's own queries use, plus the group algebra
   operands may be full EXPRESSIONS (``SUM(?a * ?b)``,
   ``COUNT(strlen(?x))``) — evaluated as hidden BINDs and aggregated by
   their native column type (integer expressions sum as long);
-  aggregates also embed in LARGER projection expressions
-  (``(COUNT(?x) * 2 AS ?d)``, ``(SUM(?o)/COUNT(?o) AS ?m)`` — calls
-  rewrite to hidden aliases, the expression evaluates over the
-  grouped solutions); GROUP BY takes expression conditions
+  aggregates also embed at any depth in SELECT expressions, HAVING and
+  ORDER BY keys (``(COUNT(?x) * 2 AS ?d)``,
+  ``HAVING(SUM(STRLEN(UCASE(?o))) > 2)`` — each becomes a hidden
+  alias, the expression evaluates over the grouped solutions); GROUP
+  BY takes expression conditions
   (``GROUP BY (substr(?o,1,4) AS ?year)`` — alias projectable and
   visible to HAVING/ORDER BY; parenthesized or bare-builtin forms
   without AS group on a hidden key); SELECT DISTINCT composes with
   aggregation (dedup over the projected rows, spec modifier order);
   HAVING takes alias references AND the spec's direct form
-  (``HAVING(COUNT(?x) > 5)`` / ``HAVING(SUM(?a * 2) > 5)`` — rewritten
-  to hidden aliases); ORDER BY takes aggregate keys the same way
+  (``HAVING(COUNT(?x) > 5)`` / ``HAVING(SUM(?a * 2) > 5)``); ORDER BY
+  takes aggregate keys the same way
   (``ORDER BY DESC(COUNT(?x))``); a trailing
   ``VALUES`` clause joins after grouping (§18.2.4)
   — GROUP_CONCAT sorts the collected values first (SPARQL leaves the
@@ -228,19 +234,22 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import model as M
 from .serve import (
+    BUILTIN_ARITY,
+    KIND_BUILTINS,
     _companions_of,
-    _filter_vars,
     _is_companion,
     _values_df,
+    compile_expr,
     eval_group,
+    expr_vars,
 )
-from .serve import _translate_filter as _vars_to_cols
 
 #: Standing prefixes: the reference's four (Sparql.java:17-20) + core RDF.
 DEFAULT_PREFIXES: dict[str, str] = {
@@ -265,7 +274,8 @@ _TOKEN = re.compile(
     | (?P<lang>@[A-Za-z][A-Za-z0-9-]*)
     | (?P<pname>(?:[A-Za-z_][\w-]*)?:(?:[\w-]+(?:\.[\w-]+)*)?)
     | (?P<word>[A-Za-z_]\w*)
-    | (?P<num>[+-]?\d+(?:\.\d+)?)
+    | (?P<num>[+-]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
+    | (?P<op>\|\||&&|!=|<=|>=|[=<>-])
     | (?P<punct>[{}.,;()*^/|+?!\[\]])
     """,
     re.X,
@@ -289,15 +299,13 @@ def _is_pat_var(term: str) -> bool:
 
 
 class _Lexer:
-    """On-demand tokenizer over the query text. Position-based so FILTER
-    bodies can be captured raw (balanced parens, quote-aware) instead of
-    forcing SPARQL expression syntax through the triple-term grammar."""
+    """On-demand tokenizer over the query text; triple patterns and
+    expressions read the same token stream."""
 
     def __init__(self, text: str):
         self.text = text
         self.pos = 0
         self._peeked: tuple[str, str] | None = None
-        self._peeked_start = 0
 
     def _scan(self) -> tuple[str, str]:
         while self.pos < len(self.text):
@@ -308,9 +316,7 @@ class _Lexer:
                 )
             self.pos = m.end()
             if m.lastgroup != "ws":
-                self._peeked_start = m.start()
                 return m.lastgroup, m.group()
-        self._peeked_start = self.pos
         return "eof", ""
 
     def peek(self) -> tuple[str, str]:
@@ -335,75 +341,23 @@ class _Lexer:
 
     def save(self) -> tuple:
         """Checkpoint for bounded lookahead (subquery vs UNION braces)."""
-        return (self.pos, self._peeked, self._peeked_start)
+        return (self.pos, self._peeked)
 
     def restore(self, state: tuple) -> None:
-        self.pos, self._peeked, self._peeked_start = state
-
-    def raw_parens(self) -> str:
-        """Capture a balanced ``( ... )`` region raw, respecting quotes."""
-        if self._peeked is not None:  # un-peek: rewind to the token start
-            self.pos = self._peeked_start
-            self._peeked = None
-        while self.pos < len(self.text) and self.text[self.pos].isspace():
-            self.pos += 1
-        if self.pos >= len(self.text) or self.text[self.pos] != "(":
-            raise SparqlSyntaxError("FILTER needs a parenthesized expression")
-        depth, i, quote = 0, self.pos, None
-        while i < len(self.text):
-            c = self.text[i]
-            if quote:
-                if c == "\\":
-                    i += 1
-                elif c == quote:
-                    quote = None
-            elif c in "\"'":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    raw = self.text[self.pos + 1 : i]
-                    self.pos = i + 1
-                    return raw
-            i += 1
-        raise SparqlSyntaxError("unterminated FILTER expression")
+        self.pos, self._peeked = state
 
 
-def _call_spans_spec(raw: str) -> bool:
-    """True when the FIRST function call in a ``(FUNC(...) AS ?alias)``
-    SELECT item spans the whole spec — i.e. the matching close paren is
-    followed only by ``AS ?alias``. Distinguishes a pure aggregate item
-    (``SUM(?x) AS ?s`` / ``SUM(?a * ?b) AS ?p``) from an aggregate
-    embedded in a larger expression (``SUM(?x) * 2 AS ?y``), which
-    routes through the SELECT-expression path with its aggregate calls
-    rewritten to hidden aliases."""
-    i = raw.find("(")
-    if i < 0:
-        return False
-    depth, quote, j = 0, None, i
-    while j < len(raw):
-        c = raw[j]
-        if quote:
-            if c == "\\":
-                j += 1  # skip the escaped character
-            elif c == quote:
-                quote = None
-        elif c in "\"'":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return bool(
-                    re.fullmatch(
-                        r"(?is)\s+as\s+\?\w+\s*", raw[j + 1:]
-                    )
-                )
-        j += 1
-    return False
+def _number(text: str) -> int | Decimal | float:
+    """An unquoted numeric literal typed as Spark SQL types it: ``5`` is
+    an int (a long, then a decimal, when it overflows), ``1.5`` a
+    decimal, ``1e3`` a double — so arithmetic and SUM typing follow
+    Spark's own rules."""
+    if "e" in text.lower():
+        return float(text)
+    if "." in text:
+        return Decimal(text)
+    n = int(text)
+    return n if -(2**63) <= n < 2**63 else Decimal(text)
 
 
 @dataclass
@@ -412,10 +366,12 @@ class ParsedQuery:
     ``groups`` — what :func:`~linkedspending_spark.serve.eval_group`
     evaluates) plus the query form, projection and modifiers. Every
     nested group body (OPTIONAL, MINUS, EXISTS, UNION branch, GRAPH) is
-    itself a ``ParsedQuery`` holding only a group."""
+    itself a ``ParsedQuery`` holding only a group. Expressions are
+    parsed nodes (see :func:`~linkedspending_spark.serve.compile_expr`)
+    with their aggregates hoisted to hidden ``__aggN`` variables."""
 
     patterns: list[tuple] = field(default_factory=list)
-    filters: list[str] = field(default_factory=list)
+    filters: list[tuple] = field(default_factory=list)
     distinct: bool = False
     order_by: list[str] = field(default_factory=list)
     limit: int | None = None
@@ -425,7 +381,7 @@ class ParsedQuery:
     #: group operators in source order (SPARQL's group-graph-pattern
     #: order), one encoding each: ("optional", body) / ("minus", body)
     #: / ("exists", (body, positive)) / ("union", [body, ...]) /
-    #: ("graph", (term, body)) / ("bind", (sql_expr, var, meta)) /
+    #: ("graph", (term, body)) / ("bind", (expr, var, meta)) /
     #: ("values", (var_names, rows)) / ("path", (s, p, o, quant)) /
     #: ("subquery", ParsedQuery) — see serve.eval_group
     groups: list[tuple] = field(default_factory=list)
@@ -438,21 +394,22 @@ class ParsedQuery:
     #: trailing VALUES clause (§18.2.4: joins after grouping/HAVING)
     post_values: tuple | None = None
     group_by: list[str] = field(default_factory=list)
-    having: list[str] = field(default_factory=list)
-    #: (translated-sql-expr, alias) per non-aggregate SELECT expression
-    select_exprs: list[tuple[str, str]] = field(default_factory=list)
+    having: list[tuple] = field(default_factory=list)
+    #: (expr, alias) per non-aggregate SELECT expression
+    select_exprs: list[tuple[tuple, str]] = field(default_factory=list)
     #: dataset description (SPARQL 13.2): FROM graph URIs (merged as
     #: the default graph) and FROM NAMED graph URIs (the graphs GRAPH
     #: clauses may address). Empty lists when absent — a present
     #: description with no FROM means the EMPTY default graph.
     from_graphs: list[str] = field(default_factory=list)
     from_named: list[str] = field(default_factory=list)
-    #: hidden pre-projections backing EXPRESSION aggregates
-    #: (``SUM(?a * ?b)``): appended to ``groups`` as reserved-name
-    #: BINDs AFTER the body parses (so they evaluate over the full
-    #: solution), aggregated like plain variables, dropped post-agg
-    agg_expr_binds: list[tuple[str, str]] = field(default_factory=list)
-    #: query uses LANG()/DATATYPE()/langMatches(): evaluation must
+    #: hidden (expr, name) pre-projections backing EXPRESSION
+    #: aggregates (``SUM(?a * ?b)``), GROUP BY expressions and ORDER BY
+    #: expression keys: appended to ``groups`` as reserved-name BINDs
+    #: AFTER the body parses (so they evaluate over the full solution)
+    agg_expr_binds: list[tuple[tuple, str]] = field(default_factory=list)
+    #: query uses LANG()/DATATYPE()/is*()/sameTerm() or a term
+    #: constructor: evaluation must
     #: thread the <v>__kind/__datatype/__lang companions internally
     needs_kinds: bool = False
     #: CONSTRUCT template: (s, p, o) of terms, each term a 4-tuple
@@ -468,6 +425,24 @@ _AGG_FUNCS = {
     "count", "sum", "min", "max", "avg", "sample", "group_concat",
 }
 
+#: RDF term constructors: legal only as the top-level form of a BIND
+_CONSTRUCTORS = frozenset({"iri", "uri", "strlang", "strdt"})
+
+#: binary operator precedence, loosest first (SPARQL 1.1 §19.8:
+#: ConditionalOr, ConditionalAnd, Relational — IN / NOT IN too —,
+#: Additive, Multiplicative)
+_BINARY_PREC = {
+    "||": 1, "&&": 2,
+    "=": 3, "!=": 3, "<": 3, "<=": 3, ">": 3, ">=": 3,
+    "+": 4, "-": 4, "*": 5, "/": 5,
+}
+
+#: target types of the ``try_cast(expr AS type)`` escape hatch
+_CAST_TYPES = frozenset({
+    "double", "float", "decimal", "int", "integer", "long", "bigint",
+    "string", "boolean", "date", "timestamp",
+})
+
 _UNSUPPORTED = {
     "service",
 }
@@ -479,6 +454,7 @@ class _Parser:
         self.prefixes = dict(DEFAULT_PREFIXES)
         self.q = ParsedQuery()
         self._fresh = 0  # property-path rewrite variable counter
+        self._calls: list[str] = []  # enclosing calls, for arity errors
 
     # -- terms ---------------------------------------------------------------
 
@@ -497,7 +473,7 @@ class _Parser:
                 raise SparqlSyntaxError(
                     f"variable {text} uses a reserved internal prefix "
                     "(?__pp = path/blank-node rewrites, ?__agg = "
-                    "HAVING aggregate rewrites)"
+                    "hidden aggregate aliases)"
                 )
             return text
         if kind == "uri":
@@ -817,6 +793,16 @@ class _Parser:
 
     # -- groups ----------------------------------------------------------
 
+    def _child(self) -> "_Parser":
+        """A parser for a nested body or subquery on the SHARED lexer."""
+        sub = _Parser.__new__(_Parser)
+        sub.lx = self.lx
+        sub.prefixes = dict(self.prefixes)
+        sub.q = ParsedQuery()
+        sub._fresh = 0
+        sub._calls = []
+        return sub
+
     def _child_body(self, what: str | None = None) -> ParsedQuery:
         """Parse a full nested group-graph-pattern body ``{ ... }`` with
         a child parser on the SHARED lexer (the subquery trick) — so
@@ -826,10 +812,7 @@ class _Parser:
         never collide in a joint scope, and the child's ``needs_kinds``
         propagates up (the outer evaluation threads the companions).
         ``what`` names the operator for the empty-body refusal."""
-        sub = _Parser.__new__(_Parser)
-        sub.lx = self.lx
-        sub.prefixes = dict(self.prefixes)
-        sub.q = ParsedQuery()
+        sub = self._child()
         sub._fresh = self._fresh
         sub._group_body()
         self._fresh = sub._fresh
@@ -957,460 +940,351 @@ class _Parser:
             )
         return out
 
-    # -- filter translation -----------------------------------------------
+    # -- expressions --------------------------------------------------------
+    #
+    # Every FILTER / BIND / SELECT / GROUP BY / HAVING / ORDER BY
+    # expression parses once, from the query's own token stream, into
+    # the tuple AST serve.compile_expr compiles to a Column (the node
+    # shapes are listed there). Precedence climbing over SPARQL's
+    # operator levels; an unknown function name or a wrong argument count
+    # is a SparqlSyntaxError here, at parse time (a 400 over REST).
 
-    #: SPARQL built-in → Spark SQL function with identical two/one-arg
-    #: semantics over string columns (the solution column type).
-    _FILTER_FUNCS = {
-        "regex": "regexp_like",
-        "ucase": "upper",
-        "lcase": "lower",
-        "strlen": "length",
-        "contains": "contains",
-        "strstarts": "startswith",
-        "strends": "endswith",
-        "substr": "substr",
-        "concat": "concat",
-        "abs": "abs",
-        # identical name + semantics in Spark SQL (IF/COALESCE: SPARQL's
-        # error-as-NULL maps to SQL NULL; IN is the SQL operator).
-        # try_cast backs the isNumeric rewrite and doubles as an escape
-        # hatch for explicit numeric coercion.
-        "in": "IN",
-        "if": "if",
-        "coalesce": "coalesce",
-        "try_cast": "try_cast",
-        # SPARQL REPLACE is XPath-regex replacement: Spark regexp_replace
-        # (Java regex, $1 group refs — same engine family as Jena's ARQ).
-        # A constant 4th FLAGS argument folds into a Java embedded-flag
-        # prefix BEFORE this mapping applies (_string_builtins_pass);
-        # only a non-constant flags operand reaches the analyzer's
-        # arity rejection.
-        "replace": "regexp_replace",
-        # hash built-ins over the lexical form (SPARQL 17.4.4.11-12);
-        # SHA256/384/512 rewrite to sha2(x, N) in _string_builtins_pass
-        "md5": "md5",
-        "sha1": "sha1",
-        # numeric built-ins with identical SQL semantics over doubles;
-        # ROUND is pre-pass only (XPath rounds .5 toward +inf, Spark
-        # rounds half away from zero — floor(x + 0.5) is the exact form)
-        "ceil": "ceil",
-        "floor": "floor",
-        # names the pre-passes emit (also available directly — they are
-        # deterministic Spark SQL with no SPARQL-divergent semantics)
-        "instr": "instr",
-        "regexp_replace": "regexp_replace",
-        "url_encode": "url_encode",
-        "sha2": "sha2",
-        "year": "year",
-        "month": "month",
-        "day": "day",
-        "hour": "hour",
-        "minute": "minute",
-        "second": "second",
-    }
+    def _expression(self, min_prec: int = 1) -> tuple:
+        return self._climb(self._unary(), min_prec)
 
-    _FILTER_PIECE = re.compile(
-        r"""
-          (?P<lit>"(?:[^"\\]|\\.)*"|'(?:[^'\\]|\\.)*')
-          (?:\s*\^\^\s*(?:<[^<>\s]*>|[A-Za-z_][\w-]*:[\w.-]*))?
-        | (?P<uri><[^<>\s]*>)
-        | (?P<pname>(?:[A-Za-z_][\w-]*)?:(?:[\w-]+(?:\.[\w-]+)*)?)
-        | (?P<bound>\b[Bb][Oo][Uu][Nn][Dd]\s*\(\s*(?P<bvar>\?\w+)\s*\))
-        | (?P<func>\b[A-Za-z]+)(?=\s*\()
-        | (?P<and>&&) | (?P<or>\|\|) | (?P<not>!(?!=))
-        """,
-        re.X,
-    )
+    def _climb(self, left: tuple, min_prec: int) -> tuple:
+        while True:
+            kind, text = self.lx.peek()
+            if kind == "num" and text[0] in "+-" and min_prec <= 4:
+                # ``?a -2``: the sign is the additive operator (SPARQL's
+                # NumericLiteralPositive/Negative continuation)
+                self.lx.next()
+                right = self._climb(("lit", _number(text)), 5)
+                left = ("call", "+", [left, right])
+                continue
+            word = text.lower() if kind == "word" else None
+            if word in ("in", "not") and min_prec <= 3:
+                self.lx.next()
+                if word == "not" and self.lx.next()[1].lower() != "in":
+                    raise SparqlSyntaxError("NOT must be followed by IN")
+                left = ("in", left, self._arg_list("IN"), word == "not")
+                continue
+            prec = _BINARY_PREC.get(text) if kind in ("op", "punct") else None
+            if prec is None or prec < min_prec:
+                return left
+            self.lx.next()
+            left = ("call", text, [left, self._expression(prec + 1)])
 
-    # term-metadata built-ins, rewritten BEFORE the main pass into
-    # expressions over the <v>__kind/__datatype/__lang companions (the
-    # ?name syntax survives serve's variable→column substitution):
-    # langMatches first (it consumes the inner LANG call), then bare
-    # LANG / DATATYPE outside quoted literals.
-    _LM_CALL = re.compile(
-        r"(?i)\blangmatches\s*\(\s*"
-        r"(?:lang\s*\(\s*(\?\w+)\s*\)|(\?\w+))\s*,\s*"
-        r'"((?:[^"\\]|\\.)*)"\s*\)'
-    )
-    _LANG_CALL = re.compile(r"(?i)\blang\s*\(\s*(\?\w+)\s*\)")
-    _DT_CALL = re.compile(r"(?i)\bdatatype\s*\(\s*(\?\w+)\s*\)")
-    _ISKIND_CALL = re.compile(
-        r"(?i)\bis(uri|iri|literal|numeric|blank)\s*\(\s*(\?\w+)\s*\)"
-    )
-    _QUOTE_SPLIT = re.compile(r"(\"(?:[^\"\\]|\\.)*\"|'(?:[^'\\]|\\.)*')")
+    def _unary(self) -> tuple:
+        text = self.lx.peek()[1]
+        if text in ("!", "-", "+"):
+            self.lx.next()
+            operand = self._unary()
+            if text == "+":
+                return operand
+            return ("call", "!" if text == "!" else "neg", [operand])
+        return self._primary()
 
-    # string/numeric/date built-ins that need argument rewriting (not a
-    # plain name swap) — rewritten BEFORE the main pass, outside quoted
-    # literals, over simple ?var operands (composite operands stay loud
-    # parse errors via the unknown-function check):
-    _SHA2_CALL = re.compile(r"(?i)\bsha(256|384|512)\s*\(\s*(\?\w+)\s*\)")
-    _ROUND_CALL = re.compile(r"(?i)\bround\s*\(\s*(\?\w+)\s*\)")
-    _NUM1_CALL = re.compile(r"(?i)\b(ceil|floor)\s*\(\s*(\?\w+)\s*\)")
-    _DATEPART_CALL = re.compile(
-        r"(?i)\b(year|month|day|hours|minutes|seconds)\s*"
-        r"\(\s*(\?\w+)\s*\)"
-    )
-    _STRBA_CALL = re.compile(
-        r"(?i)\bstr(before|after)\s*\(\s*(\?\w+)\s*,\s*"
-        r"(\"(?:[^\"\\]|\\.)*\"|'(?:[^'\\]|\\.)*'|\?\w+)\s*\)"
-    )
-    _ENC_CALL = re.compile(r"(?i)\bencode_for_uri\s*\(\s*(\?\w+)\s*\)")
-    _TZ_CALL = re.compile(r"(?i)\btz\s*\(\s*(\?\w+)\s*\)")
-    #: quoted-literal token (either quote style), reused by the
-    #: flag-carrying REGEX/REPLACE forms below
-    _LIT_TOK = r"\"(?:[^\"\\]|\\.)*\"|'(?:[^'\\]|\\.)*'"
-    _REGEX_FLAGS_CALL = re.compile(
-        rf"(?i)\bregex\s*\(\s*(\?\w+)\s*,\s*({_LIT_TOK})\s*,\s*"
-        rf"({_LIT_TOK})\s*\)"
-    )
-    _REPLACE_FLAGS_CALL = re.compile(
-        rf"(?i)\breplace\s*\(\s*(\?\w+)\s*,\s*({_LIT_TOK})\s*,\s*"
-        rf"({_LIT_TOK})\s*,\s*({_LIT_TOK})\s*\)"
-    )
-    #: RDF term constructors, recognized at the TOP LEVEL of a BIND
-    #: expression only (SPARQL 17.4.2.5-8) — the greedy inner group +
-    #: end anchor capture the last comma-separated tail argument
-    _IRI_BIND = re.compile(r"(?is)^\s*(?:iri|uri)\s*\((.*)\)\s*$")
-    _STRLANG_BIND = re.compile(
-        rf"(?is)^\s*strlang\s*\((.*),\s*({_LIT_TOK})\s*\)\s*$"
-    )
-    _STRDT_BIND = re.compile(
-        r"(?is)^\s*strdt\s*\((.*),\s*"
-        r"(<[^<>\s]*>|[A-Za-z_][\w-]*:[\w.-]*)\s*\)\s*$"
-    )
-    _SAMETERM_CALL = re.compile(
-        r"(?i)\bsameterm\s*\(\s*(\?\w+)\s*,\s*"
-        r"(\?\w+|\"(?:[^\"\\]|\\.)*\")\s*\)"
-    )
-    _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+    def _close(self, hint: str) -> None:
+        """Consume the ``)`` that ends an expression or argument list;
+        anything else there (``LIKE``, ``IS``, a stray term) is not
+        SPARQL and is named in the error."""
+        text = self.lx.next()[1]
+        if text != ")":
+            raise SparqlSyntaxError(
+                f"unexpected {text or 'end of query'!r} in expression "
+                f"({hint})"
+            )
 
-    @staticmethod
-    def _lang_sql(var: str) -> str:
-        # SPARQL LANG: tag or "" for literals; error (NULL -> filter
-        # false) for URIs. NULL kind (VALUES/BIND-born) = plain literal.
-        return (
-            f"(CASE WHEN {var}__kind = 'uri' THEN NULL "
-            f"ELSE coalesce({var}__lang, '') END)"
+    def _arg_list(self, name: str) -> list[tuple]:
+        """``( expr, ... )`` — possibly empty."""
+        self.lx.expect_punct("(")
+        args: list[tuple] = []
+        if self.lx.peek()[1] != ")":
+            self._calls.append(name)
+            while True:
+                args.append(self._expression())
+                if self.lx.peek()[1] != ",":
+                    break
+                self.lx.next()
+            self._calls.pop()
+        self._close(f"arguments of {name.upper()}(...)")
+        return args
+
+    def _primary(self) -> tuple:
+        kind, text = self.lx.next()
+        if text == "(":
+            node = self._expression()
+            self._close("expected ')'")
+            return node
+        if kind == "var":
+            return ("var", text[1:])
+        if kind == "string":
+            # a typed or tagged literal compares by its lexical form,
+            # like the pattern terms
+            if self.lx.peek()[0] == "dt":
+                self.lx.next()
+                if self.lx.next()[0] not in ("uri", "pname"):
+                    raise SparqlSyntaxError("bad datatype token")
+            elif self.lx.peek()[0] == "lang":
+                self.lx.next()
+            return ("lit", _unescape(text[1:-1]))
+        if kind == "num":
+            return ("lit", _number(text))
+        if kind in ("uri", "pname"):
+            if self.lx.peek()[1] == "(":
+                raise SparqlSyntaxError(
+                    f"cast syntax {text}(...) is not supported "
+                    "(comparisons run over lexical forms; unquoted "
+                    "numeric literals already compare numerically; "
+                    "try_cast(expr AS type) converts explicitly)"
+                )
+            return ("iri", text[1:-1] if kind == "uri" else self._expand(text))
+        if kind == "word":
+            name = text.lower()
+            if self.lx.peek()[1] == "(":
+                if name in _AGG_FUNCS:
+                    return self._aggregate_call(name)
+                if name == "try_cast":
+                    return self._try_cast()
+                return self._call(name, self._arg_list(name))
+            if name in ("true", "false"):
+                return ("lit", name == "true")
+        raise SparqlSyntaxError(
+            f"unexpected {text or 'end of query'!r} in expression"
         )
 
-    def _kind_builtins_pass(self, raw: str) -> str:
-        def lm(m: re.Match) -> str:
-            self.q.needs_kinds = True
-            lang_expr = (
-                self._lang_sql(m.group(1)) if m.group(1) else m.group(2)
+    def _try_cast(self) -> tuple:
+        """``try_cast(expr AS type)`` — explicit coercion whose failure is
+        NULL (SPARQL's expression error), not an ANSI throw."""
+        self.lx.expect_punct("(")
+        node = self._expression()
+        if self.lx.next_word() != "as":
+            raise SparqlSyntaxError("cast syntax is try_cast(expr AS type)")
+        self.lx.next()
+        kind, t = self.lx.next()
+        if kind != "word" or t.lower() not in _CAST_TYPES:
+            raise SparqlSyntaxError(
+                f"cast syntax: try_cast to {t!r} is not supported (types: "
+                f"{sorted(_CAST_TYPES)})"
             )
-            rng = _unescape(m.group(3)).lower().replace("'", "''")
-            if rng == "*":
-                # any non-empty tag; NULL (URI operand) compares NULL
-                # -> filter-false, no explicit IS NOT NULL needed
-                return f"({lang_expr} != '')"
-            return (
-                f"(lcase({lang_expr}) = '{rng}' OR "
-                f"lcase({lang_expr}) LIKE '{rng}-%')"
-            )
+        self._close("try_cast(expr AS type)")
+        return ("cast", node, t.lower())
 
-        raw = self._LM_CALL.sub(lm, raw)
-
-        def outside(segment: str) -> str:
-            def lang(m: re.Match) -> str:
-                self.q.needs_kinds = True
-                return self._lang_sql(m.group(1))
-
-            def dt(m: re.Match) -> str:
-                self.q.needs_kinds = True
-                v = m.group(1)
-                return (
-                    f"(CASE WHEN {v}__kind = 'uri' THEN "
-                    "NULL "
-                    f"WHEN {v}__lang IS NOT NULL THEN "
-                    "'http://www.w3.org/1999/02/22-rdf-syntax-ns"
-                    "#langString' "
-                    f"WHEN {v}__datatype IS NOT NULL THEN {v}__datatype "
-                    "ELSE 'http://www.w3.org/2001/XMLSchema#string' END)"
+    def _aggregate_call(self, func: str) -> tuple:
+        """``FUNC([DISTINCT] expr | *)`` and ``GROUP_CONCAT([DISTINCT]
+        expr [; SEPARATOR="..."])`` → ("agg", func, distinct, operand
+        or None for ``*``, separator)."""
+        self.lx.expect_punct("(")
+        distinct = self.lx.next_word() == "distinct"
+        if distinct:
+            self.lx.next()
+        self._calls.append(func)
+        if self.lx.peek()[1] == "*":
+            self.lx.next()
+            if func != "count":
+                raise SparqlSyntaxError(f"{func.upper()} needs a ?var")
+            arg = None
+        else:
+            arg = self._expression()
+        self._calls.pop()
+        sep = " "  # SPARQL 1.1 §18.5.1.7: GROUP_CONCAT's default
+        if func == "group_concat" and self.lx.peek()[1] == ";":
+            self.lx.next()
+            kw, eq, lit = self.lx.next(), self.lx.next(), self.lx.next()
+            if (kw[1].lower(), eq[1], lit[0]) != ("separator", "=", "string"):
+                raise SparqlSyntaxError(
+                    'malformed GROUP_CONCAT — expected GROUP_CONCAT('
+                    '[DISTINCT] ?var [; SEPARATOR="..."])'
                 )
+            sep = _unescape(lit[1][1:-1])
+        self._close(f"arguments of {func.upper()}(...)")
+        return ("agg", func, distinct, arg, sep)
 
-            def iskind(m: re.Match) -> str:
-                which, v = m.group(1).lower(), m.group(2)
-                if which == "numeric":
-                    # numeric test over the lexical form; no metadata
-                    # needed (works on kinds-less tables too)
-                    return f"(try_cast({v} as double) IS NOT NULL)"
-                self.q.needs_kinds = True
-                if which in ("uri", "iri"):
-                    return f"(coalesce({v}__kind, 'literal') = 'uri')"
-                if which == "blank":
-                    # the converter mints URIs for every node
-                    # (ConvertWorker's observation/dataset URI rules), so
-                    # no blank node survives to the triple table — this
-                    # is constantly false over engine-built tables, but
-                    # evaluates the model's kind column per spec
-                    return f"(coalesce({v}__kind, 'literal') = 'bnode')"
-                return f"(coalesce({v}__kind, 'literal') = 'literal')"
-
-            segment = self._ISKIND_CALL.sub(iskind, segment)
-            return self._DT_CALL.sub(dt, self._LANG_CALL.sub(lang, segment))
-
-        parts = self._QUOTE_SPLIT.split(raw)
-        return "".join(
-            p if i % 2 else outside(p) for i, p in enumerate(parts)
-        )
-
-    def _string_builtins_pass(self, raw: str) -> str:
-        """Argument-rewriting built-ins (SPARQL 17.4): forms that a
-        name-for-name swap cannot express. All rewrites are exact
-        per-spec over ``?var`` operands; composite operands fall
-        through to the unknown-function rejection so nothing silently
-        mis-evaluates. Numeric/date operands go through ``try_cast`` —
-        a malformed lexical form yields NULL (expression error → row
-        drops), never an ANSI throw."""
-
-        def _needle_sql(tok: str) -> tuple[str, int]:
-            val = _unescape(tok[1:-1])
-            return "'" + val.replace("'", "''") + "'", len(val)
-
-        def strba(m: re.Match) -> str:
-            v, tok = m.group(2), m.group(3)
-            if tok.startswith("?"):  # variable needle — emit strlen,
-                # the name the MAIN pass maps to Spark's length()
-                s, n = tok, f"strlen({tok})"
-            else:
-                s, n = _needle_sql(tok)
-            pos = f"instr({v}, {s})"
-            if m.group(1).lower() == "before":
-                # STRBEFORE(x, ""): instr = 1 → substr(x, 1, 0) = "" ✓
-                return f"(if({pos} > 0, substr({v}, 1, {pos} - 1), ''))"
-            # STRAFTER(x, ""): instr = 1 → substr(x, 1 + 0) = x ✓
-            return f"(if({pos} > 0, substr({v}, {pos} + {n}), ''))"
-
-        def rnd(m: re.Match) -> str:
-            # XPath fn:round: half rounds toward +inf (round(-2.5) = -2);
-            # Spark round() is half-away-from-zero, so spell it out
-            return f"(floor(try_cast({m.group(1)} as double) + 0.5))"
-
-        def num1(m: re.Match) -> str:
-            f, v = m.group(1).lower(), m.group(2)
-            return f"({f}(try_cast({v} as double)))"
-
-        def datepart(m: re.Match) -> str:
-            f, v = m.group(1).lower(), m.group(2)
-            f = {"hours": "hour", "minutes": "minute",
-                 "seconds": "second"}.get(f, f)
-            return f"({f}(try_cast({v} as timestamp)))"
-
-        def sha2(m: re.Match) -> str:
-            return f"(sha2({m.group(2)}, {m.group(1)}))"
-
-        def enc(m: re.Match) -> str:
-            # url_encode is application/x-www-form-urlencoded (Java
-            # URLEncoder); ENCODE_FOR_URI differs on exactly three
-            # points: space (+ vs %20), '*' (kept vs %2A), '~' (%7E vs
-            # kept). Character-class patterns avoid regex-escape
-            # backslashes inside SQL string literals.
-            v = m.group(1)
-            return (
-                "(regexp_replace(regexp_replace(regexp_replace("
-                f"url_encode({v}), '[+]', '%20'), '[*]', '%2A'), "
-                "'%7E', '~'))"
+    def _call(self, name: str, args: list[tuple]) -> tuple:
+        """A named built-in call, checked against serve.BUILTIN_ARITY
+        and the forms a few built-ins constrain."""
+        if name in ("rand", "now", "uuid", "struuid", "bnode"):
+            raise SparqlSyntaxError(
+                f"built-in {name.upper()}() is nondeterministic and "
+                "unsupported by design: a solution must be reproducible "
+                "across retried Spark tasks, and a nondeterministic "
+                "expression could differ between a task attempt and its "
+                "retry"
             )
-
-        def same(m: re.Match) -> str:
+        if name == "timezone":
+            raise SparqlSyntaxError(
+                "TIMEZONE() returns xsd:dayTimeDuration, which the engine "
+                "does not model — use TZ() (the lexical timezone string: "
+                "'Z', '+05:00', or '')"
+            )
+        if name not in BUILTIN_ARITY:
+            raise SparqlSyntaxError(
+                f"unknown aggregate or built-in function {name!r} "
+                f"(supported built-ins: {sorted(BUILTIN_ARITY)} + "
+                "try_cast; aggregates belong in the SELECT clause)"
+            )
+        lo, hi = BUILTIN_ARITY[name]
+        if not lo <= len(args) <= (hi if hi is not None else len(args)):
+            want = lo if lo == hi else f"{lo} to {hi}" if hi else f"≥{lo}"
+            where = (
+                f" (nested in {' > '.join(c.upper() for c in self._calls)})"
+                if self._calls else ""
+            )
+            raise SparqlSyntaxError(
+                f"{name.upper()}() takes {want} argument(s), got "
+                f"{len(args)}{where}"
+            )
+        if name in KIND_BUILTINS or name in _CONSTRUCTORS:
             self.q.needs_kinds = True
-            a, b = m.group(1), m.group(2)
-            xs = self._XSD_STRING
-            if b.startswith("?"):
-                # term identity: lexical form + kind + datatype + lang;
-                # simple literals and xsd:string literals are the same
-                # RDF 1.1 term, so NULL datatype normalizes to xsd:string
-                # null-safe equality spelled IS NOT DISTINCT FROM: the
-                # <=> spelling would be eaten by the main pass's <uri>
-                # token rule
-                return (
-                    f"({a} = {b} AND coalesce({a}__kind, 'literal') = "
-                    f"coalesce({b}__kind, 'literal') AND "
-                    f"coalesce({a}__datatype, '{xs}') IS NOT DISTINCT "
-                    f"FROM coalesce({b}__datatype, '{xs}') AND "
-                    f"{a}__lang IS NOT DISTINCT FROM {b}__lang)"
+        if name in KIND_BUILTINS or name == "bound":
+            if args[0][0] != "var":
+                raise SparqlSyntaxError(
+                    f"{name.upper()}() takes a ?var operand"
                 )
-            s, _ = _needle_sql(b)
-            return (
-                f"({a} = {s} AND coalesce({a}__kind, 'literal') = "
-                f"'literal' AND {a}__lang IS NULL AND "
-                f"coalesce({a}__datatype, '{xs}') = '{xs}')"
+        if name == "sameterm" and not (
+            args[1][0] == "var"
+            or (args[1][0] == "lit" and isinstance(args[1][1], str))
+        ):
+            raise SparqlSyntaxError(
+                "unknown aggregate or built-in function form: sameTerm "
+                "takes a ?var and a ?var or a plain string literal"
             )
-
-        def _fold_flags(pat_tok: str, flags_tok: str, where: str) -> str:
-            # SPARQL REGEX/REPLACE FLAGS (XPath fn:matches flags) fold
-            # into a Java-regex embedded-flag prefix inside the pattern
-            # literal: i/s/m/x have the same meaning in both engines;
-            # 'q' (literal mode) has no Java embedded form → loud 400.
-            flags = _unescape(flags_tok[1:-1])
-            bad = sorted(set(flags) - set("ismx"))
+        if len(args) == hi and name in ("regex", "replace"):
+            flags = args[-1]
+            if flags[0] != "lit" or not isinstance(flags[1], str):
+                raise SparqlSyntaxError(
+                    f"{name.upper()} flags must be a string literal"
+                )
+            bad = sorted(set(flags[1]) - set("ismx"))
             if bad:
                 raise SparqlSyntaxError(
-                    f"unsupported {where} flag(s) {bad} — supported "
+                    f"unsupported {name.upper()} flag(s) {bad} — supported "
                     "flags are i/s/m/x (XPath 'q' literal mode has no "
                     "Java-regex embedded form)"
                 )
-            if not flags:
-                return pat_tok
-            return f"{pat_tok[0]}(?{flags}){pat_tok[1:]}"
+        if name == "strlang" and not (
+            args[1][0] == "lit" and isinstance(args[1][1], str)
+        ):
+            raise SparqlSyntaxError("STRLANG needs a \"tag\" literal")
+        if name == "strdt" and args[1][0] != "iri":
+            raise SparqlSyntaxError("STRDT needs a datatype IRI")
+        return ("call", name, args)
 
-        def regex_flags(m: re.Match) -> str:
-            v, pat = m.group(1), _fold_flags(m.group(2), m.group(3),
-                                             "REGEX")
-            return f"regex({v}, {pat})"
-
-        def replace_flags(m: re.Match) -> str:
-            v, pat = m.group(1), _fold_flags(m.group(2), m.group(4),
-                                             "REPLACE")
-            return f"replace({v}, {pat}, {m.group(3)})"
-
-        # the forms whose ARGUMENTS are quoted literals must match
-        # against the full text (the quote-split below would hide their
-        # needles) — same whole-text treatment as langMatches above
-        raw = self._REGEX_FLAGS_CALL.sub(regex_flags, raw)
-        raw = self._REPLACE_FLAGS_CALL.sub(replace_flags, raw)
-        raw = self._STRBA_CALL.sub(strba, raw)
-        raw = self._SAMETERM_CALL.sub(same, raw)
-
-        def tz(m: re.Match) -> str:
-            # SPARQL TZ (17.4.5.7): the timezone part of the LEXICAL
-            # form — "Z", "+05:00", or "" when absent (regexp_extract
-            # returns '' on no match, which is exactly the spec value).
-            # Pattern deliberately backslash-free so the main pass's
-            # literal re-tokenization is idempotent over it.
-            v = m.group(1)
+    def _hoist(self, node: tuple, where: str, aggs: bool = False) -> tuple:
+        """The one pass over a parsed expression before it is stored:
+        where aggregates are allowed (SELECT expressions, HAVING, ORDER
+        BY) each one, at any depth, becomes a hidden ``?__aggN`` alias
+        computed alongside the SELECT aggregates; elsewhere it is
+        refused. Term constructors are refused too — a BIND checks its
+        root before calling this."""
+        kind = node[0]
+        if kind == "agg":
+            if not aggs:
+                raise SparqlSyntaxError(
+                    f"aggregate {node[1].upper()}(...) is not allowed in "
+                    f"{where} (aggregates belong in SELECT expressions, "
+                    "HAVING and ORDER BY)"
+                )
+            return ("var", self._register_aggregate(node))
+        if kind == "call":
+            if node[1] in _CONSTRUCTORS:
+                raise SparqlSyntaxError(
+                    f"term constructor {node[1].upper()}() is supported "
+                    "only as the top-level form of a BIND(... AS ?v) "
+                    "expression"
+                )
+            return ("call", node[1], [self._hoist(a, where, aggs) for a in node[2]])
+        if kind == "cast":
+            return ("cast", self._hoist(node[1], where, aggs), node[2])
+        if kind == "in":
             return (
-                f"(regexp_extract({v}, "
-                "'(Z|[+-][0-9][0-9]:[0-9][0-9])$', 1))"
+                "in",
+                self._hoist(node[1], where, aggs),
+                [self._hoist(a, where, aggs) for a in node[2]],
+                node[3],
             )
+        return node
 
-        def outside(segment: str) -> str:
-            segment = self._ROUND_CALL.sub(rnd, segment)
-            segment = self._NUM1_CALL.sub(num1, segment)
-            segment = self._DATEPART_CALL.sub(datepart, segment)
-            segment = self._SHA2_CALL.sub(sha2, segment)
-            segment = self._TZ_CALL.sub(tz, segment)
-            return self._ENC_CALL.sub(enc, segment)
+    def _register_aggregate(self, node: tuple, alias: str | None = None) -> str:
+        """Record one aggregate in ``q.aggregates`` under ``alias`` (a
+        hidden ``__aggN`` when it sits inside a larger expression). An
+        EXPRESSION operand (``SUM(?a * ?b)``) evaluates as a hidden
+        reserved-name BIND aggregated like a plain variable, by its
+        native column type."""
+        _, func, distinct, arg, sep = node
+        alias = alias or f"__agg{len(self.q.aggregates)}"
+        if arg is None or arg[0] == "var":
+            var = None if arg is None else arg[1]
+        else:
+            if distinct:
+                raise SparqlSyntaxError(
+                    "DISTINCT combines only with a plain ?var"
+                )
+            var = f"__aggx{len(self.q.agg_expr_binds)}"
+            self.q.agg_expr_binds.append(
+                (self._hoist(arg, "an aggregate operand"), var)
+            )
+        self.q.aggregates.append((func, var, distinct, alias))
+        if func == "group_concat":
+            self.q.agg_separators[alias] = sep
+        return alias
 
-        parts = self._QUOTE_SPLIT.split(raw)
-        return "".join(
-            p if i % 2 else outside(p) for i, p in enumerate(parts)
+    def _expr_as(self, hint: str, need_as: bool) -> tuple[tuple, str | None]:
+        """``( expression [AS ?var] )`` — BIND, SELECT and GROUP BY."""
+        self.lx.expect_punct("(")
+        node = self._expression()
+        alias = None
+        if self.lx.next_word() == "as":
+            self.lx.next()
+            kind, text = self.lx.next()
+            if kind != "var":
+                raise SparqlSyntaxError(f"AS needs a ?var, got {text!r}")
+            alias = text[1:]
+        elif need_as and self.lx.peek()[1] == ")":
+            raise SparqlSyntaxError(hint)
+        self._close(hint)
+        return node, alias
+
+    def _constraint(self, what: str) -> tuple:
+        """A FILTER / HAVING constraint: ``( expr )`` or a bare call."""
+        kind, text = self.lx.peek()
+        if text == "(":
+            self.lx.next()
+            node = self._expression()
+            self._close("expected ')'")
+            return node
+        if kind == "word":
+            return self._primary()
+        raise SparqlSyntaxError(f"{what} needs a parenthesized expression")
+
+    def _bind(self) -> tuple:
+        """``BIND(expr AS ?v)`` → the ("bind", (expr, var, meta)) group
+        entry. The RDF term CONSTRUCTORS (SPARQL 17.4.2.5-8) are
+        recognized at the TOP level of the expression only: the value is
+        the inner expression's lexical form, and the constructed term's
+        kind / datatype / language tag ride along as constant metadata —
+        serve attaches them as companion columns under ``with_kinds``,
+        so LANG()/DATATYPE()/isURI() over the bound variable and the
+        REST layer's W3C term typing both see the constructed type.
+        ``IRI()`` does not resolve relative references (the dialect has
+        no BASE; every URI the engine mints is absolute)."""
+        node, var = self._expr_as(
+            "BIND needs the form (expression AS ?var)", need_as=True
         )
-
-    def _translate_filter(self, raw: str) -> str:
-        """SPARQL expression → Spark SQL predicate: term substitution
-        (URIs / typed literals → string literals), &&/||/! → AND/OR/NOT,
-        BOUND(?x) → ?x IS NOT NULL, and the string built-ins (REGEX,
-        UCASE, STRSTARTS, ...) → their Spark SQL equivalents.
-        LANG/DATATYPE/langMatches rewrite into expressions over the
-        term-metadata companions (``_kind_builtins_pass``). Unknown
-        function names and ``xsd:type(?x)`` cast syntax are rejected
-        HERE, at translate time — the REST path turns that into a 400
-        with the offending name, instead of a 500 from Spark's analyzer
-        at collect()."""
-        raw = self._kind_builtins_pass(raw)
-        raw = self._string_builtins_pass(raw)
-
-        def _sql_str(v: str) -> str:
-            return "'" + v.replace("'", "''") + "'"
-
-        def _followed_by_paren(m: re.Match) -> bool:
-            rest = m.string[m.end():]
-            return rest.lstrip()[:1] == "("
-
-        def sub(m: re.Match) -> str:
-            if m.group("lit") is not None:
-                return _sql_str(_unescape(m.group("lit")[1:-1]))
-            if m.group("uri") is not None or m.group("pname") is not None:
-                if _followed_by_paren(m):
-                    raise SparqlSyntaxError(
-                        f"cast syntax {m.group().strip()}(...) is not "
-                        "supported (comparisons run over lexical forms; "
-                        "unquoted numeric literals already compare "
-                        "numerically)"
-                    )
-                if m.group("uri") is not None:
-                    return _sql_str(m.group("uri")[1:-1])
-                return _sql_str(self._expand(m.group("pname")))
-            if m.group("bound") is not None:
-                return f"({m.group('bvar')} IS NOT NULL)"
-            if m.group("func") is not None:
-                name = m.group("func").lower()
-                if name == "str":  # STR(?x): lexical form — already is
-                    return ""
-                if name in ("rand", "now", "uuid", "struuid", "bnode"):
-                    raise SparqlSyntaxError(
-                        f"built-in {name.upper()}() is nondeterministic "
-                        "and unsupported by design: a solution must be "
-                        "reproducible across retried Spark tasks, and a "
-                        "nondeterministic expression could differ "
-                        "between a task attempt and its retry"
-                    )
-                if name == "timezone":
-                    raise SparqlSyntaxError(
-                        "TIMEZONE() returns xsd:dayTimeDuration, which "
-                        "the engine does not model — use TZ() (the "
-                        "lexical timezone string: 'Z', '+05:00', or '')"
-                    )
-                if name in ("iri", "uri", "strlang", "strdt"):
-                    raise SparqlSyntaxError(
-                        f"term constructor {name.upper()}() is supported "
-                        "only as the top-level form of a "
-                        "BIND(... AS ?v) expression"
-                    )
-                if name not in self._FILTER_FUNCS:
-                    raise SparqlSyntaxError(
-                        f"unknown aggregate or built-in function {name!r} "
-                        f"(supported built-ins: "
-                        f"{sorted(self._FILTER_FUNCS)} + BOUND/STR; "
-                        f"aggregates belong in the SELECT clause)"
-                    )
-                return self._FILTER_FUNCS[name]
-            if m.group("and"):
-                return " AND "
-            if m.group("or"):
-                return " OR "
-            return " NOT "
-
-        return self._FILTER_PIECE.sub(sub, raw)
-
-    def _bind_expression(self, body: str) -> tuple[str, dict | None]:
-        """BIND expression → ``(translated SQL, term metadata)``.
-
-        The three RDF term CONSTRUCTORS (SPARQL 17.4.2.5-8) are
-        recognized at the TOP level of the expression only: the value
-        column is the inner expression's lexical form, and the
-        constructed term's kind / datatype / language tag ride along as
-        constant metadata — serve attaches them as companion columns
-        under ``with_kinds``, so LANG()/DATATYPE()/isURI() over the
-        bound variable and the REST layer's W3C term typing both see
-        the constructed type. ``IRI()`` does not resolve relative
-        references (the dialect has no BASE — operands are expected to
-        be absolute, as every URI the engine mints is)."""
-        m = self._IRI_BIND.match(body)
-        if m:
-            self.q.needs_kinds = True
-            return self._translate_filter(m.group(1)), {"kind": "uri"}
-        m = self._STRLANG_BIND.match(body)
-        if m:
-            self.q.needs_kinds = True
-            return (
-                self._translate_filter(m.group(1)),
-                {"kind": "literal",
-                 "lang": _unescape(m.group(2)[1:-1])},
+        meta = None
+        if node[0] == "call" and node[1] in _CONSTRUCTORS:
+            name, args = node[1], node[2]
+            meta = (
+                {"kind": "uri"} if name in ("iri", "uri")
+                else {"kind": "literal", "lang": args[1][1]}
+                if name == "strlang"
+                else {"kind": "literal", "datatype": args[1][1]}
             )
-        m = self._STRDT_BIND.match(body)
-        if m:
-            self.q.needs_kinds = True
-            dt = m.group(2)
-            dt = dt[1:-1] if dt.startswith("<") else self._expand(dt)
-            return (
-                self._translate_filter(m.group(1)),
-                {"kind": "literal", "datatype": dt},
-            )
-        return self._translate_filter(body), None
+            node = self._hoist(args[0], "BIND")
+        else:
+            node = self._hoist(node, "BIND")
+        return ("bind", (node, var, meta))
 
     # -- top level ---------------------------------------------------------
 
@@ -1574,7 +1448,7 @@ class _Parser:
                 if kind == "var":
                     proj.append(self.lx.next()[1][1:])
                 elif text == "(":
-                    proj.append(self._select_paren_spec())
+                    proj.append(self._select_item())
                 else:
                     break
             if not proj:
@@ -1609,12 +1483,12 @@ class _Parser:
         # grouped / expression-extended solutions
         agg_query = bool(self.q.aggregates or self.q.group_by)
         sel_aliases = {a for _, a in self.q.select_exprs}
-        for sql, name in self.q.agg_expr_binds:
+        for expr, name in self.q.agg_expr_binds:
             if name.startswith("__ordx") and (
-                agg_query or (sel_aliases & _filter_vars(sql))
+                agg_query or (sel_aliases & expr_vars(expr))
             ):
                 continue
-            self.q.groups.append(("bind", (sql, name, None)))
+            self.q.groups.append(("bind", (expr, name, None)))
         q = self.q
         expr_aliases = [a for _, a in q.select_exprs]
         if q.aggregates or q.group_by:
@@ -1688,20 +1562,11 @@ class _Parser:
                     ))
                 else:
                     self.q.filters.append(
-                        self._translate_filter(self.lx.raw_parens())
+                        self._hoist(self._constraint("FILTER"), "FILTER")
                     )
             elif word == "bind":
                 self.lx.next()
-                raw = self.lx.raw_parens()
-                m = re.search(r"\s+[Aa][Ss]\s+\?(\w+)\s*$", raw)
-                if m is None:
-                    raise SparqlSyntaxError(
-                        "BIND needs the form (expression AS ?var)"
-                    )
-                expr_sql, meta = self._bind_expression(raw[: m.start()])
-                self.q.groups.append(
-                    ("bind", (expr_sql, m.group(1), meta))
-                )
+                self.q.groups.append(self._bind())
             elif word == "values":
                 self.lx.next()
                 self.q.groups.append(("values", self._values_clause()))
@@ -1734,11 +1599,7 @@ class _Parser:
                 # on the shared variables, evaluated bottom-up
                 self.lx.next()  # consume '{'
                 self.lx.next()  # consume SELECT
-                sub = _Parser.__new__(_Parser)
-                sub.lx = self.lx
-                sub.prefixes = dict(self.prefixes)
-                sub.q = ParsedQuery()
-                sub._fresh = 0
+                sub = self._child()
                 self.q.groups.append(
                     ("subquery", sub._parse_select_rest(closing="}"))
                 )
@@ -1820,33 +1681,6 @@ class _Parser:
             raise SparqlSyntaxError("VALUES needs at least one data row")
         return names, rows
 
-    _AGG_SPEC = re.compile(
-        r"(?is)^\s*(count|sum|min|max|avg|sample)\s*"
-        r"\(\s*(distinct\s+)?(\?\w+|\*)\s*\)\s+as\s+\?(\w+)\s*$"
-    )
-
-    #: aggregate call inside a direct-form HAVING; the operand group
-    #: admits one paren-nesting level so EXPRESSION operands with
-    #: built-in calls (SUM(strlen(?x))) match — deeper nesting is left
-    #: unrewritten and refused by _rewrite_agg_calls
-    _HAVING_AGG = re.compile(
-        r"(?i)\b(count|sum|min|max|avg|sample)\s*"
-        r"\(\s*(distinct\s+)?((?:[^()]|\([^()]*\))*)\)"
-    )
-
-    #: the start of any aggregate call (not a ?var or prefixed name)
-    _AGG_CALL = re.compile(
-        r"(?i)(?<![\w:?$])(count|sum|min|max|avg|sample)\s*\("
-    )
-
-    def _mask_literals(self, text: str) -> str:
-        """``text`` with every quoted literal's content blanked, same
-        length, so call patterns never match inside a string."""
-        return self._QUOTE_SPLIT.sub(
-            lambda m: m.group()[0] + " " * (len(m.group()) - 2) + m.group()[0],
-            text,
-        )
-
     def _dataset_clauses(self, allowed: bool = True) -> None:
         """``(FROM [NAMED] <uri>)*`` — the dataset description between
         the projection/template and WHERE (SPARQL 13.2)."""
@@ -1872,167 +1706,50 @@ class _Parser:
                 )
             (self.q.from_named if named else self.q.from_graphs).append(uri)
 
-    def _order_expr_key(self, body: str) -> str:
+    def _order_expr_key(self, node: tuple) -> str:
         """ORDER BY expression key → hidden BIND column (same
         machinery as expression aggregates; evaluated over full
         solutions — or recomputed over the GROUPED solutions under
         aggregation — and dropped from the output). Aggregate calls
-        in the key (``ORDER BY DESC(COUNT(?x))``) rewrite to hidden
-        aggregate aliases first, like HAVING's direct form."""
-        body = self._rewrite_agg_calls(body)
+        in the key (``ORDER BY DESC(COUNT(?x))``) become hidden
+        aggregate aliases first, like HAVING's."""
+        node = self._hoist(node, "ORDER BY", aggs=True)
         name = "__ordx%d" % sum(
             1 for _, n in self.q.agg_expr_binds if n.startswith("__ordx")
         )
-        self.q.agg_expr_binds.append((self._translate_filter(body), name))
+        self.q.agg_expr_binds.append((node, name))
         return name
 
-    def _rewrite_having_aggs(self) -> str:
-        """``HAVING(COUNT(?x) > 5)`` — the spec's direct form: each
-        aggregate call becomes a HIDDEN aggregate alias (``?__aggN``,
-        computed alongside the SELECT aggregates, dropped after the
-        HAVING filter applies) so the raw expression translates like
-        any other filter over alias variables."""
-        return self._rewrite_agg_calls(self.lx.raw_parens())
-
-    def _rewrite_agg_calls(self, raw: str) -> str:
-        """Replace each aggregate call in ``raw`` with a hidden
-        ``?__aggN`` aggregate alias (shared by the direct-form HAVING
-        and ORDER BY aggregate keys)."""
-
-        def sub(m: re.Match) -> str:
-            func, dist, arg = (
-                m.group(1).lower(),
-                bool(m.group(2)),
-                raw[m.start(3) : m.end(3)].strip(),
-            )
-            if arg == "*" and func != "count":
-                raise SparqlSyntaxError(f"{func.upper()} needs a ?var")
-            alias = f"__agg{len(self.q.aggregates)}"
-            if arg == "*" or re.fullmatch(r"\?\w+", arg):
-                var = None if arg == "*" else arg[1:]
-            else:
-                # EXPRESSION operand — same hidden-BIND machinery as
-                # the SELECT-clause form
-                if dist:
-                    raise SparqlSyntaxError(
-                        "DISTINCT combines only with a plain ?var"
-                    )
-                var = f"__aggx{len(self.q.agg_expr_binds)}"
-                self.q.agg_expr_binds.append(
-                    (self._translate_filter(arg), var)
-                )
-            self.q.aggregates.append((func, var, dist, alias))
-            return "?" + alias
-
-        # match on the masked text, splice into the original: offsets
-        # agree, and a literal's content is neither a call nor rewritten
-        parts, at = [], 0
-        for m in self._HAVING_AGG.finditer(self._mask_literals(raw)):
-            parts += [raw[at : m.start()], sub(m)]
-            at = m.end()
-        out = "".join(parts) + raw[at:]
-        left = self._AGG_CALL.search(self._mask_literals(out))
-        if left is not None:
-            raise SparqlSyntaxError(
-                f"unsupported aggregate call {left.group(1).upper()}(...) in "
-                f"({raw.strip()}): an aggregate operand may nest at most "
-                "one level of parentheses; bind the inner expression "
-                "first (BIND or a SELECT expression)"
-            )
-        return out
-
-    _GC_SPEC = re.compile(
-        r"(?is)^\s*group_concat\s*\(\s*(distinct\s+)?(\?\w+)\s*"
-        r'(?:;\s*separator\s*=\s*"((?:[^"\\]|\\.)*)")?\s*\)'
-        r"\s+as\s+\?(\w+)\s*$"
-    )
-
-    def _select_paren_spec(self) -> str:
-        """One parenthesized SELECT item — ``(FUNC([DISTINCT] ?v|*) AS
-        ?alias)`` aggregate, or ``(expr AS ?alias)`` projection
-        expression (translated like a FILTER body). Returns the alias."""
-        raw = self.lx.raw_parens()
-        if re.match(r"(?is)^\s*group_concat\s*\(", raw):
-            m = self._GC_SPEC.match(raw)
-            if m is None:
-                raise SparqlSyntaxError(
-                    f"malformed GROUP_CONCAT ({raw.strip()}) — expected "
-                    'GROUP_CONCAT([DISTINCT] ?var [; SEPARATOR="..."]) '
-                    "AS ?alias"
-                )
-            dist, var, sep, alias = (
-                bool(m.group(1)),
-                m.group(2)[1:],
-                m.group(3),
-                m.group(4),
-            )
-            self.q.aggregates.append(("group_concat", var, dist, alias))
-            # SPARQL 1.1 §18.5.1.7: default separator is a single space
-            self.q.agg_separators[alias] = (
-                _unescape(sep) if sep is not None else " "
-            )
-            return alias
-        if re.match(
-            r"(?is)^\s*(count|sum|min|max|avg|sample)\s*\(", raw
-        ) and _call_spans_spec(raw):
-            m = self._AGG_SPEC.match(raw)
-            if m is None:
-                # EXPRESSION operand — SUM(?a * ?b), COUNT(strlen(?x))
-                # ...: evaluate the inner expression as a hidden
-                # reserved-name BIND over the solution, then aggregate
-                # the hidden column like a plain variable (its NATIVE
-                # column type governs the sum typing — see
-                # _apply_aggregates). DISTINCT over an expression stays
-                # unsupported.
-                me = re.match(
-                    r"(?is)^\s*(count|sum|min|max|avg|sample)\s*"
-                    r"\((.+)\)\s+as\s+\?(\w+)\s*$",
-                    raw,
-                )
-                if me is None or re.match(
-                    r"(?is)^\s*distinct\b", me.group(2)
-                ):
-                    raise SparqlSyntaxError(
-                        f"malformed aggregate ({raw.strip()}) — expected "
-                        "FUNC([DISTINCT] ?var | * | expression) AS ?alias "
-                        "(DISTINCT combines only with a plain ?var)"
-                    )
-                func, body, alias = (
-                    me.group(1).lower(),
-                    me.group(2),
-                    me.group(3),
-                )
-                hidden = f"__aggx{len(self.q.agg_expr_binds)}"
-                self.q.agg_expr_binds.append(
-                    (self._translate_filter(body), hidden)
-                )
-                self.q.aggregates.append((func, hidden, False, alias))
-                return alias
-            func, dist, arg = m.group(1).lower(), bool(m.group(2)), m.group(3)
-            if arg == "*" and func != "count":
-                raise SparqlSyntaxError(f"{func.upper()} needs a ?var")
-            var = None if arg == "*" else arg[1:]
-            self.q.aggregates.append((func, var, dist, m.group(4)))
-            return m.group(4)
-        m = re.search(r"\s+[Aa][Ss]\s+\?(\w+)\s*$", raw)
-        if m is None:
-            raise SparqlSyntaxError(
-                "SELECT (...) needs an aggregate or 'expression AS ?alias'"
-            )
-        expr = raw[: m.start()]
-        if self._AGG_CALL.search(self._mask_literals(expr)):
-            # aggregate calls INSIDE a larger projection expression —
-            # (COUNT(?x)/SUM(?y) AS ?r): each call becomes a hidden
-            # aggregate alias (the HAVING direct-form machinery); the
-            # expression itself evaluates as a SELECT expression over
-            # the GROUPED solutions (select_text applies select_exprs
-            # after _aggregate, which keeps the hidden aliases exactly
-            # while something still reads them)
-            expr = self._rewrite_agg_calls(expr)
-        self.q.select_exprs.append(
-            (self._translate_filter(expr), m.group(1))
+    def _select_item(self) -> str:
+        """One parenthesized SELECT item ``(expr AS ?alias)``; returns
+        the alias. A whole-item aggregate (``(SUM(?x) AS ?s)``) is that
+        aggregate under the alias; aggregates inside a larger expression
+        (``(COUNT(?x) * 2 AS ?d)``) become hidden aliases and the
+        expression evaluates over the GROUPED solutions (``_solve``
+        applies select_exprs after ``_aggregate``, which keeps the hidden
+        aliases exactly while something still reads them)."""
+        node, alias = self._expr_as(
+            "SELECT (...) needs an aggregate or 'expression AS ?alias'",
+            need_as=True,
         )
-        return m.group(1)
+        if node[0] == "agg":
+            return self._register_aggregate(node, alias)
+        self.q.select_exprs.append(
+            (self._hoist(node, "SELECT", aggs=True), alias)
+        )
+        return alias
+
+    def _call_ahead(self) -> bool:
+        """Is the next token a word starting a call — a bare GROUP BY /
+        ORDER BY key such as ``strlen(?o)``?"""
+        word = self.lx.next_word()
+        if word is None or word in ("having", "order", "limit", "offset", "values"):
+            return False
+        st = self.lx.save()
+        self.lx.next()
+        is_call = self.lx.peek()[1] == "("
+        self.lx.restore(st)
+        return is_call
 
     def _solution_modifiers(self) -> None:
         if self.lx.next_word() == "group":
@@ -2046,40 +1763,28 @@ class _Parser:
                     self.q.group_by.append(self.lx.next()[1][1:])
                     continue
                 # GroupCondition's expression forms: '(' expr [AS ?v]
-                # ')' and bare BUILTIN(...) — the expression evaluates
+                # ')' and a bare BUILTIN(...) — the expression evaluates
                 # as a pre-aggregation hidden BIND and the alias (or a
                 # reserved __grpx name, groupable but unprojectable)
-                # joins the grouping keys. Follower clauses HAVING/
-                # ORDER/LIMIT/OFFSET/VALUES are excluded by name.
+                # joins the grouping keys
                 if text == "(":
-                    raw = self.lx.raw_parens()
-                elif kind == "word" and text.lower() not in (
-                    "having", "order", "limit", "offset", "values"
-                ):
-                    st = self.lx.save()
-                    self.lx.next()
-                    if self.lx.peek()[1] != "(":
-                        self.lx.restore(st)
-                        break
-                    raw = text + "(" + self.lx.raw_parens() + ")"
+                    node, name = self._expr_as(
+                        "GROUP BY (expression [AS ?var])", need_as=False
+                    )
+                elif self._call_ahead():
+                    node, name = self._primary(), None
                 else:
                     break
-                m = re.search(r"\s+[Aa][Ss]\s+\?(\w+)\s*$", raw)
-                if m is not None:
-                    name, expr = m.group(1), raw[: m.start()]
-                else:
+                if name is None:
                     name = "__grpx%d" % sum(
-                        1
-                        for g in self.q.group_by
-                        if g.startswith("__grpx")
+                        1 for g in self.q.group_by if g.startswith("__grpx")
                     )
-                    expr = raw
                 if name in self.q.group_by:
                     raise SparqlSyntaxError(
                         f"GROUP BY binds ?{name} twice"
                     )
                 self.q.agg_expr_binds.append(
-                    (self._translate_filter(expr), name)
+                    (self._hoist(node, "GROUP BY"), name)
                 )
                 self.q.group_by.append(name)
             if not self.q.group_by:
@@ -2088,9 +1793,12 @@ class _Parser:
                 )
         if self.lx.next_word() == "having":
             self.lx.next()
-            self.q.having.append(
-                self._translate_filter(self._rewrite_having_aggs())
-            )
+            while True:
+                self.q.having.append(
+                    self._hoist(self._constraint("HAVING"), "HAVING", True)
+                )
+                if self.lx.peek()[1] != "(":
+                    break
         if self.lx.next_word() == "order":
             self.lx.next()
             if self.lx.next_word() != "by":
@@ -2099,43 +1807,26 @@ class _Parser:
             any_key = False
             while True:
                 kind, text = self.lx.peek()
-                if kind == "var":
-                    self.lx.next()
-                    self.q.order_by.append(text)
-                elif kind == "word" and text.lower() in ("asc", "desc"):
+                sign = ""
+                if kind == "word" and text.lower() in ("asc", "desc"):
                     sign = "-" if text.lower() == "desc" else ""
                     self.lx.next()
-                    raw = self.lx.raw_parens().strip()
-                    if re.fullmatch(r"\?\w+", raw):
-                        self.q.order_by.append(sign + raw)
-                    else:  # ASC/DESC over an EXPRESSION
-                        self.q.order_by.append(
-                            sign + "?" + self._order_expr_key(raw)
-                        )
-                elif (
-                    kind == "word"
-                    and text.lower() not in ("limit", "offset", "values")
-                ) or text == "(":
-                    # bare expression key — BUILTIN(...) call or a
-                    # parenthesized expression. The follower clauses
-                    # LIMIT/OFFSET/VALUES are excluded by name
-                    # (multi-var VALUES (?a ?b) {...} starts with a
-                    # paren); any other word is a key only when a "("
-                    # follows.
-                    st = self.lx.save()
-                    if kind == "word":
-                        self.lx.next()
-                        if self.lx.peek()[1] != "(":
-                            self.lx.restore(st)
-                            break
-                        raw = text + "(" + self.lx.raw_parens() + ")"
-                    else:
-                        raw = "(" + self.lx.raw_parens() + ")"
-                    self.q.order_by.append(
-                        "?" + self._order_expr_key(raw)
-                    )
+                    self.lx.expect_punct("(")
+                    node = self._expression()
+                    self._close("expected ')'")
+                elif kind == "var" or text == "(" or self._call_ahead():
+                    # a ?var, a bracketted expression or a bare
+                    # BUILTIN(...) call; any other word (LIMIT, OFFSET,
+                    # VALUES) ends the keys
+                    node = self._primary()
                 else:
                     break
+                self.q.order_by.append(
+                    sign + "?" + (
+                        node[1] if node[0] == "var"
+                        else self._order_expr_key(node)
+                    )
+                )
                 any_key = True
             if not any_key:
                 raise SparqlSyntaxError("ORDER BY needs at least one key")
@@ -2277,32 +1968,28 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
                 expr = F.count_distinct(F.col(var))
             else:
                 expr = F.count(F.col(var))
-        elif func == "sum" and var in int_sum:
-            expr = (
-                F.expr(f"sum(DISTINCT try_cast(`{var}` as long))")
-                if dist
-                else F.sum(F.col(var).try_cast("long"))
-            )
-        elif func in ("sum", "avg") and dtypes.get(var) != "string":
-            # expression operand with a native (non-string) type:
-            # aggregate directly — Spark's own typing governs (long
-            # sums stay long, double stays double)
-            expr = (
-                F.expr(f"{func}(DISTINCT `{var}`)")
-                if dist
-                else (F.sum(F.col(var)) if func == "sum" else F.avg(F.col(var)))
-            )
         elif func in ("sum", "avg"):
-            # try_cast, not cast: under ANSI a non-numeric lexical form
-            # must DROP from the aggregate (SPARQL error-drop), not
-            # throw from inside codegen
-            if dist:
-                expr = F.expr(
-                    f"{func}(DISTINCT try_cast(`{var}` as double))"
+            # an integer-typed SUM casts to long; an expression operand
+            # with a native (non-string) type aggregates directly —
+            # Spark's own typing governs (long sums stay long, double
+            # stays double); otherwise try_cast, not cast: under ANSI a
+            # non-numeric lexical form must DROP from the aggregate
+            # (SPARQL error-drop), not throw from inside codegen
+            cast = (
+                "long" if func == "sum" and var in int_sum
+                else None if dtypes.get(var) != "string"
+                else "double"
+            )
+            col = F.col(var) if cast is None else F.col(var).try_cast(cast)
+            if func == "sum":
+                expr = F.sum_distinct(col) if dist else F.sum(col)
+            elif dist:  # no Column API for AVG(DISTINCT)
+                inner = f"`{var}`" if cast is None else (
+                    f"try_cast(`{var}` as {cast})"
                 )
+                expr = F.expr(f"avg(DISTINCT {inner})")
             else:
-                col = F.col(var).try_cast("double")
-                expr = F.sum(col) if func == "sum" else F.avg(col)
+                expr = F.avg(col)
         elif func == "min":
             expr = F.min(F.col(var))
         elif func == "max":
@@ -2333,18 +2020,18 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     else:
         df = df.agg(*aggs)
     for h in q.having:
-        df = df.where(F.expr(_vars_to_cols(h)))
+        df = df.where(compile_expr(h))
     # hidden aliases exist only for a direct-form HAVING, an ORDER BY
     # aggregate key, or an aggregate embedded in a SELECT expression —
     # keep the ones a pending ?__ordx key or SELECT expression still
     # reads (select_text applies those over THIS output; the projection
     # drops the hidden columns afterwards), drop the rest here
     later_reads: set[str] = set()
-    for sql, name in q.agg_expr_binds:
+    for expr, name in q.agg_expr_binds:
         if name.startswith("__ordx"):
-            later_reads |= _filter_vars(sql)
-    for sql, _alias in q.select_exprs:
-        later_reads |= _filter_vars(sql)
+            later_reads |= expr_vars(expr)
+    for expr, _alias in q.select_exprs:
+        later_reads |= expr_vars(expr)
     hidden = [
         c
         for c in df.columns
@@ -2678,8 +2365,8 @@ def _solve(
             )
         df = df.join(v, on=shared) if shared else df.crossJoin(v)
         nullable |= undef
-    for sql, alias in q.select_exprs:
-        missing = sorted(v for v in _filter_vars(sql) if v not in df.columns)
+    for expr, alias in q.select_exprs:
+        missing = sorted(v for v in expr_vars(expr) if v not in df.columns)
         if missing:
             raise SparqlSyntaxError(
                 f"SELECT expression for ?{alias} references "
@@ -2692,7 +2379,7 @@ def _solve(
             raise SparqlSyntaxError(
                 f"SELECT expression alias ?{alias} is already bound"
             )
-        df = df.withColumn(alias, F.expr(_vars_to_cols(sql)))
+        df = df.withColumn(alias, compile_expr(expr))
         nullable.add(alias)
     if q.project is not None:
         missing = [v for v in q.project if v not in df.columns]
@@ -2715,12 +2402,12 @@ def _solve(
         # under DISTINCT only projected variables (the spec's own
         # ORDER-BY-must-be-projected restriction, applied to the
         # expression's inputs)
-        sql = next((s for s, n in q.agg_expr_binds if n == var), None)
-        if sql is None:  # pragma: no cover — parser invariant
+        expr = next((e for e, n in q.agg_expr_binds if n == var), None)
+        if expr is None:  # pragma: no cover — parser invariant
             raise SparqlSyntaxError(
                 f"internal: no expression for ORDER BY {var}"
             )
-        missing = sorted(v for v in _filter_vars(sql) if v not in d.columns)
+        missing = sorted(v for v in expr_vars(expr) if v not in d.columns)
         if any(v.startswith("__agg") for v in missing):
             # a hidden ORDER BY aggregate key, but DISTINCT already
             # projected it away — the spec's projected-keys
@@ -2741,7 +2428,7 @@ def _solve(
                     "to the projected variables"
                 )
             )
-        return d.withColumn(var, F.expr(_vars_to_cols(sql)))
+        return d.withColumn(var, compile_expr(expr))
 
     def _project(d: DataFrame) -> DataFrame:
         # keep each projected variable's typing companions (with_kinds)

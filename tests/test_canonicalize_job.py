@@ -300,3 +300,35 @@ def test_lookup_paths_match_six_join_rewrite(spark, monkeypatch):
         for r in canon.canon_lookup(comp)[0].collect()
     }
     assert lookup == {x: (y, False), y: (z, True), z: (None, True)}
+
+
+def test_delete_makes_canonical_table_stale(spark, tmp_path):
+    """A bucketed delete tombstones its datasets in the manifest; the
+    next canonicalize must re-run (tombstones count in the freshness
+    watermark) and replace the whole canonical table, so the deleted
+    datasets are gone from it — including a bucket the delete emptied,
+    which has no row in the rewrite to overwrite its old partition."""
+    from linkedspending_spark.sources.io import delete_datasets_bucketed
+
+    t = synth_transcripts_df(spark, n_convs=24, base_turns=3, seed=5)
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    canon_out = str(tmp_path / "out_canonical")
+    run_transcripts_job(spark, t, out, man, n_buckets=8)
+    assert run_canonicalize_job(spark, out, canon_out, man).skipped == 0
+
+    by_bucket: dict[int, set] = {}
+    for r in spark.read.parquet(out).select("bucket", "dataset").distinct().collect():
+        by_bucket.setdefault(r["bucket"], set()).add(r["dataset"])
+    emptied = min(by_bucket, key=lambda b: (len(by_bucket[b]), b))
+    other = min(min(v) for b, v in by_bucket.items() if b != emptied)
+    victims = sorted(by_bucket[emptied] | {other})
+    delete_datasets_bucketed(spark, out, victims, n_buckets=8, manifest_path=man)
+
+    r = run_canonicalize_job(spark, out, canon_out, man)
+    assert r.state == "FINISHED" and r.skipped == 0
+    canon = spark.read.parquet(canon_out)
+    assert canon.where(F.col("dataset").isin(victims)).count() == 0
+    assert canon.where(F.col("bucket") == emptied).count() == 0
+    assert canon.count() == r.converted_triples > 0
+    # and the rewrite is now current: the next run skips
+    assert run_canonicalize_job(spark, out, canon_out, man).skipped == 1

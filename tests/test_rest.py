@@ -613,6 +613,27 @@ def test_nested_aggregate_call_is_400(rest_server):
     assert status == 200 and body[0]["t"].startswith("count(http"), body
 
 
+def test_bad_expression_is_400_naming_it(rest_server):
+    """A wrong arity, an unknown function, cast syntax and SQL that is
+    not SPARQL are syntax errors at parse time: HTTP 400 whose message
+    names the offending token, never a 500 from Spark's analyzer and
+    never a silently accepted SQL predicate."""
+    base, _ = rest_server
+    for expression, name in (
+        ("STRLEN(?o, ?o) > 1", "STRLEN"),
+        ('UCASE() = "A"', "UCASE"),
+        ("foo(?o)", "foo"),
+        ("xsd:integer(?o) > 3", "xsd:integer"),
+        ('?o LIKE "a%"', "LIKE"),
+    ):
+        status, body = _post(
+            base + "/sparql",
+            {"query": f"SELECT ?s {{ ?s ?p ?o FILTER({expression}) }}"},
+        )
+        assert status == 400, (expression, status, body)
+        assert name.lower() in body["error"].lower(), (expression, body)
+
+
 # --- round 5: data-driven W3C typing, single bounding choke point ---------
 
 

@@ -1139,7 +1139,7 @@ def test_trailing_values_clause(spark, catalog):
 
 
 def test_string_numeric_builtins(spark):
-    """The argument-rewriting built-ins (_string_builtins_pass):
+    """The built-ins that compose over their operands (compile_expr):
     STRBEFORE/STRAFTER (empty-needle edge cases per 17.4.3.4),
     ROUND with XPath half-to-positive-infinity (round(-2.5) = -2,
     where Spark's round() gives -3), CEIL/FLOOR/date-parts over
@@ -1204,17 +1204,17 @@ def test_string_numeric_builtins(spark):
     assert subs(f'md5(?o) = "{md5}"') == ["a"]
     assert subs(f'sha256(?o) = "{s256}"') == ["a"]
     assert subs(f'sha1(?o) = "{s1}"') == ["b"]
-    # composite operands stay loud parse errors, never mis-evaluate
-    with pytest.raises(SparqlSyntaxError, match="round"):
-        select_text(t, "select ?s { ?s ?p ?o filter(round(strlen(?o)) = 2) }")
-    # var needles are supported now (round 5); a COMPOSITE first
-    # argument still refuses loudly
+    # composite operands evaluate: every built-in composes at any depth
+    assert subs("round(strlen(?o)) = 11") == ["a"]
     assert subs('strbefore(?o, ?o) = ""') == sorted(all_s)
-    with pytest.raises(SparqlSyntaxError, match="strbefore"):
-        select_text(
-            t,
-            'select ?s { ?s ?p ?o filter(strbefore(ucase(?o), "H") = "x") }',
-        )
+    assert subs('strbefore(ucase(?o), " ") = "HELLO"') == ["a"]
+    # ... and so do aggregates over them, in HAVING
+    got = select_text(
+        t,
+        "select ?s { ?s ?p ?o } group by ?s "
+        "having(sum(strlen(ucase(?o))) > 4) order by ?s",
+    ).collect()
+    assert [r["s"] for r in got] == ["a", "d", "e", "f"]
     # quoted text containing a call shape is data, not a built-in
     assert subs('?o != "round(1)"') == sorted(all_s)
 
