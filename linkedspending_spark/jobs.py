@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from .model import TRANSFORMATION_VERSION
 from .operators.convert_transcripts import convert_transcripts
-from .sources.io import write_triples
+from .sources.io import write_clustered, write_triples
 from .sources.manifest import TOMBSTONE_VERSION, ManifestStore, new_run_id
 
 
@@ -397,10 +397,11 @@ def run_canonicalize_job(
     North-rule shape: broadcast-dictionary links (per-dataset property
     URIs → global anchors, the propertymapping.tsv role) + connected-
     components merge, then every triple rewritten through the canonical
-    map and re-deduplicated (merging creates duplicates), materialized
-    partitioned-by-bucket like phase 1. Resumable: a manifest row with
-    the ``__canonicalize__`` sentinel dataset marks completion; re-runs
-    anti-join it away and become no-ops.
+    map and re-deduplicated (merging creates duplicates), and the whole
+    canonical table rewritten as files sized by bytes and clustered by
+    bucket (:func:`~.sources.io.write_clustered`). Resumable: a manifest
+    row with the ``__canonicalize__`` sentinel dataset marks completion;
+    re-runs anti-join it away and become no-ops.
     """
     from .operators.canon import (
         bounded_rows,
@@ -468,15 +469,9 @@ def run_canonicalize_job(
         canon = canonicalize_triples_minimal_dedup(
             triples, comp, rewrite_predicates=True
         )
-        # output count rides the write pass (no post-write recount scan)
-        obs = Observation()
-        observed = canon.observe(obs, F.count(F.lit(1)).alias("n"))
         # the whole table is replaced: a bucket a delete emptied has no
-        # row here, and must not keep its old partition
-        write_triples(
-            observed, out_path, partition_col="bucket", whole_table=True
-        )
-        n = int(obs.get["n"])
+        # row here, and must not keep its old rows
+        n = write_clustered(canon, out_path, triples_path)
         store.record(
             dataset=CANON_SENTINEL,
             n_rows=n_convert,  # convert/tombstone watermark this covers

@@ -21,9 +21,13 @@ the solution modifiers (DISTINCT, ORDER BY, LIMIT).
 
 Scale shape: every bound term becomes a pushed-down parquet filter
 (min/max + dictionary pruning on the sorted columns), and a bound
-``dataset`` additionally prunes *partitions* via the bucket column —
-the scan touches only ``1/n_buckets`` of the table, shown under
-``PartitionFilters`` in the physical plan (gated by pytest).
+``dataset`` adds a predicate on the bucket column. On the landed table,
+one directory per bucket, it prunes *partitions* — the scan touches
+only ``1/n_buckets`` of the table, shown under ``PartitionFilters``.
+On the canonical table, where ``bucket`` is an ordinary column the
+files are clustered and sorted by, it is a ``PushedFilters`` entry
+that skips row groups by their ``bucket`` statistics (both gated by
+pytest).
 """
 
 from __future__ import annotations
@@ -115,10 +119,12 @@ def match(
     are native comparisons on the scan columns, so Catalyst pushes them
     into the parquet reader (``PushedFilters``). When ``dataset`` and a
     bucket count are known and the table carries the job runner's
-    ``bucket`` partition column, the matching bucket is computed from
-    the same ``pmod(xxhash64(dataset), n)`` rule (jobs.py:bucket_of) as
-    a foldable expression — Catalyst constant-folds it and prunes all
-    other partitions (``PartitionFilters``).
+    ``bucket`` column, the matching bucket is computed from the same
+    ``pmod(xxhash64(dataset), n)`` rule (jobs.py:bucket_of) as a
+    foldable expression that Catalyst constant-folds. On the landed
+    table, partitioned by ``bucket``, it prunes every other partition
+    (``PartitionFilters``); on the canonical table, clustered by
+    ``bucket``, it is a pushed filter that skips row groups.
 
     The bucket count is authoritative from the WRITER, not the caller:
     pass ``manifest_path`` and it is read from the job's
@@ -479,7 +485,6 @@ _PLAIN = {
     "strends": "endswith",
     "substr": "substr",
     "concat": "concat",
-    "abs": "abs",
     "coalesce": "coalesce",
     "md5": "md5",
     "sha1": "sha1",
@@ -586,7 +591,9 @@ def compile_expr(node, col=F.col) -> Column:
         # XPath fn:round: halves round toward +inf (round(-2.5) = -2);
         # Spark's round() rounds them away from zero
         return F.floor(x[0].try_cast("double") + F.lit(0.5))
-    if name in ("ceil", "floor"):
+    if name in ("abs", "ceil", "floor"):
+        # a lexical form that is not a number is an expression error
+        # (NULL), not an ANSI cast failure that fails the whole query
         return F.call_function(name, x[0].try_cast("double"))
     if name in _DATE_PARTS:
         return F.call_function(_DATE_PARTS[name], x[0].try_cast("timestamp"))

@@ -7,6 +7,9 @@
   ``mode="overwrite"`` + dynamic partition overwrite gives the same
   atomic drop-and-replace the reference does per subgraph
   (UploadWorker.java:35-36) and makes re-runs idempotent.
+* :func:`write_clustered` — a whole-table rewrite (the canonical
+  table) as a few unpartitioned files sized by bytes, clustered and
+  sorted by ``bucket``.
 * :func:`write_nt` / :func:`read_nt` — N-Triples file sink/source
   (ConvertWorker.java:862-868 S6); serialization is the vectorized
   escape chain in :mod:`linkedspending_spark.functions.nt`.
@@ -14,7 +17,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,16 +32,13 @@ def write_triples(
     mode: str = "overwrite",
     partition_col: str = "dataset",
     files_per_partition: int = 1,
-    whole_table: bool = False,
 ) -> None:
-    """Materialize the triple table partitioned by dataset.
+    """Materialize the triple table partitioned by ``partition_col``.
 
-    Dynamic partition overwrite: only the datasets present in ``triples``
-    are replaced — the semantics of the reference's per-dataset graph
-    drop+recreate, and the idempotence required for resume.
-    ``whole_table=True`` replaces every partition instead (a rewrite of
-    the whole table, such as canonicalize's, where a partition absent
-    from ``triples`` must disappear).
+    Dynamic partition overwrite: only the partitions present in
+    ``triples`` are replaced — the semantics of the reference's
+    per-dataset graph drop+recreate, and the idempotence required for
+    resume. Partitions absent from ``triples`` keep their files.
 
     Rows are clustered on ``partition_col`` before the write: without
     it, every upstream task writes a file into every partition
@@ -62,12 +62,50 @@ def write_triples(
         clustered = triples.repartition(F.col(partition_col))
     (
         clustered.write.mode(mode)
-        .option(
-            "partitionOverwriteMode", "static" if whole_table else "dynamic"
-        )
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
     )
+
+
+def write_clustered(triples: DataFrame, path: str, input_path: str) -> int:
+    """Replace the table at ``path`` with ``triples`` as unpartitioned
+    parquet, one file per read split of the input at ``input_path``;
+    returns the number of rows written.
+
+    The file count is ``input_path``'s on-disk bytes (one driver-side
+    ``getContentSummary``, no Spark job) over Spark's own split size,
+    ``spark.sql.files.maxPartitionBytes``: every file is about one scan
+    task. Range clustering on ``(bucket, s)`` gives the files disjoint,
+    ordered key ranges (two files share at most a boundary bucket), and
+    the sort by ``(bucket, p, s)`` tight per-row-group ``bucket``
+    statistics, so a bucket predicate is a pushed filter that skips
+    files and row groups. At one file the range
+    repartition plans a single partition and samples nothing. ``bucket``
+    stays an ordinary column; the overwrite replaces the whole directory.
+
+    The row count rides the write pass as an observation placed after
+    the shuffle: above it, the range partitioner's sampling job would
+    count every row a second time.
+    """
+    import math
+
+    spark = triples.sparkSession
+    jvm, jsession = spark._jvm, spark._jsparkSession  # noqa: SLF001
+    jpath = jvm.org.apache.hadoop.fs.Path(input_path)
+    fs = jpath.getFileSystem(jsession.sessionState().newHadoopConf())
+    size = fs.getContentSummary(jpath).getLength()
+    split = jsession.sessionState().conf().filesMaxPartitionBytes()
+    n = max(1, math.ceil(size / split))
+    obs = Observation()
+    (
+        triples.repartitionByRange(n, "bucket", "s")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .sortWithinPartitions("bucket", "p", "s")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    return int(obs.get["n"])
 
 
 def list_dataset_partitions(path: str) -> list[str]:

@@ -329,6 +329,17 @@ class _Lexer:
         self._peeked = None
         return tok
 
+    def peek_op(self) -> tuple[str, str]:
+        """:meth:`peek` where an operator may follow an operand: a term
+        cannot start there, so ``<`` is less-than, never an ``<iri>``
+        (``?a<?b&&?b>?a`` is two comparisons)."""
+        kind, text = self.peek()
+        if kind == "uri":
+            op = "<=" if text.startswith("<=") else "<"
+            self.pos -= len(text) - len(op)
+            self._peeked = ("op", op)
+        return self._peeked
+
     def next_word(self) -> str | None:
         """The next token lowered if it is a bare word, else None."""
         kind, text = self.peek()
@@ -954,7 +965,7 @@ class _Parser:
 
     def _climb(self, left: tuple, min_prec: int) -> tuple:
         while True:
-            kind, text = self.lx.peek()
+            kind, text = self.lx.peek_op()
             if kind == "num" and text[0] in "+-" and min_prec <= 4:
                 # ``?a -2``: the sign is the additive operator (SPARQL's
                 # NumericLiteralPositive/Negative continuation)

@@ -332,3 +332,99 @@ def test_delete_makes_canonical_table_stale(spark, tmp_path):
     assert canon.count() == r.converted_triples > 0
     # and the rewrite is now current: the next run skips
     assert run_canonicalize_job(spark, out, canon_out, man).skipped == 1
+
+
+def _parquet_files(path: str) -> list[str]:
+    import os
+
+    return sorted(
+        os.path.join(d, n)
+        for d, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
+def _bucket_dirs(path: str) -> list[str]:
+    import os
+
+    return [d for d in os.listdir(path) if d.startswith("bucket=")]
+
+
+def test_canonical_table_is_one_bucket_clustered_file(spark, tmp_path):
+    """At test size the canonical table is one unpartitioned file whose
+    ``bucket`` column is the job runner's bucket of each row's dataset."""
+    from linkedspending_spark.jobs import bucket_of
+
+    t = synth_transcripts_df(spark, n_convs=12, base_turns=3, seed=13)
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    canon_out = str(tmp_path / "out_canonical")
+    run_transcripts_job(spark, t, out, man, n_buckets=8)
+    r = run_canonicalize_job(spark, out, canon_out, man)
+    assert r.state == "FINISHED" and r.converted_triples > 0
+
+    assert len(_parquet_files(canon_out)) == 1
+    assert _bucket_dirs(canon_out) == []
+    canon = spark.read.parquet(canon_out)
+    assert canon.count() == r.converted_triples
+    assert canon.where(F.col("bucket") != bucket_of(F.col("dataset"), 8)).count() == 0
+    assert canon.select("bucket").distinct().count() > 1
+
+
+def test_canonical_files_are_sized_by_split_bytes(spark, tmp_path):
+    """A split size below the landed table's bytes writes several files:
+    the same rows as the one-file layout, the count the job reports, and
+    disjoint, ordered ``(bucket, s)`` key ranges (so bucket ranges meet
+    at most at one boundary bucket)."""
+    import shutil
+
+    t = synth_transcripts_df(spark, n_convs=12, base_turns=3, seed=13)
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    run_transcripts_job(spark, t, out, man, n_buckets=8)
+    shutil.copytree(man, str(tmp_path / "man2"))  # a second, fresh watermark
+
+    one = str(tmp_path / "one")
+    run_canonicalize_job(spark, out, one, man)
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        many = str(tmp_path / "many")
+        r = run_canonicalize_job(spark, out, many, str(tmp_path / "man2"))
+    finally:
+        spark.conf.set(key, saved)
+
+    files = _parquet_files(many)
+    assert len(files) > 1 and _bucket_dirs(many) == []
+    rows = {tuple(x) for x in spark.read.parquet(many).collect()}
+    assert rows == {tuple(x) for x in spark.read.parquet(one).collect()}
+    assert r.converted_triples == len(rows)
+    ranges = []
+    for f in files:
+        df = spark.read.parquet(f)
+        lo = df.orderBy("bucket", "s").first()
+        hi = df.orderBy(F.col("bucket").desc(), F.col("s").desc()).first()
+        ranges.append(((lo["bucket"], lo["s"]), (hi["bucket"], hi["s"])))
+    ranges.sort()
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo, ranges
+        assert hi[0] <= lo[0]
+
+
+def test_canonicalize_replaces_bucket_partitioned_layout(spark, tmp_path):
+    """A canonical directory written in the old one-directory-per-bucket
+    layout is replaced whole: no ``bucket=`` directory survives."""
+    from linkedspending_spark.sources.io import write_triples
+
+    t = synth_transcripts_df(spark, n_convs=6, base_turns=3, seed=17)
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    canon_out = str(tmp_path / "out_canonical")
+    run_transcripts_job(spark, t, out, man, n_buckets=4)
+    write_triples(spark.read.parquet(out), canon_out, partition_col="bucket")
+    assert _bucket_dirs(canon_out)
+
+    r = run_canonicalize_job(spark, out, canon_out, man)
+    assert r.state == "FINISHED" and r.skipped == 0
+    assert _bucket_dirs(canon_out) == []
+    assert len(_parquet_files(canon_out)) == 1
+    assert spark.read.parquet(canon_out).count() == r.converted_triples

@@ -582,22 +582,29 @@ def test_malformed_numeric_params_are_400(rest_server):
                                           "n_buckets": "many"})[0] == 400
 
 
-def test_nested_aggregate_call_is_400(rest_server):
-    """An aggregate operand nested deeper than one paren level is not
-    rewritten; it is refused as a syntax error (HTTP 400) that names
-    the nesting limit. Aggregate-like text inside a string literal is
-    neither refused nor rewritten."""
+def test_nested_aggregate_operand_evaluates_wrong_arity_is_400(rest_server):
+    """A call nested at any depth inside an aggregate, in ORDER BY,
+    HAVING or a SELECT expression, evaluates (HTTP 200). The same
+    queries with a wrong argument count inside the nesting are refused
+    at parse time (HTTP 400) with the arity error. Aggregate-like text
+    inside a string literal is neither refused nor rewritten."""
     base, _ = rest_server
-    for q in (
+    shapes = (
         "SELECT ?s (COUNT(?o) AS ?n) { ?s ?p ?o } GROUP BY ?s "
-        "ORDER BY DESC(SUM(round(abs(?o),2)))",
+        "ORDER BY DESC(SUM(round(abs(?o)%s)))",
         "SELECT ?s { ?s ?p ?o } GROUP BY ?s "
-        "HAVING(SUM(round(abs(?o),2)) > 1)",
-        "SELECT ?s (SUM(round(abs(?o),2)) * 2 AS ?t) { ?s ?p ?o } GROUP BY ?s",
-    ):
+        "HAVING(SUM(round(abs(?o)%s)) > 1)",
+        "SELECT ?s (SUM(round(abs(?o)%s)) * 2 AS ?t) { ?s ?p ?o } GROUP BY ?s",
+    )
+    for shape in shapes:
+        q = shape % ",2"
         status, body = _post(base + "/sparql", {"query": q})
-        assert status == 400 and "nest" in body["error"], (q, status, body)
-    # one nesting level still works, next to a literal naming a call
+        assert status == 400 and "takes 1 argument" in body["error"], (
+            q, status, body)
+        q = shape % ""
+        status, body = _post(base + "/sparql", {"query": q})
+        assert status == 200, (q, status, body)
+    # a literal that names a call is data, not an aggregate
     status, _ = _post(
         base + "/sparql",
         {

@@ -1,5 +1,6 @@
 """Query-serving surface: triple-pattern match (Sparql.java:26-53 analog),
-partition pruning on the bucketed table, full-size dictionaries, and the
+partition pruning on the landed bucketed table, pushed bucket filters on
+the canonical table, full-size dictionaries, and the
 LIMES accept/review link tiers."""
 
 from __future__ import annotations
@@ -87,6 +88,30 @@ def test_match_reads_n_buckets_from_manifest(spark, triple_table, tmp_path):
     # wrong caller value vs manifest: loud failure, not empty results
     with pytest.raises(ValueError, match="written with"):
         match(triples, dataset="conv-0003", n_buckets=16, manifest_path=mpath)
+
+
+def test_match_dataset_on_canonical_table_pushes_bucket_filter(spark, tmp_path):
+    """The canonical table keeps ``bucket`` as a clustered column, not a
+    partition: a dataset-scoped match returns exactly that dataset's
+    rows, and its bucket predicate is a pushed parquet filter (row-group
+    skipping) instead of a partition filter."""
+    from linkedspending_spark.jobs import run_canonicalize_job, run_transcripts_job
+
+    t = synth_transcripts_df(spark, n_convs=8, base_turns=3, seed=19)
+    out, man = str(tmp_path / "out"), str(tmp_path / "man")
+    run_transcripts_job(spark, t, out, man, n_buckets=8)
+    run_canonicalize_job(spark, out, str(tmp_path / "canon"), man)
+
+    canon = read_triple_table(spark, str(tmp_path / "canon"))
+    q = match(canon, dataset="conv-0003", manifest_path=man)
+    want = canon.where(F.col("dataset") == "conv-0003")
+    assert sorted(q.collect()) == sorted(want.collect())
+    assert q.count() > 0
+    plan = plan_of(q)
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+    assert pushed and any("bucket" in l for l in pushed), plan[:3000]
+    parts = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert not any("bucket" in l for l in parts), plan[:3000]
 
 
 def test_full_dictionaries_load_and_link(spark):

@@ -743,6 +743,33 @@ def test_filter_numeric_vs_lexical_comparison(spark):
     assert lexical.count() == 0  # "10" < "9" lexically, "9" = "9"
 
 
+def test_unspaced_less_than_is_an_operator(spark):
+    """``<`` right after an operand is less-than, so an unspaced filter
+    (``?a<?b&&?b>?a`` once lexed as the IRI ``<?b&&?b>``) parses and
+    returns the spaced form's rows; where a term may start, ``<...>``
+    is still an IRI."""
+    t = spark.createDataFrame(
+        [
+            ("s1", "http://a", "1", "x"), ("s1", "http://b", "5", "x"),
+            ("s2", "http://a", "7", "x"), ("s2", "http://b", "3", "x"),
+            ("s3", "http://a", "2", "x"), ("s3", "http://b", "2", "x"),
+        ],
+        "s string, p string, o string, dataset string",
+    )
+    body = "select ?s {{ ?s <http://a> ?a . ?s <http://b> ?b filter({}) }}"
+    for unspaced, spaced in (
+        ("?a<?b&&?b>?a", "?a < ?b && ?b > ?a"),
+        ("?a<=?b&&?b<=?a", "?a <= ?b && ?b <= ?a"),
+        ("?a<3||?b<3", "?a < 3 || ?b < 3"),
+    ):
+        got = sorted(r["s"] for r in select_text(t, body.format(unspaced)).collect())
+        want = sorted(r["s"] for r in select_text(t, body.format(spaced)).collect())
+        assert got == want and got, (unspaced, got, want)
+    q = parse_select("select ?s { ?s ?p ?o filter(?p=<http://a>) }")
+    assert q.filters == [("call", "=", [("var", "p"), ("iri", "http://a")])]
+    assert q.patterns == [("?s", "?p", "?o")]
+
+
 def test_filter_numeric_drops_malformed_rows(spark):
     """SPARQL expression-error semantics: a numeric FILTER over a row
     whose lexical form is not a number DROPS that row — it must not
@@ -761,6 +788,9 @@ def test_filter_numeric_drops_malformed_rows(spark):
     assert [r["s"] for r in got] == ["s1"]
     got = select_text(t, "select ?s { ?s ?p ?v filter(9 >= ?v) }").collect()
     assert [r["s"] for r in got] == ["s3"]
+    # ABS reads its operand as a number the way CEIL / FLOOR / ROUND do
+    got = select_text(t, "select ?s { ?s ?p ?v filter(abs(?v) > 8) }").collect()
+    assert [r["s"] for r in got] == ["s1"]
     # a ?var=... inside a quoted literal is data, not a comparison
     got = select_text(
         t, 'select ?s { ?s ?p ?v filter(?v != "q?page=3") }'
