@@ -32,6 +32,7 @@ pytest).
 
 from __future__ import annotations
 
+import math
 import operator
 from collections.abc import Sequence
 from decimal import Decimal
@@ -829,7 +830,8 @@ def _eval_group(
     def base() -> DataFrame:
         if df is not None:
             return df
-        return triples.sparkSession.range(1).drop("id")
+        # Join's identity, one row and no column, as a LocalRelation
+        return local_frame(triples.sparkSession, [(1,)], "__u int").drop("__u")
 
     def keys(right: DataFrame, what: str, body_nullable):
         """The join keys — shared VARIABLE columns, never companions —
@@ -995,7 +997,14 @@ def _eval_group(
         elif kind == "path":
             s_t, p_uri, o_t, quant = payload
             pc = path_closure(
-                triples, s_t, p_uri, o_t, quant, with_kinds=kinds, **scan_kw
+                triples,
+                s_t,
+                p_uri,
+                o_t,
+                quant,
+                with_kinds=kinds,
+                stats=scope["stats"],
+                **scan_kw,
             )
             if pc.columns == ["__pp_exists"]:
                 # both ends constant: an existence gate — LEFT SEMI
@@ -1222,6 +1231,20 @@ def _edge_relation(
     raise ValueError(f"unknown path element {kind!r}")
 
 
+def _edge_bound(spec, p_counts: dict) -> int:
+    """An upper bound on a path element's edge count, from
+    :func:`bgp_stats`' per-predicate triple counts — no Spark job."""
+    if isinstance(spec, str):
+        spec = ("uri", spec)
+    kind, arg = spec
+    if kind == "uri":
+        return p_counts.get(arg, {"count": 0})["count"]
+    if kind == "inv":
+        return _edge_bound(arg, p_counts)
+    bounds = [_edge_bound(x, p_counts) for x in arg]
+    return math.prod(bounds) if kind == "seq" else sum(bounds)
+
+
 def path_closure(
     triples: DataFrame,
     s,
@@ -1233,6 +1256,7 @@ def path_closure(
     manifest_path: str | None = None,
     with_kinds: bool = False,
     max_hops: int = PATH_MAX_HOPS,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Quantified property path ``s p? / p+ / p* o`` — the SPARQL 1.1
     ArbitraryLengthPath / ZeroOrOnePath algebra over the triple table.
@@ -1258,20 +1282,29 @@ def path_closure(
 
     Scale shape: the edge scan is ``match(p=...)`` — the predicate is a
     pushed-down parquet filter, and a bound ``dataset`` still prunes
-    bucket partitions. A constant endpoint evaluates as frontier BFS
-    (seeded from the constant, each round one equi-join + anti-join on
-    the frontier — the frontier stays proportional to the reachable
-    set, never the corpus). Var-var closure expands the full pair set
-    one hop per round — the spec's quadratic worst case; keep one end
-    bound in queries over large graphs. Each round lazily checkpoints
-    (lineage truncation, same discipline as the sameAs CC loop) and the
-    convergence check is the round's single action. AQE coalesces the
-    per-round micro-shuffles exactly as in ``connected_components``.
+    the scan. For ``+`` and ``*`` the step's edge relation is collected
+    once (:func:`~linkedspending_spark.operators.canon.bounded_rows`,
+    at most ``canon.LOCAL_THRESHOLD`` rows): under that bound the
+    closure runs on the driver and comes back as a LocalRelation — ONE
+    Spark job, where a distributed round costs a job of its own. With
+    ``stats`` (:func:`bgp_stats`) an element whose predicates' triple
+    counts already exceed the bound skips that collect and goes
+    straight to the distributed rounds. A
+    constant endpoint evaluates as frontier BFS from the constant,
+    var-var as the full pair closure one hop per round (the spec's
+    quadratic worst case; keep one end bound over large graphs), both
+    with the same rounds and the same ``max_hops`` cap in either
+    regime. Above the bound — or when a var-var pair set outgrows it —
+    the rounds run distributed: each round one equi-join + anti-join
+    on the frontier, lazily checkpointed (lineage truncation, same
+    discipline as the sameAs CC loop), its convergence check the
+    round's single action.
     """
-    from .operators.canon import lineage_checkpoint
+    from .operators import canon
 
     if quant not in ("+", "*", "?"):
         raise ValueError(f"unknown path quantifier {quant!r}")
+    spark = triples.sparkSession
     scoped = match(
         triples,
         dataset=dataset,
@@ -1302,6 +1335,78 @@ def path_closure(
     else:
         const, var = None, None
 
+    def not_converged() -> ValueError:
+        return ValueError(
+            f"property path {p_str}{quant} did not converge within "
+            f"{max_hops} hops — raise max_hops for this graph"
+        )
+
+    def gate(found: bool) -> DataFrame:
+        """The both-ends-constant existence gate: 1 row = path exists."""
+        return local_frame(spark, [(1,)] if found else [], "__pp_exists int")
+
+    def kinds_of(nodes) -> DataFrame:
+        """``_node_kind_map`` over the rows touching ``nodes`` (shipped
+        once as a LocalRelation) — the same kinds for those nodes as
+        over the whole scoped table; a row touching them at both ends
+        comes twice, which the map's max absorbs."""
+        keep = local_frame(spark, [(n,) for n in nodes], "s string")
+        return _node_kind_map(
+            scoped.join(keep, "s", "left_semi").unionAll(
+                scoped.join(keep.toDF("o"), "o", "left_semi")
+            )
+        )
+
+    if const is not None and var is None and quant in ("*", "?") and s == o:
+        return gate(True)
+    rows = None
+    if quant != "?" and (
+        stats is None
+        or _edge_bound(p, stats["p_counts"]) <= canon.LOCAL_THRESHOLD
+    ):
+        rows = canon.bounded_rows(edges)
+    adj: dict[str, set[str]] = {}
+    for a, b in rows or ():
+        if a is not None:  # a NULL key joins nothing
+            adj.setdefault(a, set()).add(b)
+
+    def _local_bfs(seed: str) -> set[str]:
+        """Nodes reachable from *seed* in >= 1 hops, on the driver —
+        :func:`_bfs`'s rounds over the collected edges."""
+        frontier = set(adj.get(seed, ()))
+        reach = set(frontier)
+        for _ in range(max_hops):
+            if not frontier:
+                return reach
+            frontier = {b for a in frontier for b in adj.get(a, ())} - reach
+            reach |= frontier
+        if frontier:
+            raise not_converged()
+        return reach
+
+    def _local_pairs() -> set[tuple[str, str]] | None:
+        """The var-var pair closure on the driver — the distributed
+        rounds' structure; ``None`` as soon as the pair set outgrows
+        the bound (checked after each frontier pair's expansion, so the
+        driver never holds much more than the bound)."""
+        pairs = set(map(tuple, rows))
+        frontier = pairs
+        for _ in range(max_hops):
+            if not frontier:
+                return pairs
+            new: set[tuple[str, str]] = set()
+            for a, b in frontier:
+                new.update(
+                    (a, c) for c in adj.get(b, ()) if (a, c) not in pairs
+                )
+                if len(pairs) + len(new) > canon.LOCAL_THRESHOLD:
+                    return None
+            frontier = new
+            pairs |= new
+        if frontier:
+            raise not_converged()
+        return pairs
+
     def _bfs(seed: str) -> DataFrame:
         """Nodes reachable from *seed* in >= 1 hops (column ``__n``)."""
         frontier = (
@@ -1313,7 +1418,7 @@ def path_closure(
             # no iteration → no checkpoint: the single-hop plan keeps
             # its scan (predicate + seed as pushed parquet filters)
             return frontier
-        frontier = lineage_checkpoint(frontier)
+        frontier = canon.lineage_checkpoint(frontier)
         reach = frontier
         for _ in range(max_hops):
             if frontier.isEmpty():
@@ -1323,43 +1428,49 @@ def path_closure(
                 .select(F.col("__b").alias("__n"))
                 .distinct()
             )
-            frontier = lineage_checkpoint(nxt.join(reach, "__n", "left_anti"))
+            frontier = canon.lineage_checkpoint(
+                nxt.join(reach, "__n", "left_anti")
+            )
             reach = reach.unionAll(frontier)
         if not frontier.isEmpty():
-            raise ValueError(
-                f"property path {p_str}{quant} did not converge within "
-                f"{max_hops} hops — raise max_hops for this graph"
-            )
+            raise not_converged()
         return reach
 
     if const is not None and var is None:
-        # both ends constant: existence gate (1 row = path exists)
-        if quant in ("*", "?") and s == o:
-            return triples.sparkSession.range(1).select(
-                F.lit(1).alias("__pp_exists")
-            )
-        # forward BFS from s, look for o (edges are forward here: both
-        # ends constant never went through the reversing branch)
-        reach = _bfs(s)
+        # both ends constant: forward BFS from s, look for o (edges are
+        # forward here: both ends constant never went through the
+        # reversing branch)
+        if rows is not None:
+            return gate(o in _local_bfs(s))
         return (
-            reach.where(F.col("__n") == o)
+            _bfs(s)
+            .where(F.col("__n") == o)
             .limit(1)
             .select(F.lit(1).alias("__pp_exists"))
         )
     if const is not None:
-        reach = _bfs(const).select(F.col("__n").alias(var))
+        if rows is not None:
+            nodes = _local_bfs(const) | ({const} if quant == "*" else set())
+            out = _values_df(spark, [var], [(n,) for n in nodes])
+            if with_kinds:
+                out = _attach_node_kinds(out, var, kinds_of(nodes))
+            return out
+        out = _bfs(const).select(F.col("__n").alias(var))
         if quant in ("*", "?"):
-            zero = _values_df(triples.sparkSession, [var], [(const,)])
-            reach = reach.unionAll(zero).distinct()
-        out = reach
+            zero = _values_df(spark, [var], [(const,)])
+            out = out.unionAll(zero).distinct()
         if with_kinds:
             out = _attach_node_kinds(out, var, _node_kind_map(scoped))
         return out
 
     # var-var: full pair closure (documented worst case)
-    pairs = edges.distinct()
-    if quant != "?":
-        pairs = lineage_checkpoint(pairs)
+    local = _local_pairs() if rows is not None else None
+    if local is not None:
+        pairs = local_frame(spark, local, "__a string, __b string")
+    else:
+        pairs = edges.distinct()
+    if local is None and quant != "?":
+        pairs = canon.lineage_checkpoint(pairs)
         frontier = pairs
         for _ in range(max_hops):
             if frontier.isEmpty():
@@ -1372,16 +1483,21 @@ def path_closure(
                 .select("__a", F.col("__c").alias("__b"))
                 .distinct()
             )
-            frontier = lineage_checkpoint(
+            frontier = canon.lineage_checkpoint(
                 nxt.join(pairs, ["__a", "__b"], "left_anti")
             )
             pairs = pairs.unionAll(frontier)
         else:
             if not frontier.isEmpty():
-                raise ValueError(
-                    f"property path {p_str}{quant} did not converge within "
-                    f"{max_hops} hops — raise max_hops for this graph"
-                )
+                raise not_converged()
+    if with_kinds:
+        # a driver-closed `+` reaches only its pairs' nodes; `*` pairs
+        # every graph node with itself
+        node_kinds = (
+            kinds_of({n for pair in local for n in pair})
+            if local is not None and quant == "+"
+            else _node_kind_map(scoped)
+        )
     if quant in ("*", "?"):
         nodes = (
             scoped.select(F.col("s").alias("__a"))
@@ -1397,13 +1513,12 @@ def path_closure(
             .select(F.col("__a").alias(s_var))
         )
         if with_kinds:
-            out = _attach_node_kinds(out, s_var, _node_kind_map(scoped))
+            out = _attach_node_kinds(out, s_var, node_kinds)
         return out
     out = pairs.select(
         F.col("__a").alias(s_var), F.col("__b").alias(o_var)
     )
     if with_kinds:
-        nk = _node_kind_map(scoped)
-        out = _attach_node_kinds(out, s_var, nk)
-        out = _attach_node_kinds(out, o_var, nk)
+        out = _attach_node_kinds(out, s_var, node_kinds)
+        out = _attach_node_kinds(out, o_var, node_kinds)
     return out

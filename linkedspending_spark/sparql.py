@@ -118,7 +118,9 @@ reference's own queries use, plus the group algebra
   — GROUP_CONCAT sorts the collected values first (SPARQL leaves the
   order unspecified; deterministic output is the serving-path choice). SUM aggregates as long when every operand's
   lexical form is an integer (→ ``xsd:integer``, SPARQL 1.1), else as
-  double — decided per query by a narrow pre-scan; AVG casts to double
+  double — decided per query by two typing counts (with GROUP BY one
+  narrow pre-scan; without, the counts ride in the aggregate's one row,
+  which is collected and typed on the driver); AVG casts to double
   (SPARQL says ``xsd:decimal`` for integers — documented divergence);
   MIN/MAX compare lexical forms (ISO dates order correctly;
   zero-padded numbers do too).
@@ -156,14 +158,16 @@ reference's own queries use, plus the group algebra
   ``?__ppN`` variables (invisible in output, multiplicity kept, per
   spec), inverse swaps the ends, alternation becomes a UNION group (a
   nested group spec when a branch itself quantifies, e.g. ``p+|q``) —
-  and quantified steps evaluate as lineage-checkpointed frontier
-  closure (:func:`~linkedspending_spark.serve.path_closure`): BFS from
-  a constant end, full pair closure var-var (the spec's quadratic worst
-  case — keep one end bound over large graphs). ``*``/``?`` include the
-  spec's zero-length path (every graph node paired with itself; a
-  constant end matches even when absent from the graph). Negated
-  property sets ``!p`` / ``!(p1|p2)`` are a pure ``NOT IN`` scan
-  constraint in predicate position
+  and quantified steps evaluate as frontier closure
+  (:func:`~linkedspending_spark.serve.path_closure`): BFS from a
+  constant end, full pair closure var-var (the spec's quadratic worst
+  case — keep one end bound over large graphs) — on the driver over
+  the step's once-collected edges under ``canon.LOCAL_THRESHOLD``,
+  as lineage-checkpointed distributed rounds above it. ``*``/``?``
+  include the spec's zero-length path (every graph node paired with
+  itself; a constant end matches even when absent from the graph).
+  Negated property sets ``!p`` / ``!(p1|p2)`` are a pure ``NOT IN``
+  scan constraint in predicate position
   (:class:`~linkedspending_spark.serve.NotTerms` — pushes into
   parquet, binds nothing). Directly-nested quantifiers merge
   algebraically at parse time (``(p+)+ = p+``, mixed pairs = ``p*``;
@@ -250,6 +254,7 @@ from .serve import (
     eval_group,
     expr_vars,
 )
+from .sources.local import local_frame
 
 #: Standing prefixes: the reference's four (Sparql.java:17-20) + core RDF.
 DEFAULT_PREFIXES: dict[str, str] = {
@@ -1909,13 +1914,18 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     SUM types like SPARQL 1.1: when EVERY operand's lexical form is an
     integer, the sum aggregates as long (→ ``xsd:integer`` in the W3C
     output); any non-integer lexical form makes the whole query's SUM
-    over that variable a double. Decided by ONE narrow pre-scan job
-    over the sum variables (the ivf count+max(abs) idiom) — per QUERY,
-    not per group (documented approximation: SPARQL types each group's
-    sum separately). AVG casts to double (SPARQL says ``xsd:decimal``
-    for integer operands — documented divergence). Non-numeric lexical
-    forms → NULL, ignored by the aggregate, matching SPARQL's
-    error-drop; MIN/MAX/SAMPLE stay on the lexical string.
+    over that variable a double. Decided by two typing counts per
+    variable — per QUERY, not per group (documented approximation:
+    SPARQL types each group's sum separately). With GROUP BY the counts
+    are ONE narrow pre-scan job over the solutions (the ivf
+    count+max(abs) idiom) and only the picked cast is aggregated;
+    without GROUP BY they ride in the aggregate's own one-row plan
+    beside both typed sums, so the one collect that types the sums is
+    the answer (:func:`_typed_sum_row`). AVG
+    casts to double (SPARQL says ``xsd:decimal`` for integer operands
+    — documented divergence). Non-numeric lexical forms → NULL,
+    ignored by the aggregate, matching SPARQL's error-drop;
+    MIN/MAX/SAMPLE stay on the lexical string.
 
     EXPRESSION operands (``SUM(?a * ?b)``) aggregate their hidden
     BIND column's native type directly (integer expressions sum as
@@ -1933,32 +1943,28 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     sum_vars = sorted({
         var
         for func, var, _, _ in q.aggregates
-        # the lexical-form long-vs-double pre-scan applies to STRING
+        # the lexical-form long-vs-double typing applies to STRING
         # columns only: a hidden expression column already carries its
         # native numeric type (try_cast(double AS long) truncates, so
-        # running the pre-scan on one would mistype fractional sums)
+        # typing one that way would mistype fractional sums)
         if func == "sum"
         and var is not None
         and dtypes.get(var) == "string"
     })
+    # numeric operands only: a non-numeric lexical form is DROPPED
+    # (error-drop, see below), so it must not demote the sum type
+    counts = [
+        F.count(F.col(v).try_cast(t)).alias(f"__{t[0]}_{v}")
+        for v in sum_vars
+        for t in ("double", "long")
+    ]
     int_sum: set[str] = set()
-    if sum_vars:
-        # numeric operands only: a non-numeric lexical form is DROPPED
-        # (error-drop, see below), so it must not demote the sum type
-        checks = df.agg(
-            *(
-                F.count(F.col(v).try_cast("double")).alias(f"__n_{v}")
-                for v in sum_vars
-            ),
-            *(
-                F.count(F.col(v).try_cast("long")).alias(f"__l_{v}")
-                for v in sum_vars
-            ),
-        ).first()
+    if sum_vars and q.group_by:
+        checks = df.agg(*counts).first()
         int_sum = {
-            v for v in sum_vars if checks[f"__n_{v}"] == checks[f"__l_{v}"]
+            v for v in sum_vars if checks[f"__d_{v}"] == checks[f"__l_{v}"]
         }
-    aggs = []
+    aggs, typed = [], []
     for func, var, dist, alias in q.aggregates:
         if var is not None and var not in df.columns:
             raise SparqlSyntaxError(
@@ -1993,7 +1999,20 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
             )
             col = F.col(var) if cast is None else F.col(var).try_cast(cast)
             if func == "sum":
-                expr = F.sum_distinct(col) if dist else F.sum(col)
+                total = F.sum_distinct if dist else F.sum
+                expr = total(col)
+                if var in sum_vars and not q.group_by:
+                    # both typings ride in the one-row plan;
+                    # _typed_sum_row picks one on the driver. The
+                    # integer sum accumulates as decimal(20,0), so the
+                    # one a query does not pick never overflows
+                    integral = F.col(var).try_cast("long")
+                    typed += [
+                        total(integral.cast("decimal(20,0)"))
+                        .alias(f"__sl_{alias}"),
+                        expr.alias(f"__sd_{alias}"),
+                    ]
+                    continue
             elif dist:  # no Column API for AVG(DISTINCT)
                 inner = f"`{var}`" if cast is None else (
                     f"try_cast(`{var}` as {cast})"
@@ -2024,7 +2043,9 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
         # dedup cannot change an extremum or an arbitrary pick, so
         # DISTINCT is accepted and ignored there
         aggs.append(expr.alias(alias))
-    if not aggs:  # bare GROUP BY: one row per group
+    if typed:
+        df = _typed_sum_row(df, q, aggs + typed + counts, sum_vars)
+    elif not aggs:  # bare GROUP BY: one row per group
         df = df.select(*q.group_by).dropDuplicates()
     elif q.group_by:
         df = df.groupBy(*q.group_by).agg(*aggs)
@@ -2051,6 +2072,43 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     if hidden:
         df = df.drop(*hidden)
     return df
+
+
+def _typed_sum_row(
+    df: DataFrame, q: ParsedQuery, aggs: list, sum_vars: list[str]
+) -> DataFrame:
+    """:func:`_aggregate` without GROUP BY when a SUM reads a
+    lexical-form (string) variable. ``aggs`` carries each such SUM
+    twice, as ``__sl_<alias>`` (``try_cast`` long, summed as decimal)
+    and ``__sd_<alias>`` (double), plus each variable's two typing
+    counts ``__d_<var>`` / ``__l_<var>``. The plan's one row is
+    collected — the one action both types the sums and answers the
+    query — and returned as a LocalRelation whose SUMs are long iff
+    count(double) == count(long), else double."""
+    plan = df.agg(*aggs)
+    row = plan.first()
+    src, longs = {}, set()
+    for func, var, _, alias in q.aggregates:
+        src[alias] = alias
+        if func == "sum" and var in sum_vars:
+            if row[f"__d_{var}"] == row[f"__l_{var}"]:
+                longs.add(alias)
+                src[alias] = f"__sl_{alias}"
+            else:
+                src[alias] = f"__sd_{alias}"
+    # a picked integer sum casts back to long: past its range it fails
+    # as a long SUM does
+    schema = plan.select(
+        *[
+            (F.col(c).cast("long") if a in longs else F.col(c)).alias(a)
+            for a, c in src.items()
+        ]
+    ).schema
+    values = [
+        int(row[c]) if a in longs and row[c] is not None else row[c]
+        for a, c in src.items()
+    ]
+    return local_frame(df.sparkSession, [values], schema)
 
 
 def _instantiate_construct(df: DataFrame, template: list[tuple]) -> DataFrame:

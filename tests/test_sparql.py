@@ -350,6 +350,103 @@ def test_sum_integer_vs_decimal_typing(spark):
     assert r["s"] == 12.5 and isinstance(r["s"], float)
 
 
+_SUM_TYPING_DATA = {
+    "int": [("a", "7"), ("a", "5"), ("b", "x"), ("b", "3")],
+    "mixed": [("a", "7"), ("a", "5.5"), ("b", "x"), ("b", "3")],
+    "nonnum": [("a", "x"), ("b", "y")],
+    "empty": [],
+    "dup": [("a", "2"), ("b", "2"), ("b", "3")],
+    # the integer forms alone overflow a long; the query sums double
+    "big": [("a", "9223372036854775800"), ("b", "100"), ("b", "0.5")],
+}
+_SUM_BODY = "{ ?x <http://x/v> ?v }"
+_SUM_U = "select (sum(?v) as ?s) " + _SUM_BODY
+_SUM_G = "select ?x (sum(?v) as ?s) " + _SUM_BODY + " group by ?x order by ?x"
+_SUM_UD = "select (sum(distinct ?v) as ?s) " + _SUM_BODY
+_SUM_GD = (
+    "select ?x (sum(distinct ?v) as ?s) " + _SUM_BODY
+    + " group by ?x order by ?x"
+)
+_SUM_GH = (
+    "select ?x " + _SUM_BODY + " group by ?x having(sum(?v) > 4) order by ?x"
+)
+_SUM_UH = "select (count(?v) as ?n) " + _SUM_BODY + " having(sum(?v) > 4)"
+_SUM_GO = (
+    "select ?x (count(?v) as ?n) " + _SUM_BODY
+    + " group by ?x order by desc(sum(?v))"
+)
+_SUM_UM = "select ((sum(?v) / count(?v)) as ?m) " + _SUM_BODY
+_SUM_GM = (
+    "select ?x ((sum(?v) / count(?v)) as ?m) " + _SUM_BODY
+    + " group by ?x order by ?x"
+)
+_XS, _XN = ("x", "string"), ("n", "bigint")
+_LONG, _DBL = ("s", "bigint"), ("s", "double")
+
+
+@pytest.mark.parametrize(
+    "data, q, dtypes, rows",
+    [
+        ("int", _SUM_U, [_LONG], [(15,)]),
+        ("int", _SUM_G, [_XS, _LONG], [("a", 12), ("b", 3)]),
+        ("int", _SUM_UD, [_LONG], [(15,)]),
+        ("int", _SUM_GD, [_XS, _LONG], [("a", 12), ("b", 3)]),
+        ("int", _SUM_GH, [_XS], [("a",)]),
+        ("int", _SUM_UH, [_XN], [(4,)]),
+        ("int", _SUM_GO, [_XS, _XN], [("a", 2), ("b", 2)]),
+        ("int", _SUM_UM, [("m", "double")], [(3.75,)]),
+        ("int", _SUM_GM, [_XS, ("m", "double")], [("a", 6.0), ("b", 1.5)]),
+        ("mixed", _SUM_U, [_DBL], [(15.5,)]),
+        # per-QUERY typing: group b holds only integers yet sums double
+        ("mixed", _SUM_G, [_XS, _DBL], [("a", 12.5), ("b", 3.0)]),
+        ("mixed", _SUM_UD, [_DBL], [(15.5,)]),
+        ("mixed", _SUM_GD, [_XS, _DBL], [("a", 12.5), ("b", 3.0)]),
+        ("mixed", _SUM_GH, [_XS], [("a",)]),
+        ("mixed", _SUM_UM, [("m", "double")], [(3.875,)]),
+        ("mixed", _SUM_GM, [_XS, ("m", "double")], [("a", 6.25), ("b", 1.5)]),
+        ("nonnum", _SUM_U, [_LONG], [(None,)]),
+        ("nonnum", _SUM_G, [_XS, _LONG], [("a", None), ("b", None)]),
+        ("nonnum", _SUM_UD, [_LONG], [(None,)]),
+        ("nonnum", _SUM_GH, [_XS], []),
+        ("nonnum", _SUM_UH, [_XN], []),
+        ("nonnum", _SUM_UM, [("m", "double")], [(None,)]),
+        ("empty", _SUM_U, [_LONG], [(None,)]),
+        ("empty", _SUM_G, [_XS, _LONG], []),
+        ("empty", _SUM_UD, [_LONG], [(None,)]),
+        ("empty", _SUM_GD, [_XS, _LONG], []),
+        ("empty", _SUM_UH, [_XN], []),
+        ("empty", _SUM_UM, [("m", "double")], [(None,)]),
+        ("empty", _SUM_GM, [_XS, ("m", "double")], []),
+        ("dup", _SUM_U, [_LONG], [(7,)]),
+        ("dup", _SUM_UD, [_LONG], [(5,)]),
+        ("dup", _SUM_GH, [_XS], [("b",)]),
+        ("dup", _SUM_UH, [_XN], [(3,)]),
+        ("dup", _SUM_GO, [_XS, _XN], [("b", 2), ("a", 1)]),
+        ("big", _SUM_U, [_DBL], [(9.223372036854776e18,)]),
+        ("big", _SUM_UD, [_DBL], [(9.223372036854776e18,)]),
+        (
+            "big",
+            _SUM_G,
+            [_XS, _DBL],
+            [("a", 9.223372036854776e18), ("b", 100.5)],
+        ),
+    ],
+)
+def test_sum_typing_parity(spark, data, q, dtypes, rows):
+    """SUM's long-vs-double typing, ungrouped and grouped, with
+    DISTINCT, HAVING, ORDER BY and SUM inside a SELECT expression. Each
+    expected dtype and value is the one the solutions-level typing scan
+    returned for every query; an ungrouped SUM is now typed inside its
+    own one-row collect. Empty input sums to a ``bigint`` NULL."""
+    t = spark.createDataFrame(
+        [(x, "http://x/v", v, "d") for x, v in _SUM_TYPING_DATA[data]],
+        "s string, p string, o string, dataset string",
+    )
+    got = select_text(t, q)
+    assert got.dtypes == dtypes
+    assert [tuple(r) for r in got.collect()] == rows
+
+
 def test_aggregates_having(spark, catalog):
     q = select_text(
         catalog,
@@ -1555,8 +1652,8 @@ def test_expression_aggregates(spark):
 
 def test_having_expression_aggregates(spark):
     """Direct-form HAVING admits EXPRESSION operands too —
-    HAVING(SUM(?o * 2) > 5) — via the same hidden-BIND machinery; the
-    operand regex takes one paren-nesting level (SUM(strlen(?x)))."""
+    HAVING(SUM(?o * 2) > 5) — via the same hidden-BIND machinery, at
+    any nesting depth (SUM(strlen(?x)))."""
     from pyspark.sql import functions as F
 
     t = spark.createDataFrame(

@@ -4,21 +4,28 @@ The reference's endpoint is Jena-backed, so its users can write paths
 (Sparql.java:21-29 passes query text straight through); this engine
 rewrites them into the existing algebra at parse time — sequences chain
 fresh internal variables, inverse swaps the ends, alternation becomes a
-UNION group — and quantified steps (``+ * ?``) evaluate as iterative
-frontier closure (serve.path_closure), the same lineage-checkpointed
-loop discipline as the sameAs connected-components operator.
+UNION group — and quantified steps (``+ *``) evaluate as frontier
+closure (serve.path_closure): on the driver over the step's
+once-collected edge relation under ``canon.LOCAL_THRESHOLD``, as
+lineage-checkpointed distributed rounds (the sameAs connected-components
+discipline) above it. A hypothesis property pins both regimes to one
+naive closure over random small graphs.
 """
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
+from linkedspending_spark.operators import canon
+from linkedspending_spark.sources.local import local_frame
 from linkedspending_spark.sparql import (
     SparqlSyntaxError,
     parse_select,
     select_text,
 )
-from linkedspending_spark.serve import path_closure
+from linkedspending_spark.serve import bgp_stats, path_closure
 from tools.plan_audit import plan_of
 
 PRE = "PREFIX p: <p:> PREFIX u: <u:> "
@@ -101,6 +108,41 @@ def test_plus_var_var_is_pair_closure(graph):
     assert ("u:b", "u:b") in got  # cycle: b reaches itself in 3 hops
 
 
+def test_pair_closure_outgrowing_the_bound_runs_distributed(
+    graph, monkeypatch
+):
+    """4 edges fit a bound of 5; their 12 closure pairs do not, so the
+    driver closure stops and the checkpointed rounds answer."""
+    want = _run(graph, "SELECT ?s ?o { ?s p:knows+ ?o }")
+    monkeypatch.setattr(canon, "LOCAL_THRESHOLD", 5)
+    assert _run(graph, "SELECT ?s ?o { ?s p:knows+ ?o }") == want
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SELECT ?o { u:a p:knows+ ?o }",
+        "SELECT ?s ?o { ?s (p:knows|p:likes)+ ?o }",
+        "SELECT ?s ?o { ?s (p:knows/p:knows)* ?o }",
+    ],
+)
+def test_stats_over_the_bound_skip_the_edge_collect(graph, monkeypatch, q):
+    """With ``bgp_stats``, an element whose predicate counts exceed the
+    bound (4 ``p:knows`` edges, 1 ``p:likes``; bound 3) goes to the
+    checkpointed rounds without collecting its edges; under the bound
+    the stats change nothing."""
+    stats = bgp_stats(graph)
+    want = _run(graph, q)
+    assert _run(graph, q, stats=stats) == want
+    monkeypatch.setattr(canon, "LOCAL_THRESHOLD", 3)
+
+    def no_collect(df, limit=None):
+        raise AssertionError("edge relation collected over the bound")
+
+    monkeypatch.setattr(canon, "bounded_rows", no_collect)
+    assert _run(graph, q, stats=stats) == want
+
+
 def test_star_var_var_includes_literal_identity(graph):
     """Zero-length paths pair every graph NODE with itself — including
     literal objects (the spec's ZeroLengthPath over graph terms)."""
@@ -160,6 +202,25 @@ def test_with_kinds_types_path_bound_var(graph):
     assert rows[0]["o__datatype"].endswith("#string")
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SELECT ?o { u:a p:knows* ?o }",
+        "SELECT ?s { ?s p:knows+ u:d }",
+        "SELECT ?s ?o { ?s p:knows+ ?o }",
+        "SELECT ?s ?o { ?s p:knows* ?o }",
+        "SELECT ?x { ?x p:knows+ ?x }",
+    ],
+)
+def test_with_kinds_types_closure_in_both_regimes(graph, monkeypatch, q):
+    """A driver-closed path types only its reached nodes; they get the
+    kinds the whole-table map gives in the checkpointed rounds."""
+    want = _run(graph, q, with_kinds=True)
+    assert ("u:b", "uri", None, None) in {r[-4:] for r in want}
+    monkeypatch.setattr(canon, "LOCAL_THRESHOLD", 0)
+    assert _run(graph, q, with_kinds=True) == want
+
+
 def test_count_star_counts_path_multiplicity(graph):
     got = _run(graph, "SELECT (COUNT(*) AS ?n) { ?s p:knows+ ?o }")
     assert got == [(12,)]
@@ -186,9 +247,126 @@ def test_path_edge_scan_pushes_predicate(graph, tmp_path):
     assert "p:knows" in plan and "u:a" in plan
 
 
-def test_not_converged_raises(graph):
-    with pytest.raises(ValueError, match="did not converge"):
-        path_closure(graph, "?s", "p:knows", "?o", "+", max_hops=1).collect()
+def test_not_converged_raises(graph, monkeypatch):
+    """The ``max_hops`` cap holds for every end shape in both regimes:
+    closed on the driver and, with the bound at 0, in checkpointed
+    rounds."""
+    ends = [("?s", "?o"), ("u:a", "?o"), ("?s", "u:d"), ("u:a", "u:d")]
+    for bound in (canon.LOCAL_THRESHOLD, 0):
+        monkeypatch.setattr(canon, "LOCAL_THRESHOLD", bound)
+        for s, o in ends:
+            with pytest.raises(ValueError, match="did not converge"):
+                path_closure(
+                    graph, s, "p:knows", o, "+", max_hops=1
+                ).collect()
+
+
+# -- property: both regimes against a naive closure ---------------------------
+
+NODES = [f"u:n{i}" for i in range(6)]
+ABSENT = "u:n6"  # a constant no triple mentions
+LIT = "lit"
+SHAPES = ("subject", "object", "both", "var-var", "same-var")
+
+
+def _naive(edges, quant: str, shape: str, a: str, b: str) -> list[tuple]:
+    """First-principles ArbitraryLengthPath over the edge SET: ``+``
+    pairs nodes joined by 1..n edges, ``*`` adds each node (a constant
+    end even when absent) paired with itself."""
+    nodes = {x for e in edges for x in e}
+
+    def reach(x: str) -> set[str]:
+        out, frontier = set(), {x}
+        while frontier:
+            frontier = {v for u, v in edges if u in frontier} - out
+            out |= frontier
+        return out
+
+    def holds(x: str, y: str) -> bool:
+        return y in reach(x) or (quant == "*" and x == y)
+
+    if shape == "subject":
+        got = {(y,) for y in reach(a) | ({a} if quant == "*" else set())}
+    elif shape == "object":
+        got = {(x,) for x in nodes | {b} if holds(x, b)}
+    elif shape == "both":
+        got = {()} if holds(a, b) else set()
+    elif shape == "var-var":
+        got = {(x, y) for x in nodes for y in nodes if holds(x, y)}
+    else:
+        got = {(x,) for x in nodes if holds(x, x)}
+    return sorted(got)
+
+
+def _path_query(quant: str, shape: str, a: str, b: str) -> str:
+    step = f"p:knows{quant}"
+    return {
+        "subject": f"SELECT ?o {{ <{a}> {step} ?o }}",
+        "object": f"SELECT ?s {{ ?s {step} <{b}> }}",
+        "both": f"ASK {{ <{a}> {step} <{b}> }}",
+        "var-var": f"SELECT ?s ?o {{ ?s {step} ?o }}",
+        "same-var": f"SELECT ?x {{ ?x {step} ?x }}",
+    }[shape]
+
+
+def _every_shape(test):
+    """Pin each quantifier × end shape once on a graph with a cycle, a
+    self-loop and a literal, ahead of the random draws."""
+    for quant in "+*":
+        for shape in SHAPES:
+            test = example(
+                pairs=[(0, 1), (1, 2), (2, 0), (3, 3), (2, 4)],
+                lit_from=4,
+                quant=quant,
+                shape=shape,
+                a=0,
+                b=2,
+            )(test)
+    return test
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 5), st.integers(0, 5)), max_size=11
+    ),
+    lit_from=st.integers(0, 5),
+    quant=st.sampled_from("+*"),
+    shape=st.sampled_from(SHAPES),
+    a=st.integers(0, 6),
+    b=st.integers(0, 6),
+)
+@_every_shape
+def test_random_closure_matches_naive_in_both_regimes(
+    spark, monkeypatch, pairs, lit_from, quant, shape, a, b
+):
+    """Random graphs of at most 12 ``p:knows`` edges over 6 nodes —
+    cycles, self-loops and one literal object — through
+    ``select_text``: the driver closure and the checkpointed rounds
+    (bound monkeypatched to 0) return the naive closure's answer."""
+    edges = {(NODES[u], NODES[v]) for u, v in pairs}
+    edges.add((NODES[lit_from], LIT))
+    rows = [
+        (u, "p:knows", v, "literal" if v == LIT else "uri", None, None)
+        for u, v in sorted(edges)
+    ]
+    graph = local_frame(
+        spark,
+        rows,
+        "s string, p string, o string, o_kind string, "
+        "o_datatype string, o_lang string",
+    )
+    a, b = (NODES + [ABSENT])[a], (NODES + [ABSENT])[b]
+    q = _path_query(quant, shape, a, b)
+    want = _naive(edges, quant, shape, a, b)
+    assert _run(graph, q) == want, q
+    with monkeypatch.context() as m:
+        m.setattr(canon, "LOCAL_THRESHOLD", 0)
+        assert _run(graph, q) == want, q
 
 
 @pytest.mark.parametrize(
