@@ -35,9 +35,13 @@ def bounded_rows(df: DataFrame, limit: int | None = None) -> list | None:
     """``df``'s rows when there are at most ``limit`` (default
     :data:`LOCAL_THRESHOLD`), else ``None``. One Spark job (CollectLimit
     reads partitions incrementally); none when ``df`` is a LocalRelation
-    under filters and projections, which the optimizer folds away."""
+    under filters and projections, which the optimizer folds away. A
+    bound of 0 means "distributed": ``None`` without a job, even for an
+    empty ``df``."""
     if limit is None:
         limit = LOCAL_THRESHOLD
+    if limit <= 0:
+        return None
     rows = df.limit(limit + 1).collect()
     return rows if len(rows) <= limit else None
 
@@ -243,14 +247,11 @@ def connected_components(
     # symmetrize once; all later rounds keep orientation invariants
     e = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
 
-    if local_threshold is None:
-        local_threshold = LOCAL_THRESHOLD
-    if local_threshold:
-        # one job: a big graph pays one distinct map pass + a bounded
-        # fetch, negligible next to the star rounds it proceeds to run
-        rows = bounded_rows(e, local_threshold)
-        if rows is not None:
-            return local_components(edges.sparkSession, rows)
+    # one job: a big graph pays one distinct map pass + a bounded
+    # fetch, negligible next to the star rounds it proceeds to run
+    rows = bounded_rows(e, local_threshold)
+    if rows is not None:
+        return local_components(edges.sparkSession, rows)
 
     # Both stars are formulated WITHOUT collect_set: a hub node's full
     # adjacency never materializes in one aggregation row. min() is

@@ -491,6 +491,12 @@ _PLAIN = {
     "sha1": "sha1",
 }
 
+#: arithmetic goes through Spark's try_* forms: an operand that does not
+#: read as a number under Spark's own coercion, an overflow or a division
+#: by zero is NULL (SPARQL's expression error) for its own row, not an
+#: ANSI failure of the whole query. The coercion still types the result:
+#: a lexical form beside an integer is an integer (so a fractional form
+#: there is an error, never truncated), beside a decimal or double a double
 _BINARY = {
     "||": operator.or_,
     "&&": operator.and_,
@@ -500,10 +506,10 @@ _BINARY = {
     "<=": operator.le,
     ">": operator.gt,
     ">=": operator.ge,
-    "+": operator.add,
-    "-": operator.sub,
-    "*": operator.mul,
-    "/": operator.truediv,
+    "+": F.try_add,
+    "-": F.try_subtract,
+    "*": F.try_multiply,
+    "/": F.try_divide,
 }
 
 _DATE_PARTS = {
@@ -558,10 +564,12 @@ def compile_expr(node, col=F.col) -> Column:
     name, args = node[1], node[2]
     x = [compile_expr(a, col) for a in args]
     if name in _BINARY:
-        if name in ("=", "!=", "<", "<=", ">", ">="):
-            # ?v <op> 5 compares the variable NUMERICALLY: a lexical
-            # form that is not a number drops its row (try_cast → NULL,
-            # SPARQL's expression error) instead of throwing under ANSI
+        if name in ("=", "!=", "<", "<=", ">", ">=", "/"):
+            # ?v <op> 5 compares (and ?v / 5 divides) the variable as a
+            # double: a lexical form that is not a number drops its row
+            # (try_cast → NULL, SPARQL's expression error) instead of
+            # throwing under ANSI, and a fractional one is not read as
+            # an integer
             for i in (0, 1):
                 if args[i][0] == "var" and _is_number(args[1 - i]):
                     x[i] = x[i].try_cast("double")

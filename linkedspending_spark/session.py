@@ -4,8 +4,8 @@ Local-mode testing stands in for a multi-executor cluster; the configs
 below are the ones that transfer to a 1000-executor deployment:
 AQE (runtime re-plan + skew-join splitting), Arrow for pandas UDFs,
 UTC session time zone (oracle comparability), shuffle partitions sized
-to the parallelism level instead of the 200 default, and a generated-code
-class cache sized to the engine's working set.
+to the parallelism level instead of the 200 default, a generated-code
+class cache sized to the engine's working set, and zstd parquet.
 """
 
 from __future__ import annotations
@@ -55,6 +55,15 @@ def get_spark(
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
         )
+        # every table the engine writes (landed buckets, canonical table,
+        # manifest, metrics, streaming sink): zstd stores the long,
+        # prefix-sharing URI columns in ~0.64x snappy's bytes; readers
+        # (Spark, pyarrow, DuckDB) take the codec from the file footer
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        # PySpark's per-call origin capture costs ~10 py4j round trips
+        # per Column/functions call only to name the Python call site
+        # in Spark's error text. Static conf, like the cache size
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -60,7 +60,9 @@ reference's own queries use, plus the group algebra
   expression-error semantics) instead of throwing from ANSI codegen
   (pinned in tests; do not "fix" either away). Unquoted numbers keep
   Spark SQL's literal types (``5`` int, ``1.5`` decimal), so arithmetic
-  and SUM typing follow Spark. ``LANG`` / ``DATATYPE`` /
+  and SUM typing follow Spark; an arithmetic operand that does not read
+  as a number under that typing is an error for its own row (NULL), not
+  for the query. ``LANG`` / ``DATATYPE`` /
   ``isURI/isIRI/isLiteral/isBlank`` / ``sameTerm`` read a variable's
   term-metadata companions — they need a triple table carrying
   ``o_kind``/``o_datatype``/``o_lang`` (raise otherwise); LANG or
@@ -1929,11 +1931,9 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
 
     EXPRESSION operands (``SUM(?a * ?b)``) aggregate their hidden
     BIND column's native type directly (integer expressions sum as
-    long → ``xsd:integer``). Raw arithmetic over a MALFORMED lexical
-    form throws under ANSI (same as BIND — Spark's error message
-    itself points at ``try_cast``); route dirty data through the
-    exposed ``try_cast(?v as double)`` escape hatch for SPARQL's
-    error-drop semantics."""
+    long → ``xsd:integer``). Arithmetic over a lexical form that is
+    not a number is NULL for its row (same as BIND), so the aggregate
+    skips it — SPARQL's error-drop."""
     missing = [v for v in q.group_by if v not in df.columns]
     if missing:
         raise SparqlSyntaxError(

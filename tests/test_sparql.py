@@ -895,6 +895,40 @@ def test_filter_numeric_drops_malformed_rows(spark):
     assert len(got) == 3
 
 
+def test_arithmetic_over_malformed_forms_is_a_row_error(spark):
+    """``+ - * /`` over a lexical form that is not a number is an
+    expression error for that row only: unbound in SELECT, dropped by
+    FILTER, skipped by SUM — never CAST_INVALID_INPUT for the whole
+    query. Beside an integer the operand is typed as an integer, so a
+    fractional form there is an error too, never truncated; beside a
+    decimal, and under ``/``, it is read as a double."""
+    from pyspark.sql import functions as F
+
+    t = spark.createDataFrame(
+        [("a", "p", "10"), ("b", "p", "abc"), ("c", "p", "-2.5")],
+        "s string, p string, o string",
+    ).withColumn("dataset", F.lit("d"))
+
+    def run(q):
+        df = select_text(t, q)
+        return dict(df.dtypes), sorted(tuple(r) for r in df.collect())
+
+    types, rows = run("SELECT ?s (?o + 1 AS ?t) { ?s ?p ?o }")
+    assert types["t"] == "bigint"
+    assert rows == [("a", 11), ("b", None), ("c", None)]
+    _, rows = run("SELECT ?s { ?s ?p ?o FILTER(?o * 2 > 3) }")
+    assert rows == [("a",)]
+    types, rows = run(
+        "SELECT ?s (SUM(?o * 2) AS ?t) { ?s ?p ?o } GROUP BY ?s"
+    )
+    assert types["t"] == "bigint"
+    assert rows == [("a", 20), ("b", None), ("c", None)]
+    _, rows = run("SELECT ?s (?o * 2.0 AS ?t) { ?s ?p ?o }")
+    assert rows == [("a", 20.0), ("b", None), ("c", -5.0)]
+    _, rows = run("SELECT ?s (?o / 2 AS ?t) { ?s ?p ?o }")
+    assert rows == [("a", 5.0), ("b", None), ("c", -1.25)]
+
+
 def test_minus_and_exists(spark, catalog):
     """MINUS (left-anti on shared vars) and FILTER [NOT] EXISTS
     (semi/anti): the three catalog datasets minus the incomplete one;
@@ -1605,7 +1639,8 @@ def test_expression_aggregates(spark):
     its native column type: integer expressions sum as long
     (xsd:integer in W3C output), fractional as double. try_cast is the
     documented escape hatch for malformed operands (error-drop); raw
-    arithmetic over dirty lexical forms follows BIND's ANSI semantics."""
+    arithmetic over a dirty lexical form is an error for its row, so
+    the aggregate skips it."""
     from pyspark.sql import functions as F
 
     t = spark.createDataFrame(

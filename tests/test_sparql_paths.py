@@ -221,6 +221,27 @@ def test_with_kinds_types_closure_in_both_regimes(graph, monkeypatch, q):
     assert _run(graph, q, with_kinds=True) == want
 
 
+def test_bound_zero_closes_an_empty_edge_relation_in_rounds(graph, monkeypatch):
+    """A bound of 0 means "distributed" for every caller, an empty edge
+    relation included: a ``+`` path over a predicate no triple carries
+    takes the checkpointed rounds, not the driver closure, and its
+    answer is unchanged (empty)."""
+    queries = ("SELECT ?s ?o { ?s p:none+ ?o }", "SELECT ?o { u:a p:none+ ?o }")
+    want = [_run(graph, q) for q in queries]
+    assert want == [[], []]
+    rounds = []
+    checkpoint = canon.lineage_checkpoint
+    monkeypatch.setattr(
+        canon, "lineage_checkpoint", lambda df: rounds.append(df) or checkpoint(df)
+    )
+    monkeypatch.setattr(canon, "LOCAL_THRESHOLD", 0)
+    for q, w in zip(queries, want):
+        n = len(rounds)
+        assert _run(graph, q) == w
+        assert len(rounds) > n, q
+    assert canon.bounded_rows(graph.where("p = 'p:none'"), 0) is None
+
+
 def test_count_star_counts_path_multiplicity(graph):
     got = _run(graph, "SELECT (COUNT(*) AS ?n) { ?s p:knows+ ?o }")
     assert got == [(12,)]

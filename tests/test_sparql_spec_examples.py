@@ -162,8 +162,8 @@ def test_bind_and_filter(books):
     bound variable. Documented divergence from the spec example: the
     engine types by LEXICAL FORM under SQL coercion, so the literal
     must be written ``1.0`` (double context) — a bare ``1`` puts the
-    subtraction in integer context and ANSI rejects the fractional
-    lexical form loudly (the error itself points at try_cast)."""
+    subtraction in integer context, where the fractional lexical form
+    is an expression error for its row."""
     got = _rows(select_text(
         books,
         PRE + "SELECT ?x ?price { ?x <http://example/price> ?p . "
