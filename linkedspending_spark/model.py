@@ -112,6 +112,3 @@ TRIPLE_SCHEMA = T.StructType(TRIPLE_FIELDS)
 TRIPLE_SCHEMA_PARTITIONED = T.StructType(
     TRIPLE_FIELDS + [T.StructField("dataset", T.StringType(), False)]
 )
-
-# struct type used inside array<struct> emission before explode
-TRIPLE_STRUCT = T.StructType(TRIPLE_FIELDS)

@@ -168,8 +168,7 @@ SQL_MENTION_JOIN = _sql_mention_join()
 # aggregations (A1,A2,A3,A8) and predicates (P1,P5)
 # --------------------------------------------------------------------------
 
-# subsumed by q_conv_stats (registry entry 'conv_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
+# covered in the registry by 'conv_stats'; timed by bench.BENCH_QUERIES.
 def q_conv_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: per-conversation completeness ratio (ConvertWorker.java:798-804)."""
     t = transcripts_from_events(spark, sf_dir)
@@ -188,23 +187,6 @@ def q_conv_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_CONV_COMPLETENESS = f"""
-{_TRANSCRIPTS_CTE}
-SELECT conv_id,
-       COUNT(*) AS n_turns,
-       CAST(SUM(CASE WHEN tool IS NULL OR trim(tool) IN ('', 'null') THEN 1 ELSE 0 END
-              + CASE WHEN role IS NULL THEN 1 ELSE 0 END
-              + CASE WHEN text IS NULL THEN 1 ELSE 0 END
-              + CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
-       ROUND(1.0 - SUM(CASE WHEN tool IS NULL OR trim(tool) IN ('', 'null') THEN 1 ELSE 0 END
-              + CASE WHEN role IS NULL THEN 1 ELSE 0 END
-              + CASE WHEN text IS NULL THEN 1 ELSE 0 END
-              + CASE WHEN ts IS NULL THEN 1 ELSE 0 END) / (COUNT(*) * 4.0), 6)
-         AS completeness
-FROM transcripts GROUP BY conv_id
-"""
-
-
 def _per_column_missing_agg(t: DataFrame) -> DataFrame:
     """ONE scan computing every per-column missing count (P5/A2).
 
@@ -221,75 +203,6 @@ def _per_column_missing_agg(t: DataFrame) -> DataFrame:
         F.sum(clean_string("tool").isNull().cast("int")).cast("long").alias("m_tool"),
         F.sum(F.col("ts").isNull().cast("int")).cast("long").alias("m_ts"),
     )
-
-
-# subsumed by q_property_profile (registry entry 'property_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_null_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5: per-column missing counts, single scan + stack unpivot."""
-    t = transcripts_from_events(spark, sf_dir)
-    return _per_column_missing_agg(t).selectExpr(
-        "stack(4, 'role', m_role, 'text', m_text, 'tool', m_tool, 'ts', m_ts)"
-        " AS (col, n_missing)",
-        "n",
-    )
-
-
-SQL_NULL_RATES = f"""
-{_TRANSCRIPTS_CTE}
-SELECT 'role' AS col, CAST(SUM(CASE WHEN role IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_missing, COUNT(*) AS n FROM transcripts
-UNION ALL
-SELECT 'text', CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT), COUNT(*) FROM transcripts
-UNION ALL
-SELECT 'tool', CAST(SUM(CASE WHEN tool IS NULL OR trim(tool) IN ('', 'null') THEN 1 ELSE 0 END) AS BIGINT), COUNT(*) FROM transcripts
-UNION ALL
-SELECT 'ts', CAST(SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT), COUNT(*) FROM transcripts
-"""
-
-
-# subsumed by q_property_profile (registry entry 'property_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_property_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: per-property completeness ratio (ConvertWorker.java:805-814).
-
-    Single scan (see :func:`_per_column_missing_agg`), then completeness
-    = 1 − missing/expected per property, matching the reference's
-    per-component ratio triples.
-    """
-    t = transcripts_from_events(spark, sf_dir)
-    return _per_column_missing_agg(t).selectExpr(
-        "stack(4, 'role', m_role, 'text', m_text, 'tool', m_tool, 'ts', m_ts)"
-        " AS (col, n_missing)",
-        "n",
-    ).select(
-        F.concat(F.lit(ONT), F.lit("transcripts-"), F.col("col")).alias("property"),
-        "n_missing",
-        "n",
-        F.round(F.lit(1.0) - F.col("n_missing") / F.col("n"), 6).alias("completeness"),
-    )
-
-
-SQL_PROPERTY_COMPLETENESS = f"""
-{_TRANSCRIPTS_CTE},
-a AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(CASE WHEN role IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS m_role,
-         CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS m_text,
-         CAST(SUM(CASE WHEN tool IS NULL OR trim(tool) IN ('', 'null') THEN 1 ELSE 0 END) AS BIGINT) AS m_tool,
-         CAST(SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS m_ts
-  FROM transcripts
-),
-u AS (
-  SELECT 'role' AS col, m_role AS n_missing, n FROM a
-  UNION ALL SELECT 'text', m_text, n FROM a
-  UNION ALL SELECT 'tool', m_tool, n FROM a
-  UNION ALL SELECT 'ts', m_ts, n FROM a
-)
-SELECT '{{ONT}}transcripts-' || col AS property,
-       n_missing, n,
-       ROUND(1.0 - n_missing / (1.0 * n), 6) AS completeness
-FROM u
-""".replace("{ONT}", ONT)
 
 
 def q_territory_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,27 +278,6 @@ GROUP BY 1, 3
 """
 
 
-# subsumed by q_corpus_stats (registry entry 'corpus_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_distinct_years(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: distinct refYear set (ConvertWorker.java:817-820)."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.select(F.year("ts").cast("int").alias("y")).distinct()
-
-
-SQL_DISTINCT_YEARS = "SELECT DISTINCT CAST(year(ts) AS INT) AS y FROM events"
-
-
-# subsumed by q_corpus_stats (registry entry 'corpus_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_count_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8: total row count (entries.json?pagesize=0 analog)."""
-    return _read(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n"))
-
-
-SQL_COUNT_ROWS = "SELECT COUNT(*) AS n FROM lineitem"
-
-
 def q_events_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: count-histogram of events per type (CreateHistogram analog)."""
     ev = _read(spark, sf_dir, "events")
@@ -425,39 +317,6 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 # --------------------------------------------------------------------------
 # joins & set ops (J1,J2,J4,J5,J6,U1,U2)
 # --------------------------------------------------------------------------
-
-# subsumed by q_set_ops (registry entry 'set_ops') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalog diff: customers that never ordered (Boss.java:61-76 analog)."""
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-SQL_ANTI_JOIN = """
-SELECT c_custkey, c_name FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-"""
-
-
-# subsumed by q_set_ops (registry entry 'set_ops') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_pool_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U2: scheduling-pool union with dedup (Boss.java:69-76)."""
-    c = _read(spark, sf_dir, "customer")
-    a = c.where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    b = c.where(F.col("c_acctbal") > 9000).select("c_custkey")
-    return a.union(b).distinct()
-
-
-SQL_POOL_UNION = """
-SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-UNION
-SELECT c_custkey FROM customer WHERE c_acctbal > 9000
-"""
 
 
 def q_broadcast_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,111 +445,9 @@ SELECT o_custkey, o_orderkey, o_totalprice, CAST(rk AS INT) AS rk FROM (
 """
 
 
-# subsumed by q_conv_stats (registry entry 'conv_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_freshness_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Datasets by modified time (O2/P7 freshness analog)."""
-    t = transcripts_from_events(spark, sf_dir)
-    return t.groupBy("conv_id").agg(
-        F.date_format(F.max("ts"), ISO).alias("latest"),
-        F.count(F.lit(1)).alias("n_turns"),
-    )
-
-
-SQL_FRESHNESS_SORT = f"""
-{_TRANSCRIPTS_CTE}
-SELECT conv_id, strftime(MAX(ts), '{ISO_DUCK}') AS latest, COUNT(*) AS n_turns
-FROM transcripts GROUP BY conv_id
-"""
-
-
 # --------------------------------------------------------------------------
 # scalar functions (F1-F9, F11)
 # --------------------------------------------------------------------------
-
-# subsumed by q_order_fields (registry entry 'order_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_uri_mint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1: deterministic observation-URI minting by concat (ConvertWorker.java:609-611)."""
-    o = _read(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.concat(
-            F.lit(INST + "observation-orders-"), F.col("o_orderkey").cast("string")
-        ).alias("obs_uri"),
-    )
-
-
-SQL_URI_MINT = f"""
-SELECT o_orderkey,
-       '{INST}observation-orders-' || CAST(o_orderkey AS STRING) AS obs_uri
-FROM orders
-"""
-
-
-# subsumed by q_event_fields (registry entry 'event_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_date_lexical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2: canonical ISO / gYear / date lexical forms (zero-padded)."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.date_format("ts", ISO).alias("iso"),
-        F.format_string("%04d", F.year("ts")).alias("gyear"),
-        F.date_format("ts", "yyyy-MM-dd").alias("d"),
-    )
-
-
-SQL_DATE_LEXICAL = f"""
-SELECT event_id, strftime(ts, '{ISO_DUCK}') AS iso,
-       printf('%04d', CAST(year(ts) AS INT)) AS gyear,
-       strftime(ts, '%Y-%m-%d') AS d
-FROM events
-"""
-
-
-# subsumed by q_event_fields (registry entry 'event_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_string_date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3+F4: synthesize messy date strings, strip offsets, pad, parse."""
-    ev = _read(spark, sf_dir, "events")
-    raw = (
-        F.when(F.col("event_id") % 3 == 0, F.date_format("ts", "yyyy-MM-dd"))
-        .when(
-            F.col("event_id") % 3 == 1,
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'.00Z'"),
-        )
-        .otherwise(F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'.00+02:00'"))
-    )
-    df = ev.select("event_id", raw.alias("raw"))
-    return df.select(
-        "event_id",
-        "raw",
-        F.date_format(parse_string_date(F.col("raw")), ISO).alias("parsed"),
-    )
-
-
-SQL_STRING_DATE_ROUNDTRIP = """
-WITH raws AS (
-  SELECT event_id,
-         CASE CAST(event_id % 3 AS INT)
-           WHEN 0 THEN strftime(ts, '%Y-%m-%d')
-           WHEN 1 THEN strftime(ts, '%Y-%m-%dT%H:%M:%S.00Z')
-           ELSE strftime(ts, '%Y-%m-%dT%H:%M:%S.00+02:00')
-         END AS raw
-  FROM events
-), norm AS (
-  SELECT event_id, raw,
-         CASE WHEN length(regexp_replace(raw, '\\+[0-9][0-9]:[0-9][0-9]', '')) = 10
-              THEN regexp_replace(raw, '\\+[0-9][0-9]:[0-9][0-9]', '') || 'T00:00:00.00Z'
-              ELSE regexp_replace(raw, '\\+[0-9][0-9]:[0-9][0-9]', '')
-         END AS n
-  FROM raws
-)
-SELECT event_id, raw,
-       strftime(CAST(replace(n, 'Z', '') AS TIMESTAMP), '%Y-%m-%dT%H:%M:%SZ') AS parsed
-FROM norm
-"""
 
 
 def q_date_parse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -769,154 +526,11 @@ FROM parsed
 """
 
 
-# subsumed by q_event_fields (registry entry 'event_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_int_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5: int-parse with string fallback over synthesized mixed strings."""
-    ev = _read(spark, sf_dir, "events")
-    s = (
-        F.when(F.col("event_id") % 3 == 0, F.col("event_id").cast("string"))
-        .when(
-            F.col("event_id") % 3 == 1,
-            F.round(F.col("value"), 2).cast("decimal(18,2)").cast("string"),
-        )
-        .otherwise(F.lit("null"))
-    )
-    df = ev.select("event_id", s.alias("s"))
-    is_int = F.col("s").rlike("^[+-]?[0-9]+$")
-    return df.select(
-        "event_id",
-        F.when(is_int, F.col("s").cast("int")).alias("int_val"),
-        F.when(
-            ~is_int & (clean_string(F.col("s")).isNotNull()), F.col("s")
-        ).alias("fallback"),
-    )
-
-
-SQL_INT_FALLBACK = """
-WITH src AS (
-  SELECT event_id,
-         CASE CAST(event_id % 3 AS INT)
-           WHEN 0 THEN CAST(event_id AS STRING)
-           WHEN 1 THEN CAST(CAST(ROUND(value, 2) AS DECIMAL(18,2)) AS STRING)
-           ELSE 'null'
-         END AS s
-  FROM events
-)
-SELECT event_id,
-       CASE WHEN regexp_matches(s, '^[+-]?[0-9]+$') THEN CAST(s AS INT) END AS int_val,
-       CASE WHEN NOT regexp_matches(s, '^[+-]?[0-9]+$')
-                 AND NOT (s IS NULL OR trim(s) IN ('', 'null')) THEN s END AS fallback
-FROM src
-"""
-
-
-# subsumed by q_order_fields (registry entry 'order_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_year_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6: default-year = first 4 chars cast to int (ConvertWorker.java:226-229)."""
-    o = _read(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.substring(F.date_format("o_orderdate", "yyyy-MM-dd"), 1, 4)
-        .try_cast("int")
-        .alias("yr"),
-    )
-
-
-SQL_YEAR_SUBSTRING = """
-SELECT o_orderkey,
-       CAST(substr(strftime(o_orderdate, '%Y-%m-%d'), 1, 4) AS INT) AS yr
-FROM orders
-"""
-
-
-# subsumed by q_event_fields (registry entry 'event_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_json_get(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F8: JSON field access via get_json_object on events.props."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("k"),
-    )
-
-
-SQL_JSON_GET = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events
-"""
-
-
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_nt_escape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9: NT escaping over hazard-injected text (quote/backslash/newline/tab)."""
-    d = _read(spark, sf_dir, "documents")
-    hazard = F.concat(
-        F.substring("text", 1, 40), F.lit('"\\\n\tend')
-    )
-    return d.select("doc_id", nt_escape(hazard).alias("esc"))
-
-
-SQL_NT_ESCAPE = r"""
-SELECT doc_id,
-       replace(replace(replace(replace(replace(
-         substr(text, 1, 40) || '"' || '\' || chr(10) || chr(9) || 'end',
-         '\', '\\'), '"', '\"'), chr(10), '\n'), chr(13), '\r'), chr(9), '\t') AS esc
-FROM documents
-"""
-
-
-# subsumed by q_token_stats (registry entry 'token_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace split + non-empty filter per document."""
-    d = _read(spark, sf_dir, "documents")
-    return (
-        d.select(F.explode(F.split("text", " +")).alias("token"))
-        .where(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-SQL_TOKEN_COUNTS = """
-SELECT token, COUNT(*) AS n
-FROM (SELECT unnest(string_split_regex(text, ' +')) AS token FROM documents)
-WHERE token <> '' GROUP BY token
-"""
-
-
 # GPT-2-style pretokenizer, restricted to the Java-regex ∩ RE2 subset
 # (no lookarounds): contraction suffixes, space-prefixed letter runs,
 # space-prefixed digit runs, space-prefixed punctuation runs, space runs.
 # Both engines use leftmost-first alternation, so matches agree.
 _BPE_PATTERN = "'(?:s|d|m|t|ll|ve|re)| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ']+| +"
-
-
-# subsumed by q_token_stats (registry entry 'token_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish token counting: the LLM-pipeline pretokenizer shape
-    (space-prefixed word/number/punct pieces, contraction suffixes) —
-    ``regexp_extract_all`` keeps everything JVM-side, one agg shuffle."""
-    d = _read(spark, sf_dir, "documents")
-    toks = F.explode(
-        F.regexp_extract_all("text", F.lit(_BPE_PATTERN), F.lit(0))
-    ).alias("token")
-    return (
-        d.select(toks)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-SQL_BPE_TOKEN_COUNTS = f"""
-SELECT token, COUNT(*) AS n
-FROM (SELECT unnest(regexp_extract_all(text, '{_BPE_PATTERN.replace("'", "''")}')) AS token
-      FROM documents)
-GROUP BY token
-"""
 
 
 # --------------------------------------------------------------------------
@@ -1012,8 +626,7 @@ WHERE common / CAST(sza.sz + szb.sz - common AS DOUBLE) >= 0.2
 """
 
 
-# subsumed by q_sig_profile (registry entry 'sig_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
+# covered in the registry by 'sig_profile'; timed by bench.BENCH_QUERIES.
 def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature parity (md5-based, 4 permutations), doc_id<100."""
     d = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
@@ -1038,33 +651,7 @@ def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(*cols)
 
 
-def _sql_minhash() -> str:
-    p = (1 << 61) - 1
-    sig_exprs = []
-    for i in range(4):
-        a = 2 * i + 1
-        b = (0x9E3779B9 * (i + 1)) & 0xFFFFFFFF
-        sig_exprs.append(
-            f"CAST(MIN((CAST(h AS HUGEINT) * {a} + {b}) % {p}) AS BIGINT) AS s{i}"
-        )
-    return f"""
-WITH g AS (
-  SELECT doc_id, unnest(list_distinct(list_transform(
-           generate_series(1, greatest(length(lower(text)) - 2, 1)),
-           i -> substr(lower(text), i, 3)))) AS gram
-  FROM documents WHERE doc_id < 100
-), hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS h FROM g
-)
-SELECT doc_id, {", ".join(sig_exprs)} FROM hashed GROUP BY doc_id
-"""
-
-
-SQL_MINHASH_SIG = _sql_minhash()
-
-
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
+# covered in the registry by 'doc_profile'; timed by bench.BENCH_QUERIES.
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/punctuation/uppercase ratio features per document."""
     d = _read(spark, sf_dir, "documents")
@@ -1080,59 +667,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_QUALITY_SCORE = """
-SELECT doc_id,
-       CAST(len(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_tokens,
-       ROUND((length(text) - len(string_split_regex(trim(text), ' +')) + 1)
-             / CAST(len(string_split_regex(trim(text), ' +')) AS DOUBLE), 4)
-         AS avg_token_len,
-       ROUND(length(regexp_replace(text, '[a-z ]', '', 'g'))
-             / CAST(length(text) AS DOUBLE), 6) AS non_alpha_ratio
-FROM documents
-"""
-
-
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for")
-
-
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_stopword_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic: stopword-token share per document."""
-    d = _read(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower("text")), " +")
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
-    return d.select(
-        "doc_id",
-        F.round(n_stop / F.size(toks), 6).alias("stop_ratio"),
-    )
-
-
-SQL_STOPWORD_SCORE = f"""
-SELECT doc_id,
-       ROUND(len(list_filter(string_split_regex(trim(lower(text)), ' +'),
-                             t -> t IN {str(tuple(_STOPWORDS))}))
-             / CAST(len(string_split_regex(trim(lower(text)), ' +')) AS DOUBLE), 6)
-         AS stop_ratio
-FROM documents
-"""
-
-
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 over letters-only normalized text."""
-    d = _read(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.md5(F.lower(F.regexp_replace("text", "[^a-zA-Z]+", ""))).alias("fp"),
-    )
-
-
-SQL_FINGERPRINT = """
-SELECT doc_id, md5(lower(regexp_replace(text, '[^a-zA-Z]+', '', 'g'))) AS fp
-FROM documents
-"""
 
 
 _WINNOW_K = 5  # grams per hash
@@ -1284,64 +819,6 @@ SELECT DISTINCT ds, '{M.QB_SLICE_PROP}', sl FROM base
 """
 
 
-# subsumed by q_conv_stats (registry entry 'conv_stats') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_salted_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted aggregation — identical result to plain count."""
-    from .operators.skew import salted_count
-
-    t = transcripts_from_events(spark, sf_dir)
-    return salted_count(t, "conv_id", n_salts=16)
-
-
-SQL_SALTED_COUNT = f"""
-{_TRANSCRIPTS_CTE}
-SELECT conv_id, COUNT(*) AS n FROM transcripts GROUP BY conv_id
-"""
-
-
-# subsumed by q_sig_profile (registry entry 'sig_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable 16-bit SimHash fingerprint (md5 token hashes, bit-majority)."""
-    d = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
-    toks = F.array_distinct(F.split(F.trim(F.lower("text")), " +"))
-    hashes = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-    )
-    fp = F.lit(0).cast("long")
-    for j in range(16):
-        vote = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        fp = fp + F.when(vote > 0, F.lit(1 << j)).otherwise(0)
-    return d.select("doc_id", fp.alias("fp"))
-
-
-def _sql_simhash() -> str:
-    bits = []
-    for j in range(16):
-        bits.append(
-            f"CASE WHEN SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-            f"THEN {1 << j} ELSE 0 END"
-        )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(lower(text)), ' +'))) AS t
-  FROM documents WHERE doc_id < 150
-), hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS h FROM toks
-)
-SELECT doc_id, CAST({" + ".join(bits)} AS BIGINT) AS fp FROM hashed GROUP BY doc_id
-"""
-
-
-SQL_SIMHASH_FP = _sql_simhash()
-
-
 def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP aggregation over (source, lang) with grouping-set totals."""
     li = _read(spark, sf_dir, "lineitem")
@@ -1353,40 +830,6 @@ def q_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ROLLUP_AGG = """
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n, ROUND(SUM(l_quantity), 2) AS qty
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-# subsumed by q_event_fields (registry entry 'event_fields') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization: new session when gap to previous event > 30 min."""
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.unix_timestamp("ts")
-    gap = epoch - F.lag(epoch).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("int")
-        .alias("session_id"),
-    )
-
-
-SQL_SESSIONIZE = """
-SELECT user_id, event_id,
-       CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INT) AS session_id
-FROM (
-  SELECT user_id, event_id, ts,
-         CASE WHEN epoch(ts) - LAG(epoch(ts)) OVER (PARTITION BY user_id
-              ORDER BY ts, event_id) > 1800
-              OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-)
 """
 
 
@@ -1429,26 +872,6 @@ WITH ex AS (
 SELECT a, b, ROUND(dot / (na.nrm * nb.nrm), 4) AS cosine
 FROM dots JOIN norms na ON na.vec_id = a JOIN norms nb ON nb.vec_id = b
 WHERE ROUND(dot / (na.nrm * nb.nrm), 4) >= 0.5
-"""
-
-
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal metadata shape: utf8 payload bytes + sha256 digest."""
-    d = _read(spark, sf_dir, "documents")
-    payload = F.encode("text", "UTF-8")
-    return d.select(
-        "doc_id",
-        F.octet_length(payload).cast("long").alias("n_bytes"),
-        F.sha2(payload, 256).alias("digest"),
-    )
-
-
-SQL_BINARY_METADATA = """
-SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-       sha256(text) AS digest
-FROM documents
 """
 
 
@@ -2026,197 +1449,6 @@ LIMIT {_IVFE_K}
 SQL_IVF_TOPK = _sql_ivf_topk()
 
 
-_MH_P = (1 << 61) - 1
-_MH_N = 8  # signature length
-_MH_BANDS = 4  # r = 2 rows per band
-
-
-def _mh_params(i: int) -> tuple[int, int]:
-    return 2 * i + 1, (0x9E3779B9 * (i + 1)) & 0xFFFFFFFF
-
-
-# subsumed by q_dedup_lsh_pairs (registry entry 'dedup_lsh_pairs') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH banded candidate pairs, fully SQL-oracled.
-
-    The portable (md5-hash) twin of ``operators/dedup.py::
-    minhash_lsh_pairs`` (which uses xxhash64 — Spark-native, faster,
-    rows-only): 8-permutation signatures over char 3-grams, 4 bands x 2
-    rows, pairs that collide in >=1 band, deduplicated. This is the
-    shuffle-shape that replaces the quadratic similarity join at scale:
-    shuffled bytes = O(docs x bands), join fan-out bounded by bucket
-    size.
-    """
-    d = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
-    grams = char_ngrams("text", 3)
-    base = F.transform(
-        grams,
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
-    def _perm(a: int, b: int):
-        return lambda h: ((h.cast("decimal(38,0)") * a + b) % _MH_P).cast("long")
-
-    sig_cols = []
-    for i in range(_MH_N):
-        a, b = _mh_params(i)
-        sig_cols.append(
-            F.array_min(F.transform(base, _perm(a, b))).alias(f"s{i}")
-        )
-    sigs = d.select(F.col("doc_id").alias("k"), *sig_cols)
-    banded = sigs.select(
-        "k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.col(f"s{2 * band}").alias("r0"),
-                        F.col(f"s{2 * band + 1}").alias("r1"),
-                    )
-                    for band in range(_MH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("k", "b.band", "b.r0", "b.r1")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, ["band", "r0", "r1"])
-        .where(F.col("a.k") < F.col("b.k"))
-        .select(F.col("a.k").alias("da"), F.col("b.k").alias("db"))
-        .distinct()
-    )
-
-
-def _sql_minhash_lsh_pairs() -> str:
-    sig_exprs = []
-    for i in range(_MH_N):
-        a, b = _mh_params(i)
-        sig_exprs.append(
-            f"CAST(MIN((CAST(h AS HUGEINT) * {a} + {b}) % {_MH_P}) AS BIGINT) AS s{i}"
-        )
-    band_rows = " UNION ALL ".join(
-        f"SELECT k, {band} AS band, s{2 * band} AS r0, s{2 * band + 1} AS r1 FROM sigs"
-        for band in range(_MH_BANDS)
-    )
-    return f"""
-WITH g AS (
-  SELECT doc_id AS k, unnest(list_distinct(list_transform(
-           generate_series(1, greatest(length(lower(text)) - 2, 1)),
-           i -> substr(lower(text), i, 3)))) AS gram
-  FROM documents WHERE doc_id < 400
-), hashed AS (
-  SELECT k, CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS h FROM g
-), sigs AS (
-  SELECT k, {", ".join(sig_exprs)} FROM hashed GROUP BY k
-), banded AS ({band_rows})
-SELECT DISTINCT a.k AS da, b.k AS db
-FROM banded a JOIN banded b USING (band, r0, r1)
-WHERE a.k < b.k
-"""
-
-
-SQL_MINHASH_LSH_PAIRS = _sql_minhash_lsh_pairs()
-
-
-_HP_PLANES = 8
-_HP_THRESHOLD = 0.9
-
-
-# subsumed by q_embedding_lsh_pairs (registry entry 'embedding_lsh_pairs') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_embedding_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH near-dup pairs, fully SQL-oracled.
-
-    Portable (md5-derived plane weights) twin of
-    ``operators/dedup.py::embedding_near_dup_pairs`` (xxhash64 weights,
-    rows-only): 8 hyperplane sign bits block the vectors, candidates
-    sharing the full sign bucket are verified with exact cosine ≥ 0.9.
-    Plane weight w(i,p) = ±1 by parity of the first md5 hex digit of
-    "i,p" — identical in both engines.
-    """
-    e = _read(spark, sf_dir, "embeddings").where(F.col("vec_id") < 300)
-    v = F.col("embedding")
-    dims = F.size(v)
-
-    def w(i, p):  # ±1.0, i is a 0-based index Column, p a Python int
-        digit = F.conv(
-            F.substring(F.md5(F.format_string("%d," + str(p), i)), 1, 1), 16, 10
-        ).cast("int")
-        return F.when(digit % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-    def sign(p):
-        return (
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    F.sequence(F.lit(0), dims - 1),
-                    lambda x, i: x.cast("double") * w(i, p),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0
-        )
-
-    bucket = F.concat_ws(
-        "", *[sign(p).cast("int").cast("string") for p in range(_HP_PLANES)]
-    )
-    sig = e.select(F.col("vec_id").alias("k"), v.alias("v"), bucket.alias("bucket"))
-    a, b = sig.alias("a"), sig.alias("b")
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, z: u.cast("double") * z.cast("double")),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
-    va, vb = F.col("a.v"), F.col("b.v")
-    cos = dot(va, vb) / (F.sqrt(dot(va, va)) * F.sqrt(dot(vb, vb)))
-    return (
-        a.join(b, "bucket")
-        .where(F.col("a.k") < F.col("b.k"))
-        .select(
-            F.col("a.k").alias("ka"),
-            F.col("b.k").alias("kb"),
-            F.round(cos, 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= _HP_THRESHOLD)
-    )
-
-
-def _sql_embedding_lsh_portable() -> str:
-    signs = []
-    for p in range(_HP_PLANES):
-        signs.append(
-            "CASE WHEN list_sum(list_transform(embedding, (x, i) -> "
-            "CAST(x AS DOUBLE) * (CASE WHEN CAST(('0x' || substr(md5("
-            f"CAST(i - 1 AS STRING) || ',{p}'), 1, 1)) AS INTEGER) % 2 = 0 "
-            "THEN 1.0 ELSE -1.0 END))) > 0 THEN '1' ELSE '0' END"
-        )
-    bucket = " || ".join(signs)
-    return f"""
-WITH sig AS (
-  SELECT vec_id AS k, embedding AS v, {bucket} AS bucket
-  FROM embeddings WHERE vec_id < 300
-), pairs AS (
-  SELECT a.k AS ka, b.k AS kb,
-         ROUND(
-           list_sum(list_transform(a.v, (x, i) -> CAST(x AS DOUBLE) * CAST(b.v[i] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(b.v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cosine
-  FROM sig a JOIN sig b USING (bucket)
-  WHERE a.k < b.k
-)
-SELECT ka, kb, cosine FROM pairs WHERE cosine >= {_HP_THRESHOLD}
-"""
-
-
-SQL_EMBEDDING_LSH_PORTABLE = _sql_embedding_lsh_portable()
-
-
 _IVF_CELLS = 8
 _IVF_PROBE = 2
 _IVF_K = 5
@@ -2423,22 +1655,6 @@ UNION ALL SELECT obs, '{ont}orders-cube-entrydate',
 SQL_OS_CONVERT = _sql_os_convert()
 
 
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow pandas-UDF language-ID heuristic (A9 analog).
-
-    The UDF is a pure deterministic function of the text (distinct-token
-    stopword overlap, first-max-wins tie-break), so a DuckDB CASE-chain
-    oracle reproduces it exactly — the pandas-UDF path itself is under
-    the driver's value-hash gate."""
-    from .operators.mentions import make_language_id
-
-    d = _read(spark, sf_dir, "documents")
-    lang = make_language_id(spark)
-    return d.select("doc_id", lang(F.col("text")).alias("lang_guess"))
-
-
 def _sql_lang_counts() -> str:
     """Shared CTE: per-doc distinct-token overlap counts per language,
     classified by the size-normalized first-max-wins rule.
@@ -2507,6 +1723,9 @@ t AS (
 )"""
 
 
+# Per-document DuckDB replay of ``mentions.make_language_id``; the pandas
+# UDF's parity test compares against it (doc_profile's lang_guess column
+# is the registered use of the same classifier).
 SQL_LANG_ID = f"""
 WITH {_sql_lang_counts()}
 SELECT doc_id, lang_guess FROM classified
@@ -2660,34 +1879,11 @@ FROM a CROSS JOIN (VALUES {dims}) AS d(dim)
 SQL_MULTIMODAL_FEATURES = _sql_multimodal_features()
 
 
+# doc_profile's in_sample flag: keep a document iff the md5-derived 60-bit
+# hash of its TEXT, mod DEN, is < NUM. Unlike rand(seed) it is the same
+# across engines, re-partitioning and re-ingestion under a new doc_id.
 _HS_FRAC_NUM = 3  # keep ~3/10 of documents
 _HS_FRAC_DEN = 10
-
-
-# subsumed by q_doc_profile (registry entry 'doc_profile') under the 50-entry cap;
-# kept unregistered for tests/bench round-over-round names — do NOT re-register.
-def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based corpus sampling (training-data op).
-
-    ``rand(seed)`` differs across engines AND across re-partitioning;
-    hash sampling (keep rows whose content-hash bucket < k) is fully
-    reproducible, re-runnable and join-stable — the correct way to cut
-    a training corpus to a fraction. Bucket = md5-derived 60-bit hash
-    of the DOC TEXT (content-keyed: a re-ingested identical doc samples
-    identically regardless of id assignment), mod DEN, keep < NUM."""
-    d = _read(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("long"),
-        F.lit(_HS_FRAC_DEN),
-    )
-    return d.where(bucket < _HS_FRAC_NUM).select("doc_id", "source")
-
-
-SQL_HASH_SAMPLE = f"""
-SELECT doc_id, source FROM documents
-WHERE CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) % {_HS_FRAC_DEN}
-      < {_HS_FRAC_NUM}
-"""
 
 
 _CUR_MIN_TOKENS = 20
@@ -3009,21 +2205,20 @@ ORDER BY run_id
 # multi-feature queries — itself the right 10^12-row shape (ONE pass
 # computes every per-row feature instead of N passes) — so the whole
 # registry fits under the 50-entry window and EVERY operator gets a
-# green driver row.  The original fine-grained ``q_*`` functions remain
-# (bench.py times them under their round-1/2 names for round-over-round
-# comparability; tests cover them directly).
+# green driver row.  A ``q_*`` function outside the registry exists only
+# because ``bench.BENCH_QUERIES`` times it by name.
 # --------------------------------------------------------------------------
 
 
 def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document profile, ONE scan: token/quality features
-    (q_quality_score), stopword share (q_stopword_score), language
-    guess via the Arrow pandas UDF (q_lang_id / A9), content
-    fingerprint (q_fingerprint), binary payload metadata
-    (q_binary_metadata), NT escaping over hazard-injected text
-    (q_nt_escape / F9), and the deterministic hash-sample membership
-    flag (q_hash_sample). At 100 TB this is the shape that matters:
-    every per-doc feature from a single pass over the corpus."""
+    """Per-document profile: every per-doc feature in ONE scan.
+
+    Token/quality features, stopword share, language guess via the
+    Arrow pandas UDF (A9), content fingerprint (md5 of the letters-only
+    lowercase text), binary payload metadata (UTF-8 byte length and
+    SHA-256 digest), NT escaping over hazard-injected text (F9), and
+    the deterministic hash-sample membership flag. At 100 TB this is
+    the shape that matters: a single pass over the corpus."""
     from .operators.mentions import make_language_id
 
     d = _read(spark, sf_dir, "documents")
@@ -3087,9 +2282,10 @@ SQL_DOC_PROFILE = _sql_doc_profile()
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary statistics: whitespace token counts (q_token_counts)
-    FULL-OUTER-joined with BPE-ish pretokenizer counts
-    (q_bpe_token_counts) on the token surface — two partial-agg
+    """Vocabulary statistics: whitespace and pretokenizer token counts.
+
+    Whitespace token counts FULL-OUTER-joined with GPT-2-style
+    pretokenizer counts on the token surface — two partial-agg
     map-side-combine passes, one join on the (small) vocab grain."""
     d = _read(spark, sf_dir, "documents")
     ws = (
@@ -3127,10 +2323,9 @@ SELECT token, n_ws, n_bpe FROM ws FULL OUTER JOIN bpe USING (token)
 
 def q_event_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event field extraction, ONE scan: ISO/gYear/date lexical
-    forms (q_date_lexical / F2), messy-string date parse round-trip
-    (q_string_date_roundtrip / F3+F4), int-parse with string fallback
-    (q_int_fallback / F5), JSON field access (q_json_get / F8), and
-    gap-based sessionization (q_sessionize) via one window."""
+    forms (F2), messy-string date parse round-trip (F3+F4), int-parse
+    with string fallback (F5), JSON field access (F8), and gap-based
+    sessionization via one window."""
     ev = _read(spark, sf_dir, "events")
     raw = (
         F.when(F.col("event_id") % 3 == 0, F.date_format("ts", "yyyy-MM-dd"))
@@ -3230,8 +2425,8 @@ FROM norm
 
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus statistics (A5/A8 analog): total fact-table row count
-    (q_count_rows — entries.json?pagesize=0) unioned with the distinct
-    refYear set (q_distinct_years), as (stat, v) rows."""
+    (A8, entries.json?pagesize=0) unioned with the distinct refYear set
+    (A3), as (stat, v) rows."""
     li_n = (
         _read(spark, sf_dir, "lineitem")
         .agg(F.count(F.lit(1)).alias("v"))
@@ -3256,10 +2451,10 @@ FROM (SELECT DISTINCT year(ts) AS y FROM events)
 
 def q_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation dataset statistics, one agg + the salted
-    two-phase count: completeness ratio (q_conv_completeness / A1,
-    ConvertWorker.java:798-804), freshness timestamp (q_freshness_sort
-    / O2+P7), and the skew-safe salted count (q_salted_count) joined
-    back — n_salted must equal n_turns by construction."""
+    two-phase count: completeness ratio (A1, ConvertWorker.java:798-804),
+    freshness timestamp (O2+P7), and the skew-safe salted count
+    (``skew.salted_count``) joined back — n_salted must equal n_turns
+    by construction."""
     from .operators.skew import salted_count
 
     t = transcripts_from_events(spark, sf_dir)
@@ -3302,8 +2497,7 @@ FROM transcripts GROUP BY conv_id
 
 def q_property_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-property missing counts AND completeness ratios, single scan
-    (q_null_rates / P5 + q_property_completeness / A2,
-    ConvertWorker.java:617-645, 805-814): one aggregate row with a
+    (P5 + A2, ConvertWorker.java:617-645, 805-814): one aggregate row with a
     conditional count per column, stack-unpivoted — never one scan per
     property."""
     t = transcripts_from_events(spark, sf_dir)
@@ -3345,9 +2539,8 @@ FROM u
 
 def q_sig_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document signature profile, ONE projection scan: 4-perm
-    MinHash signature (q_minhash_sig) + 16-bit SimHash fingerprint
-    (q_simhash_fp) — both pure per-row array expressions, no shuffle
-    at all."""
+    MinHash signature + 16-bit SimHash fingerprint — both pure per-row
+    array expressions, no shuffle at all."""
     d = _read(spark, sf_dir, "documents").where(F.col("doc_id") < 150)
     grams = char_ngrams("text", 3)
     base = F.transform(
@@ -3426,9 +2619,8 @@ SQL_SIG_PROFILE = _sql_sig_profile()
 
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-set operations (U1+U2, Boss.java:61-76): the anti-join
-    catalog diff (customers that never ordered, q_anti_join) unioned
-    with the deduplicated scheduling-pool union (q_pool_union), tagged
-    by operation."""
+    catalog diff (customers that never ordered, U1) unioned with the
+    deduplicated scheduling-pool union (U2), tagged by operation."""
     c = _read(spark, sf_dir, "customer")
     o = _read(spark, sf_dir, "orders")
     never = (
@@ -3455,8 +2647,8 @@ SELECT 'pool', c_custkey FROM (
 
 def q_order_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order scalar functions, one scan: deterministic observation-
-    URI minting (q_uri_mint / F1, ConvertWorker.java:609-611) + the
-    default-year-from-first-4-chars heuristic (q_year_substring / F6,
+    URI minting (F1, ConvertWorker.java:609-611) + the
+    default-year-from-first-4-chars heuristic (F6,
     ConvertWorker.java:226-229)."""
     o = _read(spark, sf_dir, "orders")
     return o.select(
@@ -3575,10 +2767,10 @@ FROM events l JOIN events r
 # The registry is deliberately kept at ≤50 entries: the driver's
 # correctness gate checks the FIRST 50 names in iteration order (see the
 # consolidation note above), so every entry below gets a green driver
-# row.  Consolidated entries cite the fine-grained q_* functions they
-# subsume.  Two former entries are intentionally ABSENT as duplicates,
-# not lost surface: ``minhash_lsh_pairs``/``embedding_lsh_portable``
-# were inline twins of the operator paths ``dedup_lsh_pairs`` /
+# row.  Consolidated entries cite the SURVEY.md §2 codes they cover.
+# Two former entries are intentionally ABSENT as duplicates, not lost
+# surface: ``minhash_lsh_pairs``/``embedding_lsh_portable`` were inline
+# twins of the operator paths ``dedup_lsh_pairs`` /
 # ``embedding_lsh_pairs`` (operators/dedup.py), which remain oracled
 # here and put the operator code itself under the value hash.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -45,11 +45,6 @@ from . import model as M
 from .sources.local import local_frame
 
 
-def read_triple_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a materialized triple table, keeping the bucket partition col."""
-    return spark.read.parquet(path)
-
-
 def manifest_n_buckets(spark: SparkSession, manifest_path: str) -> int | None:
     """The bucket count the table was actually written with.
 
@@ -496,7 +491,9 @@ _PLAIN = {
 #: by zero is NULL (SPARQL's expression error) for its own row, not an
 #: ANSI failure of the whole query. The coercion still types the result:
 #: a lexical form beside an integer is an integer (so a fractional form
-#: there is an error, never truncated), beside a decimal or double a double
+#: there is an error, never truncated), beside a decimal or double a double.
+#: Spark coerces no string-op-string pair, so between two lexical-form
+#: variables both read as doubles (``compile_expr``)
 _BINARY = {
     "||": operator.or_,
     "&&": operator.and_,
@@ -518,6 +515,12 @@ _DATE_PARTS = {
 }
 
 _XSD_STRING = M.NS_XSD + "string"
+
+
+def _lexical_var(node) -> bool:
+    """A variable arithmetic reads as a lexical form: any but a hidden
+    aggregate alias, which holds its aggregate's own type."""
+    return node[0] == "var" and not node[1].startswith("__agg")
 
 
 def _is_number(node) -> bool:
@@ -564,7 +567,11 @@ def compile_expr(node, col=F.col) -> Column:
     name, args = node[1], node[2]
     x = [compile_expr(a, col) for a in args]
     if name in _BINARY:
-        if name in ("=", "!=", "<", "<=", ">", ">=", "/"):
+        if name in ("+", "-", "*", "/") and all(map(_lexical_var, args)):
+            # ?a + ?b: Spark refuses string+string, so both operands read
+            # as doubles (COUNT(?a) + COUNT(?b) stays an integer)
+            x = [c.try_cast("double") for c in x]
+        elif name in ("=", "!=", "<", "<=", ">", ">=", "/"):
             # ?v <op> 5 compares (and ?v / 5 divides) the variable as a
             # double: a lexical form that is not a number drops its row
             # (try_cast → NULL, SPARQL's expression error) instead of
@@ -579,7 +586,9 @@ def compile_expr(node, col=F.col) -> Column:
     if name == "!":
         return ~x[0]
     if name == "neg":
-        return -x[0]
+        # -?v reads the lexical form as a double: one that is not a
+        # number is unbound for its row, not CAST_INVALID_INPUT
+        return -(x[0].try_cast("double") if _lexical_var(args[0]) else x[0])
     if name == "str":  # the column already holds the lexical form
         return x[0]
     if name == "bound":

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from linkedspending_spark import model as M
 from linkedspending_spark.jobs import bucket_of
 from linkedspending_spark.operators.convert_transcripts import convert_transcripts
-from linkedspending_spark.serve import match, read_triple_table
+from linkedspending_spark.serve import match
 from linkedspending_spark.sources.io import write_triples
 from linkedspending_spark.transcripts import synth_transcripts_df
 from tools.plan_audit import plan_of
@@ -30,7 +30,7 @@ def triple_table(spark, tmp_path_factory):
 
 
 def test_match_binds_each_term(spark, triple_table):
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     # p bound: only rdf:type rows
     typed = match(triples, p=M.RDF_TYPE)
     assert typed.select("p").distinct().collect() == [(M.RDF_TYPE,)]
@@ -51,7 +51,7 @@ def test_match_binds_each_term(spark, triple_table):
 
 
 def test_match_dataset_prunes_partitions(spark, triple_table):
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     q = match(triples, dataset="conv-0003", n_buckets=8)
     # correctness: identical to the unpruned dataset filter
     expected = triples.where(F.col("dataset") == "conv-0003").count()
@@ -76,7 +76,7 @@ def test_match_reads_n_buckets_from_manifest(spark, triple_table, tmp_path):
     store.record(BUCKETS_SENTINEL, 8, None, run_id="t")
     assert manifest_n_buckets(spark, mpath) == 8
 
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     expected = triples.where(F.col("dataset") == "conv-0003").count()
     # no n_buckets passed: resolved from the manifest, still prunes
     q = match(triples, dataset="conv-0003", manifest_path=mpath)
@@ -102,7 +102,7 @@ def test_match_dataset_on_canonical_table_pushes_bucket_filter(spark, tmp_path):
     run_transcripts_job(spark, t, out, man, n_buckets=8)
     run_canonicalize_job(spark, out, str(tmp_path / "canon"), man)
 
-    canon = read_triple_table(spark, str(tmp_path / "canon"))
+    canon = spark.read.parquet(str(tmp_path / "canon"))
     q = match(canon, dataset="conv-0003", manifest_path=man)
     want = canon.where(F.col("dataset") == "conv-0003")
     assert sorted(q.collect()) == sorted(want.collect())
@@ -217,7 +217,7 @@ def test_select_bgp_reference_catalog_query(spark, triple_table):
     ?d lso:refYear ?y' — 3-pattern join on ?d, 1:N on years."""
     from linkedspending_spark.serve import select_bgp
 
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     out = select_bgp(
         triples,
         [
@@ -244,7 +244,7 @@ def test_select_bgp_reference_catalog_query(spark, triple_table):
 def test_select_bgp_term_shapes(spark, triple_table):
     from linkedspending_spark.serve import select_bgp
 
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     # repeated variable in one pattern: positions must agree (s == o
     # never holds for typing triples -> empty, not an error)
     same = select_bgp(triples, [("?x", M.RDF_TYPE, "?x")])
@@ -289,7 +289,7 @@ def test_select_bgp_pushdown_plan(spark, triple_table):
     """Each pattern's constants reach the parquet scan as PushedFilters."""
     from linkedspending_spark.serve import select_bgp
 
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     q = select_bgp(
         triples,
         [("?d", M.RDF_TYPE, M.QB_DATASET), ("?d", M.RDFS_LABEL, "?label")],
@@ -421,7 +421,7 @@ def test_select_bgp_dataset_binding_prunes_every_pattern_scan(spark, triple_tabl
     dataset-filtered join."""
     from linkedspending_spark.serve import select_bgp
 
-    triples = read_triple_table(spark, triple_table)
+    triples = spark.read.parquet(triple_table)
     patterns = [("?d", M.RDF_TYPE, M.QB_DATASET), ("?d", M.RDFS_LABEL, "?label")]
     q = select_bgp(triples, patterns, dataset="conv-0003", n_buckets=8)
     rows = q.collect()

@@ -901,7 +901,8 @@ def test_arithmetic_over_malformed_forms_is_a_row_error(spark):
     FILTER, skipped by SUM — never CAST_INVALID_INPUT for the whole
     query. Beside an integer the operand is typed as an integer, so a
     fractional form there is an error too, never truncated; beside a
-    decimal, and under ``/``, it is read as a double."""
+    decimal, under ``/``, beside another variable and under unary minus
+    it is read as a double."""
     from pyspark.sql import functions as F
 
     t = spark.createDataFrame(
@@ -927,6 +928,23 @@ def test_arithmetic_over_malformed_forms_is_a_row_error(spark):
     assert rows == [("a", 20.0), ("b", None), ("c", -5.0)]
     _, rows = run("SELECT ?s (?o / 2 AS ?t) { ?s ?p ?o }")
     assert rows == [("a", 5.0), ("b", None), ("c", -1.25)]
+    types, rows = run("SELECT ?s (-?o AS ?t) { ?s ?p ?o }")
+    assert types["t"] == "double"
+    assert rows == [("a", -10.0), ("b", None), ("c", 2.5)]
+    _, rows = run("SELECT ?s { ?s ?p ?o FILTER(-?o > 0) }")
+    assert rows == [("c",)]
+    # two lexical-form variables: Spark coerces no string-op-string pair
+    for op, want in (("+", [20.0, None, -5.0]), ("-", [0.0, None, 0.0]),
+                     ("*", [100.0, None, 6.25]), ("/", [1.0, None, 1.0])):
+        types, rows = run(f"SELECT ?s (?o {op} ?o AS ?t) {{ ?s ?p ?o }}")
+        assert types["t"] == "double", op
+        assert [r[1] for r in rows] == want, op
+    # aggregate operands keep their own type
+    types, rows = run(
+        "SELECT (COUNT(?o) + COUNT(?s) AS ?a) (-COUNT(?o) AS ?b) { ?s ?p ?o }"
+    )
+    assert (types["a"], types["b"]) == ("bigint", "bigint")
+    assert rows == [(6, -3)]
 
 
 def test_minus_and_exists(spark, catalog):

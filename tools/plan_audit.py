@@ -35,7 +35,7 @@ from linkedspending_spark.session import get_spark  # noqa: E402
 # queries with a declared (Arrow) UDF stage — the only place Python may run
 ARROW_UDF_OK = {
     "mention_triples",
-    "doc_profile",  # language-ID pandas UDF (subsumes lang_id)
+    "doc_profile",  # language-ID pandas UDF (per-document lang_guess)
     "lang_share",
     "multimodal_features",
     "obs_triples",  # mention scoring shares the convert pipeline
