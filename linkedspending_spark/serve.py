@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import math
 import operator
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -493,7 +493,8 @@ _PLAIN = {
 #: a lexical form beside an integer is an integer (so a fractional form
 #: there is an error, never truncated), beside a decimal or double a double.
 #: Spark coerces no string-op-string pair, so between two lexical-form
-#: variables both read as doubles (``compile_expr``)
+#: variables both read as doubles (``compile_expr``); native values (a
+#: BIND, an aggregate) keep Spark's own typing
 _BINARY = {
     "||": operator.or_,
     "&&": operator.and_,
@@ -517,10 +518,15 @@ _DATE_PARTS = {
 _XSD_STRING = M.NS_XSD + "string"
 
 
-def _lexical_var(node) -> bool:
-    """A variable arithmetic reads as a lexical form: any but a hidden
-    aggregate alias, which holds its aggregate's own type."""
-    return node[0] == "var" and not node[1].startswith("__agg")
+def lexical_in(df: DataFrame) -> Callable[[str], bool]:
+    """Whether ``df`` holds a variable as a lexical form (a string
+    column) rather than a native value (a BIND, an aggregate); the
+    schema is read only when an expression asks."""
+    return lambda v: dict(df.dtypes).get(v) == "string"
+
+
+def _lexical_var(node, lexical: Callable[[str], bool]) -> bool:
+    return node[0] == "var" and lexical(node[1])
 
 
 def _is_number(node) -> bool:
@@ -548,28 +554,32 @@ def expr_vars(node) -> frozenset[str]:
     return out
 
 
-def compile_expr(node, col=F.col) -> Column:
-    """One expression node → a Column. ``col`` resolves a variable or
-    companion column name (``x``, ``x__lang``); the OPTIONAL left-join
-    condition passes one that reads the renamed right side."""
+def compile_expr(node, lexical: Callable[[str], bool], col=F.col) -> Column:
+    """One expression node → a Column. ``lexical`` tells whether a
+    variable's column holds a lexical form (:func:`lexical_in`); ``col``
+    resolves a variable or companion column name (``x``, ``x__lang``),
+    and the OPTIONAL left-join condition passes one that reads the
+    renamed right side."""
     kind = node[0]
     if kind == "var":
         return col(node[1])
     if kind in ("lit", "iri"):
         return F.lit(node[1])
     if kind == "cast":
-        return compile_expr(node[1], col).try_cast(node[2])
+        return compile_expr(node[1], lexical, col).try_cast(node[2])
     if kind == "in":
-        c = compile_expr(node[1], col).isin(
-            *(compile_expr(x, col) for x in node[2])
+        c = compile_expr(node[1], lexical, col).isin(
+            *(compile_expr(x, lexical, col) for x in node[2])
         )
         return ~c if node[3] else c
     name, args = node[1], node[2]
-    x = [compile_expr(a, col) for a in args]
+    x = [compile_expr(a, lexical, col) for a in args]
     if name in _BINARY:
-        if name in ("+", "-", "*", "/") and all(map(_lexical_var, args)):
-            # ?a + ?b: Spark refuses string+string, so both operands read
-            # as doubles (COUNT(?a) + COUNT(?b) stays an integer)
+        if name in ("+", "-", "*", "/") and all(
+            _lexical_var(a, lexical) for a in args
+        ):
+            # ?a + ?b over two lexical forms: Spark refuses string+string,
+            # so both read as doubles (two native integers stay integers)
             x = [c.try_cast("double") for c in x]
         elif name in ("=", "!=", "<", "<=", ">", ">=", "/"):
             # ?v <op> 5 compares (and ?v / 5 divides) the variable as a
@@ -586,9 +596,11 @@ def compile_expr(node, col=F.col) -> Column:
     if name == "!":
         return ~x[0]
     if name == "neg":
-        # -?v reads the lexical form as a double: one that is not a
-        # number is unbound for its row, not CAST_INVALID_INPUT
-        return -(x[0].try_cast("double") if _lexical_var(args[0]) else x[0])
+        # -?v reads a lexical form as a double: one that is not a
+        # number is unbound for its row, not CAST_INVALID_INPUT; a
+        # native value keeps its type
+        lex = _lexical_var(args[0], lexical)
+        return -(x[0].try_cast("double") if lex else x[0])
     if name == "str":  # the column already holds the lexical form
         return x[0]
     if name == "bound":
@@ -884,7 +896,7 @@ def _eval_group(
         nonlocal df
         for f in list(remaining):
             if df is not None and expr_vars(f) <= set(order):
-                df = df.where(compile_expr(f))
+                df = df.where(compile_expr(f, lexical_in(df)))
                 remaining.remove(f)
 
     apply_ready()
@@ -926,7 +938,9 @@ def _eval_group(
                     # vars the body binds read from the renamed right
                     # side; outer-only vars read from the solution
                     cond = cond & compile_expr(
-                        f, lambda c: F.col(ren.get(c, c))
+                        f,
+                        lambda v: lexical_in(body if v in ren else df)(v),
+                        lambda c: F.col(ren.get(c, c)),
                     )
                 df = df.join(opt_r, cond, "left").select(
                     *order, *[F.col(ren[c]).alias(c) for c in new]
@@ -987,7 +1001,8 @@ def _eval_group(
                     f"BIND expression references unbound variable(s) "
                     f"{missing}"
                 )
-            df = base().withColumn(name, compile_expr(expr))
+            df = base()
+            df = df.withColumn(name, compile_expr(expr, lexical_in(df)))
             nullable.add(name)  # the expression may evaluate to NULL
             order.append(name)
             if kinds:

@@ -102,7 +102,9 @@ reference's own queries use, plus the group algebra
   MIN/MAX/SAMPLE accept and ignore it, dedup cannot change them);
   operands may be full EXPRESSIONS (``SUM(?a * ?b)``,
   ``COUNT(strlen(?x))``) — evaluated as hidden BINDs and aggregated by
-  their native column type (integer expressions sum as long);
+  their native column type (``SUM(?o * 2)`` over integer forms sums as
+  long; arithmetic between two lexical-form variables reads both as
+  doubles, so ``SUM(?a * ?b)`` sums as a double);
   aggregates also embed at any depth in SELECT expressions, HAVING and
   ORDER BY keys (``(COUNT(?x) * 2 AS ?d)``,
   ``HAVING(SUM(STRLEN(UCASE(?o))) > 2)`` — each becomes a hidden
@@ -254,6 +256,7 @@ from .serve import (
     _values_df,
     compile_expr,
     eval_group,
+    lexical_in,
     expr_vars,
 )
 from .sources.local import local_frame
@@ -1930,8 +1933,11 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     MIN/MAX/SAMPLE stay on the lexical string.
 
     EXPRESSION operands (``SUM(?a * ?b)``) aggregate their hidden
-    BIND column's native type directly (integer expressions sum as
-    long → ``xsd:integer``). Arithmetic over a lexical form that is
+    BIND column's native type directly: ``SUM(?o * 2)`` over integer
+    forms sums as long → ``xsd:integer``, while ``?a * ?b`` between two
+    lexical-form variables reads both as doubles and sums as
+    ``xsd:double`` (SPARQL would type two integers' product as an
+    integer — documented divergence). Arithmetic over a lexical form that is
     not a number is NULL for its row (same as BIND), so the aggregate
     skips it — SPARQL's error-drop."""
     missing = [v for v in q.group_by if v not in df.columns]
@@ -2052,7 +2058,7 @@ def _aggregate(df: DataFrame, q: ParsedQuery) -> DataFrame:
     else:
         df = df.agg(*aggs)
     for h in q.having:
-        df = df.where(compile_expr(h))
+        df = df.where(compile_expr(h, lexical_in(df)))
     # hidden aliases exist only for a direct-form HAVING, an ORDER BY
     # aggregate key, or an aggregate embedded in a SELECT expression —
     # keep the ones a pending ?__ordx key or SELECT expression still
@@ -2448,7 +2454,7 @@ def _solve(
             raise SparqlSyntaxError(
                 f"SELECT expression alias ?{alias} is already bound"
             )
-        df = df.withColumn(alias, compile_expr(expr))
+        df = df.withColumn(alias, compile_expr(expr, lexical_in(df)))
         nullable.add(alias)
     if q.project is not None:
         missing = [v for v in q.project if v not in df.columns]
@@ -2497,7 +2503,7 @@ def _solve(
                     "to the projected variables"
                 )
             )
-        return d.withColumn(var, compile_expr(expr))
+        return d.withColumn(var, compile_expr(expr, lexical_in(d)))
 
     def _project(d: DataFrame) -> DataFrame:
         # keep each projected variable's typing companions (with_kinds)

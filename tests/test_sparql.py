@@ -901,8 +901,9 @@ def test_arithmetic_over_malformed_forms_is_a_row_error(spark):
     FILTER, skipped by SUM — never CAST_INVALID_INPUT for the whole
     query. Beside an integer the operand is typed as an integer, so a
     fractional form there is an error too, never truncated; beside a
-    decimal, under ``/``, beside another variable and under unary minus
-    it is read as a double."""
+    decimal, under ``/``, beside another lexical-form variable and under
+    unary minus it is read as a double. A native value (a BIND, an
+    aggregate) keeps its own type."""
     from pyspark.sql import functions as F
 
     t = spark.createDataFrame(
@@ -939,12 +940,42 @@ def test_arithmetic_over_malformed_forms_is_a_row_error(spark):
         types, rows = run(f"SELECT ?s (?o {op} ?o AS ?t) {{ ?s ?p ?o }}")
         assert types["t"] == "double", op
         assert [r[1] for r in rows] == want, op
-    # aggregate operands keep their own type
+    types, rows = run("SELECT (SUM(?o * ?o) AS ?t) { ?s ?p ?o }")
+    assert (types["t"], rows) == ("double", [(106.25,)])
+    # an OPTIONAL condition reads the body's and the solution's forms
+    _, rows = run(
+        "SELECT ?s ?w { ?s ?p ?o OPTIONAL { ?s ?p ?w FILTER(?w + ?o > 0) } }"
+    )
+    assert rows == [("a", "10"), ("b", None), ("c", None)]
+    # MIN/MAX aggregate lexical forms ("-2.5" and "10")
+    types, rows = run(
+        "SELECT (MIN(?o) + MAX(?o) AS ?t) { ?s ?p ?o FILTER(?s != 'b') }"
+    )
+    assert (types["t"], rows) == ("double", [(7.5,)])
+    # native values keep their own exact type: aggregates, BINDs and
+    # subquery aggregates (integer op integer is an integer)
     types, rows = run(
         "SELECT (COUNT(?o) + COUNT(?s) AS ?a) (-COUNT(?o) AS ?b) { ?s ?p ?o }"
     )
     assert (types["a"], types["b"]) == ("bigint", "bigint")
     assert rows == [(6, -3)]
+    types, rows = run(
+        "SELECT ?s (?x + ?y AS ?z) (-?x AS ?m) (-?n AS ?k) (?o + ?x AS ?u) "
+        "{ ?s ?p ?o BIND(9007199254740993 AS ?x) BIND(2 AS ?y) "
+        "BIND(STRLEN(?o) AS ?n) }"
+    )
+    assert {types[v] for v in "zmu"} == {"bigint"}
+    assert types["k"] == "int"
+    assert rows == [
+        ("a", 9007199254740995, -9007199254740993, -2, 9007199254741003),
+        ("b", 9007199254740995, -9007199254740993, -3, None),
+        ("c", 9007199254740995, -9007199254740993, -4, None),
+    ]
+    types, rows = run(
+        "SELECT (?n - ?m AS ?d) { { SELECT (COUNT(?o) AS ?n) { ?s ?p ?o } } "
+        "{ SELECT (COUNT(*) AS ?m) { ?s ?p ?o FILTER(?s != 'a') } } }"
+    )
+    assert (types["d"], rows) == ("bigint", [(1,)])
 
 
 def test_minus_and_exists(spark, catalog):
